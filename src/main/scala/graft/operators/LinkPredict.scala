@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+
+import graft.core.Broadcasts
 
 /** Neighborhood-overlap link prediction over an undirected graph —
   * the classic common-neighbors family (Liben-Nowell & Kleinberg 2003;
@@ -16,10 +18,13 @@ import org.apache.spark.sql.functions._
   * float log would pin the result to one libm's last ulp.)
   *
   * Candidate generation is the WEDGE join: every pair (u, v) sharing a
-  * neighbor w appears once per shared w, counted per pair. The two
-  * sides of the wedge join are byte-identical subtrees, so the edge
-  * list shuffles on the wedge center ONCE and ReuseExchange serves the
-  * probe side — the same single-exchange discipline as ev_seqsim.
+  * neighbor w appears once per shared w, counted per pair. In
+  * [[LinkPredict.topPairs]] the two sides of the wedge join are
+  * byte-identical subtrees, so the edge list shuffles on the wedge
+  * center ONCE and ReuseExchange serves the probe side — the same
+  * single-exchange discipline as ev_seqsim. [[LinkPredict.topForQueries]]
+  * instead broadcasts the query adjacency into the edge list (see its
+  * scaladoc), so its wedges are never shuffled.
   *
   * Scale guard: a wedge center of degree d contributes d² candidate
   * rows — quadratic hub blowup, the same failure mode as
@@ -52,21 +57,7 @@ object LinkPredict {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // the degree frame is NODE-sized: pin it once and COUNT it (the
-    // pageRank broadcastNodeThreshold / toCategorical counted-gate
-    // precedent). Under the gate (row threshold capped by the
-    // 64 MB byte budget, r12 verdict #7) every degree attach BROADCASTS — the
-    // wedge-pair frame (the operator's big intermediate: sum(deg) to
-    // sum(deg^2) rows) is then never shuffled just to pick up one long
-    // per endpoint (measured at sf0.1 on the holdout face: the du/dv
-    // attaches were 225 + 297 MB of pair-frame shuffle read); above the
-    // gate, shuffled-hash with the node-sized build.
-    val useB = deg.count() <=
-      math.min(5000000L, graft.core.Broadcasts.rowGate(deg.schema))
-    def attach(d: DataFrame): DataFrame =
-      if (useB) broadcast(d) else d.hint("shuffle_hash")
+    val (deg, attach) = degrees(e)
 
     // edge tagged with its dst's degree: the wedge-center key. One join
     // on dst; the result is the shared subtree both wedge sides reuse.
@@ -88,15 +79,7 @@ object LinkPredict {
       .agg(count(lit(1)).as("inter"),
         sum(expr("1000000000 DIV cdeg")).as("ra_1e9"))
 
-    // union size from the two endpoint degrees — never a pair-frame
-    // shuffle under the gate
-    val du = deg.select(col("node").as("u"), col("deg").as("du"))
-    val dv = deg.select(col("node").as("v"), col("deg").as("dv"))
-    common.join(attach(du), "u").join(attach(dv), "v")
-      .select(col("u"), col("v"), col("inter"),
-        (col("du") + col("dv") - col("inter")).as("uni"),
-        expr("inter * 1000000 DIV (du + dv - inter)").as("jac_ppm"),
-        col("ra_1e9"))
+    scored(common, deg, attach)
       .orderBy(col("jac_ppm").desc, col("u"), col("v"))
       .limit(k) // TakeOrdered: per-partition top-k, no global sort shuffle
   }
@@ -113,70 +96,122 @@ object LinkPredict {
     * The query-set form bounds candidate generation by the QUERY
     * adjacency instead: Σ_{u∈Q} Σ_{w∈N(u)} deg(w) rows — per-query
     * degree-squared cost, independent of how many OTHER nodes exist,
-    * the sim_topk discipline. The per-u top-k window runs over each
-    * query's bounded candidate set, never the corpus.
+    * the sim_topk discipline.
     *
-    * Returns (u, rank, v, inter, uni, jac_ppm, ra_1e9), rank 1-based by
-    * (jac_ppm DESC, v). */
+    * Plan (only k candidates per query cross the network — the
+    * REPOSE / incremental-top-k placement):
+    *  1. Pin the query adjacency (cw, u, cdeg) = edges ⋈ distinct
+    *     queries on src ⋈ center degree, with the hubCap filter on cdeg
+    *     (exact on one side: both wedge sides share the center). Its
+    *     row count is an observe() metric of the pinning job.
+    *  2. If the adjacency fits the byte gate ([[graft.core.Broadcasts]]),
+    *     hash-partition the edge list by src (= the far endpoint v) and
+    *     broadcast-join the adjacency on cw: every wedge of a pair (u, v)
+    *     lands in v's task, so the (u, v) aggregate runs with NO
+    *     exchange (HashPartitioning(v) satisfies the aggregate's
+    *     clustering on (u, v)) — the wedge stream is never shuffled.
+    *     Above the gate (unbounded hub queries with hubCap == 0 at
+    *     100 TB) the adjacency meets the center-keyed edge list in a
+    *     planner-chosen, spillable join and the pairs shuffle to their
+    *     aggregate.
+    *  3. The du/dv attaches broadcast under the degree gate, which keeps
+    *     the partitioning.
+    *  4. Rank with [[GroupTopK.smallestK]] grouped by u: map-side
+    *     bounded heaps, so at most k rows per (partition, u) reach the
+    *     shuffle, instead of every scored pair shuffling to a per-u
+    *     window sort.
+    *
+    * Returns (u, rank, v, inter, uni, jac_ppm, ra_1e9), rank 1-based
+    * (Int) by (jac_ppm DESC, v). */
   def topForQueries(edges: DataFrame, queries: DataFrame, kPerQuery: Int,
       hubCap: Int = 0, srcCol: String = "src", dstCol: String = "dst",
-      queryCol: String = "node"): DataFrame = {
+      queryCol: String = "node"): DataFrame =
+    rankForQueries(edges, queries, kPerQuery, hubCap, srcCol, dstCol,
+      queryCol, Broadcasts.defaultBudgetBytes)
+
+  /** [[topForQueries]] with the adjacency gate's byte budget as a
+    * parameter: a budget of 0 sends any non-empty adjacency down the
+    * above-gate wedge path. */
+  private[graft] def rankForQueries(edges: DataFrame, queries: DataFrame,
+      kPerQuery: Int, hubCap: Int, srcCol: String, dstCol: String,
+      queryCol: String, adjBudgetBytes: Long): DataFrame = {
     require(kPerQuery >= 1, s"kPerQuery must be >= 1, got $kPerQuery")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // the degree frame is NODE-sized: pin it once and COUNT it (the
-    // pageRank broadcastNodeThreshold / toCategorical counted-gate
-    // precedent). Under the gate (row threshold capped by the
-    // 64 MB byte budget, r12 verdict #7) every degree attach BROADCASTS — the
-    // wedge-pair frame (the operator's big intermediate: sum(deg) to
-    // sum(deg^2) rows) is then never shuffled just to pick up one long
-    // per endpoint (measured at sf0.1 on the holdout face: the du/dv
-    // attaches were 225 + 297 MB of pair-frame shuffle read); above the
-    // gate, shuffled-hash with the node-sized build.
-    val useB = deg.count() <=
-      math.min(5000000L, graft.core.Broadcasts.rowGate(deg.schema))
-    def attach(d: DataFrame): DataFrame =
-      if (useB) broadcast(d) else d.hint("shuffle_hash")
-    val centerDeg = deg.select(col("node").as("dst"), col("deg").as("cdeg"))
-    // explicit-width repartition: see topPairs (the wedge stage is the
-    // coalescer blind spot)
-    val tagged0 = e.repartition(
-        e.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
-      .join(attach(centerDeg), "dst")
-    val tagged = if (hubCap > 0) tagged0.filter(col("cdeg") <= hubCap) else tagged0
+    val (deg, attach) = degrees(e)
 
+    // build side = the distinct query set (bounded by the query-set /
+    // holdout contract), never the edge list
     val q = queries.select(col(queryCol).cast("long").as("src")).distinct()
-    val left = tagged.join(q.hint("shuffle_hash"), "src") // query adjacency only
+    val adj0 = e.join(q.hint("shuffle_hash"), "src")
+      .join(attach(deg.select(col("node").as("dst"), col("deg").as("cdeg"))), "dst")
       .select(col("dst").as("cw"), col("src").as("u"), col("cdeg"))
-    val right = tagged.select(col("dst").as("cw"), col("src").as("v"))
-    // build side = the query adjacency (bounded by the query-set/holdout
-    // contract — always the smaller side); the corpus-sized wedge side
-    // streams through the probe unsorted. The hint only under the same
-    // counted gate as the degree attaches (r12 advice: with hubCap == 0
-    // and hub queries the adjacency is unbounded, and a shuffled-hash
-    // build cannot spill — above the gate let the planner pick a
-    // spillable strategy from real sizes)
-    val leftIn = if (useB) left.hint("shuffle_hash") else left
-    val common = leftIn.join(right, "cw")
-      .filter(col("u") =!= col("v"))
+    val (adj, adjRows) =
+      pinCounted(if (hubCap > 0) adj0.filter(col("cdeg") <= hubCap) else adj0)
+
+    // explicit-width repartitions: see topPairs (the wedge stage is the
+    // coalescer blind spot)
+    val parts = e.sparkSession.sessionState.conf.numShufflePartitions
+    val wedges =
+      if (Broadcasts.fits(adjRows, adj.schema, adjBudgetBytes))
+        e.repartition(parts, col("src"))
+          .select(col("dst").as("cw"), col("src").as("v"))
+          .join(broadcast(adj), "cw")
+      else
+        adj.join(e.repartition(parts, col("dst"))
+          .select(col("dst").as("cw"), col("src").as("v")), "cw")
+    val common = wedges.filter(col("u") =!= col("v"))
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("inter"),
         sum(expr("1000000000 DIV cdeg")).as("ra_1e9"))
 
+    // struct order = rank order: jac_ppm DESC, then v (unique per u)
+    val best = GroupTopK.smallestK(struct((-col("jac_ppm")).as("neg_jac"),
+      col("v"), col("inter"), col("uni"), col("jac_ppm"), col("ra_1e9")),
+      kPerQuery)
+    scored(common, deg, attach)
+      .groupBy(col("u")).agg(best.as("top"))
+      .select(col("u"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("u"), (col("pos") + 1).as("rank"), col("t.v").as("v"),
+        col("t.inter").as("inter"), col("t.uni").as("uni"),
+        col("t.jac_ppm").as("jac_ppm"), col("t.ra_1e9").as("ra_1e9"))
+  }
+
+  /** The pinned degree frame (node, deg) and how to attach a slice of
+    * it. The frame is NODE-sized: under the broadcast byte gate every
+    * degree attach BROADCASTS, so the wedge-pair frame (the operator's
+    * big intermediate: Σ deg to Σ deg² rows) is never shuffled just to
+    * pick up one long per endpoint (measured at sf0.1 on the holdout
+    * face: the du/dv attaches were 225 + 297 MB of pair-frame shuffle
+    * read). Above the gate, shuffled-hash with the node-sized build. */
+  private def degrees(e: DataFrame): (DataFrame, DataFrame => DataFrame) = {
+    val (deg, rows) = pinCounted(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+    val attach: DataFrame => DataFrame =
+      if (Broadcasts.fits(rows, deg.schema)) broadcast(_) else _.hint("shuffle_hash")
+    (deg, attach)
+  }
+
+  /** Eagerly pin `df` and return it with its row count, read from an
+    * observe() metric of the pinning job itself — no second count() job.
+    * The Observation is unnamed, so repeated calls in one session cannot
+    * collide on a name. */
+  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val pinned = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (pinned, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** (u, v, inter, uni, jac_ppm, ra_1e9) from the (u, v, inter, ra_1e9)
+    * pair frame: the union size comes from the two endpoint degrees. */
+  private def scored(common: DataFrame, deg: DataFrame,
+      attach: DataFrame => DataFrame): DataFrame = {
     val du = deg.select(col("node").as("u"), col("deg").as("du"))
     val dv = deg.select(col("node").as("v"), col("deg").as("dv"))
-    val scored = common.join(attach(du), "u").join(attach(dv), "v")
+    common.join(attach(du), "u").join(attach(dv), "v")
       .select(col("u"), col("v"), col("inter"),
         (col("du") + col("dv") - col("inter")).as("uni"),
         expr("inter * 1000000 DIV (du + dv - inter)").as("jac_ppm"),
         col("ra_1e9"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("u")).orderBy(col("jac_ppm").desc, col("v"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kPerQuery)
-      .select(col("u"), col("rank"), col("v"), col("inter"), col("uni"),
-        col("jac_ppm"), col("ra_1e9"))
   }
 }

@@ -403,7 +403,12 @@ object Relational {
     // allocation index alongside — both integer-exact (ppm / 1e-9
     // fixed point). The QUERY-SET face is the graded one: candidate
     // work is bounded by the query adjacency, where the all-pairs face
-    // is Σ deg² (298M wedges at sf0.1 — measured, see scaladoc)
+    // is Σ deg² (298M wedges at sf0.1 — measured, see scaladoc). Under
+    // the adjacency's byte gate the pinned query adjacency broadcasts
+    // into the edge list keyed by the far endpoint, so the (u, v) pair
+    // aggregate runs without an exchange and only the bounded-heap
+    // top-5 partials per query shuffle; above it, a center-keyed wedge
+    // join feeds the same ranking
     "q_linkpred" -> { (s, dir) =>
       import graft.operators.{LinkPredict, PageRank}
       val edges = PageRank.coOccurrenceEdges(
@@ -424,7 +429,11 @@ object Relational {
     // scales (sf0.01/sf1 hash-exact); a precision audit at 100 TB
     // samples a FIXED query budget instead (the wedge probe is ~1/7 of
     // the all-pairs cost with this set — ~2e9 wedge rows at sf5,
-    // measured-and-refused; see SCALE_SOAK "round-10 sf5 sweep").
+    // measured-and-refused; see SCALE_SOAK "round-10 sf5 sweep"). The
+    // wedge stream itself never shuffles while the held-out nodes'
+    // adjacency fits the broadcast byte gate (topForQueries scaladoc):
+    // the pairs aggregate in the far endpoint's task and per-query
+    // bounded heaps rank them
     "q_linkpred_prec" -> { (s, dir) =>
       import graft.operators.{LinkPredict, PageRank}
       val all = PageRank.coOccurrenceEdges(

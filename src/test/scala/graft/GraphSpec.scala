@@ -336,6 +336,44 @@ class GraphSpec extends SparkSuite {
     assert(capped.count() == 0L)
   }
 
+  test("linkPredict.topForQueries: hubCap drops wedge centers above the cap") {
+    // the same star, queried per leaf: each leaf's 4 candidates meet
+    // only through the hub; the cap filters one wedge side, which is
+    // exact because both sides share the center
+    val edges = sym((1L to 5L).map(i => (9L, i)): _*)
+    val leaves = (1L to 5L).toDF("node")
+    def run(cap: Int) = graft.operators.LinkPredict.topForQueries(
+      edges, leaves, kPerQuery = 10, hubCap = cap)
+    assert(run(0).count() == 20L)
+    assert(run(5).count() == 20L) // deg(9) == 5 is kept
+    assert(run(4).count() == 0L)
+  }
+
+  test("linkPredict.topForQueries: the above-gate wedge path ranks identically") {
+    import graft.operators.LinkPredict
+    val edges = PageRank.coOccurrenceEdges(
+      spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")
+      .localCheckpoint()
+    val queries = edges.select($"src".as("node")).distinct()
+      .filter($"node" % 7 === 0)
+    // budget 0 sends the non-empty adjacency down the wedge join
+    def run(budget: Long) = LinkPredict.rankForQueries(edges, queries, 5,
+      hubCap = 0, "src", "dst", "node", adjBudgetBytes = budget)
+    val viaBroadcast = run(graft.core.Broadcasts.defaultBudgetBytes)
+    val viaWedgeJoin = run(0L)
+    // the two paths place the edge list differently: keyed by the far
+    // endpoint under the gate, by the wedge center above it
+    def repartitionKeys(df: org.apache.spark.sql.DataFrame) =
+      """hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_NUM""".r
+        .findAllMatchIn(df.queryExecution.executedPlan.toString)
+        .map(_.group(1)).toSet
+    assert(repartitionKeys(viaBroadcast) == Set("src"))
+    assert(repartitionKeys(viaWedgeJoin) == Set("dst"))
+    val a = viaBroadcast.collect().map(_.toSeq).toSet
+    assert(a.nonEmpty)
+    assert(a == viaWedgeJoin.collect().map(_.toSeq).toSet)
+  }
+
   test("linkPredict: the wedge join's probe side is a reused exchange") {
     val edges = PageRank.coOccurrenceEdges(
       spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")

@@ -609,6 +609,41 @@ class PlanQualitySpec extends SparkSuite {
     assert(!plan.contains("Window"), s"fell back to a window sort:\n${plan.take(2000)}")
   }
 
+  test("q_linkpred_prec aggregates wedge pairs where the edges sit, ranks with bounded heaps") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = SparkEntry.queries("q_linkpred_prec")(spark, dir)
+    df.collect() // the final adaptive plan
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val text = root.toString
+    val pairAgg = nodes(root).collectFirst {
+      case h: HashAggregateExec if h.groupingExpressions.map(_.name) == Seq("u", "v") => h
+    }.getOrElse(fail(s"no (u, v) pair aggregate:\n${text.take(3000)}"))
+    // from the final pair aggregate down to the wedge join: one task
+    var n: SparkPlan = pairAgg
+    while (!n.isInstanceOf[BroadcastHashJoinExec]) {
+      assert(!n.isInstanceOf[Exchange] && !n.isInstanceOf[QueryStageExec],
+        s"the wedge pairs shuffle before their aggregate:\n${text.take(3000)}")
+      assert(n.children.nonEmpty, s"no broadcast wedge join under the pair aggregate:\n${text.take(3000)}")
+      n = n.children.head
+    }
+    assert(n.asInstanceOf[BroadcastHashJoinExec].leftKeys.map(_.toString)
+      .exists(_.startsWith("cw")), s"not the wedge join: $n")
+    assert(!text.contains("Window"), s"ranks with a window sort:\n${text.take(3000)}")
+    assert(text.contains("partial_collect_top_k") || text.contains("partial_collecttopk"),
+      s"no map-side partial top-k:\n${text.take(3000)}")
+  }
+
   test("RangeJoinRewrite turns bare BETWEEN joins into hash joins") {
     import spark.implicits._
     val ev = graft.core.Tables.events(spark, dir)
