@@ -1,7 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
+
+  /** Per-query timing with warm-up depth: `steady` is what the suite
+    * reports, `first` preserves the cold cost, `runs` how many timed
+    * executions it took. */
+  final case class QTime(steady: Double, first: Double, runs: Int) {
+    def warmRatio: Double = first / math.max(1e-9, steady)
+  }
+
+  /** Times one query from `once` (one timed execution, in seconds).
+    * SCALE_SOAK's corollary: numbers under ~2 s are JIT-depth-bound — the
+    * contention flag can't see that, so queries whose first/second ratio
+    * exceeds 2x earn a third run and report min(run2, run3), pinning
+    * steady state (the sub-2 s dedup family's numbers otherwise drift
+    * with whatever codegen state the suite left behind); repeats are
+    * skipped past 20 s so total bench wall-clock stays bounded. A throw
+    * from any run makes the query failed (`Left` with the error): the
+    * time it took to fail is never recorded as the query's time. */
+  def timeQuery(once: () => Double): Either[String, QTime] =
+    try {
+      val first = once()
+      Right(
+        if (first > 20.0) QTime(first, first, 1)
+        else {
+          val second = once()
+          if (first / math.max(1e-9, second) > 2.0)
+            QTime(math.min(second, once()), first, 3)
+          else QTime(math.min(first, second), first, 2)
+        })
+    } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
 
   /** Per-entry effective re-run trip factor (unit-tested in
     * BenchLogicSpec). Three rules, composed by taking the tightest that
@@ -48,7 +76,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Shuffle partitions default to the core count (right for the sf0.1
     // contract) but scale UP for soak runs at larger sf — partitions are
@@ -56,18 +84,8 @@ object Bench {
     // 32 partitions carries 50x the per-partition data (the production
     // rule: scale partitions with data, ~128-200 MB each; AQE coalesces
     // the small stages back down at runtime).
-    val shuffleP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shuffleP)
-      // events.ts identity (stored micros == session-local micros) holds
-      // only under UTC; sbt-forked runs set it via javaOptions but a bare
-      // spark-submit on a non-UTC host would silently shift timestamps
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shuffleP = sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt)
+    val spark = core.SessionConfigs.local(cpus, shuffleP)
     // untimed JVM/codegen/reader warm-up so the alphabetically-first query
     // doesn't absorb one-time session cost
     Seq("lineitem", "documents", "embeddings", "orders").foreach { t =>
@@ -125,31 +143,22 @@ object Bench {
     def calibrate(): Double = {
       import org.apache.spark.sql.functions._
       val t0 = System.nanoTime()
-      spark.range(0, 20000000L, 1, cpus.toInt)
+      spark.range(0, 20000000L, 1, cpus)
         .select(xxhash64(org.apache.spark.sql.functions.col("id")).as("h"))
         .groupBy(pmod(org.apache.spark.sql.functions.col("h"), lit(1024)))
         .count().count()
       (System.nanoTime() - t0) / 1e9
     }
 
-    // Per-query timing with warm-up depth: `steady` is what the suite
-    // reports, `first` preserves the cold cost, `runs` how many timed
-    // executions it took. SCALE_SOAK's corollary: numbers under ~2 s are
-    // JIT-depth-bound — the contention flag can't see that, so queries
-    // whose first/second ratio exceeds 2x earn a third run and report
-    // min(run2, run3), pinning steady state. That stops the sub-2 s dedup
-    // family's numbers from drifting round-over-round with whatever
-    // codegen state the suite happened to leave behind.
-    case class QTime(steady: Double, first: Double, runs: Int) {
-      def warmRatio: Double = first / math.max(1e-9, steady)
-    }
     // `cals` are the gating samples (tripped mid-suite samples replaced by
     // their warmed re-sample); `calsRaw` additionally keeps every sample
     // the re-sample discarded, so a suite that trips repeatedly — a load
     // burst shorter than the ~1 s re-sample window — is still visible in
     // the artifact even though the gate (by design) forgives it.
+    // `failed` maps each query that threw to its error; it is in no total.
     case class Pass(cals: Seq[Double], calsRaw: Seq[Double],
-        loadStart: Double, results: Map[String, QTime]) {
+        loadStart: Double, results: Map[String, QTime],
+        failed: Map[String, String]) {
       def calStart: Double = cals.head
       def calEnd: Double = cals.last
       def total: Double =
@@ -173,12 +182,9 @@ object Bench {
       val cals = scala.collection.mutable.ArrayBuffer(calibrate())
       val calsRaw = scala.collection.mutable.ArrayBuffer(cals.head)
       var sinceCal = 0
-      val results = SparkEntry.queries.toSeq.sortBy(_._1)
+      val timed = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
-        // first run may absorb codegen compilation for plan shapes no
-        // earlier query produced; repeats are skipped past 20s so total
-        // bench wall-clock stays bounded.
         def once(): Double = {
           val t0 = System.nanoTime()
           // noop-write, NOT .count(): under count(), Catalyst's count-star
@@ -188,32 +194,24 @@ object Bench {
           // (q_clustcoef's left join collapses to its left side) would be
           // timed as little more than a metadata row count. Measured
           // under-measurement before this fix: str_case 13x, t_pii 5.9x,
-          // g_ufuncs 4.5x, q_clustcoef 4.0x (tools/ActionAb, sf0.1). The
-          // noop sink consumes every output column, so the timed region is
-          // the plan the graded Verify dump actually executes.
+          // g_ufuncs 4.5x, q_clustcoef 4.0x (count vs noop-write A/B, sf0.1).
+          // The noop sink consumes every output column, so the timed region
+          // is the plan the graded Verify dump actually executes.
+          // Caches a query pinned (e.g. LSH signatures) are dropped OUTSIDE
+          // the timed region: queries are independent; accumulated cache
+          // blocks would evict each other's checkpoints and skew later
+          // timings.
           try {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          } catch { case _: Throwable => }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // drop caches a query pinned (e.g. LSH signatures) OUTSIDE the timed
-          // region: queries are independent; accumulated cache blocks would
-          // evict each other's checkpoints and skew later timings
-          spark.sharedState.cacheManager.clearCache()
-          dt
+            (System.nanoTime() - t0) / 1e9
+          } finally spark.sharedState.cacheManager.clearCache()
         }
-        val first = once()
-        val qt =
-          if (first > 20.0) QTime(first, first, 1)
-          else {
-            val second = once()
-            if (first / math.max(1e-9, second) > 2.0)
-              // JIT-depth-bound: one more run separates steady state from
-              // compilation noise
-              QTime(math.min(second, once()), first, 3)
-            else QTime(math.min(first, second), first, 2)
-          }
-        System.err.println(
-          f"[bench] $name%-20s ${qt.steady}%8.2fs  (first ${qt.first}%.2fs, runs ${qt.runs})")
+        val qt = timeQuery(() => once())
+        qt match {
+          case Right(t) => System.err.println(
+            f"[bench] $name%-20s ${t.steady}%8.2fs  (first ${t.first}%.2fs, runs ${t.runs})")
+          case Left(e) => System.err.println(s"[bench] $name failed: $e")
+        }
         // mid-suite calibration sample (~0.3 s each, ~8 per full pass):
         // catches the load burst that lands BETWEEN the endpoints. A
         // tripped sample gets ONE warmed re-sample before it counts —
@@ -236,12 +234,14 @@ object Bench {
           sinceCal = 0
         }
         name -> qt
-      }.toMap
+      }
       calibrate()
       val end = calibrate()
       cals += end
       calsRaw += end
-      Pass(cals.toSeq, calsRaw.toSeq, loadStart, results)
+      Pass(cals.toSeq, calsRaw.toSeq, loadStart,
+        timed.collect { case (k, Right(t)) => k -> t }.toMap,
+        timed.collect { case (k, Left(e)) => k -> e }.toMap)
     }
 
     // Auto-retry: a contended recording is not decision-grade (r4, r5 and
@@ -268,9 +268,13 @@ object Bench {
     }
     val retried = passes.size > 1
     val contended = passes.last.contended // false iff some pass was clean
+    // a query that failed in any attempt is reported under `failed` and
+    // left out of every value below: the time it took to fail is no timing
+    val failed = passes.flatMap(_.failed.keys).toSet
     // merged view: per-query min(steady) across attempts; `first` from the
     // first attempt (the only genuinely cold one); runs summed
     val merged0: Map[String, QTime] = passes.flatMap(_.results.toSeq)
+      .filterNot { case (k, _) => failed(k) }
       .groupBy(_._1).map { case (k, vs) =>
         k -> QTime(vs.map(_._2.steady).min, vs.head._2.first,
           vs.map(_._2.runs).sum)
@@ -392,29 +396,28 @@ object Bench {
     // The driver keeps only the tail of the build output, so the stdout JSON
     // line must stay SHORT: report the total plus the slowest queries, capped
     // so line + sbt's trailing "[success] ..." banner fit well under 2000 chars.
-    val budget = 1000
-    val top = merged.toSeq.sortBy(-_._2.steady).iterator
-      .map { case (k, v) => s"""\"$k\":${fmt(v.steady)}""" }
-      .scanLeft(("", 0)) { case ((_, len), s) => (s, len + s.length + 1) }
-      .drop(1).takeWhile(_._2 < budget).map(_._1).toSeq
-    val qs = top.mkString("{", ",", "}")
+    def capped(entries: Iterator[String], budget: Int): Seq[String] =
+      entries.scanLeft(("", 0)) { case ((_, len), s) => (s, len + s.length + 1) }
+        .drop(1).takeWhile(_._2 < budget).map(_._1).toSeq
+    val qs = capped(merged.toSeq.sortBy(-_._2.steady).iterator
+      .map { case (k, v) => s"""\"$k\":${fmt(v.steady)}""" }, 1000)
+      .mkString("{", ",", "}")
     // warm-up metadata: the JIT-depth-bound queries (first/steady > 2x —
     // exactly the set that earned a third run) with their cold/steady
     // ratios, so a reader can tell compilation noise from regression
     // without the stderr log. Capped like `queries`.
-    val jitBound = merged.toSeq
+    val wj = capped(merged.toSeq
       .filter(_._2.warmRatio > 2.0).sortBy(-_._2.warmRatio).iterator
-      .map { case (k, v) => s"""\"$k\":${f"${v.warmRatio}%.1f"}""" }
-      .scanLeft(("", 0)) { case ((_, len), s) => (s, len + s.length + 1) }
-      .drop(1).takeWhile(_._2 < 300).map(_._1).toSeq
-    val wj = jitBound.mkString("{", ",", "}")
-    val passTotals = passes.map(p => fmt(p.total)).mkString("[", ",", "]")
-    val overJson = overProfile.iterator
-      .map { case (k, r) => s""""$k":${f"$r%.2f"}""" }
-      .scanLeft(("", 0)) { case ((_, len), s) => (s, len + s.length + 1) }
-      .drop(1).takeWhile(_._2 < 300).map(_._1).toSeq
+      .map { case (k, v) => s"""\"$k\":${f"${v.warmRatio}%.1f"}""" }, 300)
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(totalMin)},"unit":"sec","n_queries":${merged.size},"cal_start":${fmt(pass.calStart)},"cal_end":${fmt(pass.calEnd)},"cal_max":${fmt(pass.cals.max)},"cal_raw_max":${fmt(pass.calsRaw.max)},"cal_tripped_n":${pass.trippedSamples},"cal_ref":${fmt(calRef)},"load_start":${fmt(pass.loadStart)},"load_avg":${fmt(loadAvg())},"contended":$contended,"attempts":${passes.size},"pass_totals":$passTotals,"retried":$retried,"profile_n":${profile.size},"profile_rerun_n":${suspects.size},"suite_hazy":$suiteHazy,"profile_trip":${fmt(tripK)},"over_profile":$overJson,"steady_min_runs":3,"action":"noop-write","warmup_ratio_gt2":$wj,"queries":$qs,"sf":"$sfDir"}""")
+    val passTotals = passes.map(p => fmt(p.total)).mkString("[", ",", "]")
+    val overJson = capped(overProfile.iterator
+      .map { case (k, r) => s""""$k":${f"$r%.2f"}""" }, 300)
+      .mkString("{", ",", "}")
+    val failedJson = capped(failed.toSeq.sorted.iterator.map(k => s""""$k""""), 300)
+      .mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${fmt(totalMin)},"unit":"sec","n_queries":${merged.size},"cal_start":${fmt(pass.calStart)},"cal_end":${fmt(pass.calEnd)},"cal_max":${fmt(pass.cals.max)},"cal_raw_max":${fmt(pass.calsRaw.max)},"cal_tripped_n":${pass.trippedSamples},"cal_ref":${fmt(calRef)},"load_start":${fmt(pass.loadStart)},"load_avg":${fmt(loadAvg())},"contended":$contended,"attempts":${passes.size},"pass_totals":$passTotals,"retried":$retried,"profile_n":${profile.size},"profile_rerun_n":${suspects.size},"suite_hazy":$suiteHazy,"profile_trip":${fmt(tripK)},"over_profile":$overJson,"steady_min_runs":3,"action":"noop-write","warmup_ratio_gt2":$wj,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,26 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.SessionConfigs.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // adversarial-config selector (config-robustness matrix): a named
     // graft.core.SessionConfigs preset — the driver leaves it unset
     // (default); tools/config_matrix.sh sweeps the presets and asserts
     // every deterministic query dumps hash-identically under each
     val confName = sys.env.getOrElse("SPARK_GRAFT_CONF", "default")
-    graft.core.SessionConfigs(spark, confName)
+    core.SessionConfigs(spark, confName)
     System.err.println(s"[verify] session config preset: $confName")
     new java.io.File(outDir).mkdirs()
     // subset filter for local iteration (same contract as Bench); the

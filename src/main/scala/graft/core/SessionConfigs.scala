@@ -2,9 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Named adversarial session-config presets for the correctness matrix.
+/** The local-session factory ([[SessionConfigs.local]]) and named
+  * adversarial session-config presets for the correctness matrix.
   *
-  * Why this exists: a query can be CORRECT-ONLY-UNDER-AN-OPTIMIZER-PREMISE
+  * Why the presets exist: a query can be CORRECT-ONLY-UNDER-AN-OPTIMIZER-PREMISE
   * — the round-9/10 pid-offset class passed every DuckDB oracle at the
   * blessed config because ReuseExchange happened to give two branches the
   * same physical partitioning, and was wrong the moment an optimizer
@@ -37,6 +38,30 @@ import org.apache.spark.sql.SparkSession
   * check replays under, see tools/config_matrix.sh).
   */
 object SessionConfigs {
+
+  /** The local session every graft main and test suite runs on:
+    * `local[cores]`, `shufflePartitions` shuffle partitions, the graft
+    * extensions, UTC session time and no UI. Plan picks
+    * (ensureMinParallelism, broadcast gates) read these values, so the
+    * fingerprint lockfiles match the test suite only because both build
+    * their session here. Like `getOrCreate`, it returns the JVM's live
+    * session when there is one. */
+  def local(cores: Int): SparkSession = local(cores, cores)
+
+  def local(cores: Int, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      // events.ts identity (stored micros == session-local micros) holds
+      // only under UTC; a bare spark-submit on a non-UTC host would
+      // silently shift timestamps
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Preset name → (conf key → value). `default` is the empty overlay. */
   val presets: Map[String, Map[String, String]] = Map(

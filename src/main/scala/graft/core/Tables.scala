@@ -113,8 +113,8 @@ object Tables {
     // the ragged build. ensureMinParallelism makes it a NO-OP whenever
     // the scan already yields >= shuffle-width splits (any real corpus,
     // and the 100 TB case) — there the aggregate plans its own partial+
-    // exchange as before. Isolated A/B on this box at sf0.1 (QueryTimer,
-    // warm run): with the repartition r_softmax 1.24s / s_argsort 0.76 /
+    // exchange as before. Isolated A/B at sf0.1 (warm noop-write run):
+    // with the repartition r_softmax 1.24s / s_argsort 0.76 /
     // s_runlengths 0.75 / s_flatten 0.60; without it 1.85 / 1.22 /
     // 1.39 / 1.09 — the exchange wins for EVERY family member here
     // because the 1-split scan is the bottleneck either way.

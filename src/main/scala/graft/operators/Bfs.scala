@@ -93,13 +93,11 @@ object Bfs {
   /** Reached-set compaction cadence for the traversals: the anti-join
     * probe side is a union of at most this many pinned frames before it
     * is re-checkpointed into one. Small enough that per-hop probe cost
-    * stays flat at any traversal depth, large enough that shallow graded
-    * traversals (<= 4 hops) NEVER pay a copy — measured isolated at
-    * sf0.1 (warm): a cadence of 2 compacted once at hop 2 and cost
-    * q_bfs 3.06 -> 3.30 s / q_harmonic 3.79 -> 4.01 s vs the r12
-    * union-of-all spelling; at 4 both recover (3.02 / 3.42) and the
-    * deep-traversal probe bound is kept. */
-  private val compactEvery = 4
+    * stays flat at any traversal depth, large enough that the graded
+    * traversals (every depth in `Relational.gradedHops` is at most this;
+    * GraphSpec checks it) never pay a copy. The A/B that chose 4 over 2
+    * is in OPTIMIZATION_r13.md. */
+  private[graft] val compactEvery = 4
 
   /** Weighted shortest paths by bounded Bellman-Ford relaxation:
     * `rounds` synchronized min-plus rounds over integer edge costs —

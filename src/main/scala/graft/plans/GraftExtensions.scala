@@ -142,7 +142,8 @@ object LambdaFieldPruning extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions`, or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `withExtensions(new GraftExtensions)` on a session builder; graft's own
+  * sessions get it from [[graft.core.SessionConfigs.local]].
   *
   * Installs the optimizer rule and registers the custom expression kernels
   * as SQL functions, so the pure-SQL surface reaches them too:

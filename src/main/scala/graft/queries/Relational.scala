@@ -21,6 +21,14 @@ import graft.core.Tables
 object Relational {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Graded traversal depths, shared by each query and its oracle. Each
+    * stays at most `Bfs.compactEvery`, so no graded traversal pays a
+    * reached-set compaction (GraphSpec checks it). */
+  private[graft] val bfsHops = 4
+  private[graft] val harmonicHops = 3
+  private[graft] val harmonicApproxHops = 3
+  private[graft] val gradedHops = Seq(bfsHops, harmonicHops, harmonicApproxHops)
+
   private def ts(s: String) = lit(s).cast("timestamp")
 
   val queries: Map[String, Q] = Map(
@@ -468,7 +476,7 @@ object Relational {
         Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
       val seeds = edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 97 === 0)
-      Bfs.distances(edges, seeds, maxHops = 4)
+      Bfs.distances(edges, seeds, maxHops = bfsHops)
     },
     // harmonic centrality of a sampled root set via per-source BFS
     // (graft.operators.Bfs.harmonicCentrality): 3-hop neighborhoods,
@@ -481,7 +489,7 @@ object Relational {
         Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
       val seeds = edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 997 === 0)
-      Bfs.harmonicCentrality(edges, seeds, maxHops = 3)
+      Bfs.harmonicCentrality(edges, seeds, maxHops = harmonicHops)
     },
     // pivot-sampled harmonic estimate for EVERY node (the approximate
     // face for the all-nodes question exact per-root BFS cannot answer
@@ -496,7 +504,7 @@ object Relational {
         Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
       val pivots = edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 499 === 0)
-      Bfs.harmonicEstimate(edges, pivots, maxHops = 3)
+      Bfs.harmonicEstimate(edges, pivots, maxHops = harmonicApproxHops)
     },
     // DOULION edge-sampled triangle estimate (p = 0.2 via deterministic
     // xxhash64 on the canonical pair): exact tri count on the sampled
@@ -762,13 +770,13 @@ object Relational {
     // fixed 4-round min-unroll: dist(v) = min over rounds of first
     // reach — exact for any early frontier exhaustion (min is a
     // fixpoint, extra rounds are identity)
-    "q_bfs" -> bfsOracle(4),
+    "q_bfs" -> bfsOracle(bfsHops),
     // per-source min-unroll with the root key carried; 1/d terms as
     // exact ppm integer division
-    "q_harmonic" -> harmonicOracle(3),
+    "q_harmonic" -> harmonicOracle(harmonicHops),
     // the same min-unroll from the %499 pivot set, grouped by NODE, plus
     // the exact integer (N−1)//k scale-up — the landmark-estimate replay
-    "q_harmonic_approx" -> harmonicEstOracle(3),
+    "q_harmonic_approx" -> harmonicEstOracle(harmonicApproxHops),
     // degree-ordered closure over the Spark-dumped sampled edge set
     // (aux_tri_edges; xxhash64 sampling is not SQL-replayable) + the
     // pre-sample edge count recomputed from lineitem + the 1/p³ DIV chain

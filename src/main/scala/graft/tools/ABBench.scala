@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch A/B harness for plan-shape experiments (not part of the public
@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
   * Interleaved runs in one JVM so JIT/load hit all variants equally. */
 object ABBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ev = graft.core.Tables.events(spark, dir).withColumn("tok",
       concat(col("event_type"), lit(":"),

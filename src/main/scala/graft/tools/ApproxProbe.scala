@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off measurement probe for the approximate graph faces: exact vs
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
 object ApproxProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(8)
     import graft.operators.{Bfs, PageRank, Triangles}
     val edges = PageRank.coOccurrenceEdges(
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")

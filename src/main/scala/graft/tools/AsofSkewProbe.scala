@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure the plain union+window as-of join against the salted
@@ -15,11 +14,7 @@ object AsofSkewProbe {
     val nLeft = if (args.length > 0) args(0).toInt else 2000000
     val nRight = if (args.length > 1) args(1).toInt else 200000
     val buckets = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(32)
     import spark.implicits._
     def skewed(n: Int, mul: Long) = spark.range(n).select(
       when($"id" % 10 =!= 0, lit(0L)).otherwise($"id" % 997 + 1).as("k"),

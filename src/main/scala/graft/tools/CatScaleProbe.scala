@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale proof for toCategorical's counted broadcast gate (r10 verdict
@@ -11,13 +10,8 @@ import org.apache.spark.sql.functions._
 object CatScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionConfigs.local(cpus)
     val df = spark.range(n).select(col("id"),
       concat(lit("value_"), lpad(col("id").cast("string"), 12, "0")).as("v"))
     val t0 = System.nanoTime()

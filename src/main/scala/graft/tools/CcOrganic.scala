@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Run the DISTRIBUTED connected-components path over ORGANIC near-dup
@@ -28,12 +27,9 @@ object CcOrganic {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "target/testdata/sf5"
     val dupFactor = if (args.length > 1) args(1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionConfigs.local(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt))
     val base = graft.core.Tables.documents(spark, dir)
     // key stride mirrors ScaleGen: copies stay disjoint in id space
     val stride = 100000000L

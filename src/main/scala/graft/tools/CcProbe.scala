@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diagnostic for the distributed-CC round-latency pathology: runs the same
@@ -18,10 +18,7 @@ object CcProbe {
     val mode = if (args.length > 0) args(0) else "lck"
     val chains = if (args.length > 1) args(1).toLong else 2L
     val n = if (args.length > 2) args(2).toLong else 3000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(32)
     val base = 10000000L
     val chainIdx = floor(col("id") / (n - 1)).cast("long")
     val e = spark.range(0, chains * (n - 1)).select(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-million-edge stress of the DISTRIBUTED connected-components path
@@ -17,10 +16,7 @@ object CcStress {
   def main(args: Array[String]): Unit = {
     val chains = if (args.length > 0) args(0).toLong else 40L
     val n = if (args.length > 1) args(1).toLong else 100000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(32)
     import spark.implicits._
     val base = 10000000L // chain c occupies [c*base+1, c*base+n]
     val chainIdx = floor(col("id") / (n - 1)).cast("long")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure the plain funnel ragged build against the salted two-phase
@@ -15,11 +14,7 @@ object FunnelSkewProbe {
     val n = if (args.length > 0) args(0).toInt else 4000000
     val hotPct = if (args.length > 1) args(1).toInt else 90
     val salts = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(32)
     import spark.implicits._
     val stages = Seq("view", "click", "purchase")
     // hotPct% of events belong to entity 0; the rest spread over 1000

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement probe for the LEFT-OUTER stream-stream interval join's
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
   * intervalJoinOuterAudit replay. */
 object OuterIjoinProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(4)
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 

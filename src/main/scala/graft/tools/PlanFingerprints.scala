@@ -44,15 +44,10 @@ object PlanFingerprints {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    // MUST mirror SparkSuite's session config exactly — fingerprints are
-    // compared by PlanQualitySpec under that session, and plan picks
-    // (ensureMinParallelism, broadcast thresholds) read the config
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SparkSuite's session: PlanQualitySpec compares the fingerprints
+    // under it, and plan picks (ensureMinParallelism, broadcast
+    // thresholds) read the config
+    val spark = graft.core.SessionConfigs.local(4)
     val fps = compute(spark, dir)
     val json = fps.map { case (n, f) => s"""  "$n": "$f"""" }
       .mkString("{\n", ",\n", "\n}\n")

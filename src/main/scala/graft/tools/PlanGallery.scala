@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates docs/PLANS.md: the formatted physical plans of a curated set
   * of queries, with the scale-relevant plan properties called out. Run via
   * `sbt "runMain graft.tools.PlanGallery"` after plan-affecting changes
@@ -211,14 +209,7 @@ object PlanGallery {
       "per-group value buffering."))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(4)
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = new StringBuilder
     out ++= "# Plan gallery\n\n"

@@ -118,15 +118,8 @@ object PowerLawSoak {
     // capped-edge measurement always run (they are the graph)
     val only = sys.env.get("SPARK_GRAFT_SOAK_ONLY").map(_.split(",").toSet)
     def want(tag: String): Boolean = only.forall(_.contains(tag))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionConfigs.local(cpus)
     import graft.operators.{Bfs, KCore, LabelProp, LinkPredict, PageRank, Triangles}
 
     // observe-metric capture (the graded drop-count channel)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for ExactQuantiles: the select-k bisection vs Spark's
@@ -20,13 +19,8 @@ object QuantileScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000000L
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val probs = Seq(0.01, 0.5, 0.99)
     def corpus(rows: Long) = spark.range(0, rows, 1, 64)
       .select((shiftrightunsigned(xxhash64(col("id")), 11).cast("double") *

@@ -37,14 +37,9 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dest = if (args.length > 1) args(1) else "target/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionConfigs.local(cpus)
+    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
     generate(spark, src, dest, factor)
     spark.stop()
   }

@@ -1,9 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** EXECUTED-plan lockfile for the heaviest queries: shuffle write/read
@@ -47,37 +45,21 @@ object ShuffleFingerprints {
     // tops the steady profile) and the interval-join audit
     "q_ppr_quality", "q_linkpred_prec", "st_ijoin")
 
-  private final class Acc extends SparkListener {
-    val wRecs = new AtomicLong; val rRecs = new AtomicLong
-    def reset(): Unit = { wRecs.set(0); rRecs.set(0) }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        wRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten): Unit
-        rRecs.addAndGet(m.shuffleReadMetrics.recordsRead): Unit
-      }
-    }
-  }
-
   /** Execute each heavy query (noop-write action, so count-star pruning
     * cannot shrink the measured plan) and return its
     * (shuffle write records, shuffle read records). Deterministic given
     * the fixture data and the session's partition config — callers must
-    * use the SparkSuite config (local[4], 4 shuffle partitions) or the
+    * use the SparkSuite session (`SessionConfigs.local(4)`) or the
     * lockfile will not compare. */
   def compute(spark: SparkSession, dir: String): Seq[(String, (Long, Long))] = {
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
+    val meter = new Profile.Meter(spark)
+    meter.attach()
     try heavy.filter(graft.SparkEntry.queries.contains).map { q =>
       spark.sharedState.cacheManager.clearCache()
-      acc.reset()
-      graft.SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      // stage-completed listener events are async; give the bus a beat
-      Thread.sleep(500)
-      q -> ((acc.wRecs.get, acc.rRecs.get))
+      val (_, t) = meter.measureQuery(graft.SparkEntry.queries(q)(spark, dir))
+      q -> ((t.shuffleWriteRecords, t.shuffleReadRecords))
     } finally {
-      spark.sparkContext.removeSparkListener(acc)
+      meter.detach()
       spark.sharedState.cacheManager.clearCache()
     }
   }
@@ -89,13 +71,7 @@ object ShuffleFingerprints {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionConfigs.local(4)
     val rows = compute(spark, dir)
     val json = rows.map { case (q, (w, r)) => s"""  "$q": [$w, $r]""" }
       .mkString("{\n", ",\n", "\n}\n")

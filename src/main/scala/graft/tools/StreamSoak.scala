@@ -16,12 +16,8 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "target/testdata/sf1"
     val perTrigger = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.SessionConfigs.local(32)
     implicit val s: SparkSession = spark
-    spark.sparkContext.setLogLevel("ERROR")
     // stage the events as a multi-file directory so maxFilesPerTrigger
     // yields a stream of real micro-batches, not one giant batch
     val ev = graft.core.Tables.events(spark, dir)

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit pins for Bench's steady-profile guard logic ([[Bench.hazeTrip]])
-  * — no Spark session; the selection rules are pure. The scenario each
+  * and per-query timing ([[Bench.timeQuery]]) — no Spark session; the
+  * rules are pure. The scenario each
   * case encodes is a MEASURED failure mode from the round history:
   * r9 phantom entries (ambient haze under the 2x trip), r10's
   * q_pagerank 1.59x / q_modularity 1.80x sliding under it. */
@@ -89,5 +90,21 @@ class BenchLogicSpec extends AnyFunSuite {
     val (hazy, trip, sus) = Bench.hazeTrip(steady, profile, 1.2, 0.5)
     assert(hazy && trip == 1.2 && sus == Seq("a", "b"))
     assert(Bench.entryTrip(10.0, suiteHazy = true, profileK = 1.2) == 1.2)
+  }
+
+  test("a query that throws is reported failed, never timed as a fast one") {
+    // the old loop swallowed the throw and recorded the time-to-failure
+    // as the query's steady time
+    assert(Bench.timeQuery(() => throw new IllegalStateException("boom")) ==
+      Left("boom"))
+    var runs = 0
+    val second = Bench.timeQuery { () =>
+      runs += 1
+      if (runs == 2) throw new RuntimeException("second run failed") else 0.5
+    }
+    assert(second == Left("second run failed") && runs == 2,
+      "a failure on a repeat run fails the query too")
+    val ok = Bench.timeQuery(() => 0.5)
+    assert(ok == Right(Bench.QTime(0.5, 0.5, 2)))
   }
 }

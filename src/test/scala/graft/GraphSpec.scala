@@ -439,6 +439,38 @@ class GraphSpec extends SparkSuite {
     assert(multi == Map(1L -> 0, 5L -> 0, 77L -> 0, 2L -> 1, 4L -> 1, 3L -> 2))
   }
 
+  test("profile meter: q_bfs repeats its job, stage, task and shuffle counts exactly") {
+    import graft.tools.Profile
+    val meter = new Profile.Meter(spark)
+    meter.attach()
+    try {
+      def run(): Profile.Totals = {
+        spark.sharedState.cacheManager.clearCache()
+        meter.measureQuery(SparkEntry.queries("q_bfs")(spark, dir))._2
+      }
+      run() // warm: a cold run can add a job (a session's first table read)
+      val a = run()
+      val b = run()
+      assert(a.jobs > 1 && a.stages >= a.jobs && a.shuffleWriteRecords > 0)
+      assert(a.insideJobsS <= a.wallS + 1e-3 && a.taskCpuS > 0 && a.plans > 1)
+      def counts(t: Profile.Totals) =
+        (t.jobs, t.stages, t.tasks, t.shuffleWriteRecords, t.shuffleReadRecords)
+      assert(counts(a) == counts(b))
+    } finally {
+      meter.detach()
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
+  test("bfs: every graded traversal depth is within one compaction window") {
+    // a graded depth past compactEvery would pay a reached-set copy per
+    // run and change the q_bfs/q_harmonic plans the lockfiles pin
+    import graft.operators.Bfs
+    import graft.queries.Relational
+    assert(Relational.gradedHops.forall(_ <= Bfs.compactEvery),
+      s"graded depths ${Relational.gradedHops} vs compactEvery ${Bfs.compactEvery}")
+  }
+
   test("bfs: deep traversal crosses reached-set compaction boundaries intact") {
     import graft.operators.Bfs
     // 9-node path: 8 hops from node 1, so the k-compacted accumulator

@@ -952,7 +952,8 @@ class PlanQualitySpec extends SparkSuite {
 
   test("plan-fingerprint lockfile: no graded query's plan shape drifted") {
     // docs/PLAN_FINGERPRINTS.json records every query's physical-plan
-    // node counts (tools/PlanFingerprints, same session config). A
+    // node counts (tools/PlanFingerprints; it and this suite both run on
+    // SessionConfigs.local(4), so the configs match by construction). A
     // mismatch means a plan changed — a lost broadcast, a subtree
     // diverging into a second scan, a join falling to nested-loop. If
     // the change is INTENDED, regenerate the lockfile and review the
