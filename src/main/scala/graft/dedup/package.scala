@@ -704,10 +704,12 @@ package object dedup {
       maxIter: Int = 25, driverSolveMaxEdges: Long = 1L << 20): DataFrame = {
     // checkpoint the edge computation FIRST: the symmetrizing union has the
     // edge plan as both branches, so an un-checkpointed (possibly expensive)
-    // pair pipeline would be evaluated twice — and then once more per round
-    val e = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b")).localCheckpoint()
-    if (e.count() <= driverSolveMaxEdges) return ccDriver(e)
+    // pair pipeline would be evaluated twice — and then once more per
+    // round. The pinning job also counts the edges for the path pick.
+    val (e, nEdges) = graft.core.Broadcasts.pinCounted(
+      edges.select(col(srcCol).cast("long").as("a"),
+        col(dstCol).cast("long").as("b")))
+    if (nEdges <= driverSolveMaxEdges) return ccDriver(e)
     ccDistributed(e, maxIter)._1.select(col("v").as("id"), col("l").as("rep"))
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** Multi-source breadth-first search: exact hop distance from a seed
   * set, the traversal primitive the graph family was missing (PageRank
   * = value propagation, k-core = peeling, label-prop = gossip; BFS =
@@ -18,9 +20,10 @@ import org.apache.spark.sql.functions._
   * Each round's frontier and the accumulated distance frame are
   * localCheckpoint()ed: constant-size lineage, O(1) plan growth per
   * round, and the anti-join probe side is a materialized frame.
-  * Frontiers ≤ 5M rows broadcast explicitly (a checkpointed frame has
-  * no stats, so Spark would otherwise sort-merge the whole edge list
-  * every round — the same reasoning as the k-core dead-set probe).
+  * Frontiers under the byte gate ([[graft.core.Broadcasts.fits]])
+  * broadcast explicitly (a checkpointed frame has no stats, so Spark
+  * would otherwise sort-merge the whole edge list every round — the
+  * same reasoning as the k-core dead-set probe).
   */
 object Bfs {
 
@@ -35,15 +38,33 @@ object Bfs {
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    traverse(pinnedEdges(edges, srcCol, dstCol),
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
+        .withColumn("dist", lit(0)),
+      Nil, maxHops)
+  }
+
+  /** Normalized (src, dst) long, non-null edge frame, pinned: every
+    * traversal round scans it, so the blocks are materialized once. */
+  private def pinnedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint() // scanned once per round; pin the blocks
-
-    val hop0 = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull).distinct()
-      .withColumn("dist", lit(0))
       .localCheckpoint()
+
+  /** The frontier-delta traversal behind [[distances]] and
+    * [[perSourceDistances]]. `seed` is the hop-0 frame (`carry`..., node,
+    * dist = 0); `carry` names the columns a traversal is keyed on besides
+    * `node` (the per-source `root`), which ride along every hop and key
+    * the anti-join. Each hop is ONE job: the pin of the next frontier,
+    * whose row count (an observe() metric of that same job) sizes the
+    * broadcast AND decides the exit test. */
+  private def traverse(e: DataFrame, seed: DataFrame, carry: Seq[String],
+      maxHops: Int): DataFrame = {
+    val keys = carry.map(col) :+ col("node")
+    val (hop0, seeded) = Broadcasts.pinCounted(seed)
     // the reached set is a K-COMPACTED ACCUMULATOR (r12 verdict #2): a
     // compacted checkpointed base plus at most `compactEvery` pinned
     // per-hop frames (disjoint by the anti-join), re-compacted into one
@@ -54,28 +75,28 @@ object Bfs {
     // overhead grew with the traversal, and the driver measured the
     // exact faces regressing (q_bfs 0.85x, q_harmonic 0.87x). Compaction
     // bounds both: probe cost stays flat, and the copy is amortized
-    // 1/compactEvery per hop.
+    // 1/compactEvery per hop (the per-source frame is Σ|reach| rows).
     val hops = scala.collection.mutable.ArrayBuffer(hop0)
     def reached(): DataFrame = hops.reduce(_.unionAll(_))
-    var frontier = hop0.select(col("node"))
-    var frontierSize = frontier.count()
+    var frontier = hop0.select(keys: _*)
+    var frontierSize = seeded
 
     var hop = 0
     while (hop < maxHops && frontierSize > 0L) {
       hop += 1
+      val renamed = frontier.withColumnRenamed("node", "src")
       val probe =
-        if (frontierSize <= 5000000L) broadcast(frontier.withColumnRenamed("node", "src"))
-        else frontier.withColumnRenamed("node", "src")
-      val next = e.join(probe, "src")
-        .select(col("dst").as("node")).distinct()
+        if (Broadcasts.fits(frontierSize, renamed.schema)) broadcast(renamed)
+        else renamed
+      val (next, reachedNow) = Broadcasts.pinCounted(e.join(probe, "src")
+        .select(carry.map(col) :+ col("dst").as("node"): _*).distinct()
         // no join hint: the hop frames are materialized, so AQE re-plans
         // this anti-join from REAL sizes and converts the reached side to
         // a broadcast while it is small (forcing shuffle_hash here
         // measured +1.5s/+2.7s on q_harmonic/q_harmonic_approx)
-        .join(reached().select(col("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint()
-      frontierSize = next.count() // one action: sizes the broadcast AND the exit test
+        .join(reached().select(keys: _*), carry :+ "node", "left_anti")
+        .withColumn("dist", lit(hop)))
+      frontierSize = reachedNow
       if (frontierSize > 0L) {
         hops += next
         // compact only when another hop can follow — a copy right
@@ -84,7 +105,7 @@ object Bfs {
           val acc = reached().localCheckpoint()
           hops.clear(); hops += acc
         }
-        frontier = next.select(col("node"))
+        frontier = next.select(keys: _*)
       }
     }
     reached()
@@ -172,61 +193,24 @@ object Bfs {
     * into one partition. */
   def perSourceDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint()
-    perSourceDistancesPinned(e, seeds, maxHops, seedCol)
-  }
+      seedCol: String = "node"): DataFrame =
+    perSource(pinnedEdges(edges, srcCol, dstCol), seeds, maxHops, seedCol)
 
-  /** [[perSourceDistances]] over an ALREADY-normalized-and-pinned edge
-    * frame — columns (src, dst) long, non-null, localCheckpoint()ed by
-    * the caller. Exists so callers that need the pinned frame for OTHER
-    * jobs too (harmonicEstimate's N-count) materialize the edge list
-    * ONCE: the public face's unconditional normalize+checkpoint made
-    * the estimate copy the whole edge list twice, a real cost at soak
-    * scale (26M edges) and part of the measured +29% the estimate paid
-    * over its own traversals (r11 verdict Next #7). */
-  private[graft] def perSourceDistancesPinned(e: DataFrame, seeds: DataFrame,
-      maxHops: Int, seedCol: String = "node"): DataFrame = {
+  /** [[perSourceDistances]] over an already [[pinnedEdges]] frame, so
+    * callers that need the pinned frame for OTHER jobs too
+    * (harmonicEstimate's N-count) materialize the edge list ONCE: a
+    * second normalize+checkpoint made the estimate copy the whole edge
+    * list twice, a real cost at soak scale (26M edges) and part of the
+    * measured +29% the estimate paid over its own traversals (r11
+    * verdict Next #7). */
+  private def perSource(e: DataFrame, seeds: DataFrame, maxHops: Int,
+      seedCol: String): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val hop0 = seeds.select(col(seedCol).cast("long").as("root"))
-      .filter(col("root").isNotNull).distinct()
-      .withColumn("node", col("root")).withColumn("dist", lit(0))
-      .localCheckpoint()
-    // k-compacted accumulator, as in [[distances]]: bounded probe-side
-    // frame count per hop, the O(Σ|reach|) copy paid only once per
-    // `compactEvery` hops (the per-source frame is Σ|reach| rows, which
-    // the r11 every-hop re-checkpoint paid again every hop)
-    val hops = scala.collection.mutable.ArrayBuffer(hop0)
-    def reached(): DataFrame = hops.reduce(_.unionAll(_))
-    var frontier = hop0.select(col("root"), col("node"))
-    var frontierSize = frontier.count()
-    var hop = 0
-    while (hop < maxHops && frontierSize > 0L) {
-      hop += 1
-      val renamed = frontier.withColumnRenamed("node", "src")
-      val probe = if (frontierSize <= 5000000L) broadcast(renamed) else renamed
-      val next = e.join(probe, "src")
-        .select(col("root"), col("dst").as("node")).distinct()
-        .join(reached().select(col("root"), col("node")),
-          Seq("root", "node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint()
-      frontierSize = next.count()
-      if (frontierSize > 0L) {
-        hops += next
-        // compact only when another hop can follow (see distances)
-        if (hops.size > compactEvery && hop < maxHops) {
-          val acc = reached().localCheckpoint()
-          hops.clear(); hops += acc
-        }
-        frontier = next.select(col("root"), col("node"))
-      }
-    }
-    reached()
+    traverse(e,
+      seeds.select(col(seedCol).cast("long").as("root"))
+        .filter(col("root").isNotNull).distinct()
+        .withColumn("node", col("root")).withColumn("dist", lit(0)),
+      Seq("root"), maxHops)
   }
 
   /** Harmonic centrality of each seed within `maxHops`:
@@ -272,22 +256,16 @@ object Bfs {
   def harmonicEstimate(edges: DataFrame, pivots: DataFrame, maxHops: Int,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint() // pinned ONCE: feeds N-count + k traversal rounds
+    // pinned ONCE: feeds the N-count and the k traversals
+    val e = pinnedEdges(edges, srcCol, dstCol)
     // N over the SYMMETRIC edge list: src covers every node
     val n = e.select(col("src")).distinct().count()
-    val p = pivots.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull).distinct()
-      .localCheckpoint() // feeds k-count + the traversal seed
-    val k = p.count()
+    // the pivot pin counts k; the pinned frame seeds the traversal
+    val (p, k) = Broadcasts.pinCounted(
+      pivots.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct())
     require(k > 0, "harmonicEstimate: empty pivot set")
-    // the Pinned face reuses the frame pinned above — the public face
-    // would copy the whole edge list into block storage a second time
-    // (r11 verdict Next #7: the estimate must not cost more than its
-    // own traversals)
-    perSourceDistancesPinned(e, p, maxHops)
+    perSource(e, p, maxHops, "node")
       .filter(col("dist") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_pivots"),

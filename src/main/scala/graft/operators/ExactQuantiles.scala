@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Broadcasts
 import graft.functions.QuantileExprs
 
 /** EXACT distributed quantiles without a global sort — iterative
@@ -281,13 +282,12 @@ object ExactQuantiles {
     // one double per group — but GATED on a counted byte budget (r12
     // advice: group cardinality is unbounded — a near-unique group
     // column would make an unconditional broadcast corpus-sized).
-    // Pin first so the count and the join read the same blocks; above
-    // the gate, shuffled-hash with the group-sized build side.
+    // The pinning job counts the rows, so the join reads the blocks
+    // it sized; above the gate, shuffled-hash with the group-sized
+    // build side.
     def gated(d: DataFrame): DataFrame = {
-      val pinned = d.localCheckpoint()
-      if (graft.core.Broadcasts.fits(pinned.count(), pinned.schema))
-        broadcast(pinned)
-      else pinned.hint("shuffle_hash")
+      val (pinned, attach) = Broadcasts.pinGated(d)
+      attach(pinned)
     }
     val med = gated(exactQuantilesByGroup(base, "g", "v", Seq(0.5))
       .select(col("g"), col("value").as("med")))
@@ -327,18 +327,15 @@ object ExactQuantiles {
     val base = df.select(col(groupCol).as("g"),
         col(valueCol).cast("double").as("v"))
       .filter(col("v").isNotNull && col("g").isNotNull)
-    val bounds = exactQuantilesByGroup(base, "g", "v", Seq(pLo, pHi))
-      .groupBy(col("g")).agg(
-        min(when(col("prob") === pLo, col("value"))).as("lo"),
-        min(when(col("prob") === pHi, col("value"))).as("hi"))
-      .localCheckpoint() // group-sized; pinned so the gate count is free
-    // same counted byte-gate as madOutliers (group cardinality is
+    // group-sized: pinned and counted in one job, then the same
+    // counted byte-gate as madOutliers (group cardinality is
     // unbounded; an unconditional broadcast would be too)
-    val boundsIn =
-      if (graft.core.Broadcasts.fits(bounds.count(), bounds.schema))
-        broadcast(bounds)
-      else bounds.hint("shuffle_hash")
-    base.join(boundsIn, "g")
+    val (bounds, attach) = Broadcasts.pinGated(
+      exactQuantilesByGroup(base, "g", "v", Seq(pLo, pHi))
+        .groupBy(col("g")).agg(
+          min(when(col("prob") === pLo, col("value"))).as("lo"),
+          min(when(col("prob") === pHi, col("value"))).as("hi")))
+    base.join(attach(bounds), "g")
       .withColumn("w", least(greatest(col("v"), col("lo")), col("hi")))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** k-core decomposition by iterative peeling — the graph-family density
   * filter of corpus curation: keep only the subgraph where every node
   * retains at least `k` neighbors AFTER every weaker node is removed.
@@ -32,12 +34,13 @@ import org.apache.spark.sql.functions._
   * localCheckpointed each round (the d_clusters flat-cost-per-round
   * discipline — the survivor filter references it twice, which would
   * otherwise double the lineage every round). The per-round driver
-  * action is ONE bounded count on the checkpointed blocks (free read,
-  * no recompute), used only for the convergence test. Rounds are
-  * bounded by the peel depth (the graph's degeneracy ordering length),
-  * O(log n) on real-world graphs; `maxRounds` converts a pathological
-  * input (a path graph peels one node per round) into an explicit error
-  * instead of an unbounded loop.
+  * action is ONE job, the pin of the next degree frame; the dead-node
+  * count that sizes the probe and decides convergence is an observe()
+  * metric of that same job ([[graft.core.Broadcasts.pinCounted]]), not
+  * a separate count job. Rounds are bounded by the peel depth (the
+  * graph's degeneracy ordering length), O(log n) on real-world graphs;
+  * `maxRounds` converts a pathological input (a path graph peels one
+  * node per round) into an explicit error instead of an unbounded loop.
   */
 object KCore {
 
@@ -59,8 +62,9 @@ object KCore {
     * AND rewrites the full edge set. Measured 7.6 -> 5.4 s steady on
     * the sf0.1 co-occurrence graph (6 rounds; the residual floor is the
     * shared co-occurrence edge build + per-round job latency — the
-    * graph-family profile: q_pagerank 8.6 s, q_triangles 6.5 s there). */
-  /** `symmetricDistinct = true` asserts the input ALREADY lists both
+    * graph-family profile: q_pagerank 8.6 s, q_triangles 6.5 s there).
+    *
+    * `symmetricDistinct = true` asserts the input ALREADY lists both
     * directions of every undirected edge exactly once with no loops
     * (e.g. [[PageRank.coOccurrenceEdges]] output, symmetric-by-
     * construction and grouped) — the canonicalization explode+distinct
@@ -94,40 +98,39 @@ object KCore {
           col("src").isNotNull && col("dst").isNotNull)
         .distinct())
       .localCheckpoint()
-    var deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    var rounds = 0
-    while (true) {
-      rounds += 1
-      if (rounds > maxRounds)
+    // each pin of the degree frame also counts its dead nodes (degree
+    // below k) — the next round's probe size and the convergence test
+    def pinDeg(d: DataFrame): (DataFrame, Long) =
+      Broadcasts.pinCounted(d, col("deg") < k)
+    var (deg, nDead) =
+      pinDeg(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+    var rounds = 1
+    while (nDead > 0L) {
+      if (rounds >= maxRounds)
         throw new IllegalStateException(
           s"kCore(k=$k) did not converge in $maxRounds peel rounds — " +
             "raise maxRounds for deep-degeneracy graphs (e.g. long paths)")
-      // referenced twice (count + probe), but BOTH consumers are a
-      // codegen'd filter over the already-pinned degree blocks — the
-      // r12 per-round localCheckpoint here bought nothing and cost one
-      // eager job per peel round (r13 serial-floor pass)
-      val dead = deg.filter(col("deg") < k).select(col("node"))
-      val nDead = dead.count()
-      if (nDead == 0L) return deg
+      rounds += 1
       // edges from ANY src into this round's dead set, counted per src:
       // survivors lose exactly these; dead srcs drop out of the join
       // below anyway. One pass over the checkpointed edge blocks — and
       // a checkpointed frame has no stats, so Spark would sort-merge
       // (full edge shuffle per round); the dead frontier is almost
-      // always tiny, so broadcast it explicitly below the same 5M-row
-      // bound Triangles uses, keeping the probe map-side and the edge
-      // frame unshuffled for the whole peel
-      val deadDst = dead.select(col("node").as("dst"))
-      val probe = if (nDead <= 5000000L) broadcast(deadDst) else deadDst
+      // always tiny, so broadcast it explicitly under the byte gate,
+      // keeping the probe map-side and the edge frame unshuffled for
+      // the whole peel. The dead filter is a codegen'd read of the
+      // pinned degree blocks, so it is not pinned itself.
+      val deadDst = deg.filter(col("deg") < k).select(col("node").as("dst"))
+      val probe =
+        if (Broadcasts.fits(nDead, deadDst.schema)) broadcast(deadDst) else deadDst
       val dec = e.join(probe, "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      deg = deg.filter(col("deg") >= k)
+      val (next, n) = pinDeg(deg.filter(col("deg") >= k)
         .join(dec, Seq("node"), "left")
         .select(col("node"),
-          (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-        .localCheckpoint()
+          (col("deg") - coalesce(col("d"), lit(0L))).as("deg")))
+      deg = next; nDead = n
     }
-    deg // unreachable
+    deg
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** Seed-clamped label propagation over a weighted directed edge list —
   * the weak-supervision primitive of corpus curation: spread a small set
   * of trusted labels (hand-audited quality tiers, known-domain tags,
@@ -112,16 +114,13 @@ object LabelProp {
     * (label, n_nodes, in_w, tot_w, contrib_nano). */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     // the label frame is node-sized and consumed by BOTH endpoint
-    // attaches: pin it once and gate the broadcast on a counted
+    // attaches: pin it once and gate the broadcast on its counted
     // byte-budget (the rank-family precedent) — above the gate the
-    // planner falls back to its own choice, below it both attaches are
-    // map-side and the edge frame is never shuffled here at all
-    val lab = labels.select(col("node"), col("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
-      .localCheckpoint()
-    val bcastLab = lab.count() <=
-      graft.core.Broadcasts.rowGate(lab.schema)
-    def attach(d: DataFrame): DataFrame = if (bcastLab) broadcast(d) else d
+    // label frame is the shuffled-hash build side, below it both
+    // attaches are map-side and the edge frame is never shuffled here
+    val (lab, attach) = Broadcasts.pinGated(
+      labels.select(col("node"), col("label"))
+        .filter(col("node").isNotNull && col("label").isNotNull))
     // ONE pass over the labeled edge set computes BOTH per-community
     // sums (in_w as a conditional sum inside the tot aggregate), and 2m
     // is the sum of tot_w over the label-sized aggregate — the old

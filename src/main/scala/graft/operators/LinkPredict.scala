@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Broadcasts
@@ -147,7 +147,7 @@ object LinkPredict {
       .join(attach(deg.select(col("node").as("dst"), col("deg").as("cdeg"))), "dst")
       .select(col("dst").as("cw"), col("src").as("u"), col("cdeg"))
     val (adj, adjRows) =
-      pinCounted(if (hubCap > 0) adj0.filter(col("cdeg") <= hubCap) else adj0)
+      Broadcasts.pinCounted(if (hubCap > 0) adj0.filter(col("cdeg") <= hubCap) else adj0)
 
     // explicit-width repartitions: see topPairs (the wedge stage is the
     // coalescer blind spot)
@@ -184,23 +184,9 @@ object LinkPredict {
     * pick up one long per endpoint (measured at sf0.1 on the holdout
     * face: the du/dv attaches were 225 + 297 MB of pair-frame shuffle
     * read). Above the gate, shuffled-hash with the node-sized build. */
-  private def degrees(e: DataFrame): (DataFrame, DataFrame => DataFrame) = {
-    val (deg, rows) = pinCounted(
+  private def degrees(e: DataFrame): (DataFrame, DataFrame => DataFrame) =
+    Broadcasts.pinGated(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
-    val attach: DataFrame => DataFrame =
-      if (Broadcasts.fits(rows, deg.schema)) broadcast(_) else _.hint("shuffle_hash")
-    (deg, attach)
-  }
-
-  /** Eagerly pin `df` and return it with its row count, read from an
-    * observe() metric of the pinning job itself — no second count() job.
-    * The Observation is unnamed, so repeated calls in one session cannot
-    * collide on a name. */
-  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = Observation()
-    val pinned = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    (pinned, obs.get("n").asInstanceOf[Long])
-  }
 
   /** (u, v, inter, uni, jac_ppm, ra_1e9) from the (u, v, inter, ra_1e9)
     * pair frame: the union size comes from the two endpoint degrees. */

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Broadcasts
 
 /** Distributed PageRank over an edge-list frame — the web-graph quality
   * weight every large pretraining corpus pipeline ends up needing
@@ -36,51 +38,100 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Static frames shared by every rank run over one SYMMETRIC edge
-    * list — built once by [[rankStatics]] and threaded into
-    * [[pageRank]] / [[personalizedPageRank]] so a query running BOTH
-    * (the q_ppr_quality shape: PPR vs uniform-PR seed concentration)
-    * pays the out-weight aggregate, the gate count and the edge-sized
-    * out-weight attach ONCE instead of once per run.
+  /** Static frames shared by every rank run over one edge list — built
+    * once by [[rankStatics]] and threaded into [[pageRank]] /
+    * [[personalizedPageRank]] so a query running BOTH (the q_ppr_quality
+    * shape: PPR vs uniform-PR seed concentration) pays the out-weight
+    * aggregate, the node pin and the edge-sized out-weight attach ONCE
+    * instead of once per run.
     *
-    *  - `e`     normalized (src, dst, w) long columns
     *  - `outw`  pinned per-src out-weight aggregate (node-sized)
+    *  - `nodes` pinned node frame (one `node` column)
     *  - `eo`    pinned edges-with-out-weight attach (edge-sized)
-    *  - `bcastNodes` the counted-and-byte-gated broadcast decision
-    *  - `nNodes` the node count behind that decision (symmetric
-    *    contract: the node set IS outw's key set) */
-  final case class RankStatics(e: DataFrame, outw: DataFrame,
-    eo: DataFrame, bcastNodes: Boolean, nNodes: Long)
-
-  /** Effective broadcast row gate: the caller's row threshold capped by
-    * the byte budget for the (long, long) frames the rank loop
-    * broadcasts per round (ranks, contributions, out-weights) — r12
-    * verdict #7: a row count is the wrong unit for a byte-cost
-    * decision. 64 MB / ~48 B per row ≈ 1.4M rows, so the byte cap binds
-    * below the legacy 5M default. */
-  private[operators] def nodeGate(threshold: Long, schema: org.apache.spark.sql.types.StructType): Long =
-    math.min(threshold, graft.core.Broadcasts.rowGate(schema))
+    *  - `nNodes` the node count, observed on the node pin: the dangling
+    *    divisor and the size behind `nodeSide`
+    *  - `nodeSide` how a node-sized frame joins the edges:
+    *    [[graft.core.Broadcasts.buildSide]] for `nNodes` rows of the
+    *    (long, long) frames the rounds ship */
+  final case class RankStatics(outw: DataFrame, nodes: DataFrame,
+    eo: DataFrame, nNodes: Long, nodeSide: DataFrame => DataFrame)
 
   /** Build [[RankStatics]] for a symmetric edge list (the
     * [[coOccurrenceEdges]] contract). `edges` should be pinned by the
     * caller when it is a computed frame — the aggregate and attach here
     * each scan it once. */
-  def rankStatics(edges: DataFrame,
-      broadcastNodeThreshold: Long = 5000000L): RankStatics = {
+  def rankStatics(edges: DataFrame): RankStatics = buildStatics(edges, symmetric = true)
+
+  /** [[rankStatics]] for any edge list. `symmetric = true` asserts every
+    * node occurs as a src (the coOccurrenceEdges contract: each in-edge
+    * has its mirror), so the node frame IS the out-weight frame's key
+    * set — the union+distinct over both endpoint columns (a second full
+    * edge pass + a 2x-edge exchange) collapses into a projection of the
+    * pinned aggregate. Identical node set by construction.
+    *
+    * Every static frame is PINNED, for the lazy rank path too:
+    * ReuseExchange only shares the shuffle FILES — everything above the
+    * reused exchange (the edge-weight final aggregate, the out-weight
+    * join, the node projection) re-executed in EVERY round's stage, and
+    * for a computed edge frame that re-aggregation is the per-round cost
+    * floor (measured at sf0.1: each of q_ppr's round stages carried
+    * ~8 core-s re-running the 2.4M-entry weight aggregate it read
+    * through the reused exchange). Three pinning jobs, no count job, and
+    * every round becomes a block read. */
+  private def buildStatics(edges: DataFrame, symmetric: Boolean): RankStatics = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
+    // the out-weight aggregate is NODE-sized and feeds everything (the
+    // edge attach, the node frame, the dangling probe) — one
+    // aggregation instead of one per consumer
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
       .localCheckpoint()
-    val nNodes = outw.count() // symmetric: node set == out-weight key set
-    val bcastNodes = nNodes <= nodeGate(broadcastNodeThreshold, outw.schema)
-    // lineage break: see pageRank's eoPin
-    val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
+    val (nodes, nNodes) = Broadcasts.pinCounted(
+      if (symmetric) outw.select(col("src").as("node"))
+      else e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+    // the gate is sized for the per-round (long, long) frames (ranks,
+    // contributions, out-weights), r12 verdict #7
+    val nodeSide = Broadcasts.buildSide(nNodes, outw.schema)
+    // out-weight attach under the SAME gate: broadcast means the pinned
+    // edge frame is built map-only over the edge aggregate's output —
+    // no edge-sized exchange anywhere in the prelude; above the gate,
+    // shuffled-hash (node-sized per-partition build, no sorts).
+    // LINEAGE BREAK (r12 verdict #1): outw derives FROM e, and its
+    // checkpointed LogicalRDD keeps e's `src` exprId — the analyzer's
+    // DeduplicateRelations cannot re-alias a LogicalRDD that is not a
+    // duplicate relation, so the self-referential join threw
+    // [INTERNAL_ERROR] "conflicting references in Join" under the
+    // adversarial config matrix. Fresh alias on the build-side key
+    // (new exprId by construction) makes the join unambiguous under
+    // every config; same rows, one extra column dropped.
     val eo = e.join(
-        if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
+        nodeSide(outw.select(col("src").as("ow_src"), col("out_w"))),
         col("src") === col("ow_src"))
       .drop("ow_src")
       .localCheckpoint()
-    RankStatics(e, outw, eo, bcastNodes, nNodes)
+    RankStatics(outw, nodes, eo, nNodes, nodeSide)
+  }
+
+  /** One round's contributions joined onto the node-keyed `base`:
+    * c(dst) = Σ over in-edges (pr DIV out_w) * w, left-joined so every
+    * base row survives (c is null where nothing flows in). Both joins
+    * take the statics' node gate:
+    *  - node frame small enough: BROADCAST the rank/contrib frames —
+    *    the pinned edge frame is then read as blocks with NO exchange at
+    *    all, and the only per-round shuffle is the map-combined (dst, c)
+    *    partial frame (measured at sf0.1: each round stage had been
+    *    re-reading a 38 MB edge exchange; broadcast rounds move ~1% of
+    *    that).
+    *  - above the gate: shuffled-hash with the node-sized build side
+    *    (no per-round sorts; partition count scales with the corpus, so
+    *    the per-partition build stays bounded at any size). */
+  private def withContrib(st: RankStatics, base: DataFrame,
+      ranks: DataFrame): DataFrame = {
+    val contrib = st.eo.join(st.nodeSide(ranks), st.eo("src") === ranks("node"))
+      .groupBy(col("dst"))
+      .agg(sum(expr("(pr DIV out_w) * w")).as("c"))
+    base.join(st.nodeSide(contrib), base("node") === contrib("dst"), "left")
   }
 
   /** Directed co-occurrence edges from a fact table: one edge (src, dst,
@@ -205,113 +256,36 @@ object PageRank {
       dampNum: Int = 85, dampDen: Int = 100, handleDangling: Boolean = true,
       stageEvery: Int = 0, tolUnits: Long = -1L,
       symmetric: Boolean = false,
-      broadcastNodeThreshold: Long = 5000000L,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(statics.isEmpty || symmetric,
       "pre-built RankStatics carry the symmetric contract")
-    val e = statics.map(_.e).getOrElse(
-      edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    // the out-weight aggregate is NODE-sized: pinned first, because it
-    // feeds everything (the edge attach, the node frame, the dangling
-    // probe) — one aggregation instead of one per consumer
-    val outw = statics.map(_.outw).getOrElse(
-      e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-        .localCheckpoint())
-    // `symmetric = true` asserts every node occurs as a src (the
-    // coOccurrenceEdges contract: each in-edge has its mirror), so the
-    // node frame IS the out-weight frame's key set — the union+distinct
-    // over both endpoint columns (a second full edge pass + a 2x-edge
-    // exchange) collapses into a projection of the pinned aggregate.
-    // Identical node set by construction.
-    val nodes =
-      if (symmetric) outw.select(col("src").as("node"))
-      else e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
+    val st = statics.getOrElse(buildStatics(edges, symmetric))
+    val nodesPin = st.nodes
     // static over iterations: nodes with no out-edge (dangling); the
-    // node count is the LITERAL the gate already counted (r12 verdict
-    // #6: the old spelling paid a per-round 1-row aggregate + broadcast
-    // cross for a number the loop had already computed)
-    lazy val dangNodes = nodes.join(outw, nodes("node") === outw("src"), "left_anti")
+    // node count is the LITERAL the node pin already observed (r12
+    // verdict #6: the old spelling paid a per-round 1-row aggregate +
+    // broadcast cross for a number the loop had already computed)
+    lazy val dangPin = nodesPin
+      .join(st.outw, nodesPin("node") === st.outw("src"), "left_anti")
+      .localCheckpoint()
     val teleport = (dampDen - dampNum).toLong * scale / dampDen
 
-    def roundOn(eoF: DataFrame, nodesF: DataFrame, dangF: => DataFrame,
-        nNodes: Long, bcastNodes: Boolean)(ranks: DataFrame): DataFrame = {
-      // Join strategy per round, by a COUNTED gate (the toCategorical /
-      // Bfs-frontier precedent, threshold [[broadcastNodeThreshold]]):
-      //  - node frame small enough (any graph this side of ~5M nodes):
-      //    BROADCAST the rank/contrib frames — the pinned edge frame is
-      //    then read as blocks with NO exchange at all, and the only
-      //    per-round shuffle is the map-combined (dst, c) partial frame
-      //    (measured at sf0.1: each round stage had been re-reading a
-      //    38 MB edge exchange; broadcast rounds move ~1% of that).
-      //  - above the gate: shuffled-hash with the node-sized build side
-      //    (no per-round sorts; partition count scales with the corpus,
-      //    so the per-partition build stays bounded at any size).
-      val ranksIn =
-        if (bcastNodes) broadcast(ranks) else ranks.hint("shuffle_hash")
-      val contrib = eoF.join(ranksIn, eoF("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("(pr DIV out_w) * w")).as("c"))
-      val contribIn =
-        if (bcastNodes) broadcast(contrib) else contrib.hint("shuffle_hash")
-      val base = nodesF.join(contribIn,
-        nodesF("node") === contrib("dst"), "left")
+    def round(ranks: DataFrame): DataFrame = {
+      val base = withContrib(st, nodesPin, ranks)
       if (handleDangling) {
-        val dang = ranks.join(dangF, "node", "left_semi")
+        val dang = ranks.join(dangPin, "node", "left_semi")
           .agg(coalesce(sum(col("pr")), lit(0L)).as("dsum"))
         base.crossJoin(broadcast(dang))
           .select(col("node"),
             (lit(teleport) +
-              expr(s"$dampNum * (coalesce(c, 0) + dsum DIV ${nNodes}L) DIV $dampDen"))
+              expr(s"$dampNum * (coalesce(c, 0) + dsum DIV ${st.nNodes}L) DIV $dampDen"))
               .as("pr"))
       } else
         base.select(col("node"),
           (lit(teleport) +
             expr(s"$dampNum * coalesce(c, 0) DIV $dampDen")).as("pr"))
     }
-    // the static frames are PINNED for the lazy path too: ReuseExchange
-    // only shares the shuffle FILES — everything above the reused
-    // exchange (the edge-weight final aggregate, the out-weight join,
-    // the node projection) re-executed in EVERY round's stage, and for
-    // a computed edge frame that re-aggregation is the per-round cost
-    // floor (measured at sf0.1: each of q_ppr's round stages carried
-    // ~8 core-s re-running the 2.4M-entry weight aggregate it read
-    // through the reused exchange). One edge-sized + one node-sized
-    // materialization — the same price the convergence path, KCore and
-    // Bfs already pay — and every round becomes a block read.
-    val nodesPin = nodes.localCheckpoint()
-    lazy val dangPin = dangNodes.localCheckpoint()
-    // counted broadcast gate (one free count of the pinned node frame),
-    // capped by the BYTE budget for the per-round (long, long) frames
-    // (r12 verdict #7) — or inherited from the shared statics. The same
-    // count doubles as the dangling-mass divisor (verdict #6).
-    val nNodes = statics.map(_.nNodes).getOrElse(nodesPin.count())
-    val bcastNodes = statics.map(_.bcastNodes).getOrElse(
-      nNodes <= nodeGate(broadcastNodeThreshold, outw.schema))
-    // out-weight attach under the SAME gate: broadcast means the pinned
-    // edge frame is built map-only over the edge aggregate's output —
-    // no edge-sized exchange anywhere in the prelude; above the gate,
-    // shuffled-hash (node-sized per-partition build, no sorts).
-    // LINEAGE BREAK (r12 verdict #1): outw derives FROM e, and its
-    // checkpointed LogicalRDD keeps e's `src` exprId — the analyzer's
-    // DeduplicateRelations cannot re-alias a LogicalRDD that is not a
-    // duplicate relation, so the self-referential join threw
-    // [INTERNAL_ERROR] "conflicting references in Join" under the
-    // adversarial config matrix. Fresh alias on the build-side key
-    // (new exprId by construction) makes the join unambiguous under
-    // every config; same rows, one extra column dropped.
-    val eoPin = statics.map(_.eo).getOrElse {
-      val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
-      e.join(
-          if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
-          col("src") === col("ow_src"))
-        .drop("ow_src")
-        .localCheckpoint()
-    }
-    def round(ranks: DataFrame): DataFrame =
-      roundOn(eoPin, nodesPin, dangPin, nNodes, bcastNodes)(ranks)
 
     var ranks = nodesPin.select(col("node"), lit(scale).as("pr"))
     if (tolUnits >= 0L) {
@@ -327,12 +301,11 @@ object PageRank {
       // convergence face cost 2.2x the fixed-round face for the same 6
       // rounds). Checkpoint the static frames ONCE; rounds then re-read
       // blocks instead of recomputing lineage.
-      def roundCk(ranks: DataFrame): DataFrame = round(ranks)
       ranks = nodesPin.select(col("node"), lit(scale).as("pr")).localCheckpoint()
       var i = 0
       var converged = false
       while (i < iterations && !converged) {
-        val next = roundCk(ranks).localCheckpoint()
+        val next = round(ranks).localCheckpoint()
         i += 1
         // the convergence probe exists to SKIP later rounds; after the
         // final round there is nothing left to skip, so the node-sized
@@ -392,37 +365,25 @@ object PageRank {
       iterations: Int, scale: Long = 1000000000L, dampNum: Int = 85,
       dampDen: Int = 100, seedCol: String = "node",
       symmetric: Boolean = false,
-      broadcastNodeThreshold: Long = 5000000L,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(statics.isEmpty || symmetric,
       "pre-built RankStatics carry the symmetric contract")
-    val e = statics.map(_.e).getOrElse(
-      edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    val outw = statics.map(_.outw).getOrElse(
-      e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-        .localCheckpoint()) // node-sized; feeds the edge attach AND the node frame
-    // same contract as [[pageRank]]'s `symmetric`: node set == out-weight
-    // key set, skipping the union+distinct second edge pass
-    val nodes =
-      if (symmetric) outw.select(col("src").as("node"))
-      else e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
+    val st = statics.getOrElse(buildStatics(edges, symmetric))
+    val nodes = st.nodes
     val s = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .join(nodes.hint("shuffle_hash"), "node", "left_semi")
     val counts = nodes.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(s.agg(count(lit(1)).as("n_seeds")))
     val teleBase = (dampDen - dampNum).toLong * scale / dampDen
     // static per-node teleport frame: seeds carry teleBase*N DIV |S|,
-    // everyone else 0 — node-sized, reused by every round
-    // static per-node teleport frame. localCheckpoint: this 3-way join
-    // (nodes ⋈ seeds ⋈ the two count aggregates) appears in EVERY
-    // round's plan plus the rank seed — 7 occurrences over 6 rounds —
-    // and cross-subtree reuse of the whole join (not just its leaf
-    // exchanges) is not something ReuseExchange guarantees. One
-    // node-sized materialization, every round re-reads blocks
-    // (measured 12.9 → 7.7 s on the sf0.1 graded face).
+    // everyone else 0 — node-sized, reused by every round.
+    // localCheckpoint: this 3-way join (nodes ⋈ seeds ⋈ the two count
+    // aggregates) appears in EVERY round's plan plus the rank seed — 7
+    // occurrences over 6 rounds — and cross-subtree reuse of the whole
+    // join (not just its leaf exchanges) is not something ReuseExchange
+    // guarantees. One node-sized materialization, every round re-reads
+    // blocks (measured 12.9 → 7.7 s on the sf0.1 graded face).
     val tele = nodes.join(s.withColumn("is_seed", lit(1)).hint("shuffle_hash"),
         Seq("node"), "left")
       .crossJoin(broadcast(counts))
@@ -431,39 +392,11 @@ object PageRank {
           expr(s"$teleBase * n_nodes DIV n_seeds")).otherwise(lit(0L))
           .as("tele"))
       .localCheckpoint()
-    // counted broadcast gate as in [[pageRank]] (tele is the node frame,
-    // already pinned — the count reads blocks), byte-capped (verdict #7)
-    // — or inherited from the shared statics
-    val bcastNodes = statics.map(_.bcastNodes).getOrElse(
-      tele.count() <= nodeGate(broadcastNodeThreshold, tele.schema))
-    // Pinned ONCE for the same reason as pageRank's eoPin: exchange reuse
-    // does not cover the weight aggregate / out-weight join ABOVE the
-    // exchange, which otherwise re-executes in every round's stage. The
-    // attach itself is gated like the rounds: broadcast under the node
-    // threshold (map-only pin build, no edge exchange), shuffled-hash above.
-    // Same lineage break as pageRank's eoPin: outw's checkpointed frame
-    // keeps e's `src` exprId, so the build side gets a fresh-aliased key.
-    val eo = statics.map(_.eo).getOrElse {
-      val outwB = outw.select(col("src").as("ow_src"), col("out_w"))
-      e.join(
-          if (bcastNodes) broadcast(outwB) else outwB.hint("shuffle_hash"),
-          col("src") === col("ow_src"))
-        .drop("ow_src")
-        .localCheckpoint()
-    }
-    def round(ranks: DataFrame): DataFrame = {
-      val ranksIn =
-        if (bcastNodes) broadcast(ranks) else ranks.hint("shuffle_hash")
-      val contrib = eo.join(ranksIn, eo("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("(pr DIV out_w) * w")).as("c"))
-      val contribIn =
-        if (bcastNodes) broadcast(contrib) else contrib.hint("shuffle_hash")
-      tele.join(contribIn, tele("node") === contrib("dst"), "left")
+    def round(ranks: DataFrame): DataFrame =
+      withContrib(st, tele, ranks)
         .select(col("node"),
           (col("tele") +
             expr(s"$dampNum * coalesce(c, 0) DIV $dampDen")).as("pr"))
-    }
     var ranks = tele.select(col("node"), col("tele").as("pr"))
     for (_ <- 1 to iterations) ranks = round(ranks)
     ranks

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Broadcasts
+
 /** Distributed triangle counting over an edge list — the graph-quality
   * primitive behind clustering-coefficient document/domain scoring and
   * community density checks in web-scale corpus curation. The reference
@@ -37,11 +39,11 @@ object Triangles {
     * ((deg, node)) rather than an encoded single key — no overflow
     * contract to carry, and it replays verbatim in ANSI SQL.
     *
-    * Plan pick — one FREE probe (a count of the localCheckpointed
-    * canonical edge set) chooses how the closure runs:
+    * Plan pick — the canonical edge count, observed on the job that
+    * pins the canonical edge set (no count job of its own), chooses how
+    * the closure runs:
     *
-    *  - SMALL (edge count below `broadcastEdgeThreshold`, default 5M ≈
-    *    40 MiB of adjacency payload): per-edge NEIGHBORHOOD
+    *  - SMALL (edge count below [[adjacencyEdgeGate]]): per-edge NEIGHBORHOOD
     *    INTERSECTION. The oriented adjacency lists (node-keyed, Σ
     *    outdeg = m total values) are broadcast, each oriented edge
     *    (u, v) picks up N+(u) and N+(v) map-side, and
@@ -64,11 +66,20 @@ object Triangles {
     * Both paths consume ONE u-keyed exchange of the oriented edge set,
     * so the upstream (dedup, degree agg, degree joins) runs once. */
   def triangleCounts(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst",
-      broadcastEdgeThreshold: Long = 5000000L): DataFrame = {
+      dstCol: String = "dst"): DataFrame =
+    countsWithGate(edges, srcCol, dstCol, adjacencyEdgeGate)
+
+  /** [[triangleCounts]] with the adjacency-path edge threshold as a
+    * parameter: a threshold of 0 sends any graph down the wedge path. */
+  private[graft] def countsWithGate(edges: DataFrame, srcCol: String,
+      dstCol: String, broadcastEdgeThreshold: Long): DataFrame = {
     val (e, m) = canonical(edges, srcCol, dstCol)
     countsFromCanonical(e, m, broadcastEdgeThreshold, degreesPinned(e))
   }
+
+  /** Edge count below which the closure broadcasts the oriented
+    * adjacency lists: 5M edges ≈ 40 MiB of adjacency payload. */
+  private val adjacencyEdgeGate = 5000000L
 
   /** Canonical undirected edge set: (a < b) pairs, loops and duplicates
     * gone, localCheckpointed (the d_clusters/sim_kmeans lineage
@@ -76,12 +87,13 @@ object Triangles {
     * join's edge side, and — for a computed input like a co-occurrence
     * frame — everything upstream would otherwise re-run per branch and
     * once more for the plan-pick probe). Materializing it once makes
-    * every branch a narrow read of shuffle-partitioned blocks and the
-    * probe count free. Edge-sized and partition-parallel — the same
-    * cost any multi-pass graph algorithm pays, disk-backed at scale. */
+    * every branch a narrow read of shuffle-partitioned blocks, and the
+    * pinning job observes the edge count the plan pick needs. Edge-sized
+    * and partition-parallel — the same cost any multi-pass graph
+    * algorithm pays, disk-backed at scale. */
   private def canonical(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, Long) = {
-    val e = edges.select(
+      dstCol: String): (DataFrame, Long) =
+    Broadcasts.pinCounted(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -93,26 +105,21 @@ object Triangles {
       // aggregate (see its scaladoc; measured there)
       .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("a"), col("b"))
-      .distinct()
-      .localCheckpoint()
-    (e, e.count()) // count is free: it reads the checkpointed blocks
-  }
+      .distinct())
 
-  private def degrees(e: DataFrame): DataFrame =
-    e.select(col("a").as("node"))
+  /** Degree frame pinned once (node-sized) with how it attaches: it
+    * feeds BOTH orientation attaches here and, for
+    * [[clusteringCoefficient]], the coefficient join — one aggregation
+    * instead of one per consumer, sized by the pinning job itself. */
+  private def degreesPinned(e: DataFrame): (DataFrame, DataFrame => DataFrame) =
+    Broadcasts.pinGated(e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-
-  /** Degree frame pinned once (node-sized): it feeds BOTH orientation
-    * attaches here and, for [[clusteringCoefficient]], the coefficient
-    * join — one aggregation instead of one per consumer, and the gate
-    * count below reads blocks. */
-  private def degreesPinned(e: DataFrame): DataFrame =
-    degrees(e).localCheckpoint()
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
 
   private def countsFromCanonical(e: DataFrame, m: Long,
       broadcastEdgeThreshold: Long,
-      degPin: DataFrame): DataFrame = {
+      degs: (DataFrame, DataFrame => DataFrame)): DataFrame = {
+    val (degPin, attach) = degs
     // degree attaches under a counted byte-gate (the LinkPredict/rank
     // precedent, r13): BROADCAST the node-sized degree frame on both
     // attaches — the canonical edge frame is then never exchanged just
@@ -121,9 +128,6 @@ object Triangles {
     // broadcasts the only edge-sized exchange left in the whole plan is
     // the u-keyed orientation repartition below). Above the gate,
     // shuffled-hash with the node-sized build side as before (no sorts).
-    val useB = degPin.count() <= graft.core.Broadcasts.rowGate(degPin.schema)
-    def attach(d: DataFrame): DataFrame =
-      if (useB) broadcast(d) else d.hint("shuffle_hash")
     val withDeg = e
       .join(attach(degPin.select(col("node").as("a"), col("deg").as("da"))), "a")
       .join(attach(degPin.select(col("node").as("b"), col("deg").as("db"))), "b")
@@ -237,19 +241,16 @@ object Triangles {
       pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm))
 
   def triangleCountApprox(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", pPpm: Long = 200000L,
-      broadcastEdgeThreshold: Long = 5000000L): DataFrame = {
+      dstCol: String = "dst", pPpm: Long = 200000L): DataFrame = {
     require(pPpm > 0 && pPpm <= 1000000L, s"pPpm in (0, 1e6]: $pPpm")
     val (e, m) = canonical(edges, srcCol, dstCol)
-    // sampled edge set re-checkpointed: it feeds the degree aggregate,
-    // both orientation joins and the plan-pick probe (same reasoning as
-    // canonical()); sampling by hash of the CANONICAL pair keeps the
-    // decision direction-independent
-    val samp = e.filter(
-        pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm))
-      .localCheckpoint()
-    val ms = samp.count()
-    countsFromCanonical(samp, ms, broadcastEdgeThreshold, degreesPinned(samp))
+    // sampled edge set re-checkpointed, its size observed on the same
+    // job: it feeds the degree aggregate, both orientation joins and
+    // the plan pick (same reasoning as canonical()); sampling by hash of
+    // the CANONICAL pair keeps the decision direction-independent
+    val (samp, ms) = Broadcasts.pinCounted(e.filter(
+      pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm)))
+    countsFromCanonical(samp, ms, adjacencyEdgeGate, degreesPinned(samp))
       .agg((sum(col("triangles")) / 3).cast("long").as("tri_sampled"))
       .select(lit(m).as("n_edges"), lit(ms).as("n_edges_sampled"),
         coalesce(col("tri_sampled"), lit(0L)).as("tri_sampled"),
@@ -289,15 +290,14 @@ object Triangles {
     * left join of the degree frame against the triangle counts.
     * Returns (node, deg, triangles, cc_q). */
   def clusteringCoefficient(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst",
-      broadcastEdgeThreshold: Long = 5000000L): DataFrame = {
+      dstCol: String = "dst"): DataFrame = {
     val (e, m) = canonical(edges, srcCol, dstCol)
     // ONE pinned degree frame feeds the orientation attaches AND the
     // coefficient join (the old spelling aggregated degrees twice —
     // sharing was left to ReuseExchange, which re-runs everything above
     // the shared exchange per consumer)
-    val degPin = degreesPinned(e)
-    val tri = countsFromCanonical(e, m, broadcastEdgeThreshold, degPin)
+    val (degPin, attach) = degreesPinned(e)
+    val tri = countsFromCanonical(e, m, adjacencyEdgeGate, (degPin, attach))
     degPin.filter(col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("deg"),

@@ -218,7 +218,7 @@ class GraphSpec extends SparkSuite {
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
     val inter = collectMap[Long, Long](Triangles.triangleCounts(edges))
     val wedge = collectMap[Long, Long](
-      Triangles.triangleCounts(edges, broadcastEdgeThreshold = 0L))
+      Triangles.countsWithGate(edges, "src", "dst", broadcastEdgeThreshold = 0L))
     assert(inter.nonEmpty && inter == wedge)
   }
 
@@ -239,6 +239,14 @@ class GraphSpec extends SparkSuite {
     // k=1 on an edge-ful graph: nothing peels, degrees are raw
     val k1 = collectMap[Long, Long](KCore.kCore(edges, 1))
     assert(k1 == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 2L, 6L -> 1L))
+  }
+
+  test("kCore: k above every degree empties the graph in the first peel round") {
+    import graft.operators.KCore
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    // maxRounds = 2 allows exactly one peel: every node dies in it, and
+    // the emptied degree frame must read 0 dead nodes, ending the peel
+    assert(KCore.kCore(edges, 10, maxRounds = 2).count() == 0L)
   }
 
   test("kCore matches a brute-force peel on the real co-occurrence graph") {
@@ -437,6 +445,45 @@ class GraphSpec extends SparkSuite {
     val multi = collectMap[Long, Int](
       Bfs.distances(edges, Seq(1L, 5L, 77L).toDF("node"), maxHops = 10))
     assert(multi == Map(1L -> 0, 5L -> 0, 77L -> 0, 2L -> 1, 4L -> 1, 3L -> 2))
+  }
+
+  test("bfs: an empty seed set returns no rows") {
+    import graft.operators.Bfs
+    val edges = sym((1L, 2L), (2L, 3L))
+    assert(Bfs.distances(edges, Seq.empty[Long].toDF("node"), maxHops = 3)
+      .count() == 0L)
+  }
+
+  test("cost: jobs per bfs hop and per kCore peel round stay pinned") {
+    // one job count per depth on a path graph; the difference between
+    // two depths is the per-round cost. A count() job added back to
+    // either loop shows up as +1 here
+    import graft.operators.{Bfs, KCore}
+    import graft.tools.Profile
+    def path(n: Long) = sym((1L until n).map(i => (i, i + 1)): _*)
+    val meter = new Profile.Meter(spark)
+    meter.attach()
+    try {
+      def jobs(query: => org.apache.spark.sql.DataFrame): Int = {
+        meter.measureQuery(query) // warm
+        meter.measureQuery(query)._2.jobs
+      }
+      val edges = path(9L)
+      def bfs(hops: Int) = jobs(Bfs.distances(edges, Seq(1L).toDF("node"), hops))
+      val (bfs2, bfs4) = (bfs(2), bfs(4))
+      // k = 2 peels a path from both ends: 5 nodes in 3 rounds, 9 in 5
+      def peel(n: Long) = jobs(KCore.kCore(path(n), 2))
+      val (peel5, peel9) = (peel(5L), peel(9L))
+      // two more hops cost 9 jobs, two more peels 10 (5 per peel): the
+      // pin of each round's frame plus the stage and broadcast jobs AQE
+      // runs for it. With a count() per round (two jobs under AQE: its
+      // map stage and its result) they were 13 and 14
+      assert((bfs4 - bfs2, peel9 - peel5) == ((9, 10)),
+        s"bfs $bfs2 -> $bfs4 jobs at 2 -> 4 hops; kCore $peel5 -> $peel9 jobs at 3 -> 5 peels")
+    } finally {
+      meter.detach()
+      spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("profile meter: q_bfs repeats its job, stage, task and shuffle counts exactly") {
