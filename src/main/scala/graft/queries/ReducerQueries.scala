@@ -8,7 +8,7 @@ import graft.reducers._
 
 /** Reducer wave (SURVEY §2.5, reference `lib/reducers.py`).
   *
-  * axis>=1 queries reduce each order's item list row-locally (HOFs); axis=0
+  * axis>=1 queries reduce each order's item list row-locally (list kernels); axis=0
   * queries are whole-table Catalyst aggregates, whose partial+final plan IS
   * the reference's `AwkwardTreeReductionLayer` (`layers/layers.py:372-644`)
   * done natively — including mean/std/var/corr/covar/linear_fit, which the

@@ -9,8 +9,8 @@ import graft.reducers._
 /** Structure-operator wave (SURVEY §2.4, reference `lib/structure.py`).
   *
   * Each query builds the ragged order-items view (one groupBy shuffle),
-  * applies the nested operator row-locally (zero further shuffles — the
-  * whole inner pipeline is WholeStageCodegen HOFs), then reduces to scalar
+  * applies the nested operator row-locally (zero further shuffles: list
+  * kernels and array functions inside one projection), then reduces to scalar
   * columns so the DuckDB oracle can verify values exactly.
   *
   * Integer outputs are cast to BIGINT on both sides so schemas match.

@@ -2,13 +2,20 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.DoubleType
+
+import graft.functions.ReducerExprs
 
 /** Reducers (reference `src/dask_awkward/lib/reducers.py`), both regimes:
   *
-  *  - **axis >= 1 (intra-row)**: per-list reductions as codegen'd HOFs over
-  *    array columns (reference dispatches these to partitionwise
-  *    `map_partitions`, `reducers.py:58-68`).
+  *  - **axis >= 1 (intra-row)**: per-list reductions as compiled Catalyst
+  *    expressions over array columns ([[graft.functions.ReducerExprs]]),
+  *    one loop per list, as the reference dispatches these to awkward's
+  *    compiled kernels through partitionwise `map_partitions`
+  *    (`reducers.py:58-68`). Spark's own higher-order functions would
+  *    evaluate each element by interpreting a lambda (`CodegenFallback`)
+  *    and hold the projection out of whole-stage codegen.
+  *    `corr`/`covar`/`linearFit` still fold with `aggregate`.
   *  - **axis = 0 / None (cross-partition)**: use plain `df.agg(sum(...))` —
   *    Catalyst's partial+final aggregation IS the reference's tree reduction
   *    (`AwkwardTreeReductionLayer`, `layers/layers.py:372-644`), with
@@ -19,7 +26,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * Null semantics match `mask_identity=True`: empty lists reduce to null
   * (e.g. `array_min(array())` is null), the analogue of awkward's masked
-  * identity (reference `reducers.py:40-44`).
+  * identity (reference `reducers.py:40-44`). A null list reduces to null.
   */
 package object reducers {
 
@@ -28,12 +35,10 @@ package object reducers {
   /** `ak.sum(axis=1)` (reference `reducers.py:517-548`). Null elements are
     * skipped, like awkward option handling. Empty list -> 0 (sum identity is
     * unmasked in awkward too). */
-  def sumList(c: Column): Column =
-    aggregate(c, lit(0.0), (acc, x) => acc + coalesce(dbl(x), lit(0.0)))
+  def sumList(c: Column): Column = ReducerExprs.reduce(c, ReducerExprs.Sum)
 
   /** `ak.prod(axis=1)` (reference `reducers.py:418-449`). */
-  def prodList(c: Column): Column =
-    aggregate(c, lit(1.0), (acc, x) => acc * coalesce(dbl(x), lit(1.0)))
+  def prodList(c: Column): Column = ReducerExprs.reduce(c, ReducerExprs.Prod)
 
   /** `ak.min/max(axis=1)` (reference `reducers.py:361-401,285-325`);
     * null on empty (mask_identity). */
@@ -41,62 +46,33 @@ package object reducers {
   def maxList(c: Column): Column = array_max(c)
 
   /** `ak.count(axis=1)` (reference `reducers.py:187-219`): non-null count. */
-  def countList(c: Column): Column = size(filter(c, x => x.isNotNull))
+  def countList(c: Column): Column = ReducerExprs.count(c, nonzero = false)
 
   /** `ak.count_nonzero(axis=1)` (reference `reducers.py:222-254`). */
-  def countNonzeroList(c: Column): Column =
-    size(filter(c, x => x.isNotNull && x =!= 0))
+  def countNonzeroList(c: Column): Column = ReducerExprs.count(c, nonzero = true)
 
   /** `ak.any/all(axis=1)` (reference `reducers.py:71-102,37-68`). Empty list:
-    * any=false, all=true (boolean identities, matching numpy/awkward). */
-  def anyList(c: Column): Column = exists(c, x => x)
-  def allList(c: Column): Column = forall(c, x => x)
+    * any=false, all=true (boolean identities, matching numpy/awkward). A
+    * null element without a deciding one makes the answer null, as in
+    * SQL's `exists`/`forall`. */
+  def anyList(c: Column): Column = ReducerExprs.truth(c, any = true)
+  def allList(c: Column): Column = ReducerExprs.truth(c, any = false)
 
   /** `ak.argmin/argmax(axis=1)` — 0-based position of the first extremum
-    * (reference `reducers.py:105-170`); null on empty list. A codegen'd
-    * single-scan expression ([[graft.functions.ReducerExprs.ArgExtremum]]):
-    * the previous `aggregate(c, struct(best, idx, i), ...)` HOF spelling
-    * allocated a struct and evaluated three interpreted when-chains per
-    * element (measured 3x slower at sf0.1). The HOF-equality pin lives in
-    * ReducersSpec. */
-  def argminList(c: Column): Column =
-    graft.functions.ReducerExprs.argExtremum(c, smaller = true)
-  def argmaxList(c: Column): Column =
-    graft.functions.ReducerExprs.argExtremum(c, smaller = false)
-
-  /** The old HOF spelling, kept as the differential-test witness for
-    * [[argminList]]/[[argmaxList]]. Implements the same explicit NaN
-    * contract as the kernel (numpy propagation: first NaN wins both
-    * directions) — Spark's raw `<`/`>` ordering treats NaN as greatest,
-    * so the NaN clause must be spelled out here, not inherited. */
-  private[graft] def argExtremumHof(c: Column, smaller: Boolean): Column = {
-    val zero = struct(lit(null).cast(DoubleType).as("best"),
-      lit(null).cast(LongType).as("idx"), lit(0L).as("i"))
-    aggregate(c, zero, (acc, x) => {
-      val better = x.isNotNull && !isnan(acc.getField("best")) &&
-        (acc.getField("best").isNull || isnan(dbl(x)) ||
-          (if (smaller) dbl(x) < acc.getField("best")
-           else dbl(x) > acc.getField("best")))
-      struct(
-        when(better, dbl(x)).otherwise(acc.getField("best")).as("best"),
-        when(better, acc.getField("i")).otherwise(acc.getField("idx")).as("idx"),
-        (acc.getField("i") + 1).as("i"))
-    }, acc => acc.getField("idx"))
-  }
+    * (reference `reducers.py:105-170`); null on empty list. A compiled
+    * single-scan expression ([[graft.functions.ReducerExprs.ArgExtremum]]);
+    * its HOF witness lives with the tests. */
+  def argminList(c: Column): Column = ReducerExprs.argExtremum(c, smaller = true)
+  def argmaxList(c: Column): Column = ReducerExprs.argExtremum(c, smaller = false)
 
   /** `ak.mean(axis=1)` — unimplemented at axis=0 in the reference
     * (`reducers.py:328-358`); native both ways in Spark. */
-  def meanList(c: Column): Column =
-    when(countList(c) > 0, sumList(c) / countList(c))
+  def meanList(c: Column): Column = ReducerExprs.reduce(c, ReducerExprs.Mean)
 
-  /** `ak.var(axis=1, ddof)` (reference `reducers.py:559-589`). */
-  def varList(c: Column, ddof: Int = 0): Column = {
-    val n = countList(c)
-    val mu = meanList(c)
-    val ss = aggregate(c, lit(0.0),
-      (acc, x) => acc + coalesce(pow(dbl(x) - mu, 2), lit(0.0)))
-    when(n > ddof, ss / (n - lit(ddof)))
-  }
+  /** `ak.var(axis=1, ddof)` (reference `reducers.py:559-589`): two passes
+    * over the list, the mean first; null unless count > ddof. */
+  def varList(c: Column, ddof: Int = 0): Column =
+    ReducerExprs.reduce(c, ReducerExprs.Var, ddof)
 
   /** `ak.std(axis=1, ddof)` (reference `reducers.py:484-514`). */
   def stdList(c: Column, ddof: Int = 0): Column = sqrt(varList(c, ddof))
@@ -107,17 +83,12 @@ package object reducers {
   /** `ak.moment(n, axis=1)` — n-th raw moment (reference stub
     * `reducers.py:404-415`). */
   def momentList(c: Column, n: Int): Column =
-    when(countList(c) > 0,
-      aggregate(c, lit(0.0),
-        (acc, x) => acc + coalesce(pow(dbl(x), n), lit(0.0))) / countList(c))
+    ReducerExprs.reduce(c, ReducerExprs.Moment, n)
 
   /** `ak.softmax(axis=1)` (reference stub `reducers.py:464-473`).
-    * Max-subtracted for numerical stability at scale. */
-  def softmaxList(c: Column): Column = {
-    val m = dbl(array_max(c))
-    val z = aggregate(c, lit(0.0), (acc, x) => acc + exp(dbl(x) - m))
-    transform(c, x => exp(dbl(x) - m) / z)
-  }
+    * Max-subtracted for numerical stability at scale; a null element makes
+    * every output element null. */
+  def softmaxList(c: Column): Column = ReducerExprs.softmax(c)
 
   /** `ak.corr(x, y, axis=1)` — Pearson correlation of two parallel inner
     * lists (reference stub `reducers.py:173-184`). */

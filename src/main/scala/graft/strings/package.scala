@@ -161,13 +161,14 @@ package object strings {
     * over the distinct set — range-partitioned local ranks plus bounded
     * per-partition offsets, so a HIGH-cardinality column degrades
     * gracefully into parallel partitions instead of funneling the whole
-    * dictionary through one unpartitioned window task. The join back is
-    * broadcast only when the dictionary is COUNTED small enough
-    * (`broadcastMaxDict` entries — the count reads the rank's already-
-    * checkpointed frame, one cheap domain-sized job): a genuinely
-    * high-cardinality column degrades to a shuffle join instead of the
-    * forced-broadcast OOM a hint would override Spark's size safety
-    * into. */
+    * dictionary through one unpartitioned window task. The join back
+    * reads the dictionary pinned once ([[graft.core.Broadcasts.pinCounted]],
+    * whose count rides on the pinning job) and broadcasts it only when
+    * that count is at most `broadcastMaxDict` entries and fits the byte
+    * budget ([[graft.core.Broadcasts.fits]]): a genuinely high-cardinality
+    * column degrades to a shuffle join instead of the forced-broadcast OOM
+    * a hint would override Spark's size safety into. The returned
+    * dictionary is the lazy ranked frame. */
   def toCategorical(df: org.apache.spark.sql.DataFrame, valueCol: String,
       codeCol: String, broadcastMaxDict: Long = 1000000L)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -184,7 +185,11 @@ package object strings {
         col("__graft_cat_v"), "__graft_cat_v", "__graft_cat_rn")
       .select(col("__graft_cat_v").as(valueCol),
         (col("__graft_cat_rn") - 1).cast("long").as(codeCol))
-    val dictJ = if (dict.count() <= broadcastMaxDict) broadcast(dict) else dict
+    val (pinned, n) = graft.core.Broadcasts.pinCounted(dict)
+    val dictJ =
+      if (n <= broadcastMaxDict && graft.core.Broadcasts.fits(n, pinned.schema))
+        broadcast(pinned)
+      else pinned
     (df.join(dictJ, valueCol), dict)
   }
 
@@ -201,7 +206,9 @@ package object strings {
     * mid-pipeline on the first stray token, and silently nulling is what
     * every CSV-ish ingestion expects); leading/trailing whitespace is
     * trimmed first, matching numpy's `astype(str -> float)` tolerance.
-    * Row-local, stays inside whole-stage codegen. */
+    * Row-local, but `transform` is `CodegenFallback`: it interprets its
+    * lambda per element and keeps the projection holding it out of
+    * whole-stage codegen. */
   def stringsAstype(c: Column, to: String): Column =
     transform(c, x => trim(x).try_cast(to))
 }

@@ -4,14 +4,21 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
+import graft.functions.StructureExprs
+
 /** Structure operators over nested (ragged) columns — the §2.4 core of the
   * reference's surface (`src/dask_awkward/lib/structure.py`).
   *
-  * Design stance (SURVEY §7): every operator is a pure `Column -> Column`
-  * composition of Spark's codegen'd higher-order functions, so the whole
-  * ragged pipeline stays inside WholeStageCodegen with zero shuffles — the
-  * Spark-native analogue of the reference's partitionwise `map_partitions`
-  * wrappers (reference `lib/core.py:2072-2204`). Axis conventions follow the
+  * Design stance (SURVEY §7): every operator is a pure, row-local
+  * `Column -> Column` function with zero shuffles — the Spark-native
+  * analogue of the reference's partitionwise `map_partitions` wrappers
+  * (reference `lib/core.py:2072-2204`). Most are compositions of Spark's
+  * built-in array functions and higher-order functions. The HOFs
+  * (`transform`, `filter`, `zip_with`, `aggregate`) are `CodegenFallback`:
+  * they interpret their lambda per element and keep the projection out of
+  * whole-stage codegen. The hot ones — local index, argsort, pad/fill,
+  * cartesian, unflatten — are compiled kernels instead
+  * ([[graft.functions.StructureExprs]]). Axis conventions follow the
   * reference: axis 0 is the row axis (a DataFrame op in Spark), axis 1 is the
   * outermost array level of a column, axis 2 the next, etc.
   */
@@ -57,16 +64,17 @@ package object structure {
 
   /** `ak.pad_none(target, clip=True)` — pad/truncate to exactly `target`
     * elements, nulls past the end (reference `lib/structure.py:712-747`).
-    * `get` returns null out-of-bounds, so one `transform` does both. */
+    * A missing list stays missing. */
   def padNoneClip(c: Column, target: Int): Column =
-    transform(sequence(lit(0), lit(target - 1)), i => get(c, i))
+    StructureExprs.padNone(c, target, clip = true)
 
   /** `ak.pad_none(target, clip=False)` — pad to at least `target`. */
   def padNone(c: Column, target: Int): Column =
-    when(size(c) >= target, c).otherwise(padNoneClip(c, target))
+    StructureExprs.padNone(c, target, clip = false)
 
-  /** `ak.fill_none(value, axis=1)` (reference `lib/structure.py:349-373`). */
-  def fillNone(c: Column, v: Column): Column = transform(c, x => coalesce(x, v))
+  /** `ak.fill_none(value, axis=1)` (reference `lib/structure.py:349-373`):
+    * the list and `v` widen to one type as `coalesce` widens them. */
+  def fillNone(c: Column, v: Column): Column = StructureExprs.fillNone(c, v)
 
   /** `ak.drop_none(axis=1)` (reference `lib/structure.py:376-396`). */
   def dropNone(c: Column): Column = filter(c, x => x.isNotNull)
@@ -86,7 +94,7 @@ package object structure {
       when(c, xy.getField("a")).otherwise(xy.getField("b")))
 
   /** `ak.local_index(axis=1)` (reference `lib/structure.py:561-580`). */
-  def localIndex(c: Column): Column = transform(c, (_, i) => i)
+  def localIndex(c: Column): Column = StructureExprs.localIndex(c)
 
   /** `ak.sort(axis=-1, ascending)` — intra-row sort
     * (reference `lib/structure.py:825-854`). Global (axis=0) sort is
@@ -94,19 +102,16 @@ package object structure {
   def sortList(c: Column, ascending: Boolean = true): Column =
     sort_array(c, asc = ascending)
 
-  /** `ak.argsort(axis=-1)` — stable argsort via (value, index) struct sort
-    * (reference `lib/structure.py:178-203`). Struct ordering compares value
-    * first then index, which makes it stable. */
-  def argsortList(c: Column): Column =
-    transform(
-      sort_array(zip_with(c, localIndex(c), (v, i) => struct(v.as("v"), i.as("i")))),
-      s => s.getField("i"))
+  /** `ak.argsort(axis=-1)` — stable argsort (reference
+    * `lib/structure.py:178-203`) in `sort_array`'s order of (value, index)
+    * pairs: nulls first, NaN last, equal values by index. */
+  def argsortList(c: Column): Column = StructureExprs.argsort(c)
 
   /** `ak.cartesian([a, b], axis=1)` — per-row cross product of two inner
     * lists (reference `lib/structure.py:244-281`). Row-local: no shuffle,
     * unlike a relational join. */
   def cartesianLists(a: Column, b: Column, an: String = "a", bn: String = "b"): Column =
-    flatten(transform(a, x => transform(b, y => struct(x.as(an), y.as(bn)))))
+    StructureExprs.cartesian(a, b, an, bn)
 
   /** `ak.cartesian(nested=True)` (reference `lib/structure.py:244-281`):
     * keep the per-left-element grouping — list of lists of pairs instead
@@ -212,15 +217,10 @@ package object structure {
 
   /** `ak.unflatten(counts, axis=0 within a row)` — regroup a flat inner list
     * into sublists of the given sizes (reference `lib/structure.py:895-921`).
-    * Offsets are the running sum of counts; each output sublist is a slice. */
-  def unflattenList(c: Column, counts: Column): Column = {
-    val offsets = aggregate(
-      counts,
-      array(lit(0)),
-      (acc, n) => concat(acc, array(element_at(acc, -1) + n)))
-    zip_with(slice(offsets, lit(1), size(counts)), counts,
-      (off, n) => slice(c, off + 1, n))
-  }
+    * Offsets are the running sum of counts; each output sublist is a slice,
+    * and a negative count raises `slice`'s error. */
+  def unflattenList(c: Column, counts: Column): Column =
+    StructureExprs.unflatten(c, counts)
 
   /** `ak.ravel` — flatten all list levels of a list-of-list column
     * (reference `lib/structure.py:750-769`). */

@@ -6,7 +6,10 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query profile of SparkEntry queries, split by layer. For each
@@ -21,9 +24,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    operators execute many);
   *  - `task_run_s`, `task_cpu_s`: executor run time and CPU core-seconds;
   *  - `jobs`, `stages`, `tasks`;
-  *  - shuffle write/read records and bytes.
-  * Counts (jobs, stages, tasks, shuffle records) repeat exactly between
-  * runs; times do not.
+  *  - shuffle write/read records and bytes;
+  *  - `fallback_exprs`: the `CodegenFallback` expressions in the executed
+  *    plan ([[fallbackExprs]]), the query's interpreted expressions.
+  * Counts (jobs, stages, tasks, shuffle records, fallback expressions)
+  * repeat exactly between runs; times do not.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query...|all> [--plans <dir>]
   *   `entry` names the flagship `SparkEntry.entry` (the smoke query);
@@ -32,14 +37,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   SPARK_GRAFT_CPUS (default 32), as in Bench. Exits non-zero when a
   *   query fails; its line carries `error` instead of measurements.
   */
-object Profile {
+object Profile extends AdaptiveSparkPlanHelper {
 
   final case class Totals(wallS: Double, insideJobsS: Double,
       phasesS: Map[String, Double], plans: Int, taskRunS: Double,
       taskCpuS: Double, jobs: Int, stages: Int, tasks: Long,
       shuffleWriteRecords: Long, shuffleWriteBytes: Long,
       shuffleReadRecords: Long, shuffleReadBytes: Long) {
-    def json(query: String): String = {
+    def json(query: String, fallbackExprs: Int): String = {
       def s(v: Double) = f"$v%.3f"
       val phases = Seq("analysis", "optimization", "planning")
         .map(p => s"${p}_s" -> s(phasesS.getOrElse(p, 0.0)))
@@ -51,7 +56,8 @@ object Profile {
         "shuffle_write_records" -> shuffleWriteRecords,
         "shuffle_write_bytes" -> shuffleWriteBytes,
         "shuffle_read_records" -> shuffleReadRecords,
-        "shuffle_read_bytes" -> shuffleReadBytes))
+        "shuffle_read_bytes" -> shuffleReadBytes,
+        "fallback_exprs" -> fallbackExprs))
         .map { case (k, v) => s""""$k":$v""" }
         .mkString(s"""{"query":"$query",""", ",", "}")
     }
@@ -151,6 +157,21 @@ object Profile {
     }
   }
 
+  /** The `CodegenFallback` expressions in `plan`, the final adaptive plan
+    * and subqueries included. Each evaluates interpreted (a higher-order
+    * function interprets its lambda per element), and a projection holding
+    * one stays out of whole-stage codegen. A higher-order function counts
+    * once: its lambda function and variables are not counted apart.
+    * Imperative aggregates such as the partial and final `collect_list`
+    * of a ragged build are fallbacks too. */
+  private[graft] def fallbackExprs(plan: SparkPlan): Int =
+    collectWithSubqueries(plan) { case p =>
+      p.expressions.map(_.collect {
+        case _: LambdaFunction | _: NamedLambdaVariable => 0
+        case _: CodegenFallback => 1
+      }.sum).sum
+    }.sum
+
   /** Milliseconds of [from, to] covered by at least one of `spans`. */
   private[graft] def union(spans: Seq[(Long, Long)], from: Long, to: Long): Long = {
     var covered = 0L
@@ -190,7 +211,7 @@ object Profile {
       try {
         run()
         val (df, t) = run()
-        println(t.json(q))
+        println(t.json(q, fallbackExprs(df.queryExecution.executedPlan)))
         plansDir.foreach { d =>
           Files.writeString(Paths.get(d, s"$q.txt"),
             df.queryExecution.explainString(FormattedMode))

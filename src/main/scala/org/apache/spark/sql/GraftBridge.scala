@@ -15,6 +15,13 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The errors Spark's `slice` raises on a zero start or a negative
+    * length, for kernels that reproduce it. */
+  def sliceStartError(): Throwable =
+    errors.QueryExecutionErrors.unexpectedValueForStartInFunctionError("slice")
+  def sliceLengthError(length: Int): Throwable =
+    errors.QueryExecutionErrors.unexpectedValueForLengthInFunctionError("slice", length)
+
   /** DataFrame from a hand-built logical plan (custom operators, e.g. the
     * native as-of join node) — `Dataset.ofRows` is private[sql]. */
   def ofRows(spark: SparkSession,

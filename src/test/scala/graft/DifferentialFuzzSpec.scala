@@ -75,6 +75,135 @@ class DifferentialFuzzSpec extends SparkSuite {
     }
   }
 
+  // ---- compiled list kernels against their HOF witnesses (HofWitness) ----
+
+  private val codegenModes: Seq[(String, Seq[(String, String)])] = Seq(
+    "NO_CODEGEN" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+    "CODEGEN_ONLY" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false"))
+
+  private def withConfs[T](confs: Seq[(String, String)])(body: => T): T = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Bit-for-bit equality: doubles by boxed `java.lang.Double.equals`
+    * (NaN equals NaN, -0.0 differs from 0.0), lists and structs by
+    * element. */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: java.lang.Double, y: java.lang.Double) => x.equals(y)
+    case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+      x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
+    case (x: org.apache.spark.sql.Row, y: org.apache.spark.sql.Row) => same(x.toSeq, y.toSeq)
+    case _ => a == b
+  }
+
+  /** Ragged rows (xs, ys: list<et>, bs: list<boolean>, counts: list<int>)
+    * with null lists, empty lists and null elements; `value` draws one
+    * element of `et`, special values included. Built from an RDD, so no
+    * optimizer rule folds the projection away before it runs. */
+  private def raggedFrame(et: org.apache.spark.sql.types.DataType, value: Gen[Any],
+      seed: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    def list(g: Gen[Any]): Gen[Any] = Gen.frequency(
+      1 -> Gen.const(null), 2 -> Gen.const(Seq.empty[Any]),
+      10 -> Gen.choose(1, 7).flatMap(n => Gen.listOfN(n,
+        Gen.frequency(1 -> Gen.const(null), 6 -> g))))
+    val row = for {
+      xs <- list(value); ys <- list(value)
+      bs <- list(Gen.oneOf(true, false).map(b => b: Any))
+      counts <- list(Gen.choose(0, 4).map(n => n: Any))
+    } yield org.apache.spark.sql.Row(xs, ys, bs, counts)
+    var s = org.scalacheck.rng.Seed(seed)
+    val rows = (0 until 80).map { _ =>
+      val r = row.apply(Gen.Parameters.default, s); s = s.next; r.get
+    }
+    val schema = StructType(Seq(
+      StructField("xs", ArrayType(et)), StructField("ys", ArrayType(et)),
+      StructField("bs", ArrayType(BooleanType)),
+      StructField("counts", ArrayType(IntegerType))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  private val elementGens: Seq[(org.apache.spark.sql.types.DataType, Gen[Any])] = {
+    import org.apache.spark.sql.types._
+    Seq(
+      IntegerType -> Gen.frequency(6 -> Gen.choose(-50, 50),
+        1 -> Gen.oneOf(Int.MinValue, Int.MaxValue, 0)).map(Int.box),
+      LongType -> Gen.frequency(6 -> Gen.choose(-50L, 50L),
+        1 -> Gen.oneOf(Long.MinValue, Long.MaxValue, (1L << 53) + 1, -(1L << 53) - 1))
+        .map(Long.box),
+      DoubleType -> Gen.frequency(6 -> Gen.choose(-50.0, 50.0),
+        2 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+          0.0, -0.0, 1e308, -1e308, Double.MinPositiveValue)).map(Double.box),
+      DecimalType(12, 3) -> Gen.choose(-99999999L, 99999999L)
+        .map(u => java.math.BigDecimal.valueOf(u, 3)))
+  }
+
+  test("list kernels equal their HOF witnesses bit for bit, interpreted and compiled") {
+    import graft.{HofWitness => W}
+    val xs = $"xs"; val ys = $"ys"; val bs = $"bs"; val counts = $"counts"
+    val pairs: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = Seq(
+      ("sumList", sumList(xs), W.sumList(xs)),
+      ("prodList", prodList(xs), W.prodList(xs)),
+      ("countList", countList(xs), W.countList(xs)),
+      ("countNonzeroList", countNonzeroList(xs), W.countNonzeroList(xs)),
+      ("meanList", meanList(xs), W.meanList(xs)),
+      ("varList", varList(xs), W.varList(xs)),
+      ("varList ddof=1", varList(xs, 1), W.varList(xs, 1)),
+      ("stdList ddof=1", stdList(xs, 1), W.stdList(xs, 1)),
+      ("momentList 2", momentList(xs, 2), W.momentList(xs, 2)),
+      ("momentList 3", momentList(xs, 3), W.momentList(xs, 3)),
+      ("softmaxList", softmaxList(xs), W.softmaxList(xs)),
+      ("argminList", argminList(xs), W.argExtremumHof(xs, smaller = true)),
+      ("argmaxList", argmaxList(xs), W.argExtremumHof(xs, smaller = false)),
+      ("anyList", anyList(bs), W.anyList(bs)),
+      ("allList", allList(bs), W.allList(bs)),
+      ("localIndex", localIndex(xs), W.localIndex(xs)),
+      ("argsortList", argsortList(xs), W.argsortList(xs)),
+      ("padNone 3", padNone(xs, 3), W.padNone(xs, 3)),
+      ("padNoneClip 3", padNoneClip(xs, 3), W.padNoneClip(xs, 3)),
+      ("padNoneClip 1", padNoneClip(xs, 1), W.padNoneClip(xs, 1)),
+      ("fillNone lit", fillNone(xs, lit(-1.5)), W.fillNone(xs, lit(-1.5))),
+      ("fillNone column", fillNone(xs, get(ys, lit(0))), W.fillNone(xs, get(ys, lit(0)))),
+      ("cartesianLists", cartesianLists(xs, ys), W.cartesianLists(xs, ys)),
+      ("unflattenList", unflattenList(xs, counts), W.unflattenList(xs, counts)))
+    for (((et, gen), k) <- elementGens.zipWithIndex; (mode, confs) <- codegenModes) {
+      val df = raggedFrame(et, gen, 1000L + k)
+      val rows = withConfs(confs) {
+        df.select(pairs.flatMap { case (_, kernel, witness) => Seq(kernel, witness) }: _*)
+          .collect()
+      }
+      for (r <- rows; ((name, _, _), i) <- pairs.zipWithIndex) {
+        val (got, want) = (r.get(2 * i), r.get(2 * i + 1))
+        assert(same(got, want), s"$name on ${et.simpleString} ($mode): kernel $got, witness $want")
+      }
+    }
+  }
+
+  test("unflattenList raises slice's error on a negative count, like its witness") {
+    val df = Seq((Seq(1, 2, 3), Seq(1, -1))).toDF("xs", "counts").repartition(1)
+    def failure(c: org.apache.spark.sql.Column): org.apache.spark.SparkThrowable = {
+      val e = intercept[Exception](df.select(c).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: org.apache.spark.SparkThrowable => t }
+        .getOrElse(fail(s"no SparkThrowable in $e"))
+    }
+    for ((mode, confs) <- codegenModes) withConfs(confs) {
+      val got = failure(unflattenList($"xs", $"counts"))
+      val want = failure(HofWitness.unflattenList($"xs", $"counts"))
+      assert(got.getCondition == want.getCondition, mode)
+      assert(got.getMessageParameters == want.getMessageParameters, mode)
+    }
+  }
+
   test("ngramJaccardPairs matches brute-force set arithmetic on random corpora") {
     val vocab = Vector("red", "blue", "fox", "jumps", "lazy", "dog", "river")
     val doc: Gen[String] =

@@ -111,6 +111,22 @@ class PlanQualitySpec extends SparkSuite {
     }
   }
 
+  test("list kernels: no interpreted fold, filter or predicate HOF in the ragged reducers") {
+    // aggregate/filter/exists/forall are CodegenFallback: each list
+    // element interprets a lambda. The query text of these three holds
+    // none, so any such node comes from the reducer/structure library.
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayExists,
+      ArrayFilter, ArrayForAll}
+    for (name <- Seq("r_axis1", "r_softmax", "s_unflatten")) {
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: ArrayAggregate | _: ArrayFilter | _: ArrayExists | _: ArrayForAll) =>
+          e.nodeName
+      }))
+      assert(hofs.isEmpty, s"$name evaluates interpreted list HOFs: ${hofs.distinct}")
+    }
+  }
+
   test("multimodal decode stages are map-only: zero exchanges") {
     // decode/feature extraction is the classic CPU-heavy map stage — at
     // 100 TB it must scale linearly with executors, so a shuffle sneaking

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.reducers._
+import graft.HofWitness.argExtremumHof
 import org.scalactic.Tolerance._
 
 /** Differential tests for §2.5 reducers (reference `tests/test_reducers.py`

@@ -124,6 +124,15 @@ class StructureSpec extends SparkSuite {
     assert(got(1) == Seq(None, None))
   }
 
+  test("padNone keeps a missing list missing, clip or not (ak.pad_none)") {
+    val df = Seq[(Int, Seq[java.lang.Long])]((0, Seq(1L)), (1, null)).toDF("i", "xs")
+    val got = df.orderBy($"i").select(padNone($"xs", 3), padNoneClip($"xs", 2))
+      .as[(Option[Seq[Option[Long]]], Option[Seq[Option[Long]]])].collect().toSeq
+    assert(got == Seq(
+      (Some(Seq(Some(1L), None, None)), Some(Seq(Some(1L), None))),
+      (None, None)))
+  }
+
   test("fillNone / dropNone / isNone / singletons option semantics") {
     val df = Seq(Seq[java.lang.Double](1.0, null, 3.0)).toDF("xs")
     assert(df.select(fillNone($"xs", lit(0.0))).as[Seq[Double]].head ==

@@ -4,13 +4,14 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 
 import graft.tools.Profile
 
 /** The developer-facing commands: every main the docs and test messages
-  * tell a reader to run exists, and the profiler's interval arithmetic. */
-class ToolsSpec extends AnyFunSuite {
+  * tell a reader to run exists, and the profiler's interval arithmetic and
+  * plan census. */
+class ToolsSpec extends SparkSuite {
 
   test("every runMain target in README, docs and tests resolves to a main") {
     def under(dir: String, ext: String): Seq[Path] =
@@ -37,5 +38,21 @@ class ToolsSpec extends AnyFunSuite {
     // [2, 20] from two overlapping spans, [30, 35] clipped at the window end
     assert(Profile.union(Seq((30L, 40L), (0L, 10L), (5L, 20L), (6L, 8L)), 2L, 35L) == 23L)
     assert(Profile.union(Nil, 0L, 10L) == 0L)
+  }
+
+  test("Profile.fallbackExprs counts interpreted expressions once per HOF") {
+    import spark.implicits._
+    val df = Seq((1, Seq(1.0, 2.0)), (2, Seq(3.0))).toDF("id", "xs").repartition(2)
+    def census(cols: org.apache.spark.sql.Column*): Int = {
+      val q = df.select(cols: _*)
+      q.collect() // the final adaptive plan
+      Profile.fallbackExprs(q.queryExecution.executedPlan)
+    }
+    assert(census($"id") == 0)
+    // two HOFs, one nested in the other's lambda; the lambdas add nothing
+    assert(census(transform($"xs", x => aggregate($"xs", x, (a, y) => a + y))) == 2)
+    assert(census(exists($"xs", _ > 1.0), $"id") == 1)
+    // the compiled list kernels are not fallbacks
+    assert(census(graft.reducers.sumList($"xs"), graft.structure.argsortList($"xs")) == 0)
   }
 }
