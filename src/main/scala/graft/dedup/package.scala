@@ -35,13 +35,12 @@ package object dedup {
   def wordShingles(c: Column, n: Int): Column =
     graft.functions.HashExprs.wordNgrams(toks(c), n)
 
-  /** Deterministic polynomial hash of a string (base 131, mod 1e9+7).
-    * The modulus keeps every intermediate below 2^38, so the arithmetic is
-    * overflow-free in any signed-64 engine (DuckDB raises on BIGINT
-    * overflow; Java would silently wrap). */
-  def polyHash(c: Column): Column =
-    aggregate(split(c, ""), lit(0L),
-      (acc, ch) => (acc * 131 + ascii(ch)) % 1000000007L)
+  /** Deterministic polynomial hash of a string (base 131, mod 1e9+7)
+    * over its code points: the [[graft.functions.HashExprs.PolyHash]]
+    * kernel. The modulus keeps every intermediate below 2^38, so the
+    * arithmetic is overflow-free in any signed-64 engine (DuckDB raises on
+    * BIGINT overflow; Java would silently wrap). */
+  def polyHash(c: Column): Column = graft.functions.HashExprs.polyHashFast(c)
 
   /** MinHash signature: k permutations h_i(x) = (a_i*x + b_i) mod p over the
     * shingle base-hashes, min per permutation; array<long> of length k.

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types._
 
@@ -31,37 +30,39 @@ import org.apache.spark.sql.types._
   */
 object AsofLookup {
 
-  /** Immutable sorted lookup table — a reference object in generated code.
-    * `lookup` returns null when the key is absent, every right ts is
-    * later than `t`, or the matched row's payload is null — the last case
-    * mirrors asofJoin/asofJoinBroadcast, which emit null for a matched
-    * row with a null payload (advisor finding: the pre-r7 table mapped
-    * null payloads to NaN, which poisons downstream sums and counts as
-    * matched in count(asof_*), diverging from the join forms). */
-  final class Table(keys: Array[Long], offsets: Array[Int],
-      tss: Array[Long], vals: Array[Double], nulls: Array[Boolean])
-      extends Serializable {
-    def lookup(k: Long, t: Long): java.lang.Double = {
-      // binary search the key directory
-      var lo = 0; var hi = keys.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        if (keys(mid) < k) lo = mid + 1
-        else if (keys(mid) > k) hi = mid - 1
-        else { lo = mid; hi = -2 }
-      }
-      if (hi != -2) return null
-      val start = offsets(lo); val end = offsets(lo + 1)
-      // last right ts <= t within [start, end)
-      var a = start; var b = end
-      while (a < b) {
-        val mid = (a + b) >>> 1
-        if (tss(mid) <= t) a = mid + 1 else b = mid
-      }
-      if (a == start || nulls(a - 1)) null
-      else java.lang.Double.valueOf(vals(a - 1))
+  /** Immutable sorted lookup table — a reference object in generated
+    * code: the rows of key `keys(i)` are `offsets(i) until offsets(i + 1)`,
+    * sorted by ts. */
+  final class Table(val keys: Array[Long], val offsets: Array[Int],
+      val tss: Array[Long], val vals: Array[Double], val nulls: Array[Boolean])
+      extends Serializable
+
+  /** The [[AsofLookupExpr]] kernel: null when the key is absent, every
+    * right ts is later than `t`, or the matched row's payload is null —
+    * the last case mirrors asofJoin/asofJoinBroadcast, which emit null
+    * for a matched row with a null payload (advisor finding: the pre-r7
+    * table mapped null payloads to NaN, which poisons downstream sums and
+    * counts as matched in count(asof_*), diverging from the join forms). */
+  def lookup(k: Long, t: Long, table: Table): java.lang.Double = {
+    import table._
+    // binary search the key directory
+    var lo = 0; var hi = keys.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      if (keys(mid) < k) lo = mid + 1
+      else if (keys(mid) > k) hi = mid - 1
+      else { lo = mid; hi = -2 }
     }
-    def nKeys: Int = keys.length
+    if (hi != -2) return null
+    val start = offsets(lo); val end = offsets(lo + 1)
+    // last right ts <= t within [start, end)
+    var a = start; var b = end
+    while (a < b) {
+      val mid = (a + b) >>> 1
+      if (tss(mid) <= t) a = mid + 1 else b = mid
+    }
+    if (a == start || nulls(a - 1)) null
+    else java.lang.Double.valueOf(vals(a - 1))
   }
 
   /** Collect and sort the right side into a [[Table]]. Null keys/ts rows
@@ -99,22 +100,9 @@ object AsofLookup {
     override def nullable: Boolean = true
     override def nullIntolerant: Boolean = true
     override def nullSafeEval(k: Any, t: Any): Any =
-      table.lookup(k.asInstanceOf[Long], t.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tbl = ctx.addReferenceObj("asofTable", table,
-        "graft.functions.AsofLookup.Table")
-      val kGen = left.genCode(ctx); val tGen = right.genCode(ctx)
-      val boxed = ctx.freshName("asofRes")
-      ev.copy(code = code"""
-        ${kGen.code}
-        ${tGen.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = -1.0;
-        if (!${kGen.isNull} && !${tGen.isNull}) {
-          java.lang.Double $boxed = $tbl.lookup(${kGen.value}, ${tGen.value});
-          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.doubleValue(); }
-        }""")
-    }
+      lookup(k.asInstanceOf[Long], t.asInstanceOf[Long], table)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      Kernels.call(ctx, ev, this, "graft.functions.AsofLookup.lookup", table)
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): AsofLookupExpr =
       copy(left = newLeft, right = newRight)

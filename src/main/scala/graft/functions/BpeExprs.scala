@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -15,14 +16,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * trainer's driver loop uses, which the DifferentialFuzzSpec pins
   * equal to the literal-replace semantics the DuckDB oracle replays —
   * and the surrounding projection stays in whole-stage codegen with one
-  * static call per row.
+  * static call per row ([[Kernels.call]]).
   */
 object BpeExprs {
 
   /** Per-word merge-and-count: alphanumeric words segment through the
     * rules (left-to-right non-overlapping per rule, rules in order),
-    * anything else counts as 1 unknown. Public static so generated Java
-    * can call it. */
+    * anything else counts as 1 unknown. */
   def bpeCountWord(w: String, as: Array[String], bs: Array[String]): Long = {
     var i = 0
     val n = w.length
@@ -71,17 +71,11 @@ object BpeExprs {
   case class BpeCount(child: Expression, as: Array[String],
       bs: Array[String]) extends UnaryExpression {
     override def dataType: DataType = LongType
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      BpeExprs.bpeCountEval(input.asInstanceOf[ArrayData], as, bs)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val asRef = ctx.addReferenceObj("bpeAs", as, "java.lang.String[]")
-        val bsRef = ctx.addReferenceObj("bpeBs", bs, "java.lang.String[]")
-        s"${ev.value} = graft.functions.BpeExprs.bpeCountEval($c, $asRef, $bsRef);"
-      })
+      bpeCountEval(input.asInstanceOf[ArrayData], as, bs)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      Kernels.call(ctx, ev, this, "graft.functions.BpeExprs.bpeCountEval", as, bs)
     override protected def withNewChildInternal(c: Expression) =
       copy(child = c)
   }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -31,23 +32,16 @@ object CombinatoricsExprs {
       ArrayType(ArrayType(childArray.elementType, childArray.containsNull),
         containsNull = false)
 
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      CombinatoricsExprs.combinationsEval(input.asInstanceOf[ArrayData], n,
+      combinationsEval(input.asInstanceOf[ArrayData], n, replacement, childArray.elementType)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      Kernels.call(ctx, ev, this, "graft.functions.CombinatoricsExprs.combinationsEval", n,
         replacement, childArray.elementType)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val etRef = ctx.addReferenceObj("combEt", childArray.elementType,
-          "org.apache.spark.sql.types.DataType")
-        s"${ev.value} = graft.functions.CombinatoricsExprs.combinationsEval($c, $n, $replacement, $etRef);"
-      })
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** Shared kernel for [[Combinations]] — called from both the interpreted
-    * eval and generated code. */
+  /** Shared kernel for [[Combinations]]. */
   def combinationsEval(arr: ArrayData, n: Int, replacement: Boolean,
       et: DataType): ArrayData = {
     val m = arr.numElements()

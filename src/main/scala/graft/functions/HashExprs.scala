@@ -2,8 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import Kernels.call
 
 /** Custom Catalyst expressions for the dedup signature kernels.
   *
@@ -12,8 +16,9 @@ import org.apache.spark.sql.types._
   * functions interpreted (no codegen, no subexpression elimination), which
   * costs ~3-4 us per lane update: ~30 s for 5 000 docs x 50 shingles x 32
   * lanes. A single Expression node evaluating the whole kernel in a tight
-  * JVM loop is ~100x faster and keeps the surrounding projection inside
-  * whole-stage codegen (the fallback is one virtual call per row).
+  * JVM loop is ~100x faster. Each kernel is a static Scala method that
+  * `eval` calls and the generated code calls through [[Kernels.call]], so
+  * the surrounding projection stays inside whole-stage codegen.
   *
   * Reference semantics: dask-awkward-sandbox has no dedup operators — these
   * are the training-data-pipeline extensions (builder brief); hash/vote
@@ -23,11 +28,9 @@ import org.apache.spark.sql.types._
 object HashExprs {
 
   /** Deterministic polynomial hash (base 131, mod 1e9+7) over the
-    * codepoints of a string — same value as graft.dedup.polyHash's HOF form
-    * (per-"char" ascii() of split(s, "")), and as the DuckDB oracle's
-    * list_reduce over string_split_regex(w, ''). Public so whole-stage
-    * codegen can call the static forwarder `graft.functions.HashExprs
-    * .polyHash(String)` from generated Java. */
+    * code points of a string — the value the DuckDB oracle's list_reduce
+    * over string_split_regex(w, '') replays, and that the HOF spelling
+    * (per-character ascii() of split(s, "")) gives. */
   @inline def polyHash(s: String): Long = {
     var acc = 0L
     var i = 0
@@ -39,72 +42,23 @@ object HashExprs {
     acc
   }
 
+  /** [[polyHash]] of a SQL string: the [[PolyHash]] kernel. */
+  def polyHash(s: UTF8String): Long = polyHash(s.toString)
+
   /** MinHash signature over an array<string> of shingles. k permutations
     * h_i(x) = (a_i*x + b_i) mod p, p = 2^31-1; base hash = xxhash64(seed 42,
-    * matching functions.xxhash64) folded into [0, p). Empty input => all
-    * lanes at the identity p (matches the HOF form's array_repeat(p, k)
-    * accumulator). */
+    * matching functions.xxhash64, so a null shingle hashes to the seed)
+    * folded into [0, p). Empty input => all lanes at the identity p
+    * (matches the HOF form's array_repeat(p, k) accumulator). */
   case class MinHashSignature(child: Expression, k: Int, seed: Long)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-    private val p = 2147483647L
+    override def nullIntolerant: Boolean = true
     private lazy val (as, bs) = minHashCoefficients(k, seed)
-
-    /** Generated form of the same loop: the signature projection stays in
-      * whole-stage codegen, coefficients travel as reference objects, the
-      * base hash calls the same XXH64 static Spark's own xxhash64 emits. */
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val asRef = ctx.addReferenceObj("minhashAs", as, "long[]")
-        val bsRef = ctx.addReferenceObj("minhashBs", bs, "long[]")
-        val (n, i, j, mins, s, h, v) = (ctx.freshName("n"), ctx.freshName("i"),
-          ctx.freshName("j"), ctx.freshName("mins"), ctx.freshName("s"),
-          ctx.freshName("h"), ctx.freshName("v"))
-        s"""
-          int $n = $c.numElements();
-          long[] $mins = new long[$k];
-          java.util.Arrays.fill($mins, ${p}L);
-          for (int $i = 0; $i < $n; $i++) {
-            org.apache.spark.unsafe.types.UTF8String $s = $c.getUTF8String($i);
-            long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashUnsafeBytes($s.getBaseObject(), $s.getBaseOffset(),
-                $s.numBytes(), 42L) % ${p}L;
-            if ($h < 0) $h += ${p}L;
-            for (int $j = 0; $j < $k; $j++) {
-              long $v = ($h * $asRef[$j] + $bsRef[$j]) % ${p}L;
-              if ($v < $mins[$j]) $mins[$j] = $v;
-            }
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-        """
-      })
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill(k)(p)
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        val s = arr.getUTF8String(i)
-        val h = {
-          val x = XxHash64Function.hash(s, StringType, 42L) % p
-          if (x < 0) x + p else x
-        }
-        var j = 0
-        while (j < k) {
-          val v = (h * as(j) + bs(j)) % p // h, a < 2^31 => product < 2^62
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(mins)
-    }
-
+    override def nullSafeEval(input: Any): Any =
+      minHashEval(input.asInstanceOf[ArrayData], as, bs, poly = false)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.minHashEval", as, bs, false)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -119,36 +73,35 @@ object HashExprs {
   case class MinHashSignaturePolyBase(child: Expression, k: Int, seed: Long)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullIntolerant: Boolean = true
     private lazy val (as, bs) = minHashCoefficients(k, seed)
     override def nullSafeEval(input: Any): Any =
-      HashExprs.minHashPolyEval(input.asInstanceOf[ArrayData], as, bs)
-    // static-call codegen: child ArrayData flows unboxed into the shared
-    // kernel, the projection stays inside whole-stage codegen
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val asRef = ctx.addReferenceObj("mhPolyAs", as, "long[]")
-        val bsRef = ctx.addReferenceObj("mhPolyBs", bs, "long[]")
-        s"${ev.value} = graft.functions.HashExprs.minHashPolyEval($c, $asRef, $bsRef);"
-      })
+      minHashEval(input.asInstanceOf[ArrayData], as, bs, poly = true)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.minHashEval", as, bs, true)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** Shared kernel for [[MinHashSignaturePolyBase]] — called from both the
-    * interpreted eval and generated code (bit-exact by construction). */
-  def minHashPolyEval(arr: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
+  /** Shared kernel for [[MinHashSignature]] (xxhash64 base) and, with
+    * `poly`, [[MinHashSignaturePolyBase]] (polyHash base). */
+  def minHashEval(arr: ArrayData, as: Array[Long], bs: Array[Long],
+      poly: Boolean): ArrayData = {
     val p = 2147483647L
     val k = as.length
     val mins = Array.fill(k)(p)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
-      val h = polyHash(arr.getUTF8String(i).toString)
+      val s = arr.getUTF8String(i)
+      val h =
+        if (poly) polyHash(s)
+        else {
+          val x = XxHash64Function.hash(s, StringType, 42L) % p
+          if (x < 0) x + p else x
+        }
       var j = 0
       while (j < k) {
-        val v = (h * as(j) + bs(j)) % p
+        val v = (h * as(j) + bs(j)) % p // h, a < 2^31 => product < 2^62
         if (v < mins(j)) mins(j) = v
         j += 1
       }
@@ -170,14 +123,11 @@ object HashExprs {
           org.apache.spark.sql.types.IntegerType, nullable = false),
         org.apache.spark.sql.types.StructField("key", LongType, nullable = false))),
       containsNull = false)
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      HashExprs.lshBandKeysEval(input.asInstanceOf[ArrayData], bands, rows)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.HashExprs.lshBandKeysEval($c, $bands, $rows);")
+      lshBandKeysEval(input.asInstanceOf[ArrayData], bands, rows)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.lshBandKeysEval", bands, rows)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -226,14 +176,11 @@ object HashExprs {
   case class SimHash48(child: Expression)
       extends UnaryExpression {
     override def dataType: DataType = LongType
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      HashExprs.simHash48Eval(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.HashExprs.simHash48Eval($c);")
+      simHash48Eval(input.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.simHash48Eval")
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -270,14 +217,11 @@ object HashExprs {
   case class WordNgrams(child: Expression, n: Int, distinct: Boolean = true)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      HashExprs.wordNgramsEval(input.asInstanceOf[ArrayData], n, distinct)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.HashExprs.wordNgramsEval($c, $n, $distinct);")
+      wordNgramsEval(input.asInstanceOf[ArrayData], n, distinct)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.wordNgramsEval", n, distinct)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -286,16 +230,16 @@ object HashExprs {
     * (repetition metrics). */
   def wordNgramsEval(arr: ArrayData, n: Int, distinct: Boolean): ArrayData = {
     val m = arr.numElements()
-    val out: java.util.Collection[org.apache.spark.unsafe.types.UTF8String] =
-      if (distinct) new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-      else new java.util.ArrayList[org.apache.spark.unsafe.types.UTF8String](math.max(0, m - n + 1))
-    val space = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
+    val out: java.util.Collection[UTF8String] =
+      if (distinct) new java.util.LinkedHashSet[UTF8String]()
+      else new java.util.ArrayList[UTF8String](math.max(0, m - n + 1))
+    val space = UTF8String.fromString(" ")
     var i = 0
     while (i <= m - n) {
-      val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
+      val parts = new Array[UTF8String](n)
       var j = 0
       while (j < n) { parts(j) = arr.getUTF8String(i + j); j += 1 }
-      out.add(org.apache.spark.unsafe.types.UTF8String.concatWs(space, parts: _*))
+      out.add(UTF8String.concatWs(space, parts: _*))
       i += 1
     }
     new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
@@ -309,20 +253,17 @@ object HashExprs {
     GraftBridge.column(WordNgrams(GraftBridge.expression(tokens), n,
       distinct = false))
 
-  /** polyHash as a single expression node — same value as the HOF form in
-    * graft.dedup.polyHash and the DuckDB list_reduce mirror, evaluated in
-    * one tight loop instead of per-character interpreted lambdas. */
+  /** polyHash as a single expression node (graft.dedup.polyHash) — same
+    * value as the HOF spelling and the DuckDB list_reduce mirror,
+    * evaluated in one tight loop instead of per-character interpreted
+    * lambdas. */
   case class PolyHash(child: Expression)
       extends UnaryExpression {
     override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashExprs.polyHash(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.HashExprs.polyHash($c.toString());")
+    override def nullIntolerant: Boolean = true
+    override def nullSafeEval(input: Any): Any = polyHash(input.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.polyHash")
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -340,14 +281,11 @@ object HashExprs {
   case class WinnowFingerprint(child: Expression, k: Int, w: Int)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
-      HashExprs.winnowEval(input.asInstanceOf[ArrayData], k, w)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.HashExprs.winnowEval($c, $k, $w);")
+      winnowEval(input.asInstanceOf[ArrayData], k, w)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.HashExprs.winnowEval", k, w)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 

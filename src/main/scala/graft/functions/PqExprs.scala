@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import Kernels.{call, toDouble}
+
 /** Product-quantization kernels (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011 — public literature; the reference
   * repo has no similarity search at all, SURVEY §2).
@@ -17,12 +19,12 @@ import org.apache.spark.sql.types._
   * executors as expression reference objects (one broadcast copy per
   * task), and every kernel is a tight JVM loop, not an interpreted HOF.
   *
-  * All kernels implement doGenCode as a static call into the shared
-  * Scala kernel (the StaticInvoke pattern): child values flow unboxed,
-  * the surrounding projection/join stage stays inside whole-stage codegen,
-  * and interpreted and generated paths are bit-exact by construction.
-  * Kernels that can yield null (zero-norm / wrong-dimension input) return
-  * a boxed result the generated code null-checks.
+  * Each kernel is one static Scala method that `eval` calls and the
+  * generated code calls through [[Kernels.call]]: child values flow
+  * unboxed, the surrounding projection/join stage stays inside whole-stage
+  * codegen, and interpreted and generated paths are bit-exact by
+  * construction. Kernels that can yield null (zero-norm /
+  * wrong-dimension input) return a boxed or null result.
   *
   * All three PQ kernels L2-normalize internally, so the ADC score
   * approximates COSINE (the metric every other search path in
@@ -31,22 +33,13 @@ import org.apache.spark.sql.types._
   */
 object PqExprs {
 
-  @inline private def elem(arr: ArrayData, i: Int, et: DataType): Double =
-    et match {
-      case FloatType => arr.getFloat(i).toDouble
-      case DoubleType => arr.getDouble(i)
-      case IntegerType => arr.getInt(i).toDouble
-      case LongType => arr.getLong(i).toDouble
-      case _ => throw new IllegalArgumentException(s"non-numeric vector: $et")
-    }
-
   /** L2-normalized copy of the input, or null for zero-norm / wrong dim. */
   @inline private def normalized(arr: ArrayData, et: DataType, dim: Int): Array[Double] = {
     if (arr.numElements() != dim) return null
     val v = new Array[Double](dim)
     var n2 = 0.0
     var i = 0
-    while (i < dim) { val x = elem(arr, i, et); v(i) = x; n2 += x * x; i += 1 }
+    while (i < dim) { val x = toDouble(arr, i, et); v(i) = x; n2 += x * x; i += 1 }
     if (n2 == 0.0) return null
     val inv = 1.0 / math.sqrt(n2)
     i = 0
@@ -61,7 +54,7 @@ object PqExprs {
     if (arr.numElements() != dim) return null
     val v = new Array[Double](dim)
     var i = 0
-    while (i < dim) { v(i) = elem(arr, i, et); i += 1 }
+    while (i < dim) { v(i) = toDouble(arr, i, et); i += 1 }
     v
   }
 
@@ -135,8 +128,8 @@ object PqExprs {
     var dot = 0.0; var na2 = 0.0
     var i = 0
     while (i < n) {
-      val x = elem(va, i, etL)
-      dot += x * elem(vb, i, etR); na2 += x * x
+      val x = toDouble(va, i, etL)
+      dot += x * toDouble(vb, i, etR); na2 += x * x
       i += 1
     }
     if (na2 == 0.0) null else java.lang.Double.valueOf(dot / math.sqrt(na2))
@@ -151,22 +144,13 @@ object PqExprs {
     override def nullable: Boolean = true
     private lazy val et = child.dataType.asInstanceOf[ArrayType].elementType
 
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
       pqEncodeEval(input.asInstanceOf[ArrayData], flat, m, ksub, dsub,
         normalizeInput, et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-        val etRef = ctx.addReferenceObj("pqEt", et,
-          "org.apache.spark.sql.types.DataType")
-        val r = ctx.freshName("pqCodes")
-        s"""
-          org.apache.spark.sql.catalyst.util.ArrayData $r =
-            graft.functions.PqExprs.pqEncodeEval($c, $flatRef, $m, $ksub,
-              $dsub, $normalizeInput, $etRef);
-          if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-        """
-      })
+      call(ctx, ev, this, "graft.functions.PqExprs.pqEncodeEval", flat, m, ksub, dsub,
+        normalizeInput, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -179,21 +163,11 @@ object PqExprs {
     override def nullable: Boolean = true
     private lazy val et = child.dataType.asInstanceOf[ArrayType].elementType
 
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
       pqTablesEval(input.asInstanceOf[ArrayData], flat, m, ksub, dsub, et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-        val etRef = ctx.addReferenceObj("pqEt", et,
-          "org.apache.spark.sql.types.DataType")
-        val r = ctx.freshName("pqTable")
-        s"""
-          org.apache.spark.sql.catalyst.util.ArrayData $r =
-            graft.functions.PqExprs.pqTablesEval($c, $flatRef, $m, $ksub,
-              $dsub, $etRef);
-          if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-        """
-      })
+      call(ctx, ev, this, "graft.functions.PqExprs.pqTablesEval", flat, m, ksub, dsub, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -204,21 +178,11 @@ object PqExprs {
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
 
-    override def nullSafeEval(tables: Any, codes: Any): Any = {
-      val r = pqAdcScoreEval(tables.asInstanceOf[ArrayData],
-        codes.asInstanceOf[ArrayData], m, ksub)
-      if (r == null) null else r.doubleValue()
-    }
+    override def nullIntolerant: Boolean = true
+    override def nullSafeEval(tables: Any, codes: Any): Any =
+      pqAdcScoreEval(tables.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], m, ksub)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (t, c) => {
-        val r = ctx.freshName("adc")
-        s"""
-          java.lang.Double $r =
-            graft.functions.PqExprs.pqAdcScoreEval($t, $c, $m, $ksub);
-          if ($r == null) { ${ev.isNull} = true; }
-          else { ${ev.value} = $r.doubleValue(); }
-        """
-      })
+      call(ctx, ev, this, "graft.functions.PqExprs.pqAdcScoreEval", m, ksub)
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
@@ -232,25 +196,11 @@ object PqExprs {
     private lazy val etL = left.dataType.asInstanceOf[ArrayType].elementType
     private lazy val etR = right.dataType.asInstanceOf[ArrayType].elementType
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val r = dotNormLeftEval(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData], etL, etR)
-      if (r == null) null else r.doubleValue()
-    }
+    override def nullIntolerant: Boolean = true
+    override def nullSafeEval(a: Any, b: Any): Any =
+      dotNormLeftEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], etL, etR)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val etLRef = ctx.addReferenceObj("dnlEtL", etL,
-          "org.apache.spark.sql.types.DataType")
-        val etRRef = ctx.addReferenceObj("dnlEtR", etR,
-          "org.apache.spark.sql.types.DataType")
-        val r = ctx.freshName("dnl")
-        s"""
-          java.lang.Double $r =
-            graft.functions.PqExprs.dotNormLeftEval($a, $b, $etLRef, $etRRef);
-          if ($r == null) { ${ev.isNull} = true; }
-          else { ${ev.value} = $r.doubleValue(); }
-        """
-      })
+      call(ctx, ev, this, "graft.functions.PqExprs.dotNormLeftEval", etL, etR)
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }

@@ -28,11 +28,11 @@ object QuantileExprs {
   case class DoubleSortableBits(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullable: Boolean = child.nullable
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
       toSortable(input.asInstanceOf[Double])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.QuantileExprs.toSortable($c)")
+      Kernels.call(ctx, ev, this, "graft.functions.QuantileExprs.toSortable")
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -42,15 +42,17 @@ object QuantileExprs {
   /** `(v - lo) >>> shift` with two's-complement WRAPAROUND — the exact
     * unsigned distance-to-bucket map of the select-k bisection. ANSI
     * mode (Spark 4 default) makes the builtin `-` throw on the
-    * intentional overflow, so the wrap lives here in Java semantics. */
+    * intentional overflow, so the wrap lives here in JVM semantics. */
+  def bucket(v: Long, lo: Long, shift: Int): Long = (v - lo) >>> shift
+
   case class SortableBucket(child: Expression, lo: Long, shift: Int)
       extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullable: Boolean = child.nullable
-    override def nullSafeEval(input: Any): Any =
-      (input.asInstanceOf[Long] - lo) >>> shift
+    override def nullIntolerant: Boolean = true
+    override def nullSafeEval(input: Any): Any = bucket(input.asInstanceOf[Long], lo, shift)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"(($c - ${lo}L) >>> $shift)")
+      Kernels.call(ctx, ev, this, "graft.functions.QuantileExprs.bucket", lo, shift)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 

@@ -3,12 +3,13 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+
+import Kernels.{call, toDouble}
 
 /** Compiled kernels for the axis=1 reducers (reference
   * `lib/reducers.py`, which runs them as `map_partitions` calls into
@@ -18,30 +19,19 @@ import org.apache.spark.sql.types._
   * `forall`, `transform`) are `CodegenFallback`: every list element is
   * evaluated by interpreting the lambda tree, and a projection holding one
   * stays out of whole-stage codegen. Each expression here is one static
-  * Scala loop that both `eval` and the generated code call
-  * ([[staticCall]]), so the projection compiles.
+  * Scala loop that both `eval` and the generated code call, through
+  * [[Kernels.call]], so the projection compiles. These expressions are not
+  * null-intolerant: each kernel gets the list as an object and returns
+  * null for a null list itself.
   *
   * Every kernel returns what the HOF spelling it replaced returned, bit for
   * bit: it folds left to right in element order, reads elements as
-  * `cast(x AS DOUBLE)` does ([[toDouble]]), and uses `StrictMath.pow` and
-  * `StrictMath.exp` as Spark's `Pow` and `Exp` do. The HOF spellings are
+  * `cast(x AS DOUBLE)` does ([[Kernels.toDouble]]), and uses
+  * `StrictMath.pow` and `StrictMath.exp` as Spark's `Pow` and `Exp` do. The HOF spellings are
   * kept as test-side witnesses that DifferentialFuzzSpec checks every
   * kernel against.
   */
 object ReducerExprs {
-
-  /** Element `i` as `cast(x AS DOUBLE)` reads it. */
-  def toDouble(arr: ArrayData, i: Int, et: DataType): Double = et match {
-    case DoubleType => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType => arr.getLong(i).toDouble
-    case FloatType => arr.getFloat(i).toDouble
-    case d: DecimalType => arr.getDecimal(i, d.precision, d.scale).toDouble
-    case ShortType => arr.getShort(i).toDouble
-    case ByteType => arr.getByte(i).toDouble
-    case BooleanType => if (arr.getBoolean(i)) 1.0 else 0.0
-    case _ => throw new IllegalArgumentException(s"non-numeric list: $et")
-  }
 
   private def numericList(e: Expression): TypeCheckResult = e.dataType match {
     case ArrayType(_: NumericType | BooleanType | NullType, _) =>
@@ -52,36 +42,6 @@ object ReducerExprs {
 
   private def elementType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
-
-  /** Generated code for `ev = method(children..., consts...)`: each child
-    * is evaluated and passed as an object (null for SQL null), an Int or
-    * Boolean constant as a Java literal and a DataType or Ordering
-    * constant as a reference object; a null return is SQL null. */
-  private[functions] def staticCall(ctx: CodegenContext, ev: ExprCode,
-      e: Expression, method: String, consts: Any*): ExprCode = {
-    val kids = e.children.map(_.genCode(ctx))
-    val args = e.children.zip(kids).map { case (c, k) =>
-      val v =
-        if (CodeGenerator.isPrimitiveType(c.dataType))
-          s"${CodeGenerator.boxedType(c.dataType)}.valueOf(${k.value})"
-        else k.value.toString
-      s"(${k.isNull} ? null : $v)"
-    } ++ consts.map {
-      case b: Boolean => b.toString
-      case i: Int => i.toString
-      case dt: DataType => ctx.addReferenceObj("kernelType", dt, classOf[DataType].getName)
-      case o: Ordering[_] => ctx.addReferenceObj("kernelOrd", o, classOf[Ordering[_]].getName)
-    }
-    val t = CodeGenerator.javaType(e.dataType)
-    val r = ctx.freshName("kernel")
-    val unboxed =
-      if (CodeGenerator.isPrimitiveType(e.dataType)) s"$r.${t}Value()" else r
-    ev.copy(code = code"""
-      ${kids.map(_.code.toString).mkString("\n")}
-      ${CodeGenerator.boxedType(e.dataType)} $r = $method(${args.mkString(", ")});
-      boolean ${ev.isNull} = $r == null;
-      $t ${ev.value} = ${ev.isNull} ? ${CodeGenerator.defaultValue(e.dataType)} : $unboxed;""")
-  }
 
   /** Shared kernel; boxed so empty/all-null can be null.
     *
@@ -126,7 +86,7 @@ object ReducerExprs {
     override def eval(input: InternalRow): Any =
       argExtremumEval(child.eval(input).asInstanceOf[ArrayData], smaller, et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.ReducerExprs.argExtremumEval", smaller, et)
+      call(ctx, ev, this, "graft.functions.ReducerExprs.argExtremumEval", smaller, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -197,7 +157,7 @@ object ReducerExprs {
     override def eval(input: InternalRow): Any =
       reduceEval(child.eval(input).asInstanceOf[ArrayData], op, param, et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.ReducerExprs.reduceEval", op, param, et)
+      call(ctx, ev, this, "graft.functions.ReducerExprs.reduceEval", op, param, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -230,7 +190,7 @@ object ReducerExprs {
     override def eval(input: InternalRow): Any =
       countEval(child.eval(input).asInstanceOf[ArrayData], nonzero, et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.ReducerExprs.countEval", nonzero, et)
+      call(ctx, ev, this, "graft.functions.ReducerExprs.countEval", nonzero, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -271,7 +231,7 @@ object ReducerExprs {
     override def eval(input: InternalRow): Any =
       truthEval(child.eval(input).asInstanceOf[ArrayData], any, threeValued)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.ReducerExprs.truthEval", any, threeValued)
+      call(ctx, ev, this, "graft.functions.ReducerExprs.truthEval", any, threeValued)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -318,7 +278,7 @@ object ReducerExprs {
     override def eval(input: InternalRow): Any =
       softmaxEval(child.eval(input).asInstanceOf[ArrayData], et)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.ReducerExprs.softmaxEval", et)
+      call(ctx, ev, this, "graft.functions.ReducerExprs.softmaxEval", et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 

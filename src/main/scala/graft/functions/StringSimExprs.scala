@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * levenshtein (used by graft.dedup's edit-distance pairs); record
   * linkage on NAMES wants Jaro–Winkler — transposition-tolerant, prefix-
   * boosted, the matcher census/MDM pipelines standardized on. Implemented
-  * as a codegen'd Catalyst expression (the custom-kernel story: scalar
-  * loop in generated Java, no UDF serialization) with the STANDARD
+  * as a Catalyst expression over one static Scala kernel that `eval` and
+  * the generated code ([[Kernels.call]]) both call, with the STANDARD
   * semantics DuckDB's `jaro_winkler_similarity` implements — pinned
   * empirically: prefix boost (p=0.1, l≤4) applies only when jaro > 0.7,
   * either-empty → 0.0 — so the oracle can grade the kernel directly. */
@@ -20,9 +20,7 @@ object StringSimExprs {
   /** Jaro similarity over UTF-16 code units. Matching window
     * max(|a|,|b|)/2 - 1 (floor, ≥0), greedy left-to-right match marking,
     * transpositions counted over the aligned matched sequences, halved
-    * in the final term: ((m/|a|) + (m/|b|) + ((m - t/2)/m)) / 3.
-    * Public static so whole-stage codegen calls
-    * `graft.functions.StringSimExprs.jaro(String, String)` directly. */
+    * in the final term: ((m/|a|) + (m/|b|) + ((m - t/2)/m)) / 3. */
   def jaro(a: String, b: String): Double = {
     val la = a.length; val lb = b.length
     if (la == 0 || lb == 0) return 0.0
@@ -70,22 +68,19 @@ object StringSimExprs {
     j + l * 0.1 * (1 - j)
   }
 
-  /** Codegen'd expression: null-safe, Double out; the generated Java
-    * calls the static kernel above — same scalar code interpreted and
-    * compiled (CodegenPinSpec discipline). */
+  /** [[jaroWinkler]] of two SQL strings: the [[JaroWinklerExpr]] kernel. */
+  def jaroWinkler(a: UTF8String, b: UTF8String): Double = jaroWinkler(a.toString, b.toString)
+
+  /** [[jaroWinkler]] as a column; null when either string is null. */
   case class JaroWinklerExpr(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "jaro_winkler"
-
+    override def nullIntolerant: Boolean = true
     override protected def nullSafeEval(a: Any, b: Any): Any =
-      jaroWinkler(a.asInstanceOf[UTF8String].toString,
-        b.asInstanceOf[UTF8String].toString)
-
+      jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.functions.StringSimExprs.jaroWinkler($a.toString(), $b.toString())")
-
+      Kernels.call(ctx, ev, this, "graft.functions.StringSimExprs.jaroWinkler")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)

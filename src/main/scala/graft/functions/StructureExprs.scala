@@ -10,14 +10,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrder
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-import ReducerExprs.staticCall
+import Kernels.call
 
 /** Compiled kernels for the axis=1 structure operators of
   * [[graft.structure]] (reference `lib/structure.py`): local index,
   * argsort, pad/fill of missing values, per-row cartesian product and
   * unflatten. Each replaces a composition of interpreted higher-order
   * functions with one static loop that `eval` and the generated code both
-  * call (the pattern of [[ReducerExprs]]), and returns what that
+  * call ([[Kernels.call]], as in [[ReducerExprs]]), and returns what that
   * composition returned, null rules included; DifferentialFuzzSpec checks
   * each against it.
   */
@@ -48,7 +48,7 @@ object StructureExprs {
     override def eval(input: InternalRow): Any =
       localIndexEval(child.eval(input).asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.localIndexEval")
+      call(ctx, ev, this, "graft.functions.StructureExprs.localIndexEval")
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -88,7 +88,7 @@ object StructureExprs {
     override def eval(input: InternalRow): Any =
       argsortEval(child.eval(input).asInstanceOf[ArrayData], et, ord)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.argsortEval", et, ord)
+      call(ctx, ev, this, "graft.functions.StructureExprs.argsortEval", et, ord)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -112,7 +112,7 @@ object StructureExprs {
     override def eval(input: InternalRow): Any =
       padEval(child.eval(input).asInstanceOf[ArrayData], target, clip, elementType(child))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.padEval", target, clip,
+      call(ctx, ev, this, "graft.functions.StructureExprs.padEval", target, clip,
         elementType(child))
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
@@ -160,7 +160,7 @@ object StructureExprs {
     override def eval(input: InternalRow): Any =
       fillEval(left.eval(input).asInstanceOf[ArrayData], right.eval(input), elementType(left))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.fillEval", elementType(left))
+      call(ctx, ev, this, "graft.functions.StructureExprs.fillEval", elementType(left))
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
   }
@@ -199,7 +199,7 @@ object StructureExprs {
       left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData],
       elementType(left), elementType(right))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.cartesianEval",
+      call(ctx, ev, this, "graft.functions.StructureExprs.cartesianEval",
         elementType(left), elementType(right))
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
@@ -276,7 +276,7 @@ object StructureExprs {
       left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData],
       elementType(left), elementType(right), ansi)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      staticCall(ctx, ev, this, "graft.functions.StructureExprs.unflattenEval",
+      call(ctx, ev, this, "graft.functions.StructureExprs.unflattenEval",
         elementType(left), elementType(right), ansi)
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * utf8_normalize, which this matches via java.text.Normalizer (both
   * implement UAX #15).
   *
-  * Map-side, shuffle-free, stays inside whole-stage codegen via the
-  * static-call pattern (CodegenPinSpec pins codegen == interpreted). */
+  * Map-side, shuffle-free, stays inside whole-stage codegen through
+  * [[Kernels.call]] (CodegenPinSpec pins codegen == interpreted). */
 object UnicodeExprs {
 
   def normalizeEval(s: UTF8String, form: java.text.Normalizer.Form): UTF8String = {
@@ -35,12 +35,11 @@ object UnicodeExprs {
     @transient private lazy val f = java.text.Normalizer.Form.valueOf(form)
     override def dataType: DataType = StringType
     override def nullable: Boolean = child.nullable
+    override def nullIntolerant: Boolean = true
     override def nullSafeEval(input: Any): Any =
       normalizeEval(input.asInstanceOf[UTF8String], f)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.UnicodeExprs.normalizeEval($c, " +
-          s"java.text.Normalizer.Form.$form)")
+      Kernels.call(ctx, ev, this, "graft.functions.UnicodeExprs.normalizeEval", f)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 

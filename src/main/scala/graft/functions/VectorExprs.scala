@@ -2,105 +2,56 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import Kernels.{call, toDouble}
 
 /** Custom Catalyst expressions for the embedding/vector kernels.
   *
   * Dot products over 64-dim vectors are the inner loop of similarity search
   * and embedding dedup; the HOF formulation (aggregate over zip_with) runs
   * interpreted and costs ~1 us per element. These evaluate the whole kernel
-  * per row in one tight loop, numerically identical (same accumulation
-  * order, float -> double widening per element) to the HOF/DuckDB-oracle
-  * formulations in graft.similarity.
+  * per row in one static Scala loop, numerically identical (same
+  * accumulation order, float -> double widening per element) to the
+  * HOF/DuckDB-oracle formulations in graft.similarity. `eval` and the
+  * generated code ([[Kernels.call]]) both call it, so the scoring
+  * projection stays inside whole-stage codegen.
   */
 object VectorExprs {
-
-  @inline private def elem(arr: ArrayData, i: Int, et: DataType): Double =
-    et match {
-      case FloatType => arr.getFloat(i).toDouble
-      case DoubleType => arr.getDouble(i)
-      case IntegerType => arr.getInt(i).toDouble
-      case LongType => arr.getLong(i).toDouble
-      case _ => throw new IllegalArgumentException(s"non-numeric vector: $et")
-    }
 
   /** Cosine similarity; null when either norm is 0 (matches the HOF form's
     * `when(na =!= 0 && nb =!= 0, ...)`), and when the inputs have unequal
     * lengths the shorter prefix is used (zip_with would null-pad — callers
-    * feed fixed-dim vectors, so this branch is theoretical).
-    *
-    * Implements doGenCode (not CodegenFallback): the dot-product loop is
-    * the inner kernel of similarity search, and generated code keeps the
-    * whole scoring projection inside one WholeStageCodegen span — no
-    * per-row virtual call, no boxing. */
+    * feed fixed-dim vectors, so this branch is theoretical). */
   case class CosineSim(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
+    override def nullIntolerant: Boolean = true
     private lazy val etL = left.dataType.asInstanceOf[ArrayType].elementType
     private lazy val etR = right.dataType.asInstanceOf[ArrayType].elementType
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val va = a.asInstanceOf[ArrayData]
-      val vb = b.asInstanceOf[ArrayData]
-      val n = math.min(va.numElements(), vb.numElements())
-      var dot = 0.0; var na2 = 0.0; var nb2 = 0.0
-      var i = 0
-      while (i < n) {
-        val x = elem(va, i, etL); val y = elem(vb, i, etR)
-        dot += x * y; na2 += x * x; nb2 += y * y
-        i += 1
-      }
-      val na = math.sqrt(na2); val nb = math.sqrt(nb2)
-      if (na == 0.0 || nb == 0.0) null else dot / (na * nb)
-    }
-
-    private def accessor(arr: String, i: String, et: DataType): String = et match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
-      case IntegerType => s"(double) $arr.getInt($i)"
-      case LongType => s"(double) $arr.getLong($i)"
-      case other => throw new IllegalArgumentException(s"non-numeric vector: $other")
-    }
-
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val lg = left.genCode(ctx)
-      val rg = right.genCode(ctx)
-      val (n, dot, na2, nb2, i) = (ctx.freshName("n"), ctx.freshName("dot"),
-        ctx.freshName("na2"), ctx.freshName("nb2"), ctx.freshName("i"))
-      val (na, nb) = (ctx.freshName("na"), ctx.freshName("nb"))
-      val code =
-        code"""
-          ${lg.code}
-          ${rg.code}
-          boolean ${ev.isNull} = true;
-          double ${ev.value} = 0.0;
-          if (!${lg.isNull} && !${rg.isNull}) {
-            int $n = java.lang.Math.min(
-              ${lg.value}.numElements(), ${rg.value}.numElements());
-            double $dot = 0.0, $na2 = 0.0, $nb2 = 0.0;
-            for (int $i = 0; $i < $n; $i++) {
-              double x = ${accessor(lg.value.toString, i, etL)};
-              double y = ${accessor(rg.value.toString, i, etR)};
-              $dot += x * y; $na2 += x * x; $nb2 += y * y;
-            }
-            double $na = java.lang.Math.sqrt($na2);
-            double $nb = java.lang.Math.sqrt($nb2);
-            if ($na != 0.0 && $nb != 0.0) {
-              ${ev.isNull} = false;
-              ${ev.value} = $dot / ($na * $nb);
-            }
-          }
-        """
-      ev.copy(code = code)
-    }
-
+    override def nullSafeEval(a: Any, b: Any): Any =
+      cosineSimEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], etL, etR)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.VectorExprs.cosineSimEval", etL, etR)
     override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+  }
+
+  /** Shared kernel for [[CosineSim]]. */
+  def cosineSimEval(va: ArrayData, vb: ArrayData, etL: DataType,
+      etR: DataType): java.lang.Double = {
+    val n = math.min(va.numElements(), vb.numElements())
+    var dot = 0.0; var na2 = 0.0; var nb2 = 0.0
+    var i = 0
+    while (i < n) {
+      val x = toDouble(va, i, etL); val y = toDouble(vb, i, etR)
+      dot += x * y; na2 += x * x; nb2 += y * y
+      i += 1
+    }
+    val na = math.sqrt(na2); val nb = math.sqrt(nb2)
+    if (na == 0.0 || nb == 0.0) null else dot / (na * nb)
   }
 
   /** Sign-bit signature against nPlanes deterministic pseudo-random
@@ -109,26 +60,17 @@ object VectorExprs {
   case class HyperplaneSig(child: Expression, dim: Int, nPlanes: Int)
       extends UnaryExpression {
     override def dataType: DataType = LongType
+    override def nullIntolerant: Boolean = true
     private lazy val et = child.dataType.asInstanceOf[ArrayType].elementType
     private lazy val planes: Array[Array[Double]] =
       Array.tabulate(nPlanes, dim) { (j, i) =>
         val x = (1103515245L * (j * 4099 + i) + 12345L) % 2147483648L
         (if (x < 0) x + 2147483648L else x).toDouble / 2147483648.0 - 0.5
       }
-
     override def nullSafeEval(input: Any): Any =
-      VectorExprs.hyperplaneSigEval(input.asInstanceOf[ArrayData], planes,
-        dim, et)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val planesRef = ctx.addReferenceObj("hpPlanes", planes, "double[][]")
-        val etRef = ctx.addReferenceObj("hpEt", et,
-          "org.apache.spark.sql.types.DataType")
-        s"${ev.value} = graft.functions.VectorExprs.hyperplaneSigEval($c, $planesRef, $dim, $etRef);"
-      })
+      hyperplaneSigEval(input.asInstanceOf[ArrayData], planes, dim, et)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      call(ctx, ev, this, "graft.functions.VectorExprs.hyperplaneSigEval", planes, dim, et)
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
@@ -142,7 +84,7 @@ object VectorExprs {
       val plane = planes(j)
       var dot = 0.0
       var i = 0
-      while (i < n) { dot += elem(v, i, et) * plane(i); i += 1 }
+      while (i < n) { dot += toDouble(v, i, et) * plane(i); i += 1 }
       if (dot >= 0) sig |= (1L << j)
       j += 1
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** As-of join: for every left row, the latest right row with
   * right.ts <= left.ts on the same key — the feature-pipeline staple
@@ -20,6 +21,30 @@ import org.apache.spark.sql.functions._
   * out across tasks.
   */
 object AsofJoin {
+
+  /** The ts column `c` of type `dt` as a long: micros for a timestamp (a
+    * cast to long truncates to seconds and would mis-break sub-second
+    * ties), the value itself otherwise. */
+  private def tsNum(c: Column, dt: DataType): Column = dt match {
+    case TimestampType => unix_micros(c)
+    case _ => c.cast("long")
+  }
+
+  /** `nearest`'s pick between the backward match `b` and the forward
+    * match `f` (payload structs carrying the right ts, of type `rdt`, as
+    * `__t`) for the left ts `lt`, a [[tsNum]]. Ties (equal distance) take
+    * the backward match; `<=` encodes that. Distances are compared in
+    * DECIMAL(21,0): with back <= t <= fwd, a raw Long `t - b` wraps
+    * negative once the span exceeds Long range (mixed-sign extreme ts),
+    * silently picking the FAR match — unreachable for epoch timestamps,
+    * reachable for the arbitrary long ts the signature accepts. */
+  private def nearest(lt: Column, b: Column, f: Column, rdt: DataType): Column = {
+    def d(c: Column) = c.cast("decimal(21,0)")
+    when(b.isNull, f).when(f.isNull, b)
+      .when(d(lt) - d(tsNum(b.getField("__t"), rdt))
+        <= d(tsNum(f.getField("__t"), rdt)) - d(lt), b)
+      .otherwise(f)
+  }
 
   /** `payloadCols` are taken from `right`; emitted on each left row as
     * `asof_<name>` (null when no right row qualifies). Right rows must be
@@ -77,26 +102,8 @@ object AsofJoin {
       case "nearest" =>
         val b = last(col("__p"), ignoreNulls = true).over(wBack)
         val f = last(col("__p"), ignoreNulls = true).over(wFwd)
-        // micros for timestamps (cast-to-long truncates to seconds and
-        // would mis-break sub-second ties), raw value otherwise
-        def num(c: Column, dt: org.apache.spark.sql.types.DataType) = dt match {
-          case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-          case _ => c.cast("long")
-        }
-        val lt = num(col(tsCol), left.schema(tsCol).dataType)
-        val rdt = right.schema(tsCol).dataType
-        // ties (equal distance) take the backward match; <= encodes that.
-        // Distances are compared in DECIMAL(21,0): with back <= t <= fwd,
-        // a raw Long `t - b` wraps negative once the span exceeds Long
-        // range (mixed-sign extreme ts), silently picking the FAR match —
-        // unreachable for epoch timestamps, reachable for the arbitrary
-        // long ts the signature accepts.
-        def d(c: Column) = c.cast("decimal(21,0)")
-        union.withColumn("__m",
-          when(b.isNull, f).when(f.isNull, b)
-            .when(d(lt) - d(num(b.getField("__t"), rdt))
-              <= d(num(f.getField("__t"), rdt)) - d(lt), b)
-            .otherwise(f))
+        union.withColumn("__m", nearest(tsNum(col(tsCol), left.schema(tsCol).dataType),
+          b, f, right.schema(tsCol).dataType))
     }
 
     val out = left.columns.toIndexedSeq.map(col) ++
@@ -128,13 +135,8 @@ object AsofJoin {
     val withTs =
       if (payloadCols.contains(tsCol)) payloadCols else payloadCols :+ tsCol
     val j = asofJoin(left, right, keyCol, tsCol, withTs, direction)
-    def num(c: Column, dt: org.apache.spark.sql.types.DataType) = dt match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case _ => c.cast("long")
-    }
-    def d(c: Column) = c.cast("decimal(21,0)")
-    val lt = d(num(col(tsCol), left.schema(tsCol).dataType))
-    val rt = d(num(col(s"asof_$tsCol"), right.schema(tsCol).dataType))
+    val lt = tsNum(col(tsCol), left.schema(tsCol).dataType).cast("decimal(21,0)")
+    val rt = tsNum(col(s"asof_$tsCol"), right.schema(tsCol).dataType).cast("decimal(21,0)")
     val within = rt.isNotNull &&
       abs(lt - rt) <= lit(toleranceUs).cast("decimal(21,0)")
     j.select(left.columns.toIndexedSeq.map(col) ++
@@ -182,15 +184,11 @@ object AsofJoin {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"asofJoinSalted: unknown direction '$direction'")
     require(buckets > 0, s"asofJoinSalted: buckets must be positive")
-    def tsNum(c: Column, dt: org.apache.spark.sql.types.DataType): Column =
-      dt match {
-        case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-        case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType =>
-          c.cast("long")
-        case other => throw new IllegalArgumentException(
-          s"asofJoinSalted: ts must be timestamp/integral for bucketing, got $other")
-      }
+    Seq(left, right).map(_.schema(tsCol).dataType).foreach {
+      case TimestampType | LongType | IntegerType | ShortType | ByteType =>
+      case other => throw new IllegalArgumentException(
+        s"asofJoinSalted: ts must be timestamp/integral for bucketing, got $other")
+    }
     val lt = tsNum(col(tsCol), left.schema(tsCol).dataType)
     val rt = tsNum(col(tsCol), right.schema(tsCol).dataType)
 
@@ -306,19 +304,7 @@ object AsofJoin {
       case "nearest" =>
         val b = last(col("__pb"), ignoreNulls = true).over(wBack)
         val f = last(col("__pf"), ignoreNulls = true).over(wFwd)
-        val rdt = right.schema(tsCol).dataType
-        def num(c: Column) = rdt match {
-          case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-          case _ => c.cast("long")
-        }
-        // decimal distance compare: same Long-wrap hazard as asofJoin's
-        // nearest (see the comment there)
-        def d(c: Column) = c.cast("decimal(21,0)")
-        union.withColumn("__m",
-          when(b.isNull, f).when(f.isNull, b)
-            .when(d(lt) - d(num(b.getField("__t")))
-              <= d(num(f.getField("__t"))) - d(lt), b)
-            .otherwise(f))
+        union.withColumn("__m", nearest(lt, b, f, right.schema(tsCol).dataType))
     }
     val out = left.columns.toIndexedSeq.map(col) ++
       payloadCols.map(p => col("__m").getField(p).as(s"asof_$p"))

@@ -149,7 +149,8 @@ object LambdaFieldPruning extends Rule[LogicalPlan] {
   * as SQL functions, so the pure-SQL surface reaches them too:
   * graft_minhash(shingles, k), graft_simhash48(tokens),
   * graft_word_ngrams(tokens, n), graft_cosine(a, b),
-  * graft_combinations(arr, n). */
+  * graft_combinations(arr, n), graft_polyhash(s),
+  * graft_winnow(tokens, k, w), graft_minhash_poly(shingles, k). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}

@@ -26,36 +26,26 @@ package object text {
   val bpePattern = "[a-z]+|[A-Z][a-z]*|[0-9]+|[^A-Za-z0-9\\s]"
   def countTokensBpe(c: Column): Column = regexp_count(c, lit(bpePattern))
 
+  // The signals of one text column are their *FromCounts faces over its
+  // textCounts struct. Catalyst folds `struct(...).field` to the field's
+  // own expression, so each signal still computes only the counts it reads.
+  private def counts(c: Column, stop: Seq[String] = defaultStopwords): Column =
+    textCounts(c, wsTokens(c), stop)
+
   /** Ratio of punctuation/symbol characters to total characters. */
-  def punctRatio(c: Column): Column =
-    when(length(c) > 0,
-      regexp_count(c, lit("[^A-Za-z0-9\\s]")).cast("double") / length(c))
-      .otherwise(lit(0.0))
+  def punctRatio(c: Column): Column = punctRatioFromCounts(counts(c))
 
   /** Ratio of alphabetic characters to total characters. */
-  def alphaRatio(c: Column): Column =
-    when(length(c) > 0,
-      regexp_count(c, lit("[A-Za-z]")).cast("double") / length(c))
-      .otherwise(lit(0.0))
+  def alphaRatio(c: Column): Column = alphaRatioFromCounts(counts(c))
 
   val defaultStopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in")
 
   /** Fraction of tokens that are stopwords — a fluency signal. */
-  def stopwordRatio(c: Column, stop: Seq[String] = defaultStopwords): Column = {
-    val toks = wsTokens(c)
-    when(size(toks) > 0,
-      size(filter(toks, t => t.isin(stop.map(x => x: Any): _*))).cast("double") /
-        size(toks))
-      .otherwise(lit(0.0))
-  }
+  def stopwordRatio(c: Column, stop: Seq[String] = defaultStopwords): Column =
+    stopwordRatioFromCounts(counts(c, stop))
 
   /** Mean whitespace-token length. */
-  def meanTokenLen(c: Column): Column = {
-    val toks = wsTokens(c)
-    when(size(toks) > 0,
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        size(toks))
-  }
+  def meanTokenLen(c: Column): Column = meanTokenLenFromCounts(counts(c))
 
   /** Composite quality score in [0,1] — the usual length/punctuation/
     * stopword blend used for corpus filtering:
@@ -89,23 +79,13 @@ package object text {
     *     2000*len*nt invariant the decomposition bound relies on holds),
     *     bounding num at 2000*2^50 < 2^63. Docs beyond 33.5M chars score
     *     with saturated ratios — documented, and mirrored in the oracle. */
-  def qualityScore(c: Column): Column = {
-    val toks = wsTokens(c)
-    qualityScoreFromParts(
-      length(c).cast("long"),
-      regexp_count(c, lit("[^A-Za-z0-9\\s]")).cast("long"),
-      regexp_count(c, lit("[A-Za-z]")).cast("long"),
-      size(toks).cast("long"),
-      size(filter(toks,
-        t => t.isin(defaultStopwords.map(x => x: Any): _*))).cast("long"))
-  }
+  def qualityScore(c: Column): Column = qualityScoreFromCounts(counts(c))
 
-  /** The quality-score arithmetic over already-computed counts — shared
-    * by [[qualityScore]] (counts inlined from the text column) and
-    * [[qualityScoreFromCounts]] (counts read from a [[textCounts]]
-    * struct), so the two faces cannot drift. */
-  private def qualityScoreFromParts(len: Column, pc: Column, ac: Column,
-      nt: Column, sc: Column): Column = {
+  /** [[qualityScore]] over a [[textCounts]] struct. */
+  def qualityScoreFromCounts(tc: Column): Column = {
+    val len = tc.getField("len"); val pc = tc.getField("punct")
+    val ac = tc.getField("alpha"); val nt = tc.getField("ntok")
+    val sc = tc.getField("nstop")
     val CAP = 1L << 25
     val lenC = least(len, lit(CAP))
     val ntC = least(nt, lit(CAP))
@@ -182,12 +162,6 @@ package object text {
     val nt = tc.getField("ntok")
     when(nt > 0, tc.getField("toklen").cast("double") / nt)
   }
-
-  /** [[qualityScore]] over a [[textCounts]] struct — bit-identical to the
-    * inline face (same [[qualityScoreFromParts]] arithmetic). */
-  def qualityScoreFromCounts(tc: Column): Column =
-    qualityScoreFromParts(tc.getField("len"), tc.getField("punct"),
-      tc.getField("alpha"), tc.getField("ntok"), tc.getField("nstop"))
 
   /** The Gopher quality-filter rule set (Rae et al. 2021, "Scaling
     * Language Models", Appendix A) as per-document boolean flags plus
@@ -949,8 +923,8 @@ package object text {
     * runs as a tight symbol-array loop ([[graft.functions.BpeExprs]]),
     * the algorithm the trainer uses and the fuzz pins equal to the
     * literal-replace semantics the oracle replays. (The HOF replace-fold
-    * spelling survives as [[bpeSegmentCountsHof]] for the A/B test —
-    * Spark evaluates higher-order lambdas interpreted, re-scanning the
+    * spelling is a test-side witness, `graft.HofWitness` — Spark
+    * evaluates higher-order lambdas interpreted, re-scanning the
     * delimited string once per rule.) Returns (idCol, n_words, n_bpe). */
   def bpeSegmentCounts(df: DataFrame, idCol: String, textCol: String,
       rules: Seq[(String, String)]): DataFrame = {
@@ -963,25 +937,6 @@ package object text {
       coalesce(size_(toks), lit(0)).cast("long").as("n_words"),
       coalesce(graft.functions.BpeExprs.bpeCount(toks, rules), lit(0L))
         .as("n_bpe"))
-  }
-
-  /** The Column-HOF spelling of [[bpeSegmentCounts]] (aggregate over a
-    * per-word 12-replace fold) — semantics reference for the A/B test. */
-  private[graft] def bpeSegmentCountsHof(df: DataFrame, idCol: String,
-      textCol: String, rules: Seq[(String, String)]): DataFrame = {
-    val toks = wsTokens(lower(col(textCol)))
-    def nsym(w: Column): Column = {
-      val repr0 = concat(lit("|"), array_join(split(w, ""), "||"), lit("|"))
-      val reprN = rules.foldLeft(repr0) { case (acc, (a, b)) =>
-        replace(acc, lit(s"|$a||$b|"), lit(s"|$a$b|"))
-      }
-      size_(split(trim(reprN, "|"), "\\|\\|")).cast("long")
-    }
-    df.select(col(idCol),
-      coalesce(size_(toks), lit(0)).cast("long").as("n_words"),
-      coalesce(aggregate(toks, lit(0L), (acc, w) =>
-        acc + when(w.rlike("^[a-z0-9]+$"), nsym(w)).otherwise(lit(1L))),
-        lit(0L)).as("n_bpe"))
   }
 
   /** DSIR-style importance scoring (Xie et al. 2023, "Data Selection for

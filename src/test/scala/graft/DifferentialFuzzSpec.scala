@@ -188,6 +188,27 @@ class DifferentialFuzzSpec extends SparkSuite {
     }
   }
 
+  test("polyHash kernel equals its HOF witness on ASCII, BMP, astral and empty strings") {
+    val strings = Seq("hello world", "The quick brown fox!", "", " ",
+      "h\u00e9llo", "\u65e5\u672c\u8a9e", "e\u0301", "\uffff",
+      "\ud834\udd1e", "a\ud83d\ude00b", "\ud83d\ude00\ud83d\ude00", "\udbff\udfff")
+    // the kernel's code-point fold is the contract the DuckDB oracles replay
+    def codePoints(s: String): Long =
+      s.codePoints.toArray.foldLeft(0L)((acc, cp) => (acc * 131 + cp) % 1000000007L)
+    val df = spark.sparkContext.parallelize(strings, 3).toDF("s")
+    for ((mode, confs) <- codegenModes) {
+      val rows = withConfs(confs) {
+        df.select($"s", graft.dedup.polyHash($"s"), HofWitness.polyHash($"s")).collect()
+      }
+      assert(rows.length == strings.size)
+      for (r <- rows) {
+        val (str, got, want) = (r.getString(0), r.getLong(1), r.getLong(2))
+        assert(got == codePoints(str), s"kernel on '$str' ($mode)")
+        assert(got == want, s"'$str' ($mode): kernel $got, witness $want")
+      }
+    }
+  }
+
   test("unflattenList raises slice's error on a negative count, like its witness") {
     val df = Seq((Seq(1, 2, 3), Seq(1, -1))).toDF("xs", "counts").repartition(1)
     def failure(c: org.apache.spark.sql.Column): org.apache.spark.SparkThrowable = {

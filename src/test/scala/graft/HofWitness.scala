@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** The higher-order-function spellings that the compiled list kernels
-  * (graft.functions.ReducerExprs and StructureExprs) replaced. Each kernel
-  * must return what its spelling here returns, bit for bit;
-  * DifferentialFuzzSpec checks that on generated ragged data.
+/** The higher-order-function spellings that the compiled kernels of
+  * graft.functions replaced. Each kernel must return what its spelling
+  * here returns, bit for bit; DifferentialFuzzSpec checks that on
+  * generated data, ModulesSpec on the BPE corpus.
   *
   * One spelling is corrected rather than kept: the old `padNoneClip` and
   * `padNone` returned `target` nulls for a missing list, and the kernels,
@@ -90,6 +90,31 @@ object HofWitness {
 
   def cartesianLists(a: Column, b: Column, an: String = "a", bn: String = "b"): Column =
     flatten(transform(a, x => transform(b, y => struct(x.as(an), y.as(bn)))))
+
+  /** `graft.dedup.polyHash` (the PolyHash kernel) as a fold over
+    * `split(c, "")`, one `ascii` per piece. */
+  def polyHash(c: Column): Column =
+    aggregate(split(c, ""), lit(0L),
+      (acc, ch) => (acc * 131 + ascii(ch)) % 1000000007L)
+
+  /** `graft.text.bpeSegmentCounts` (the BpeCount kernel) as an aggregate
+    * over a per-word replace fold, one `replace` per rule. */
+  def bpeSegmentCountsHof(df: DataFrame, idCol: String, textCol: String,
+      rules: Seq[(String, String)]): DataFrame = {
+    val toks = graft.text.wsTokens(lower(col(textCol)))
+    def nsym(w: Column): Column = {
+      val repr0 = concat(lit("|"), array_join(split(w, ""), "||"), lit("|"))
+      val reprN = rules.foldLeft(repr0) { case (acc, (a, b)) =>
+        replace(acc, lit(s"|$a||$b|"), lit(s"|$a$b|"))
+      }
+      size(split(trim(reprN, "|"), "\\|\\|")).cast("long")
+    }
+    df.select(col(idCol),
+      coalesce(size(toks), lit(0)).cast("long").as("n_words"),
+      coalesce(aggregate(toks, lit(0L), (acc, w) =>
+        acc + when(w.rlike("^[a-z0-9]+$"), nsym(w)).otherwise(lit(1L))),
+        lit(0L)).as("n_bpe"))
+  }
 
   def unflattenList(c: Column, counts: Column): Column = {
     val offsets = aggregate(

@@ -1419,7 +1419,7 @@ class ModulesSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     val fast = graft.text.bpeSegmentCounts(corpus, "doc_id", "text", realRules)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val hof = graft.text.bpeSegmentCountsHof(corpus, "doc_id", "text", realRules)
+    val hof = graft.HofWitness.bpeSegmentCountsHof(corpus, "doc_id", "text", realRules)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(fast == hof, "expression and HOF spellings diverged")
     assert(fast.nonEmpty && fast.exists(_._3 > 0))

@@ -194,6 +194,11 @@ class OperatorsSpec extends SparkSuite {
     val s2 = canonE(graft.operators.AsofJoin.asofJoinSalted(
       le, purchases, "user_id", "ts", Seq("pval")))
     assert(w == s2, "events-table differential")
+    // bucketing needs arithmetic: a non-integral ts is refused up front
+    val e = intercept[IllegalArgumentException](graft.operators.AsofJoin.asofJoinSalted(
+      l.withColumn("ts", $"ts".cast("double")), r.withColumn("ts", $"ts".cast("double")),
+      "k", "ts", Seq("pval")))
+    assert(e.getMessage.contains("timestamp/integral"), e.getMessage)
   }
 
   test("broadcast asof join matches the union+window form in all directions") {
