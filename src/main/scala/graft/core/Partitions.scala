@@ -178,7 +178,7 @@ object Partitions {
     sliceRows(df, orderCol, i, i + 1)
 
   /** Hash-repartition on `key` only when the plan's current parallelism is
-    * below `parts` (the session shuffle-partition target). The dedup/text
+    * below the session's shuffle-partition target. The dedup/text
     * pipelines explode a per-doc frame by 10-1000x right after this call;
     * a small input (few parquet splits) would otherwise run the whole
     * explode -> join-probe -> partial-agg pipeline in 1-2 tasks. But when
@@ -186,6 +186,8 @@ object Partitions {
     * exactly the 100 TB case — the extra full shuffle is pure waste
     * (measured 2.5x on d_ngram at sf0.1). Reading getNumPartitions costs
     * one physical planning pass, no job. */
-  def ensureMinParallelism(df: DataFrame, key: Column, parts: Int): DataFrame =
+  def ensureMinParallelism(df: DataFrame, key: Column): DataFrame = {
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.rdd.getNumPartitions >= parts) df else df.repartition(parts, key)
+  }
 }

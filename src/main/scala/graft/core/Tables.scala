@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * DataFrames are memoized per (session, dir, table) so repeated queries in a
   * bench run share one analyzed plan (the reference's layer-dedup LRU,
-  * `core.py:881`, is the analogue). Memoization stores the *plan*, not data;
-  * set `SPARK_GRAFT_PERSIST=1` to also cache the scanned data in memory.
+  * `core.py:881`, is the analogue). Memoization stores the *plan*, not data.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -41,10 +40,7 @@ object Tables {
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    cached(spark, dir, name) {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      if (sys.env.get("SPARK_GRAFT_PERSIST").contains("1")) df.persist() else df
-    }
+    cached(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
@@ -78,14 +74,13 @@ object Tables {
       // the one ts type regardless of which writer produced the corpus;
       // re-generated corpora (e.g. the scale soaks) carry ordinary
       // adjusted-to-UTC MICROS timestamps that pass through untouched.
-      val df = raw.schema("ts").dataType match {
+      raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", timestamp_micros((col("ts") / 1000).cast("long")))
         case org.apache.spark.sql.types.TimestampNTZType =>
           raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-      if (sys.env.get("SPARK_GRAFT_PERSIST").contains("1")) df.persist() else df
     }
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
@@ -119,8 +114,7 @@ object Tables {
     // 1.39 / 1.09 — the exchange wins for EVERY family member here
     // because the 1-split scan is the bottleneck either way.
     graft.core.Partitions.ensureMinParallelism(
-        lineitem(spark, dir), col("l_orderkey"),
-        spark.sessionState.conf.numShufflePartitions)
+        lineitem(spark, dir), col("l_orderkey"))
       .groupBy(col("l_orderkey").as("o_orderkey"))
       .agg(
         sort_array(collect_list(struct(

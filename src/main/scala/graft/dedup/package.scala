@@ -240,7 +240,7 @@ package object dedup {
     val sh = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh"))
         .withColumn("nsh", size(col("sh"))),
-      col("id"), df.sparkSession.sessionState.conf.numShufflePartitions)
+      col("id"))
     // join on the 64-bit hash of each shingle, not the string: the
     // inverted-index self-join probes this key sum(df^2) times (~36M at
     // sf0.1), and long compares beat variable-length string compares by
@@ -302,7 +302,7 @@ package object dedup {
     val sh = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh"))
         .withColumn("nsh", size(col("sh"))),
-      col("id"), df.sparkSession.sessionState.conf.numShufflePartitions)
+      col("id"))
     val inv0 = sh.select(col("id"), explode(col("sh")).as("gs"))
       .select(col("id"), xxhash64(col("gs")).as("g"))
     val inv =
@@ -434,7 +434,7 @@ package object dedup {
     * blocking strategy (pairs only WITHIN a block, join stays equi-keyed,
     * never all-pairs across blocks), now with the `groupCap` discipline
     * the rest of the engine's quadratic candidate generators carry
-    * (the [[graft.operators.PageRank.coOccurrenceEdges]] precedent;
+    * (the [[graft.operators.Graph.coOccurrence]] precedent;
     * r11 verdict Next #1).
     *
     * Why the cap is load-bearing at scale: a FIXED-domain blocking key
@@ -554,11 +554,10 @@ package object dedup {
   def crossContamination(train: DataFrame, eval: DataFrame,
       idCol: String, textCol: String,
       n: Int = 2, minJaccardPct: Int = 50): DataFrame = {
-    val parts = train.sparkSession.sessionState.conf.numShufflePartitions
     def prep(df: DataFrame) = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh"))
         .withColumn("nsh", size(col("sh"))),
-      col("id"), parts)
+      col("id"))
     def index(sh: DataFrame) = sh
       .select(col("id"), explode(col("sh")).as("gs"))
       .select(col("id"), xxhash64(col("gs")).as("g"))
@@ -595,10 +594,9 @@ package object dedup {
     * whole thing is three Catalyst aggregates. */
   def duplicatedShingleRatio(df: DataFrame, idCol: String, textCol: String,
       n: Int = 2, minDf: Int = 2): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val inv = graft.core.Partitions.ensureMinParallelism(
         df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh")),
-        col("id"), parts)
+        col("id"))
       .select(col("id"), explode(col("sh")).as("gs"))
       .select(col("id"), xxhash64(col("gs")).as("g"))
     // shingles are distinct within a doc, so count(*) per g IS the doc freq
@@ -632,7 +630,7 @@ package object dedup {
     val t = minJaccardPct / 100.0
     val sh = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh")),
-      col("id"), spark.sessionState.conf.numShufflePartitions)
+      col("id"))
     val inv0 = sh.select(col("id"), explode(col("sh")).as("g"))
     val dfreq = inv0.groupBy(col("g")).agg(count(lit(1)).as("df"))
     // rarest-first global order (df, g); per-doc prefix of that order
@@ -747,9 +745,7 @@ package object dedup {
     var lastSum = labels.agg(coalesce(sum(col("l")), lit(0L))).head().getLong(0)
     var i = 0
     var done = false
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!done && i < maxIter) {
-      val tRound = System.nanoTime()
       val nbr = sym.join(labels, sym("b") === labels("v"))
         .groupBy(col("a")).agg(min(col("l")).as("nl"))
       // pointer jumping: L(L(v)). Every label IS a node id (labels start
@@ -779,8 +775,6 @@ package object dedup {
         lastSum = s
       }
       i += 1
-      if (ccDebug) println(
-        f"[cc-debug] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
     }
     if (!done) throw new IllegalStateException(
       s"connectedComponents: not converged after $maxIter rounds — " +
@@ -885,8 +879,7 @@ package object dedup {
     // reasoning as minhashSignatures below): the cached first
     // materialization otherwise runs at scan parallelism — one task on
     // the one-split fixture corpora
-    val sigs = graft.core.Partitions.ensureMinParallelism(df, col(idCol),
-        df.sparkSession.sessionState.conf.numShufflePartitions)
+    val sigs = graft.core.Partitions.ensureMinParallelism(df, col(idCol))
       .select(col(idCol).as("id"), sigExpr.as("sig"))
       .cache() // reused 3x (banding + both sides of the candidate join)
     val buckets = sigs.select(col("id"),
@@ -918,8 +911,7 @@ package object dedup {
     // whole signature build runs serially (measured 0.4-0.5 s single-task
     // stages inside d_lsh_quality/d_minhash_lsh at sf0.1). No-op on any
     // real corpus (scan splits >= shuffle width).
-    graft.core.Partitions.ensureMinParallelism(df, col(idCol),
-        df.sparkSession.sessionState.conf.numShufflePartitions)
+    graft.core.Partitions.ensureMinParallelism(df, col(idCol))
       .select(col(idCol).as("id"),
         minHashSignature(wordShingles(col(textCol), n), k).as("sig"))
 

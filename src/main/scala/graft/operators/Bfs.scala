@@ -27,32 +27,21 @@ import graft.core.Broadcasts
   */
 object Bfs {
 
-  /** Exact hop distances from `seeds` within `maxHops`. Input edges are
-    * DIRECTED follow-direction (pass a symmetric list for undirected
-    * graphs — e.g. [[PageRank.coOccurrenceEdges]] output). Seed rows
+  /** Exact hop distances from the `node` column of `seeds` within
+    * `maxHops`. Edges are DIRECTED follow-direction (a symmetric graph,
+    * e.g. [[Graph.coOccurrence]], for undirected distances). Seed rows
     * not present in the graph still appear at dist 0 (they are reached
     * by definition). Returns (node, dist) for every node reachable in
     * ≤ maxHops hops; unreached nodes are absent, matching the
     * "distance table" contract rather than an all-nodes outer frame. */
-  def distances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame = {
+  def distances(g: Graph, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    traverse(pinnedEdges(edges, srcCol, dstCol),
-      seeds.select(col(seedCol).cast("long").as("node"))
+    traverse(g.edges,
+      seeds.select(col("node").cast("long").as("node"))
         .filter(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0)),
       Nil, maxHops)
   }
-
-  /** Normalized (src, dst) long, non-null edge frame, pinned: every
-    * traversal round scans it, so the blocks are materialized once. */
-  private def pinnedEdges(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint()
 
   /** The frontier-delta traversal behind [[distances]] and
     * [[perSourceDistances]]. `seed` is the hop-0 frame (`carry`..., node,
@@ -137,16 +126,12 @@ object Bfs {
     * Early exit when a round relaxes nothing: min-plus is a fixpoint,
     * later rounds are provably identity.
     *
+    * The edge cost is `w`; an edge with a null cost is never relaxed.
     * Returns (node, dist) for nodes reachable within `rounds` edges. */
-  def relaxDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      costCol: String = "w", seedCol: String = "node"): DataFrame = {
+  def relaxDistances(g: Graph, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(costCol).cast("long").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("w").isNotNull)
-      .localCheckpoint()
-    var dist = seeds.select(col(seedCol).cast("long").as("node"))
+    val e = g.edges.filter(col("w").isNotNull)
+    var dist = seeds.select(col("node").cast("long").as("node"))
       .filter(col("node").isNotNull).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint()
@@ -191,23 +176,10 @@ object Bfs {
     * discipline as [[distances]]; the anti-join and every aggregate key
     * on (root, node), so a hub node does not collapse the traversals
     * into one partition. */
-  def perSourceDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame =
-    perSource(pinnedEdges(edges, srcCol, dstCol), seeds, maxHops, seedCol)
-
-  /** [[perSourceDistances]] over an already [[pinnedEdges]] frame, so
-    * callers that need the pinned frame for OTHER jobs too
-    * (harmonicEstimate's N-count) materialize the edge list ONCE: a
-    * second normalize+checkpoint made the estimate copy the whole edge
-    * list twice, a real cost at soak scale (26M edges) and part of the
-    * measured +29% the estimate paid over its own traversals (r11
-    * verdict Next #7). */
-  private def perSource(e: DataFrame, seeds: DataFrame, maxHops: Int,
-      seedCol: String): DataFrame = {
+  def perSourceDistances(g: Graph, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    traverse(e,
-      seeds.select(col(seedCol).cast("long").as("root"))
+    traverse(g.edges,
+      seeds.select(col("node").cast("long").as("root"))
         .filter(col("root").isNotNull).distinct()
         .withColumn("node", col("root")).withColumn("dist", lit(0)),
       Seq("root"), maxHops)
@@ -219,10 +191,8 @@ object Bfs {
     * contribute 0, no ∞ bookkeeping). Reported in exact ppm integers:
     * each term is `1000000 DIV d` (engine-exact), so the sum replays
     * hash-identically. Returns (root, n_reached, harm_ppm). */
-  def harmonicCentrality(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame =
-    perSourceDistances(edges, seeds, maxHops, srcCol, dstCol, seedCol)
+  def harmonicCentrality(g: Graph, seeds: DataFrame, maxHops: Int): DataFrame =
+    perSourceDistances(g, seeds, maxHops)
       .filter(col("dist") > 0)
       .groupBy(col("root"))
       .agg(count(lit(1)).as("n_reached"),
@@ -253,19 +223,15 @@ object Bfs {
     * co-occurrence and soak graphs are; pass a symmetrized list
     * otherwise). Returns (node, n_pivots, harm_sum_ppm, est_ppm); nodes
     * no pivot reaches within maxHops are absent (their estimate is 0). */
-  def harmonicEstimate(edges: DataFrame, pivots: DataFrame, maxHops: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame = {
-    // pinned ONCE: feeds the N-count and the k traversals
-    val e = pinnedEdges(edges, srcCol, dstCol)
+  def harmonicEstimate(g: Graph, pivots: DataFrame, maxHops: Int): DataFrame = {
     // N over the SYMMETRIC edge list: src covers every node
-    val n = e.select(col("src")).distinct().count()
+    val n = g.edges.select(col("src")).distinct().count()
     // the pivot pin counts k; the pinned frame seeds the traversal
     val (p, k) = Broadcasts.pinCounted(
-      pivots.select(col(seedCol).cast("long").as("node"))
+      pivots.select(col("node").cast("long").as("node"))
         .filter(col("node").isNotNull).distinct())
     require(k > 0, "harmonicEstimate: empty pivot set")
-    perSource(e, p, maxHops, "node")
+    perSourceDistances(g, p, maxHops)
       .filter(col("dist") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("n_pivots"),

@@ -30,10 +30,8 @@ import graft.core.Broadcasts
   * 100 TB posture: per round, ONE edge-sized shuffle (the degree
   * aggregate on the symmetric edge list, map-side partials) and two
   * node-sized semi-joins back onto the edges (AQE broadcasts the
-  * survivor frame once peeling has bitten); the edge frame is
-  * localCheckpointed each round (the d_clusters flat-cost-per-round
-  * discipline — the survivor filter references it twice, which would
-  * otherwise double the lineage every round). The per-round driver
+  * survivor frame once peeling has bitten); the edge frame is read as
+  * pinned blocks every round and never rewritten. The per-round driver
   * action is ONE job, the pin of the next degree frame; the dead-node
   * count that sizes the probe and decides convergence is an observe()
   * metric of that same job ([[graft.core.Broadcasts.pinCounted]]), not
@@ -44,12 +42,12 @@ import graft.core.Broadcasts
   */
 object KCore {
 
-  /** Peel `edges` (srcCol, dstCol; orientation and duplicates ignored)
-    * to the k-core. Returns (node, deg) — every surviving node with its
+  /** Peel `g` (orientation, weights and duplicates ignored) to the
+    * k-core. Returns (node, deg) — every surviving node with its
     * degree INSIDE the core — empty when no k-core exists.
     *
-    * DELTA peeling: the symmetric edge list is checkpointed ONCE and
-    * never rewritten; each round finds the newly-dead nodes on the
+    * DELTA peeling: the symmetric edge list is pinned ONCE and never
+    * rewritten; each round finds the newly-dead nodes on the
     * node-sized degree frame, counts the edges that point at them (one
     * read of the checkpointed blocks, the only edge-sized work per
     * round), and decrements the survivors. A node dies exactly once, so
@@ -64,16 +62,14 @@ object KCore {
     * shared co-occurrence edge build + per-round job latency — the
     * graph-family profile: q_pagerank 8.6 s, q_triangles 6.5 s there).
     *
-    * `symmetricDistinct = true` asserts the input ALREADY lists both
-    * directions of every undirected edge exactly once with no loops
-    * (e.g. [[PageRank.coOccurrenceEdges]] output, symmetric-by-
-    * construction and grouped) — the canonicalization explode+distinct
-    * (a 2x-edge shuffle) is then skipped. The general path stays the
-    * default; the fuzz differential covers it and a GraphSpec test pins
-    * fast == general on a real co-occurrence graph. */
-  def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
-      dstCol: String = "dst", maxRounds: Int = 64,
-      symmetricDistinct: Boolean = false): DataFrame = {
+    * A [[Graph.symmetric]] graph already lists both directions of every
+    * undirected edge exactly once with no loops, so its pinned edges are
+    * the peel's edge list as they stand. Any other graph is first
+    * canonicalized (an explode+distinct, a 2x-edge shuffle) and that
+    * canonical list is pinned; the fuzz differential covers this path
+    * and a GraphSpec test pins it equal to the symmetric one on a real
+    * co-occurrence graph. */
+  def kCore(g: Graph, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     // canonical SYMMETRIC edge list: both directions of each undirected
@@ -81,23 +77,16 @@ object KCore {
     // the whole peel. distinct() collapses weighted multi-edges —
     // k-core is a structural property, multiplicity does not count.
     // explode-of-both-orientations keeps this ONE codegen'd pass over
-    // the (possibly computed) input instead of a self-union that would
-    // run the upstream twice.
-    val e = (if (symmetricDistinct)
-        edges.select(col(srcCol).cast("long").as("src"),
-            col(dstCol).cast("long").as("dst"))
-          .filter(col("src") =!= col("dst") &&
-            col("src").isNotNull && col("dst").isNotNull)
-      else edges.select(explode(array(
-          struct(col(srcCol).cast("long").as("src"),
-            col(dstCol).cast("long").as("dst")),
-          struct(col(dstCol).cast("long").as("src"),
-            col(srcCol).cast("long").as("dst")))).as("e"))
+    // the edge blocks instead of a self-union.
+    val e =
+      if (g.symmetric) g.edges
+      else g.edges.select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .filter(col("src") =!= col("dst") &&
-          col("src").isNotNull && col("dst").isNotNull)
-        .distinct())
-      .localCheckpoint()
+        .filter(col("src") =!= col("dst"))
+        .distinct()
+        .localCheckpoint()
     // each pin of the degree frame also counts its dead nodes (degree
     // below k) — the next round's probe size and the convergence test
     def pinDeg(d: DataFrame): (DataFrame, Long) =

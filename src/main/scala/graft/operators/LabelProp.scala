@@ -18,8 +18,8 @@ import graft.core.Broadcasts
   *   - round 0: exactly the seed assignments; every other node unlabeled
   *   - each round, every NON-SEED node adopts the label with the largest
   *     incoming edge-weight sum from currently-labeled neighbors
-  *     (src -> dst; feed symmetric edges for undirected graphs, e.g.
-  *     [[PageRank.coOccurrenceEdges]]). Ties break to the SMALLEST
+  *     (src -> dst; a symmetric graph for undirected propagation, e.g.
+  *     [[Graph.coOccurrence]]). Ties break to the SMALLEST
   *     label. A node whose labeled in-neighborhood is empty keeps its
   *     previous state (possibly unlabeled).
   *   - seeds are CLAMPED: a seed never changes, and dueling seeds
@@ -41,30 +41,20 @@ import graft.core.Broadcasts
   */
 object LabelProp {
 
-  /** Propagate `seeds` (nodeCol, labelCol) over `edges` (src, dst, w)
-    * for `iterations` synchronized rounds. Returns (node, label, is_seed)
-    * for every node labeled after the final round; still-unlabeled
-    * nodes (unreachable from any seed within `iterations` hops) are
-    * omitted. */
-  def propagate(edges: DataFrame, seeds: DataFrame, iterations: Int,
-      nodeCol: String = "node", labelCol: String = "label",
-      edgesPinned: Boolean = false): DataFrame = {
+  /** Propagate `seeds` (node, label) over `g` for `iterations`
+    * synchronized rounds. Returns (node, label, is_seed) for every node
+    * labeled after the final round; still-unlabeled nodes (unreachable
+    * from any seed within `iterations` hops) are omitted.
+    *
+    * Every round is its own eager job (the per-round label checkpoint)
+    * and reads the graph's pinned edge blocks, so no round re-runs the
+    * edge build (for q_labelprop, the co-occurrence self-join +
+    * aggregate) — ReuseExchange only shares within one job. */
+  def propagate(g: Graph, seeds: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    // pinned ONCE: every round is its own eager job (the per-round label
-    // checkpoint), so a lazy edge frame would re-run its whole upstream
-    // (for q_labelprop, the co-occurrence self-join + aggregate) once
-    // per round — ReuseExchange only shares within one job. Same
-    // flat-cost-per-round discipline as Bfs/KCore; measured at sf0.1 it
-    // takes the 3-round propagation from 3x to 1x the edge-build cost.
-    // `edgesPinned = true` skips the pin when the CALLER already
-    // localCheckpointed the edge frame (the q_modularity shape, which
-    // pins it for the scoring pass too) — the r12 unconditional pin
-    // copied those blocks a second time for nothing (verdict #5).
-    val eNorm = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-    val e = if (edgesPinned) eNorm else eNorm.localCheckpoint()
-    val seed = seeds.select(col(nodeCol).cast("long").as("node"),
-        col(labelCol).cast("long").as("label"))
+    val e = g.edges
+    val seed = seeds.select(col("node").cast("long").as("node"),
+        col("label").cast("long").as("label"))
       .groupBy(col("node")).agg(min(col("label")).as("label"))
       .localCheckpoint()
     var labels = seed.select(col("node"), col("label"),
@@ -99,8 +89,8 @@ object LabelProp {
     * that tells you whether [[propagate]]'s communities are structure
     * or noise:  Q = Σ_c [ in_c/(2m) − (tot_c/(2m))² ]  (weighted,
     * Newman 2004). Restricted to the LABELED subgraph: edges with both
-    * endpoints labeled; `edges` is the directed-symmetric convention
-    * ([[PageRank.coOccurrenceEdges]] output), so Σw IS 2m and the
+    * endpoints labeled; `g` is the directed-symmetric convention
+    * ([[Graph.coOccurrence]] output), so Σw IS 2m and the
     * per-community directed sums are exactly the 2·in / tot terms.
     *
     * Determinism: in/tot/2m are exact int64 sums; each community's
@@ -112,7 +102,7 @@ object LabelProp {
     *
     * Returns one row per community:
     * (label, n_nodes, in_w, tot_w, contrib_nano). */
-  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
+  def modularity(g: Graph, labels: DataFrame): DataFrame = {
     // the label frame is node-sized and consumed by BOTH endpoint
     // attaches: pin it once and gate the broadcast on its counted
     // byte-budget (the rank-family precedent) — above the gate the
@@ -128,10 +118,10 @@ object LabelProp {
     // two label joins per consumer (broadcast joins leave no exchange
     // for ReuseExchange to share). Same exact int64 sums, one
     // edge pass instead of three (guide §2.3/§2.4).
-    val e2 = edges
+    val e2 = g.edges
       .join(attach(lab.select(col("node").as("src"), col("label").as("lsrc"))), "src")
       .join(attach(lab.select(col("node").as("dst"), col("label").as("ldst"))), "dst")
-      .select(col("lsrc"), col("ldst"), col("w").cast("long").as("w"))
+      .select(col("lsrc"), col("ldst"), col("w"))
     val sums = e2.groupBy(col("lsrc").as("label"))
       .agg(sum(col("w")).as("tot_w"),
         sum(when(col("lsrc") === col("ldst"), col("w")).otherwise(lit(0L)))

@@ -28,7 +28,7 @@ import graft.core.Broadcasts
   *
   * Scale guard: a wedge center of degree d contributes d² candidate
   * rows — quadratic hub blowup, the same failure mode as
-  * [[PageRank.coOccurrenceEdges]]' group blowup. `hubCap > 0` excludes
+  * [[Graph.coOccurrence]]'s group blowup. `hubCap > 0` excludes
   * wedge CENTERS with deg(w) > hubCap from candidate generation (the
   * dfCap / stop-shingle discipline: a hub shared by everyone carries
   * near-zero overlap signal per pair, and RA already scores it ~0).
@@ -39,9 +39,9 @@ import graft.core.Broadcasts
 object LinkPredict {
 
   /** Top-k node pairs by neighborhood Jaccard (ties: smaller (u, v)
-    * first). Input must be a SYMMETRIC DISTINCT edge list — both
+    * first). The edges must be a SYMMETRIC DISTINCT list — both
     * directions of every undirected edge exactly once, no loops (the
-    * [[PageRank.coOccurrenceEdges]] contract), so N(u) = {dst | (u,dst)}
+    * [[Graph.coOccurrence]] contract), so N(u) = {dst | (u,dst)}
     * and deg(u) = the src-group count.
     *
     * SCALE WARNING: this is the ALL-PAIRS face — Σ_w deg(w)² wedge rows.
@@ -52,11 +52,9 @@ object LinkPredict {
     *
     * Returns (u, v, inter, uni, jac_ppm, ra_1e9) with u < v.
     */
-  def topPairs(edges: DataFrame, k: Int, hubCap: Int = 0,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+  def topPairs(g: Graph, k: Int, hubCap: Int = 0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = g.edges
     val (deg, attach) = degrees(e)
 
     // edge tagged with its dst's degree: the wedge-center key. One join
@@ -84,8 +82,8 @@ object LinkPredict {
       .limit(k) // TakeOrdered: per-partition top-k, no global sort shuffle
   }
 
-  /** Per-query link prediction: for each query node u (`queries`, one
-    * `node` column), rank candidate partners v (nodes sharing ≥ 1
+  /** Per-query link prediction: for each query node u (the `node`
+    * column of `queries`), rank candidate partners v (nodes sharing ≥ 1
     * neighbor with u) by Jaccard and keep the top `kPerQuery`.
     *
     * THIS is the graded, 100 TB-shaped face. [[topPairs]] enumerates
@@ -123,26 +121,22 @@ object LinkPredict {
     *
     * Returns (u, rank, v, inter, uni, jac_ppm, ra_1e9), rank 1-based
     * (Int) by (jac_ppm DESC, v). */
-  def topForQueries(edges: DataFrame, queries: DataFrame, kPerQuery: Int,
-      hubCap: Int = 0, srcCol: String = "src", dstCol: String = "dst",
-      queryCol: String = "node"): DataFrame =
-    rankForQueries(edges, queries, kPerQuery, hubCap, srcCol, dstCol,
-      queryCol, Broadcasts.defaultBudgetBytes)
+  def topForQueries(g: Graph, queries: DataFrame, kPerQuery: Int,
+      hubCap: Int = 0): DataFrame =
+    rankForQueries(g, queries, kPerQuery, hubCap, Broadcasts.defaultBudgetBytes)
 
   /** [[topForQueries]] with the adjacency gate's byte budget as a
     * parameter: a budget of 0 sends any non-empty adjacency down the
     * above-gate wedge path. */
-  private[graft] def rankForQueries(edges: DataFrame, queries: DataFrame,
-      kPerQuery: Int, hubCap: Int, srcCol: String, dstCol: String,
-      queryCol: String, adjBudgetBytes: Long): DataFrame = {
+  private[graft] def rankForQueries(g: Graph, queries: DataFrame,
+      kPerQuery: Int, hubCap: Int, adjBudgetBytes: Long): DataFrame = {
     require(kPerQuery >= 1, s"kPerQuery must be >= 1, got $kPerQuery")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = g.edges
     val (deg, attach) = degrees(e)
 
     // build side = the distinct query set (bounded by the query-set /
     // holdout contract), never the edge list
-    val q = queries.select(col(queryCol).cast("long").as("src")).distinct()
+    val q = queries.select(col("node").cast("long").as("src")).distinct()
     val adj0 = e.join(q.hint("shuffle_hash"), "src")
       .join(attach(deg.select(col("node").as("dst"), col("deg").as("cdeg"))), "dst")
       .select(col("dst").as("cw"), col("src").as("u"), col("cdeg"))

@@ -12,7 +12,7 @@ import graft.core.Broadcasts
   * (its export list `/root/reference/src/dask_awkward/__init__.py:1-108`
   * is array-structural); this is a Spark-native superset built the way
   * Catalyst wants iteration expressed: ONE lazy plan whose per-iteration
-  * join/aggregate subtrees all hang off the SAME pinned edge frame.
+  * join/aggregate subtrees all hang off the SAME pinned [[Graph]] edges.
   * (r12 lesson: ReuseExchange alone is NOT enough — it shares only the
   * shuffle FILES, and every operator above the reused exchange — the
   * weight aggregate, the out-weight join — re-executed per round; the
@@ -56,18 +56,12 @@ object PageRank {
   final case class RankStatics(outw: DataFrame, nodes: DataFrame,
     eo: DataFrame, nNodes: Long, nodeSide: DataFrame => DataFrame)
 
-  /** Build [[RankStatics]] for a symmetric edge list (the
-    * [[coOccurrenceEdges]] contract). `edges` should be pinned by the
-    * caller when it is a computed frame — the aggregate and attach here
-    * each scan it once. */
-  def rankStatics(edges: DataFrame): RankStatics = buildStatics(edges, symmetric = true)
-
-  /** [[rankStatics]] for any edge list. `symmetric = true` asserts every
-    * node occurs as a src (the coOccurrenceEdges contract: each in-edge
-    * has its mirror), so the node frame IS the out-weight frame's key
-    * set — the union+distinct over both endpoint columns (a second full
-    * edge pass + a 2x-edge exchange) collapses into a projection of the
-    * pinned aggregate. Identical node set by construction.
+  /** Build [[RankStatics]] for `g`. On a [[Graph.symmetric]] graph every
+    * node occurs as a src (each in-edge has its mirror), so the node
+    * frame IS the out-weight frame's key set — the union+distinct over
+    * both endpoint columns (a second full edge pass + a 2x-edge
+    * exchange) collapses into a projection of the pinned aggregate.
+    * Identical node set by construction.
     *
     * Every static frame is PINNED, for the lazy rank path too:
     * ReuseExchange only shares the shuffle FILES — everything above the
@@ -76,18 +70,17 @@ object PageRank {
     * for a computed edge frame that re-aggregation is the per-round cost
     * floor (measured at sf0.1: each of q_ppr's round stages carried
     * ~8 core-s re-running the 2.4M-entry weight aggregate it read
-    * through the reused exchange). Three pinning jobs, no count job, and
-    * every round becomes a block read. */
-  private def buildStatics(edges: DataFrame, symmetric: Boolean): RankStatics = {
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
+    * through the reused exchange). Three pinning jobs over the graph's
+    * pinned edges, no count job, and every round becomes a block read. */
+  def rankStatics(g: Graph): RankStatics = {
+    val e = g.edges
     // the out-weight aggregate is NODE-sized and feeds everything (the
     // edge attach, the node frame, the dangling probe) — one
     // aggregation instead of one per consumer
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
       .localCheckpoint()
     val (nodes, nNodes) = Broadcasts.pinCounted(
-      if (symmetric) outw.select(col("src").as("node"))
+      if (g.symmetric) outw.select(col("src").as("node"))
       else e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
     // the gate is sized for the per-round (long, long) frames (ranks,
@@ -134,84 +127,6 @@ object PageRank {
     base.join(st.nodeSide(contrib), base("node") === contrib("dst"), "left")
   }
 
-  /** Directed co-occurrence edges from a fact table: one edge (src, dst,
-    * w) per ordered pair of distinct `itemCol` values sharing a
-    * `groupCol` value, w = number of co-occurrences. Expressed as a
-    * self-equi-join on the group key (co-partitioned single shuffle per
-    * side; the pair blowup is bounded by the per-group item count, ~4-7
-    * for TPC-H orders). Symmetric by construction — every node with an
-    * in-edge has the mirror out-edge, so the graph has no dangling
-    * nodes (pageRank still handles dangling mass for arbitrary input).
-    *
-    * `groupCap` is the dfCap discipline for the quadratic pair blowup:
-    * the per-group cost is n², fine at TPC-H's 4-7 items but fatal on a
-    * power-law corpus (one 10^5-item session/basket/domain contributes
-    * 10^10 pairs and lands in ONE task). With `groupCap > 0`, groups
-    * holding more than `groupCap` item ROWS (multiplicity included — the
-    * blowup is row-driven) are DROPPED before the self-join, bounding
-    * every group's cost at groupCap². Dropped, not truncated: truncating
-    * would bias edge weights toward arbitrary row order, while a hub
-    * group so large it exceeds the cap carries near-zero signal per pair
-    * anyway (the standard stop-shingle argument). The dropped-group
-    * count is observable without an extra action via the plan-native
-    * `observe` metric `"co_occurrence_cap"` (fields `dropped_groups`,
-    * `kept_groups`) — wire a QueryExecutionListener or check
-    * `q_skewreport`/`q_joincard` beforehand to PRICE the cap: both run
-    * the same group-size aggregate this guard plans. With the default
-    * `groupCap = 0` the plan is byte-identical to the uncapped build.
-    */
-  def coOccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String,
-      groupCap: Int = 0): DataFrame = {
-    // under-parallel input guard (the d_ngram discipline): a small scan
-    // (3 parquet splits at sf0.1) would run the pair blowup + partial
-    // agg 3-wide while 29 cores idle — measured 2.3 s -> 0.4 s for that
-    // stage. A no-op whenever the scan already yields >= shuffle
-    // partitions splits (any real corpus, and the 100 TB case).
-    val in = graft.core.Partitions.ensureMinParallelism(df, col(groupCol),
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val base = in.select(col(groupCol).as("g"), col(itemCol).cast("long").as("item"))
-    val src =
-      if (groupCap <= 0) base
-      else {
-        // group sizes shuffle the same key as the self-join (map-side
-        // combined, one long per group), and the kept-keys frame joins
-        // back co-partitioned — no new shuffle key enters the plan
-        val kept = base.groupBy(col("g")).agg(count(lit(1)).as("n_items"))
-          .observe("co_occurrence_cap",
-            sum(when(col("n_items") > groupCap, 1L).otherwise(0L))
-              .as("dropped_groups"),
-            sum(when(col("n_items") <= groupCap, 1L).otherwise(0L))
-              .as("kept_groups"))
-          .filter(col("n_items") <= groupCap)
-          .select(col("g"))
-        base.join(kept, Seq("g"), "left_semi")
-      }
-    val a = src.select(col("g"), col("item").as("src"))
-    val b = src.select(col("g"), col("item").as("dst"))
-    // shuffled-hash, not sort-merge (guide §3.1): both sides are the
-    // SAME g-keyed exchange (ReuseExchange serves b from a's shuffle
-    // files), so the only thing sort-merge adds is two per-task sorts
-    // of the full input — pure overhead for a pair-generation join.
-    // The per-partition hash build is one partition of (g, item) rows,
-    // the same bytes the SMJ buffer would hold for its largest group.
-    a.join(b.hint("shuffle_hash"), "g")
-      .filter(col("src") =!= col("dst"))
-      // explicit exchange of the RAW pairs before the weight aggregate:
-      // the (src, dst) key is near-unique (w ≈ 1 for most pairs), so the
-      // default map-side partial aggregate builds an edge-sized hash map
-      // per task for essentially zero byte reduction — measured at
-      // sf0.1: 26.7 core-s in that stage (run ≫ cpu: task-memory
-      // contention from 32 concurrent ~1.7M-entry maps), vs the same
-      // bytes shuffled raw and aggregated once post-exchange (steady
-      // 1.20 → 0.94 s for the bare build; tools/CoocAb). The aggregate
-      // still runs ONCE per group after the exchange; output
-      // partitioning (hash(src, dst)) is unchanged.
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("src"), col("dst"))
-      .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-  }
-
   /** Power iteration with damping d = dampNum/dampDen (default 85/100)
     * and uniform teleport, in fixed-point integer arithmetic.
     *
@@ -220,24 +135,21 @@ object PageRank {
     *         + dampNum*(sum_{e: e.dst=n} (r(e.src) DIV outW(e.src)) * e.w
     *                    + danglingSum DIV nNodes) DIV dampDen
     *
-    * Input `edges` must have columns (src, dst, w); returns (node, pr)
-    * with pr in `scale` fixed-point units.
+    * Returns (node, pr) with pr in `scale` fixed-point units.
     *
     * PLAN-GROWTH contract (the part that decides whether deep iteration
-    * is viable): with `handleDangling = false` each round references the
-    * previous rank frame exactly ONCE, so the lazy plan grows LINEARLY
-    * in `iterations` and the whole run is one job whose repeated edges
-    * subtree is served by ReuseExchange. With dangling handling the
-    * rank frame is consumed twice per round (contribution join + the
-    * dangling-mass aggregate), which doubles the lineage every round —
-    * 2^iterations tree growth — so for deep dangling-aware runs set
-    * `stageEvery` (2-3) to rebase the lineage through
-    * [[graft.io.GraftIO.stageParquet]], the connected-components
-    * flat-cost-per-round discipline. Graphs from [[coOccurrenceEdges]]
-    * are symmetric and have NO dangling nodes by construction — pass
-    * `handleDangling = false` there (a dangling-free graph computes
-    * identical ranks on both paths; the flag only skips work, never
-    * changes the fixpoint).
+    * is viable): a [[Graph.symmetric]] graph has NO dangling nodes, so
+    * each round references the previous rank frame exactly ONCE, the
+    * lazy plan grows LINEARLY in `iterations`, and the whole run is one
+    * job whose repeated edges subtree is served by ReuseExchange. Any
+    * other graph carries the dangling mass: the rank frame is consumed
+    * twice per round (contribution join + the dangling-mass aggregate),
+    * which doubles the lineage every round — 2^iterations tree growth —
+    * so for deep runs there set `stageEvery` (2-3) to rebase the lineage
+    * through [[graft.io.GraftIO.stageParquet]], the connected-components
+    * flat-cost-per-round discipline. A dangling-free graph computes
+    * identical ranks on both paths; the symmetric path only skips work,
+    * never changes the fixpoint.
     *
     * CONVERGENCE early-exit (`tolUnits >= 0`): fixed-point integer ranks
     * make "has the iteration converged" an EXACT test — when
@@ -251,16 +163,15 @@ object PageRank {
     * and pays one node-sized self-join + 1-row max aggregate — eager
     * rounds instead of one lazy plan, so leave the default `-1`
     * (disabled, single lazy plan) when the round count is small and
-    * known. Executed round count is reported on stderr. */
-  def pageRank(edges: DataFrame, iterations: Int, scale: Long = 1000000000L,
-      dampNum: Int = 85, dampDen: Int = 100, handleDangling: Boolean = true,
+    * known. Executed round count is reported on stderr.
+    *
+    * `statics`, when given, must be [[rankStatics]] of `g`. */
+  def pageRank(g: Graph, iterations: Int, scale: Long = 1000000000L,
+      dampNum: Int = 85, dampDen: Int = 100,
       stageEvery: Int = 0, tolUnits: Long = -1L,
-      symmetric: Boolean = false,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(statics.isEmpty || symmetric,
-      "pre-built RankStatics carry the symmetric contract")
-    val st = statics.getOrElse(buildStatics(edges, symmetric))
+    val st = statics.getOrElse(rankStatics(g))
     val nodesPin = st.nodes
     // static over iterations: nodes with no out-edge (dangling); the
     // node count is the LITERAL the node pin already observed (r12
@@ -273,7 +184,7 @@ object PageRank {
 
     def round(ranks: DataFrame): DataFrame = {
       val base = withContrib(st, nodesPin, ranks)
-      if (handleDangling) {
+      if (!g.symmetric) {
         val dang = ranks.join(dangPin, "node", "left_semi")
           .agg(coalesce(sum(col("pr")), lit(0L)).as("dsum"))
         base.crossJoin(broadcast(dang))
@@ -355,23 +266,21 @@ object PageRank {
     * the product stays < 2^63 up to ~10^9-node graphs at the default
     * scale. r0 = the teleport vector (walk starts at the seeds), so
     * non-seed mass is EARNED through edges, never granted. Dangling-free
-    * graphs only (the [[coOccurrenceEdges]] contract — its symmetric
-    * output has no dangling nodes); linear lineage, one rank reference
-    * per round, ReuseExchange serves the edge subtree to every round.
+    * graphs only (a [[Graph.symmetric]] graph has no dangling nodes);
+    * linear lineage, one rank reference per round, ReuseExchange serves
+    * the edge subtree to every round. Seeds are the `node` column of
+    * `seeds`; `statics`, when given, must be [[rankStatics]] of `g`.
     *
     * Returns (node, pr) over ALL nodes; unreached nodes report pr = 0 —
     * an exact zero in integer arithmetic, not a rounding artifact. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+  def personalizedPageRank(g: Graph, seeds: DataFrame,
       iterations: Int, scale: Long = 1000000000L, dampNum: Int = 85,
-      dampDen: Int = 100, seedCol: String = "node",
-      symmetric: Boolean = false,
+      dampDen: Int = 100,
       statics: Option[RankStatics] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(statics.isEmpty || symmetric,
-      "pre-built RankStatics carry the symmetric contract")
-    val st = statics.getOrElse(buildStatics(edges, symmetric))
+    val st = statics.getOrElse(rankStatics(g))
     val nodes = st.nodes
-    val s = seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    val s = seeds.select(col("node").cast("long").as("node")).distinct()
       .join(nodes.hint("shuffle_hash"), "node", "left_semi")
     val counts = nodes.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(s.agg(count(lit(1)).as("n_seeds")))

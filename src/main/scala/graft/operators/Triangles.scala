@@ -29,19 +29,18 @@ import graft.core.Broadcasts
   */
 object Triangles {
 
-  /** Per-node triangle counts. Input edges are treated as UNDIRECTED:
-    * direction, duplicate edges, and self-loops are all normalized away
-    * (least/greatest canonicalization + distinct). Returns (node,
-    * triangles) for every node that closes at least one triangle; each
-    * triangle {u, x, y} counts once for each of its three corners.
+  /** Per-node triangle counts. Edges are treated as UNDIRECTED:
+    * direction, duplicate edges, weights and self-loops are all
+    * normalized away ([[canonical]]). Returns (node, triangles) for
+    * every node that closes at least one triangle; each triangle
+    * {u, x, y} counts once for each of its three corners.
     *
     * The orientation comparator is explicit two-column lexicographic
     * ((deg, node)) rather than an encoded single key — no overflow
     * contract to carry, and it replays verbatim in ANSI SQL.
     *
-    * Plan pick — the canonical edge count, observed on the job that
-    * pins the canonical edge set (no count job of its own), chooses how
-    * the closure runs:
+    * Plan pick — the canonical edge count (no count job of its own),
+    * chooses how the closure runs:
     *
     *  - SMALL (edge count below [[adjacencyEdgeGate]]): per-edge NEIGHBORHOOD
     *    INTERSECTION. The oriented adjacency lists (node-keyed, Σ
@@ -65,15 +64,14 @@ object Triangles {
     *
     * Both paths consume ONE u-keyed exchange of the oriented edge set,
     * so the upstream (dedup, degree agg, degree joins) runs once. */
-  def triangleCounts(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame =
-    countsWithGate(edges, srcCol, dstCol, adjacencyEdgeGate)
+  def triangleCounts(g: Graph): DataFrame =
+    countsWithGate(g, adjacencyEdgeGate)
 
   /** [[triangleCounts]] with the adjacency-path edge threshold as a
     * parameter: a threshold of 0 sends any graph down the wedge path. */
-  private[graft] def countsWithGate(edges: DataFrame, srcCol: String,
-      dstCol: String, broadcastEdgeThreshold: Long): DataFrame = {
-    val (e, m) = canonical(edges, srcCol, dstCol)
+  private[graft] def countsWithGate(g: Graph,
+      broadcastEdgeThreshold: Long): DataFrame = {
+    val (e, m) = canonical(g)
     countsFromCanonical(e, m, broadcastEdgeThreshold, degreesPinned(e))
   }
 
@@ -81,29 +79,29 @@ object Triangles {
     * adjacency lists: 5M edges ≈ 40 MiB of adjacency payload. */
   private val adjacencyEdgeGate = 5000000L
 
-  /** Canonical undirected edge set: (a < b) pairs, loops and duplicates
-    * gone, localCheckpointed (the d_clusters/sim_kmeans lineage
-    * discipline): it feeds FOUR consumers (degree agg, the orientation
-    * join's edge side, and — for a computed input like a co-occurrence
-    * frame — everything upstream would otherwise re-run per branch and
-    * once more for the plan-pick probe). Materializing it once makes
-    * every branch a narrow read of shuffle-partitioned blocks, and the
-    * pinning job observes the edge count the plan pick needs. Edge-sized
-    * and partition-parallel — the same cost any multi-pass graph
-    * algorithm pays, disk-backed at scale. */
-  private def canonical(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, Long) =
-    Broadcasts.pinCounted(edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+  /** Canonical undirected edge set (a < b pairs, loops and duplicates
+    * gone) and its size m. It feeds several consumers (degree agg, the
+    * orientation join's edge side, the plan pick), so each must read
+    * materialized blocks:
+    *  - a [[Graph.symmetric]] graph lists each undirected edge exactly
+    *    twice with no loops, so the set is the narrow `src < dst` filter
+    *    over the pinned blocks and m = nEdges / 2 — no dedup, no pin;
+    *  - any other graph is canonicalized by least/greatest + distinct
+    *    and pinned, the pinning job observing m. */
+  private def canonical(g: Graph): (DataFrame, Long) =
+    if (g.symmetric)
+      (g.edges.filter(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b")), g.nEdges / 2)
+    else Broadcasts.pinCounted(g.edges.select(
+        least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       // explicit raw exchange before the dedup aggregate — the (a, b)
-      // key is near-unique (each undirected edge arrives exactly twice
-      // from a symmetric input), so the map-side partial distinct
-      // builds an edge-sized hash map per task for a 2:1 reduction at
-      // best; same pathology and fix as coOccurrenceEdges' weight
-      // aggregate (see its scaladoc; measured there)
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
+      // key is near-unique, so the map-side partial distinct builds an
+      // edge-sized hash map per task for a 2:1 reduction at best; same
+      // pathology and fix as Graph.coOccurrence's weight aggregate (see
+      // the comment there; measured there)
+      .repartition(g.edges.sparkSession.sessionState.conf.numShufflePartitions,
         col("a"), col("b"))
       .distinct())
 
@@ -201,9 +199,8 @@ object Triangles {
 
   /** Global triangle count — one row (n_triangles). Same plan minus the
     * corner explode; each triangle counts exactly once. */
-  def triangleCount(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame =
-    triangleCounts(edges, srcCol, dstCol)
+  def triangleCount(g: Graph): DataFrame =
+    triangleCounts(g)
       .agg((sum(col("triangles")) / 3).cast("long").as("n_triangles"))
 
   /** DOULION-style edge-sampled global triangle estimate (Tsourakakis
@@ -235,18 +232,16 @@ object Triangles {
     * xxhash64 is not SQL-replayable, so the oracle replays the
     * degree-ordered closure over the DUMPED sample instead). Must stay
     * expression-identical to the filter inside triangleCountApprox. */
-  def sampledCanonicalEdges(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", pPpm: Long = 200000L): DataFrame =
-    canonical(edges, srcCol, dstCol)._1.filter(
+  def sampledCanonicalEdges(g: Graph, pPpm: Long = 200000L): DataFrame =
+    canonical(g)._1.filter(
       pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm))
 
-  def triangleCountApprox(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", pPpm: Long = 200000L): DataFrame = {
+  def triangleCountApprox(g: Graph, pPpm: Long = 200000L): DataFrame = {
     require(pPpm > 0 && pPpm <= 1000000L, s"pPpm in (0, 1e6]: $pPpm")
-    val (e, m) = canonical(edges, srcCol, dstCol)
-    // sampled edge set re-checkpointed, its size observed on the same
-    // job: it feeds the degree aggregate, both orientation joins and
-    // the plan pick (same reasoning as canonical()); sampling by hash of
+    val (e, m) = canonical(g)
+    // sampled edge set pinned, its size observed on the same job: it
+    // feeds the degree aggregate, both orientation joins and the plan
+    // pick (same reasoning as canonical()); sampling by hash of
     // the CANONICAL pair keeps the decision direction-independent
     val (samp, ms) = Broadcasts.pinCounted(e.filter(
       pmod(xxhash64(col("a"), col("b")), lit(1000000L)) < lit(pPpm)))
@@ -284,14 +279,13 @@ object Triangles {
     * product). Nodes with >= 2 neighbors and zero triangles report 0;
     * degree-0/1 nodes have no defined coefficient and are omitted.
     *
-    * Plan: the [[triangleCounts]] core over ONE canonical edge pass
-    * (the checkpointed edge set serves both the triangle machinery and
-    * the degree frame — no second canonicalization), then a node-keyed
-    * left join of the degree frame against the triangle counts.
+    * Plan: the [[triangleCounts]] core over ONE canonical edge set
+    * (it serves both the triangle machinery and the degree frame — no
+    * second canonicalization), then a node-keyed left join of the
+    * degree frame against the triangle counts.
     * Returns (node, deg, triangles, cc_q). */
-  def clusteringCoefficient(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
-    val (e, m) = canonical(edges, srcCol, dstCol)
+  def clusteringCoefficient(g: Graph): DataFrame = {
+    val (e, m) = canonical(g)
     // ONE pinned degree frame feeds the orientation attaches AND the
     // coefficient join (the old spelling aggregated degrees twice —
     // sharing was left to ReuseExchange, which re-runs everything above

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.Graph
 
 /** Relational query wave: scans, filtered aggregation, joins (broadcast /
   * shuffle / semi / anti), window functions, rollup, distinct aggregation,
@@ -30,6 +31,11 @@ object Relational {
   private[graft] val gradedHops = Seq(bfsHops, harmonicHops, harmonicApproxHops)
 
   private def ts(s: String) = lit(s).cast("timestamp")
+
+  /** The part co-occurrence graph every graph query runs on: built and
+    * pinned once per query. */
+  private def partGraph(s: SparkSession, dir: String): Graph =
+    Graph.coOccurrence(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
 
   val queries: Map[String, Q] = Map(
     "q1_agg" -> { (s, dir) =>
@@ -315,13 +321,10 @@ object Relational {
     },
     "q_pagerank" -> { (s, dir) =>
       import graft.operators.PageRank
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      // co-occurrence graphs are symmetric => dangling-free; the false
-      // flag keeps the 6-round lineage LINEAR (one rank reference per
-      // round) — same fixpoint, and the oracle's dsum term is 0
-      PageRank.pageRank(edges, iterations = 6, handleDangling = false,
-        symmetric = true)
+      // co-occurrence graphs are symmetric => dangling-free, so the
+      // 6-round lineage stays LINEAR (one rank reference per round) —
+      // same fixpoint, and the oracle's dsum term is 0
+      PageRank.pageRank(partGraph(s, dir), iterations = 6)
     },
     // the CONVERGENCE-CHECKED pageRank face (tolUnits = 0): eager rounds
     // with the exact integer fixpoint test, stopping early once
@@ -332,29 +335,20 @@ object Relational {
     // bit-identical to the 6-round oracle.
     "q_pagerank_conv" -> { (s, dir) =>
       import graft.operators.PageRank
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      PageRank.pageRank(edges, iterations = 6, handleDangling = false,
-        tolUnits = 0L, symmetric = true)
+      PageRank.pageRank(partGraph(s, dir), iterations = 6, tolUnits = 0L)
     },
     // per-node triangle counts over the same part co-occurrence graph —
     // degree-ordered wedge closure, so the O(m^1.5) bound (not hub-key
     // quadratics) governs the self-join even under skew
     "q_triangles" -> { (s, dir) =>
-      import graft.operators.{PageRank, Triangles}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      Triangles.triangleCounts(edges)
+      graft.operators.Triangles.triangleCounts(partGraph(s, dir))
     },
     // per-node local clustering coefficient over the same graph, in
     // exact micro units (int64 floor division — the q_pagerank
     // fixed-point convention); deg >= 2 nodes only, zero-triangle
     // nodes report cc_q = 0
     "q_clustcoef" -> { (s, dir) =>
-      import graft.operators.{PageRank, Triangles}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      Triangles.clusteringCoefficient(edges)
+      graft.operators.Triangles.clusteringCoefficient(partGraph(s, dir))
     },
     // seed-clamped label propagation (graft.operators.LabelProp): every
     // 20th part seeds its partkey-mod-5 class; three synchronized
@@ -362,15 +356,14 @@ object Relational {
     // graph. Integer weight sums + (sum DESC, label ASC) argmax — the
     // whole run replays as unrolled SQL rounds
     "q_labelprop" -> { (s, dir) =>
-      import graft.operators.{LabelProp, PageRank}
-      val li = Tables.lineitem(s, dir)
-      val edges = PageRank.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-      val seeds = li.select(col("l_partkey").as("node")).distinct()
+      import graft.operators.LabelProp
+      val seeds = Tables.lineitem(s, dir).select(col("l_partkey").as("node"))
+        .distinct()
         .filter(col("node") % 20 === 0)
         // (node DIV 20) % 5: node % 5 would be 0 for EVERY %20 seed —
         // a single-label (vacuous) propagation, caught by q_modularity
         .withColumn("label", expr("(node DIV 20) % 5"))
-      LabelProp.propagate(edges, seeds, 3)
+      LabelProp.propagate(partGraph(s, dir), seeds, 3)
         .select(col("node"), col("label"),
           col("is_seed").cast("int").as("is_seed"))
     },
@@ -381,15 +374,13 @@ object Relational {
     // structure or noise, graded end to end on top of the same
     // 3-round propagation replay
     "q_modularity" -> { (s, dir) =>
-      import graft.operators.{LabelProp, PageRank}
-      val li = Tables.lineitem(s, dir)
-      val edges = PageRank.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-        .localCheckpoint() // feeds both propagation and scoring (q_ppr finding)
-      val seeds = li.select(col("l_partkey").as("node")).distinct()
+      import graft.operators.LabelProp
+      val g = partGraph(s, dir) // feeds both propagation and scoring
+      val seeds = Tables.lineitem(s, dir).select(col("l_partkey").as("node"))
+        .distinct()
         .filter(col("node") % 20 === 0)
         .withColumn("label", expr("(node DIV 20) % 5"))
-      LabelProp.modularity(edges,
-        LabelProp.propagate(edges, seeds, 3, edgesPinned = true))
+      LabelProp.modularity(g, LabelProp.propagate(g, seeds, 3))
     },
     // k-core (graft.operators.KCore): peel the part co-occurrence graph
     // to its 80-core — k sits inside the degree distribution, so the
@@ -398,12 +389,7 @@ object Relational {
     // order and peeling is idempotent at the fixpoint, so the oracle's
     // fixed 10-round unroll is exact for any convergence depth <= 10
     "q_kcore" -> { (s, dir) =>
-      import graft.operators.{KCore, PageRank}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      // coOccurrenceEdges is symmetric + grouped-distinct by
-      // construction: skip kCore's canonicalization shuffle
-      KCore.kCore(edges, 80, symmetricDistinct = true)
+      graft.operators.KCore.kCore(partGraph(s, dir), 80)
     },
     // link prediction over the same co-occurrence graph
     // (graft.operators.LinkPredict.topForQueries): per-query top-5
@@ -418,12 +404,10 @@ object Relational {
     // top-5 partials per query shuffle; above it, a center-keyed wedge
     // join feeds the same ranking
     "q_linkpred" -> { (s, dir) =>
-      import graft.operators.{LinkPredict, PageRank}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val queries = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val queries = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 199 === 0)
-      LinkPredict.topForQueries(edges, queries, kPerQuery = 5)
+      graft.operators.LinkPredict.topForQueries(g, queries, kPerQuery = 5)
     },
     // link-prediction QUALITY gate (the q_labelprop lesson: a replay
     // oracle validates the computation, not the configuration): hold out
@@ -443,16 +427,15 @@ object Relational {
     // the pairs aggregate in the far endpoint's task and per-query
     // bounded heaps rank them
     "q_linkpred_prec" -> { (s, dir) =>
-      import graft.operators.{LinkPredict, PageRank}
-      val all = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
+      val all = partGraph(s, dir)
       val hold = expr("pmod(least(src, dst) * 31 + greatest(src, dst), 13) = 0")
       val train = all.filter(!hold)
-      val test = all.filter(hold && col("src") < col("dst"))
+      val test = all.edges.filter(hold && col("src") < col("dst"))
         .select(col("src").as("hu"), col("dst").as("hv"))
       val queries = test.select(col("hu").as("node")).distinct()
         .filter(col("node") % 7 === 0)
-      val preds = LinkPredict.topForQueries(train, queries, kPerQuery = 10)
+      val preds = graft.operators.LinkPredict.topForQueries(train, queries,
+          kPerQuery = 10)
         .select(col("u"), col("v"),
           least(col("u"), col("v")).as("hu"),
           greatest(col("u"), col("v")).as("hv"))
@@ -469,14 +452,10 @@ object Relational {
     // fixed 4-round min-unroll is exact whether or not the frontier
     // empties early
     "q_bfs" -> { (s, dir) =>
-      import graft.operators.{Bfs, PageRank}
-      // edge build checkpointed: the seed subtree would otherwise pay
-      // the co-occurrence self-join a second time (the q_ppr finding)
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 97 === 0)
-      Bfs.distances(edges, seeds, maxHops = bfsHops)
+      graft.operators.Bfs.distances(g, seeds, maxHops = bfsHops)
     },
     // harmonic centrality of a sampled root set via per-source BFS
     // (graft.operators.Bfs.harmonicCentrality): 3-hop neighborhoods,
@@ -484,12 +463,10 @@ object Relational {
     // seed-set contract); the replay is the q_bfs min-unroll carrying
     // the root key
     "q_harmonic" -> { (s, dir) =>
-      import graft.operators.{Bfs, PageRank}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 997 === 0)
-      Bfs.harmonicCentrality(edges, seeds, maxHops = harmonicHops)
+      graft.operators.Bfs.harmonicCentrality(g, seeds, maxHops = harmonicHops)
     },
     // pivot-sampled harmonic estimate for EVERY node (the approximate
     // face for the all-nodes question exact per-root BFS cannot answer
@@ -499,12 +476,11 @@ object Relational {
     // ESTIMATE (not the arithmetic) is pinned in GraphSpec against the
     // exact all-roots answer
     "q_harmonic_approx" -> { (s, dir) =>
-      import graft.operators.{Bfs, PageRank}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val pivots = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val pivots = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 499 === 0)
-      Bfs.harmonicEstimate(edges, pivots, maxHops = harmonicApproxHops)
+      graft.operators.Bfs.harmonicEstimate(g, pivots,
+        maxHops = harmonicApproxHops)
     },
     // DOULION edge-sampled triangle estimate (p = 0.2 via deterministic
     // xxhash64 on the canonical pair): exact tri count on the sampled
@@ -513,29 +489,18 @@ object Relational {
     // (aux_tri_edges — the aux_minhash_sigs precedent); estimator
     // accuracy vs the exact count is pinned in GraphSpec
     "q_triangles_approx" -> { (s, dir) =>
-      import graft.operators.{PageRank, Triangles}
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      Triangles.triangleCountApprox(edges, pPpm = 200000L)
+      graft.operators.Triangles.triangleCountApprox(partGraph(s, dir),
+        pPpm = 200000L)
     },
     // personalized PageRank (random walk with restart): teleport mass
     // restricted to the node%101==0 seed set, 6 fixed-point rounds,
     // full unrolled DuckDB replay like q_pagerank. Ranks measure
     // proximity to the seeds — the recommendation face
     "q_ppr" -> { (s, dir) =>
-      import graft.operators.PageRank
-      // checkpoint the edge build: it feeds BOTH the seed derivation and
-      // the rank rounds, and the teleport materialization inside
-      // personalizedPageRank would otherwise pay the co-occurrence
-      // self-join twice (once per consumer job — ReuseExchange only
-      // shares subtrees within one job). Eager-at-build is the k-core/
-      // bisection precedent (measured 12.9 -> 7.4 s)
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 101 === 0)
-      PageRank.personalizedPageRank(edges, seeds, iterations = 6,
-        symmetric = true)
+      graft.operators.PageRank.personalizedPageRank(g, seeds, iterations = 6)
     },
     // PPR QUALITY gate: personalization must CONCENTRATE rank mass on
     // the seed set far beyond what uniform PageRank gives the same
@@ -547,9 +512,8 @@ object Relational {
     // GraphSpec.
     "q_ppr_quality" -> { (s, dir) =>
       import graft.operators.PageRank
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 101 === 0)
       def seedShare(ranks: org.apache.spark.sql.DataFrame, out: String) =
         ranks.join(seeds.withColumn("is_seed", lit(1)), Seq("node"), "left")
@@ -562,14 +526,13 @@ object Relational {
       // out-weight aggregate, the gate count and the edge-sized
       // out-weight attach are identical for PPR and uniform PR — the
       // query used to pay each twice.
-      val statics = Some(PageRank.rankStatics(edges))
+      val statics = Some(PageRank.rankStatics(g))
       val ppr = seedShare(
-        PageRank.personalizedPageRank(edges, seeds, iterations = 6,
-        symmetric = true, statics = statics),
+        PageRank.personalizedPageRank(g, seeds, iterations = 6,
+          statics = statics),
         "ppr_seed_ppm")
       val pr = seedShare(
-        PageRank.pageRank(edges, iterations = 6, handleDangling = false,
-        symmetric = true, statics = statics),
+        PageRank.pageRank(g, iterations = 6, statics = statics),
         "pr_seed_ppm")
       ppr.select(col("ns").as("n_seeds"), col("ppr_seed_ppm"))
         .crossJoin(pr.select(col("pr_seed_ppm")))
@@ -579,14 +542,11 @@ object Relational {
     // hop): exact min-plus distances over paths of <= 3 edges from the
     // node%97==0 seed set; integer costs replay as a 3-round min-unroll
     "q_sssp" -> { (s, dir) =>
-      import graft.operators.{Bfs, PageRank}
-      val edges = PageRank.coOccurrenceEdges(
-          Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-        .select(col("src"), col("dst"), expr("1000000 DIV w").as("w"))
-        .localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = Graph(partGraph(s, dir).edges
+        .select(col("src"), col("dst"), expr("1000000 DIV w").as("w")))
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 97 === 0)
-      Bfs.relaxDistances(edges, seeds, rounds = 3)
+      graft.operators.Bfs.relaxDistances(g, seeds, rounds = 3)
     })
 
   /** Auxiliary dumps grounding structural replays (Verify writes them
@@ -622,26 +582,17 @@ object Relational {
         expr("CAST(round(l_quantity * 100) AS BIGINT)"), 1024)
     },
     "aux_tri_edges" -> { (s, dir) =>
-      graft.operators.Triangles.sampledCanonicalEdges(
-        graft.operators.PageRank.coOccurrenceEdges(
-          Tables.lineitem(s, dir), "l_orderkey", "l_partkey"),
+      graft.operators.Triangles.sampledCanonicalEdges(partGraph(s, dir),
         pPpm = 200000L)
     },
     "aux_ppr_ranks" -> { (s, dir) =>
-      import graft.operators.PageRank
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").localCheckpoint()
-      val seeds = edges.select(col("src").as("node"))
+      val g = partGraph(s, dir)
+      val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 101 === 0)
-      PageRank.personalizedPageRank(edges, seeds, iterations = 6,
-        symmetric = true)
+      graft.operators.PageRank.personalizedPageRank(g, seeds, iterations = 6)
     },
     "aux_prw_ranks" -> { (s, dir) =>
-      import graft.operators.PageRank
-      val edges = PageRank.coOccurrenceEdges(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
-      PageRank.pageRank(edges, iterations = 6, handleDangling = false,
-        symmetric = true)
+      graft.operators.PageRank.pageRank(partGraph(s, dir), iterations = 6)
     })
 
   private def pagerankOracle(iters: Int): String = {
@@ -735,7 +686,7 @@ object Relational {
     "q_modularity" -> modularityOracle(3),
     "q_kcore" -> kcoreOracle(80, 10),
     // wedge-join replay over the query set: common-neighbor counts + RA
-    // over the DISTINCT directed edge list (coOccurrenceEdges is
+    // over the DISTINCT directed edge list (Graph.coOccurrence is
     // grouped-distinct, weight ignored); // is BIGINT floor division =
     // Spark's DIV on positives; per-query rank replays the window
     "q_linkpred" ->

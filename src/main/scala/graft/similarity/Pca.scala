@@ -33,15 +33,14 @@ object Pca {
     require(qBits >= 1 && qBits <= 24, s"bad qBits=$qBits")
     val scale = lit((1L << qBits).toDouble)
     val qa = transform(col(vecCol), x => floor(x.cast("double") * scale).cast("long"))
-    // under-parallel input guard (the d_ngram/coOccurrenceEdges
+    // under-parallel input guard (the d_ngram/Graph.coOccurrence
     // discipline): the d(d+3)/2-way explode below multiplies each input
     // row ~2000x, so a small scan (embeddings is ONE parquet split at
     // the fixture scales) would run the whole explode + partial
     // aggregate serially while the other cores idle (measured at
     // sf0.1: the single stage was 2.0 s one-task). A no-op whenever
     // the scan already yields enough splits — any real corpus.
-    val in = graft.core.Partitions.ensureMinParallelism(df, col(vecCol),
-      df.sparkSession.sessionState.conf.numShufflePartitions)
+    val in = graft.core.Partitions.ensureMinParallelism(df, col(vecCol))
     val base = in.select(qa.as("qa")).filter(col("qa").isNotNull)
     val firsts = transform(col("qa"), (x, i) =>
       struct(i.cast("int").as("i"), lit(-1).cast("int").as("j"), x.as("v")))

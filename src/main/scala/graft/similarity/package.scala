@@ -57,7 +57,7 @@ package object similarity {
   /** Exact top-k neighbors for each query row. `queries`/`corpus` need
     * (idCol, vecCol); self-matches (equal ids) are excluded.
     *
-    * Top-k per query runs through the bounded [[TopKScoredIds]] aggregator,
+    * Top-k per query runs through the bounded-heap [[topKPerKey]],
     * not a row_number window: the corpus-side scoring stays map-side (the
     * query set is broadcast) and the shuffle carries at most k candidates
     * per (query, partition) instead of every scored pair. */
@@ -75,10 +75,10 @@ package object similarity {
     * LSH searches. Emits (key, rank, id, score).
     *
     * Runs on the native bounded-heap aggregate ([[graft.operators.GroupTopK]]
-    * over struct(-score, id): lexicographic ascending = score desc, id asc)
-    * rather than the typed [[TopKScoredIds]] Aggregator — same bounded
-    * shuffle contract, but no per-row encoder serialization on the hot
-    * scoring path. DedupSimilaritySpec pins the two implementations equal. */
+    * over struct(-score, id): lexicographic ascending = score desc, id asc):
+    * at most k candidates per (key, partition) cross the shuffle, with no
+    * per-row encoder serialization on the hot scoring path.
+    * DedupSimilaritySpec pins it equal to a typed Aggregator witness. */
   private[graft] def topKPerKey(scored: DataFrame, keyCol: String,
       scoreCol: String, idCol: String, k: Int): DataFrame =
     scored.groupBy(col(keyCol))
@@ -230,9 +230,8 @@ package object similarity {
       else seedCentroids(v, nc)
     // corpus side: each vector scored against every centroid (N x nCells
     // map-side rows — with sqrt sizing this is the N^1.5 assignment term).
-    // Zero-norm vectors/centroids yield a null cosine, which the typed
-    // TopKScoredIds aggregator (non-nullable Double) rejects — drop them
-    // like the other search paths do.
+    // Zero-norm vectors/centroids yield a null cosine — drop them like
+    // the other search paths do.
     val assigned = v.join(broadcast(centroids))
       .select(col("id"), col("vec"), col("cid"),
         cosine(col("vec"), col("cvec")).as("sim"))

@@ -613,11 +613,10 @@ package object text {
   def dedupSentences(df: DataFrame, idCol: String, textCol: String,
       minOcc: Int = 2): DataFrame = {
     require(minOcc >= 2, s"bad minOcc=$minOcc")
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val sents = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), posexplode(sentences(col(textCol))))
         .select(col("id"), (col("pos") + 1).as("sp"), col("col").as("sent")),
-      col("id"), parts)
+      col("id"))
     val occ = sents.groupBy(col("sent"))
       .agg(count(lit(1)).as("occ"),
         min(struct(col("id"), col("sp"))).as("first"))
@@ -728,13 +727,12 @@ package object text {
   def dedupSpans(df: DataFrame, idCol: String, textCol: String,
       w: Int, minOcc: Int = 2, hashKeys: Boolean = false): DataFrame = {
     require(w > 0 && minOcc >= 2, s"bad w=$w minOcc=$minOcc")
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     // span MATCHING is case-insensitive (lowercased window keys), but the
     // survivor text rebuilds from the ORIGINAL tokens — silently
     // case-folding every untouched document would corrupt the corpus
     val toks = graft.core.Partitions.ensureMinParallelism(
       df.select(col(idCol).as("id"), wsTokens(col(textCol)).as("tok")),
-      col("id"), parts)
+      col("id"))
     // (id, s, g): window starting at 1-based token position s
     val lowered = transform(col("tok"), t => lower(t))
     val rawGram = col("col")

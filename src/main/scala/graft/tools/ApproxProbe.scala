@@ -10,10 +10,9 @@ object ApproxProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = graft.core.SessionConfigs.local(8)
-    import graft.operators.{Bfs, PageRank, Triangles}
-    val edges = PageRank.coOccurrenceEdges(
+    import graft.operators.{Bfs, Graph, Triangles}
+    val g = Graph.coOccurrence(
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
-      .localCheckpoint()
 
     def timed[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
@@ -21,20 +20,20 @@ object ApproxProbe {
     }
 
     val exact = timed("exact tri") {
-      Triangles.triangleCount(edges).collect()(0).getLong(0) }
+      Triangles.triangleCount(g).collect()(0).getLong(0) }
     for (p <- Seq(100000L, 200000L, 300000L)) {
       val r = timed(s"approx tri p=$p") {
-        Triangles.triangleCountApprox(edges, pPpm = p).collect()(0) }
+        Triangles.triangleCountApprox(g, pPpm = p).collect()(0) }
       val est = r.getLong(3)
       println(f"[probe] tri exact=$exact est=$est relerr=${
         math.abs(est - exact).toDouble / exact}%.4f sampled=${r.getLong(1)}/${r.getLong(0)}")
     }
 
     // exact truncated harmonic for ALL nodes (feasible at small sf)
-    val nodes = edges.select(col("src").as("node")).distinct()
+    val nodes = g.edges.select(col("src").as("node")).distinct()
     val nN = nodes.count()
     val exactH = timed("exact all-roots harmonic") {
-      Bfs.harmonicCentrality(edges, nodes, maxHops = 3)
+      Bfs.harmonicCentrality(g, nodes, maxHops = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap }
     val mods = if (args.length > 1) args(1).split(",").map(_.toLong).toSeq
       else Seq(499L, 199L)
@@ -42,7 +41,7 @@ object ApproxProbe {
       val piv = nodes.filter(col("node") % mod === 0)
       val k = piv.count()
       val est = timed(s"pivot harmonic mod=$mod k=$k") {
-        Bfs.harmonicEstimate(edges, piv, maxHops = 3)
+        Bfs.harmonicEstimate(g, piv, maxHops = 3)
           .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap }
       // exact H(v) = sum over ALL roots u of 1/d(u,v) — compare per node
       val joined = exactH.keys.toSeq.map(n => (exactH(n), est.getOrElse(n, 0L)))

@@ -18,7 +18,7 @@ object CoocAb {
       .select(col("l_orderkey").as("g"), col("l_partkey").cast("long").as("item"))
 
     def current(): DataFrame = {
-      val src = graft.core.Partitions.ensureMinParallelism(base(), col("g"), n)
+      val src = graft.core.Partitions.ensureMinParallelism(base(), col("g"))
       val a = src.select(col("g"), col("item").as("src"))
       val b = src.select(col("g"), col("item").as("dst"))
       a.join(b.hint("shuffle_hash"), "g")
@@ -26,7 +26,7 @@ object CoocAb {
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
     }
     def repartFirst(): DataFrame = {
-      val src = graft.core.Partitions.ensureMinParallelism(base(), col("g"), n)
+      val src = graft.core.Partitions.ensureMinParallelism(base(), col("g"))
       val a = src.select(col("g"), col("item").as("src"))
       val b = src.select(col("g"), col("item").as("dst"))
       a.join(b.hint("shuffle_hash"), "g")

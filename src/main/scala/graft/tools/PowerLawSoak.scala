@@ -120,7 +120,7 @@ object PowerLawSoak {
     def want(tag: String): Boolean = only.forall(_.contains(tag))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.SessionConfigs.local(cpus)
-    import graft.operators.{Bfs, KCore, LabelProp, LinkPredict, PageRank, Triangles}
+    import graft.operators.{Bfs, Graph, KCore, LabelProp, LinkPredict, PageRank, Triangles}
 
     // observe-metric capture (the graded drop-count channel)
     @volatile var observed: Map[String, Any] = Map.empty
@@ -160,13 +160,12 @@ object PowerLawSoak {
       s"groupsOverCap=${sizes.getLong(2)} uncappedPairs=$price")
 
     // capped edge build: MEASURED, with task-row/task-time distributions
-    val (edges, capStats) = withTaskStats(spark) {
-      timed(s"capped edge build (cap=$cap)") {
-        PageRank.coOccurrenceEdges(items, "g", "item", groupCap = cap)
-          .localCheckpoint()
-      }
+    def build(groupCap: Int) = Graph.coOccurrence(items, "g", "item", groupCap)
+    val (g, capStats) = withTaskStats(spark) {
+      timed(s"capped edge build (cap=$cap)")(build(cap))
     }
-    val nEdges = edges.count()
+    val edges = g.edges
+    val nEdges = g.nEdges
     val (rMax, rMed, rRatio) = straggler(capStats.rowsSeq)
     val (tMax, tMed, tRatio) = straggler(capStats.msSeq)
     println(s"[plsoak] capped: edges=$nEdges observe=$observed " +
@@ -177,10 +176,7 @@ object PowerLawSoak {
     // otherwise record the price (that refusal IS the measurement)
     if (price <= 400000000L) {
       val (_, unStats) = withTaskStats(spark) {
-        timed("UNCAPPED edge build") {
-          val e = PageRank.coOccurrenceEdges(items, "g", "item")
-          e.write.format("noop").mode("overwrite").save(); e
-        }
+        timed("UNCAPPED edge build")(build(0))
       }
       val (_, _, urRatio) = straggler(unStats.rowsSeq)
       val (utMax, utMed, utRatio) = straggler(unStats.msSeq)
@@ -193,15 +189,15 @@ object PowerLawSoak {
 
     // the full graph family on the capped edges
     if (want("pagerank")) timed("pageRank(6)") {
-      PageRank.pageRank(edges, 6, handleDangling = false)
+      PageRank.pageRank(g, 6)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("pagerank_conv")) timed("pageRank conv (tolUnits=0)") {
-      PageRank.pageRank(edges, 6, handleDangling = false, tolUnits = 0L)
+      PageRank.pageRank(g, 6, tolUnits = 0L)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("triangles")) timed("triangles") {
-      Triangles.triangleCounts(edges)
+      Triangles.triangleCounts(g)
         .write.format("noop").mode("overwrite").save()
     }
     // approximate faces (r10 ask #2): same graph, the operators that
@@ -210,63 +206,63 @@ object PowerLawSoak {
     // harmonic estimate (k traversals instead of |V|)
     if (want("tri_exact_count")) timed("triangleCount (exact global)") {
       println(s"[plsoak] tri exact global = " +
-        s"${Triangles.triangleCount(edges).head().getLong(0)}")
+        s"${Triangles.triangleCount(g).head().getLong(0)}")
     }
     if (want("tri_approx")) timed("triangleCountApprox p=0.2") {
-      val r = Triangles.triangleCountApprox(edges, pPpm = 200000L).head()
+      val r = Triangles.triangleCountApprox(g, pPpm = 200000L).head()
       println(s"[plsoak] tri approx: sampled=${r.getLong(1)}/${r.getLong(0)} " +
         s"tri_sampled=${r.getLong(2)} est=${r.getLong(3)}")
     }
     if (want("harm_est")) timed("harmonicEstimate (pivots %199)") {
       val piv = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 199 === 0)
-      Bfs.harmonicEstimate(edges, piv, maxHops = 3)
+      Bfs.harmonicEstimate(g, piv, maxHops = 3)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("clustcoef")) timed("clusteringCoefficient") {
-      Triangles.clusteringCoefficient(edges)
+      Triangles.clusteringCoefficient(g)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("labelprop")) timed("labelProp(3)") {
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 20 === 0)
         .select(col("node"), (col("node") % 5).as("label"))
-      LabelProp.propagate(edges, seeds, 3)
+      LabelProp.propagate(g, seeds, 3)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("kcore")) timed("kCore(3)") {
-      KCore.kCore(edges, 3).write.format("noop").mode("overwrite").save()
+      KCore.kCore(g, 3).write.format("noop").mode("overwrite").save()
     }
     if (want("bfs")) timed("bfs(4 hops)") {
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 97 === 0)
-      Bfs.distances(edges, seeds, maxHops = 4)
+      Bfs.distances(g, seeds, maxHops = 4)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("sssp")) timed("sssp(3 rounds)") {
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 97 === 0)
       Bfs.relaxDistances(
-        edges.select(col("src"), col("dst"),
-          expr("1000000 DIV w").as("w")), seeds, 3)
+        Graph(edges.select(col("src"), col("dst"),
+          expr("1000000 DIV w").as("w"))), seeds, 3)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("ppr")) timed("personalizedPageRank(6)") {
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 101 === 0)
-      PageRank.personalizedPageRank(edges, seeds, 6)
+      PageRank.personalizedPageRank(g, seeds, 6)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("harmonic")) timed("harmonicCentrality(3)") {
       val seeds = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 199 === 0)
-      Bfs.harmonicCentrality(edges, seeds, maxHops = 3)
+      Bfs.harmonicCentrality(g, seeds, maxHops = 3)
         .write.format("noop").mode("overwrite").save()
     }
     if (want("linkpred")) timed("linkPredict.topForQueries") {
       val qs = edges.select(col("src").as("node")).distinct()
         .filter(col("node") % 199 === 0)
-      LinkPredict.topForQueries(edges, qs, kPerQuery = 5)
+      LinkPredict.topForQueries(g, qs, kPerQuery = 5)
         .write.format("noop").mode("overwrite").save()
     }
     spark.stop()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * The columns must pin every expression declared in graft.functions, so
   * a kernel added without a pin fails here.
   */
-class CodegenPinSpec extends SparkSuite {
+class CodegenPinSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
   import graft.functions._
 

@@ -7,7 +7,7 @@ import graft.similarity._
 /** Quality checks for the approximate operators that the DuckDB oracle
   * cannot cover: MinHash-LSH recall against exact Jaccard pairs, and
   * hyperplane-LSH agreement with brute-force cosine top-k. */
-class DedupSimilaritySpec extends SparkSuite {
+class DedupSimilaritySpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
@@ -276,7 +276,7 @@ class DedupSimilaritySpec extends SparkSuite {
     }
     val df = rows.toDF("qid", "cos", "nid")
     val typed = df.groupBy($"qid")
-      .agg(graft.similarity.TopKAgg.topKScoredIds($"cos", $"nid", 7).as("top"))
+      .agg(graft.TopKAgg.topKScoredIds($"cos", $"nid", 7).as("top"))
       .select($"qid", posexplode($"top").as(Seq("pos", "sc")))
       .select($"qid", $"pos", $"sc._1".as("cos"), $"sc._2".as("nid"))
       .as[(Long, Int, Double, Long)].collect().toSet

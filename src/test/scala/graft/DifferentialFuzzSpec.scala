@@ -11,7 +11,7 @@ import graft.reducers._
   * inputs (the reference repo's strategy of differential-testing against
   * eager awkward, with ScalaCheck generating the corpus; sampled directly
   * — the scalatest/scalacheck bridge isn't a dependency). */
-class DifferentialFuzzSpec extends SparkSuite {
+class DifferentialFuzzSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private val ragged: Gen[List[List[Double]]] =
@@ -912,13 +912,13 @@ class DifferentialFuzzSpec extends SparkSuite {
   }
 
   test("kCore matches the brute-force peel on random graphs") {
-    import graft.operators.KCore
+    import graft.operators.{Graph, KCore}
     val rnd = new scala.util.Random(29L)
     for (trial <- 1 to 5) {
       val nodes = 8 + rnd.nextInt(25)
       val edges = Seq.fill(30 + rnd.nextInt(120))(
         (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
-      val df = edges.toDF("src", "dst")
+      val g = Graph(edges.toDF("src", "dst"))
       val undirected = edges.filter(e => e._1 != e._2)
         .flatMap(e => Seq(e, e.swap)).distinct
       def brute(k: Int): Map[Long, Long] = {
@@ -933,7 +933,7 @@ class DifferentialFuzzSpec extends SparkSuite {
         adj.map { case (a, ns) => a -> ns.size.toLong }
       }
       for (k <- Seq(1, 2, 3, 5)) {
-        val got = KCore.kCore(df, k).as[(Long, Long)].collect().toMap
+        val got = KCore.kCore(g, k).as[(Long, Long)].collect().toMap
         assert(got == brute(k), s"trial $trial k=$k")
       }
     }

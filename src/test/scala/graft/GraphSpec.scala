@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.PageRank
+import graft.operators.{Graph, PageRank}
 
 /** PageRank: hand-computed fixed-point values, dangling-mass handling,
   * staged-vs-unstaged determinism, and ranking sanity on a star graph. */
@@ -16,7 +16,7 @@ class GraphSpec extends SparkSuite {
     //   iter1: contrib(2) = (100 DIV 1)*1 = 100; dsum = 100; share = 50
     //     r1(1) = 15 + 85*(0 + 50) DIV 100   = 15 + 42  = 57
     //     r1(2) = 15 + 85*(100 + 50) DIV 100 = 15 + 127 = 142
-    val edges = Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
+    val edges = Graph(Seq((1L, 2L, 1L)).toDF("src", "dst", "w"))
     val r1 = collectMap[Long, Long](PageRank.pageRank(edges, 1, scale = 100L))
     assert(r1 == Map(1L -> 57L, 2L -> 142L))
     //   iter2: contrib(2) = 57; dsum = 142; share = 71
@@ -29,13 +29,14 @@ class GraphSpec extends SparkSuite {
   test("coOccurrenceEdges is symmetric (no dangling nodes) and weight-correct") {
     val df = Seq((10L, 1L), (10L, 2L), (10L, 2L), (11L, 3L))
       .toDF("g", "item")
-    val e = PageRank.coOccurrenceEdges(df, "g", "item")
-      .as[(Long, Long, Long)].collect().toSet
+    val g = Graph.coOccurrence(df, "g", "item")
+    val e = g.edges.as[(Long, Long, Long)].collect().toSet
     // item 2 appears twice in group 10 => weight 2 each direction; the
     // lone item 3 in group 11 forms no pairs
     assert(e == Set((1L, 2L, 2L), (2L, 1L, 2L)))
     val srcs = e.map(_._1); val dsts = e.map(_._2)
     assert(srcs == dsts, "symmetric construction: every dst also a src")
+    assert(g.symmetric && g.nEdges == 2L)
   }
 
   test("coOccurrenceEdges groupCap: hot group dropped, cool groups untouched") {
@@ -46,24 +47,32 @@ class GraphSpec extends SparkSuite {
     val cool = Seq((1L, 1L), (1L, 2L), (2L, 3L), (2L, 4L), (2L, 5L))
     val hot = (1 to 100).map(i => (9L, 100L + i))
     val df = (cool ++ hot).toDF("g", "item")
-    val coolOnly = PageRank.coOccurrenceEdges(
-        df.filter(col("g") =!= 9L), "g", "item")
-      .as[(Long, Long, Long)].collect().toSet
-    val capped = PageRank.coOccurrenceEdges(df, "g", "item", groupCap = 10)
-    // collect on THIS dataset (not an .as[] re-wrap) — observed metrics
-    // belong to the executed QueryExecution
-    val got = capped.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == coolOnly, "cap must drop exactly the hot group's pairs")
-    // the logged count: plan-native observe metric, no extra action
-    val m = capped.queryExecution.observedMetrics("co_occurrence_cap")
-    assert(m.getAs[Long]("dropped_groups") == 1L &&
+    def edgeSet(g: Graph) = g.edges.as[(Long, Long, Long)].collect().toSet
+    val coolOnly = edgeSet(Graph.coOccurrence(df.filter(col("g") =!= 9L), "g", "item"))
+    // the logged count: a plan-native observe metric of the pinning job,
+    // no extra action — read where the pinning job's QueryExecution is
+    // reported, to a listener
+    val metric = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.observedMetrics.get("co_occurrence_cap").foreach(metric.set)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val capped = try Graph.coOccurrence(df, "g", "item", groupCap = 10)
+      finally {
+        org.apache.spark.GraftBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(edgeSet(capped) == coolOnly, "cap must drop exactly the hot group's pairs")
+    val m = metric.get
+    assert(m != null && m.getAs[Long]("dropped_groups") == 1L &&
       m.getAs[Long]("kept_groups") == 2L, s"metric row: $m")
     // cap-free input: a cap wider than every group changes nothing
-    val wide = PageRank.coOccurrenceEdges(df, "g", "item", groupCap = 1000)
-      .as[(Long, Long, Long)].collect().toSet
-    val uncapped = PageRank.coOccurrenceEdges(df, "g", "item")
-      .as[(Long, Long, Long)].collect().toSet
+    val wide = edgeSet(Graph.coOccurrence(df, "g", "item", groupCap = 1000))
+    val uncapped = edgeSet(Graph.coOccurrence(df, "g", "item"))
     assert(wide == uncapped)
   }
 
@@ -71,19 +80,19 @@ class GraphSpec extends SparkSuite {
     // 4-cycle, out-degree 2 each way (symmetric): from the uniform start
     // the integer update is the identity (teleport 0.15*scale exact,
     // contrib = scale), so round 1 already satisfies max|r'-r| = 0 and a
-    // 30-round request must stop after round 1
-    val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
-    val edges = (cyc ++ cyc.map(_.swap)).map { case (s, d) => (s, d, 1L) }
-      .toDF("src", "dst", "w")
+    // 30-round request must stop after round 1. Built as the
+    // co-occurrence of the groups {1,2} {2,3} {3,4} {4,1}: both directions
+    // of each cycle edge, w = 1, a symmetric graph
+    val edges = Graph.coOccurrence(Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L),
+      (3L, 3L), (3L, 4L), (4L, 4L), (4L, 1L)).toDF("g", "item"), "g", "item")
     val errBuf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
     val early = try {
       System.setErr(new java.io.PrintStream(errBuf, true))
       collectMap[Long, Long](
-        PageRank.pageRank(edges, 30, handleDangling = false, tolUnits = 0L))
+        PageRank.pageRank(edges, 30, tolUnits = 0L))
     } finally System.setErr(realErr)
-    val full = collectMap[Long, Long](
-      PageRank.pageRank(edges, 30, handleDangling = false))
+    val full = collectMap[Long, Long](PageRank.pageRank(edges, 30))
     assert(early == full, "early-exit must be bit-identical to the full run")
     // probes run every SECOND round (r13 serial-floor cut), so the
     // round-1 fixpoint is detected after round 2 — round 2 is identity
@@ -92,7 +101,7 @@ class GraphSpec extends SparkSuite {
       s"expected round-2 convergence detection, stderr: ${errBuf.toString}")
     // non-fixpoint graph: the checked path must still match the lazy path
     // round for round even when it never converges inside the budget
-    val star = Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
+    val star = Graph(Seq((1L, 2L, 1L)).toDF("src", "dst", "w"))
     val a = collectMap[Long, Long](PageRank.pageRank(star, 3, scale = 100L,
       tolUnits = 0L))
     val b = collectMap[Long, Long](PageRank.pageRank(star, 3, scale = 100L))
@@ -100,33 +109,32 @@ class GraphSpec extends SparkSuite {
   }
 
   test("pageRank staged iterations produce bit-identical ranks") {
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
-    val plain = collectMap[Long, Long](
-      PageRank.pageRank(edges, 4, handleDangling = false))
+    val plain = collectMap[Long, Long](PageRank.pageRank(edges, 4))
     val staged = collectMap[Long, Long](
-      PageRank.pageRank(edges, 4, handleDangling = false, stageEvery = 2))
+      PageRank.pageRank(edges, 4, stageEvery = 2))
     assert(plain.nonEmpty && plain == staged)
   }
 
   test("dangling-free graph: both dangling paths compute identical ranks") {
     // symmetric co-occurrence edges => no dangling nodes => the skip-
-    // dangling fast path (linear lineage) must equal the full path
-    val edges = PageRank.coOccurrenceEdges(
+    // dangling fast path (linear lineage) must equal the full path, which
+    // the same edges take once they carry no symmetry claim
+    val edges = Graph.coOccurrence(
       Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L), (3L, 11L), (3L, 12L))
         .toDF("g", "item"), "g", "item")
-    val full = collectMap[Long, Long](PageRank.pageRank(edges, 3))
-    val fast = collectMap[Long, Long](
-      PageRank.pageRank(edges, 3, handleDangling = false))
+    val full = collectMap[Long, Long](PageRank.pageRank(Graph(edges.edges), 3))
+    val fast = collectMap[Long, Long](PageRank.pageRank(edges, 3))
     assert(full.nonEmpty && full == fast)
   }
 
   test("pageRank ranks the hub of a star graph highest") {
-    // spokes 1..6 all point at hub 0 and back (so nothing dangles)
-    val edges = (1L to 6L).flatMap(i => Seq((i, 0L, 1L), (0L, i, 1L)))
-      .toDF("src", "dst", "w")
-    val r = collectMap[Long, Long](
-      PageRank.pageRank(edges, 8, handleDangling = false))
+    // spokes 1..6 all point at hub 0 and back (so nothing dangles): the
+    // co-occurrence of the groups {i, 0}
+    val edges = Graph.coOccurrence(
+      (1L to 6L).flatMap(i => Seq((i, i), (i, 0L))).toDF("g", "item"), "g", "item")
+    val r = collectMap[Long, Long](PageRank.pageRank(edges, 8))
     assert(r(0L) > r(1L) * 3, s"hub should dominate spokes: $r")
     assert((1L to 6L).map(r).toSet.size == 1, "spokes are symmetric")
   }
@@ -136,8 +144,8 @@ class GraphSpec extends SparkSuite {
     // square 1-2-3-4-1 with diagonal 1-3 => triangles {1,2,3} and
     // {1,3,4}; throw in reversed duplicates and a self-loop, which the
     // canonicalization must erase
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
-      (3L, 1L), (2L, 1L), (2L, 2L)).toDF("src", "dst")
+    val edges = Graph(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
+      (3L, 1L), (2L, 1L), (2L, 2L)).toDF("src", "dst"))
     val r = collectMap[Long, Long](Triangles.triangleCounts(edges))
     assert(r == Map(1L -> 2L, 3L -> 2L, 2L -> 1L, 4L -> 1L))
     val g = Triangles.triangleCount(edges).as[Long].head()
@@ -149,8 +157,8 @@ class GraphSpec extends SparkSuite {
     // complete graph on 5 nodes: C(5,3) = 10 triangles, each node in
     // C(4,2) = 6 — every degree equal, so orientation falls entirely to
     // the node-id tiebreak
-    val edges = (for { a <- 1 to 5; b <- 1 to 5 if a < b }
-      yield (a.toLong, b.toLong)).toDF("src", "dst")
+    val edges = Graph((for { a <- 1 to 5; b <- 1 to 5 if a < b }
+      yield (a.toLong, b.toLong)).toDF("src", "dst"))
     val r = collectMap[Long, Long](Triangles.triangleCounts(edges))
     assert(r == (1L to 5L).map(_ -> 6L).toMap)
     assert(Triangles.triangleCount(edges).as[Long].head() == 10L)
@@ -158,8 +166,8 @@ class GraphSpec extends SparkSuite {
 
   test("triangleCounts: triangle-free bipartite graph returns no rows") {
     import graft.operators.Triangles
-    val edges = (for { a <- 1 to 3; b <- 4 to 6 }
-      yield (a.toLong, b.toLong)).toDF("src", "dst")
+    val edges = Graph((for { a <- 1 to 3; b <- 4 to 6 }
+      yield (a.toLong, b.toLong)).toDF("src", "dst"))
     assert(Triangles.triangleCounts(edges).count() == 0L)
   }
 
@@ -167,14 +175,14 @@ class GraphSpec extends SparkSuite {
     import graft.operators.Triangles
     // deg: 1->3, 2->2, 3->3, 4->2; tri: 1->2, 2->1, 3->2, 4->1
     // cc: 2/C(3,2) = 2/3 -> 666666 (floor); 1/C(2,2) = 1 -> 1000000
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
-      .toDF("src", "dst")
+    val edges = Graph(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
+      .toDF("src", "dst"))
     val r = Triangles.clusteringCoefficient(edges)
       .select("node", "cc_q").as[(Long, Long)].collect().toMap
     assert(r == Map(1L -> 666666L, 2L -> 1000000L,
       3L -> 666666L, 4L -> 1000000L))
     // zero-triangle nodes with deg >= 2 report 0; deg-1 nodes are absent
-    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("src", "dst")
+    val star = Graph(Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("src", "dst"))
     val s = Triangles.clusteringCoefficient(star)
       .select("node", "cc_q").as[(Long, Long)].collect().toMap
     assert(s == Map(0L -> 0L))
@@ -185,9 +193,9 @@ class GraphSpec extends SparkSuite {
     // path 1-2-3-4-5 (symmetric unit edges), seeds 1->10 and 5->20.
     // r1: 2->10, 4->20; r2: 3 ties (10 vs 20) -> 10;
     // r3: 4 now ties (3 has 10, 5 has 20) -> flips to 10. Seeds fixed.
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val edges = Graph(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b, 1L), (b, a, 1L)) }
-      .toDF("src", "dst", "w")
+      .toDF("src", "dst", "w"))
     val seeds = Seq((1L, 10L), (5L, 20L)).toDF("node", "label")
     def run(it: Int) = LabelProp.propagate(edges, seeds, it)
       .select("node", "label").as[(Long, Long)].collect().toMap
@@ -200,8 +208,8 @@ class GraphSpec extends SparkSuite {
     import graft.operators.LabelProp
     // node 2 hears label 10 with weight 1 and label 30 with weight 5;
     // seed 1 is adjacent to the heavy 30-voter but stays clamped
-    val edges = Seq((1L, 2L, 1L), (3L, 2L, 5L), (3L, 1L, 99L))
-      .toDF("src", "dst", "w")
+    val edges = Graph(Seq((1L, 2L, 1L), (3L, 2L, 5L), (3L, 1L, 99L))
+      .toDF("src", "dst", "w"))
     val seeds = Seq((1L, 10L), (3L, 30L)).toDF("node", "label")
     val r = LabelProp.propagate(edges, seeds, 2)
       .select("node", "label").as[(Long, Long)].collect().toMap
@@ -214,11 +222,11 @@ class GraphSpec extends SparkSuite {
     // co-occurrence graph at sf0.001. threshold=0 forces the
     // shuffled-hash wedge plan; the default takes the broadcast
     // adjacency-intersection plan — identical counts required
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
     val inter = collectMap[Long, Long](Triangles.triangleCounts(edges))
     val wedge = collectMap[Long, Long](
-      Triangles.countsWithGate(edges, "src", "dst", broadcastEdgeThreshold = 0L))
+      Triangles.countsWithGate(edges, broadcastEdgeThreshold = 0L))
     assert(inter.nonEmpty && inter == wedge)
   }
 
@@ -229,9 +237,9 @@ class GraphSpec extends SparkSuite {
     // then 4), which is exactly what a one-shot degree threshold gets
     // wrong: 4 and 5 start at degree 2. Direction/dup/loop noise mixed
     // in to pin canonicalization.
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+    val edges = Graph(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
         (5L, 6L), (2L, 1L), (1L, 1L), (5L, 4L))
-      .toDF("src", "dst")
+      .toDF("src", "dst"))
     val core = collectMap[Long, Long](KCore.kCore(edges, 2))
     assert(core == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
     // k=3: no 3-core anywhere — empty result, not an error
@@ -243,7 +251,7 @@ class GraphSpec extends SparkSuite {
 
   test("kCore: k above every degree empties the graph in the first peel round") {
     import graft.operators.KCore
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val edges = Graph(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst"))
     // maxRounds = 2 allows exactly one peel: every node dies in it, and
     // the emptied degree frame must read 0 dead nodes, ending the peel
     assert(KCore.kCore(edges, 10, maxRounds = 2).count() == 0L)
@@ -251,10 +259,12 @@ class GraphSpec extends SparkSuite {
 
   test("kCore matches a brute-force peel on the real co-occurrence graph") {
     import graft.operators.KCore
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
+    // the same edges with no symmetry claim take the general path
+    val general = Graph(edges.edges)
     // brute force: collected adjacency, literal while-loop peel
-    val undirected = edges.select(col("src"), col("dst"))
+    val undirected = edges.edges.select(col("src"), col("dst"))
       .as[(Long, Long)].collect().filter { case (a, b) => a != b }
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
     def brute(k: Int): Map[Long, Long] = {
@@ -269,14 +279,12 @@ class GraphSpec extends SparkSuite {
       adj.map { case (n, ns) => n -> ns.size.toLong }
     }
     // a k in the cascade regime for this graph (sf0.001 degrees are
-    // smaller than sf0.01's) plus one that empties it; the
-    // symmetricDistinct fast path (valid for co-occurrence input) must
-    // match both the general path and the brute peel
+    // smaller than sf0.01's) plus one that empties it; the symmetric
+    // fast path must match both the general path and the brute peel
     for (k <- Seq(2, 12, 18, 25)) {
-      val got = collectMap[Long, Long](KCore.kCore(edges, k))
+      val got = collectMap[Long, Long](KCore.kCore(general, k))
       assert(got == brute(k), s"k=$k")
-      val fast = collectMap[Long, Long](
-        KCore.kCore(edges, k, symmetricDistinct = true))
+      val fast = collectMap[Long, Long](KCore.kCore(edges, k))
       assert(fast == got, s"fast path diverged at k=$k")
     }
   }
@@ -285,7 +293,7 @@ class GraphSpec extends SparkSuite {
     import graft.operators.KCore
     // a path graph peels exactly one node per round from each end:
     // 12 nodes -> ~6 rounds at k=2; cap at 2 must throw
-    val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    val path = Graph((1L to 11L).map(i => (i, i + 1)).toDF("src", "dst"))
     val ex = intercept[IllegalStateException](
       KCore.kCore(path, 2, maxRounds = 2).count())
     assert(ex.getMessage.contains("did not converge"))
@@ -293,9 +301,9 @@ class GraphSpec extends SparkSuite {
     assert(KCore.kCore(path, 2).count() == 0L)
   }
 
-  // symmetric distinct edge list of the undirected pair set
+  // symmetric distinct edge list of the undirected pair set, w = 1
   private def sym(pairs: (Long, Long)*) =
-    pairs.flatMap(p => Seq(p, p.swap)).toDF("src", "dst")
+    Graph(pairs.flatMap(p => Seq(p, p.swap)).toDF("src", "dst"))
 
   test("linkPredict: hand-computed Jaccard and RA on a wedge graph") {
     // N(1)={2,3}, N(2)={1,3}, N(3)={1,2,4}, N(4)={3}
@@ -359,14 +367,13 @@ class GraphSpec extends SparkSuite {
 
   test("linkPredict.topForQueries: the above-gate wedge path ranks identically") {
     import graft.operators.LinkPredict
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")
-      .localCheckpoint()
-    val queries = edges.select($"src".as("node")).distinct()
+    val queries = edges.edges.select($"src".as("node")).distinct()
       .filter($"node" % 7 === 0)
     // budget 0 sends the non-empty adjacency down the wedge join
     def run(budget: Long) = LinkPredict.rankForQueries(edges, queries, 5,
-      hubCap = 0, "src", "dst", "node", adjBudgetBytes = budget)
+      hubCap = 0, adjBudgetBytes = budget)
     val viaBroadcast = run(graft.core.Broadcasts.defaultBudgetBytes)
     val viaWedgeJoin = run(0L)
     // the two paths place the edge list differently: keyed by the far
@@ -383,7 +390,7 @@ class GraphSpec extends SparkSuite {
   }
 
   test("linkPredict: the wedge join's probe side is a reused exchange") {
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")
     val df = graft.operators.LinkPredict.topPairs(edges, k = 100)
     df.collect() // AQE inserts ReusedExchange at runtime
@@ -399,7 +406,7 @@ class GraphSpec extends SparkSuite {
     //   r0 = (30, 0)
     //   r1(1) = 30 + 85*0 DIV 100  = 30;  r1(2) = 0 + 85*30 DIV 100 = 25
     //   r2(1) = 30 + 85*25 DIV 100 = 51;  r2(2) = 0 + 85*30 DIV 100 = 25
-    val edges = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    val edges = Graph(Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w"))
     val seeds = Seq(1L).toDF("node")
     val r1 = collectMap[Long, Long](
       PageRank.personalizedPageRank(edges, seeds, 1, scale = 100L))
@@ -416,8 +423,8 @@ class GraphSpec extends SparkSuite {
 
   test("relaxDistances: bounded Bellman-Ford with early settle-exit") {
     import graft.operators.Bfs
-    val edges = Seq((1L, 2L, 5L), (2L, 3L, 7L), (1L, 3L, 20L))
-      .toDF("src", "dst", "w")
+    val edges = Graph(Seq((1L, 2L, 5L), (2L, 3L, 7L), (1L, 3L, 20L))
+      .toDF("src", "dst", "w"))
     val seeds = Seq(1L).toDF("node")
     def run(r: Int) = collectMap[Long, Long](
       Bfs.relaxDistances(edges, seeds, rounds = r))
@@ -486,6 +493,40 @@ class GraphSpec extends SparkSuite {
     }
   }
 
+  test("cost: operators read a Graph's pinned edges and never pin them again") {
+    // each operator run below costs exactly the jobs of the one frame it
+    // must pin itself; a re-pin of the graph's edges adds a job
+    import graft.core.Broadcasts
+    import graft.operators.{Bfs, KCore}
+    import graft.tools.Profile
+    val meter = new Profile.Meter(spark)
+    meter.attach()
+    try {
+      def jobs(query: => org.apache.spark.sql.DataFrame): Int = {
+        meter.measureQuery(query) // warm
+        meter.measureQuery(query)._2.jobs
+      }
+      // zero hops: the traversal is the pin of its seed frame
+      val path = sym((1L until 9L).map(i => (i, i + 1)): _*)
+      val seeds = Seq(1L).toDF("node")
+      val hop0 = seeds.select(col("node").cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct().withColumn("dist", lit(0))
+      assert(jobs(Bfs.distances(path, seeds, maxHops = 0)) ==
+        jobs(Broadcasts.pinCounted(hop0)._1))
+      // a symmetric graph peeled at k = 1 loses no node: the peel is the
+      // pin of its degree frame
+      val g = Graph.coOccurrence(
+        Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L)).toDF("g", "item"),
+        "g", "item")
+      val deg = g.edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      assert(jobs(KCore.kCore(g, 1)) ==
+        jobs(Broadcasts.pinCounted(deg, col("deg") < 1)._1))
+    } finally {
+      meter.detach()
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
   test("profile meter: q_bfs repeats its job, stage, task and shuffle counts exactly") {
     import graft.tools.Profile
     val meter = new Profile.Meter(spark)
@@ -538,7 +579,7 @@ class GraphSpec extends SparkSuite {
     import graft.operators.LabelProp
     // two unit-weight triangles {1,2,3} {4,5,6} bridged by 3-4
     val edges = sym((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L),
-      (4L, 6L), (3L, 4L)).withColumn("w", lit(1L))
+      (4L, 6L), (3L, 4L))
     val labels = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 1L))
       .toDF("node", "label")
     val out = LabelProp.modularity(edges, labels)
@@ -596,8 +637,8 @@ class GraphSpec extends SparkSuite {
     assert(nQ > 0 && nPred > 0, s"vacuous gate: $nQ queries, $nPred preds")
     assert(nHits > 0, "no held-out edge recovered at all")
     // random expectation: held pairs / possible pairs, per prediction
-    val edges = graft.operators.PageRank.coOccurrenceEdges(
-      graft.core.Tables.lineitem(spark, gdir), "l_orderkey", "l_partkey")
+    val edges = Graph.coOccurrence(
+      graft.core.Tables.lineitem(spark, gdir), "l_orderkey", "l_partkey").edges
     val n = edges.select($"src").distinct().count()
     val held = edges
       .filter(expr("pmod(least(src, dst) * 31 + greatest(src, dst), 13) = 0") &&
@@ -628,7 +669,6 @@ class GraphSpec extends SparkSuite {
     // task uncapped) and pins BOTH the cap's semantics and its effect on
     // the per-task work distribution.
     import graft.tools.PowerLawSoak
-    import graft.operators.PageRank
     val items = PowerLawSoak.zipfItems(spark, 60000L, 30000L, 1.1, 2000L)
       .localCheckpoint()
     val cap = 64
@@ -649,18 +689,16 @@ class GraphSpec extends SparkSuite {
       items.groupBy($"g").agg(count(lit(1)).as("n")).filter($"n" <= cap)
         .select($"g"),
       Seq("g"), "left_semi").localCheckpoint()
-    val capped = PageRank.coOccurrenceEdges(items, "g", "item", groupCap = cap)
-    val manual = PageRank.coOccurrenceEdges(keptOnly, "g", "item")
+    val capped = Graph.coOccurrence(items, "g", "item", groupCap = cap).edges
+    val manual = Graph.coOccurrence(keptOnly, "g", "item").edges
     assert(capped.exceptAll(manual).isEmpty && manual.exceptAll(capped).isEmpty,
       "capped edges differ from the kept-group-only build")
     // distribution: per-task shuffle-write records of the two builds
     val (_, capStats) = PowerLawSoak.withTaskStats(spark) {
-      PageRank.coOccurrenceEdges(items, "g", "item", groupCap = cap)
-        .write.format("noop").mode("overwrite").save()
+      Graph.coOccurrence(items, "g", "item", groupCap = cap)
     }
     val (_, unStats) = PowerLawSoak.withTaskStats(spark) {
-      PageRank.coOccurrenceEdges(items, "g", "item")
-        .write.format("noop").mode("overwrite").save()
+      Graph.coOccurrence(items, "g", "item")
     }
     val (capMax, _, capRatio) = PowerLawSoak.straggler(capStats.rowsSeq)
     val (unMax, _, unRatio) = PowerLawSoak.straggler(unStats.rowsSeq)
@@ -693,9 +731,9 @@ class GraphSpec extends SparkSuite {
     // p = 0.2 on this graph is 1.50% (est 407500 vs exact 413718;
     // exact 6.9 s vs approx 1.6 s even at this scale — the gap is the
     // (p·m)^1.5 wedge-stream saving the approximation exists for)
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet"),
-      "l_orderkey", "l_partkey").localCheckpoint()
+      "l_orderkey", "l_partkey")
     val exact = graft.operators.Triangles.triangleCount(edges)
       .collect()(0).getLong(0)
     val r = graft.operators.Triangles.triangleCountApprox(edges,
@@ -713,9 +751,9 @@ class GraphSpec extends SparkSuite {
     // p = 1 (pPpm = 1e6): every edge survives, the DIV chain is the
     // identity -> the DOULION estimate must EQUAL the exact global
     // count, and the sampled edge set must be the whole canonical set
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       spark.read.parquet(s"$dir/lineitem.parquet"),
-      "l_orderkey", "l_partkey").localCheckpoint()
+      "l_orderkey", "l_partkey")
     val exact = graft.operators.Triangles.triangleCount(edges)
       .collect()(0).getLong(0)
     val r = graft.operators.Triangles.triangleCountApprox(edges,
@@ -727,7 +765,7 @@ class GraphSpec extends SparkSuite {
     // harmonic centrality of v (symmetric graph: d(p,v) = d(v,p)), i.e.
     // the transpose of harmonicCentrality's per-root sums
     import graft.operators.Bfs
-    val nodes = edges.select($"src".as("node")).distinct()
+    val nodes = edges.edges.select($"src".as("node")).distinct()
     val exactH = Bfs.harmonicCentrality(edges, nodes, maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val estAll = Bfs.harmonicEstimate(edges, nodes, maxHops = 3)
@@ -744,10 +782,10 @@ class GraphSpec extends SparkSuite {
     // exact regression pin. The estimate's CONTRACT (unreached nodes
     // absent = 0) means missing estimates count as 0 here.
     import graft.operators.Bfs
-    val edges = PageRank.coOccurrenceEdges(
+    val edges = Graph.coOccurrence(
       spark.read.parquet(s"$dir/lineitem.parquet"),
-      "l_orderkey", "l_partkey").localCheckpoint()
-    val nodes = edges.select($"src".as("node")).distinct()
+      "l_orderkey", "l_partkey")
+    val nodes = edges.edges.select($"src".as("node")).distinct()
     val exact = Bfs.harmonicCentrality(edges, nodes, maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val est = Bfs.harmonicEstimate(edges,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Module tests: streaming (real Structured Streaming runs), inspect
   * (necessary-columns / pushdown reports), behaviors (mixin dispatch),
   * io (round-trips + report reads), multimodal (typed decode pipeline). */
-class ModulesSpec extends SparkSuite {
+class ModulesSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"

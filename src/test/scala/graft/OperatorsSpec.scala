@@ -5,7 +5,7 @@ import graft.operators.BloomAntiJoin
 import graft.similarity._
 
 /** Bloom-pruned anti join and k-means IVF training. */
-class OperatorsSpec extends SparkSuite {
+class OperatorsSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"

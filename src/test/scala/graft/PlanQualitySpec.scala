@@ -906,13 +906,13 @@ class PlanQualitySpec extends SparkSuite {
     // 1-partition input (files < cores) must gain a full-width shuffle...
     val parts = spark.sessionState.conf.numShufflePartitions
     val narrow = spark.range(1000).toDF("id").coalesce(1)
-    assert(graft.core.Partitions.ensureMinParallelism(narrow, col("id"), parts)
+    assert(graft.core.Partitions.ensureMinParallelism(narrow, col("id"))
       .rdd.getNumPartitions == parts)
     // ...but an already-parallel input (any real corpus scan) must pass
     // through UNCHANGED — the unconditional repartition this replaced paid
     // a full extra shuffle (2.5x on d_ngram) for nothing
     val wide = spark.range(1000).toDF("id").repartition(parts + 5)
-    val same = graft.core.Partitions.ensureMinParallelism(wide, col("id"), parts)
+    val same = graft.core.Partitions.ensureMinParallelism(wide, col("id"))
     assert(same.queryExecution.executedPlan.toString ==
       wide.queryExecution.executedPlan.toString)
   }

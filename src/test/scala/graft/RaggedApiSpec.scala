@@ -7,7 +7,7 @@ import graft.core.Ragged._
 /** The fluent API facade must be a pure renaming of the operator modules:
   * every method-style spelling equals its free-function spelling, and a
   * reference user's chained pipeline reads through. */
-class RaggedApiSpec extends SparkSuite {
+class RaggedApiSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   test("column ops equal their free-function spellings on the fixtures") {

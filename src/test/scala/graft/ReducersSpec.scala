@@ -8,7 +8,7 @@ import org.scalactic.Tolerance._
 /** Differential tests for §2.5 reducers (reference `tests/test_reducers.py`
   * parametrization: axis x mask_identity on ragged rows incl. empty lists
   * and nulls). */
-class ReducersSpec extends SparkSuite {
+class ReducersSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private def one[T](c: org.apache.spark.sql.Column, xs: Seq[java.lang.Double]): Any = {

@@ -1,12 +1,34 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session, matching the
   * reference's single threaded scheduler for tests). */
 object SparkSuite {
   lazy val spark: SparkSession = graft.core.SessionConfigs.local(4)
+}
+
+/** For the suites that select graft.functions kernels over local frames:
+  * excludes `ConvertToLocalRelation` while the suite runs, as Spark's own
+  * test sessions do. The rule evaluates a projection over a
+  * `Seq(...).toDF` frame inside the optimizer, interpreted, so without
+  * this a kernel selected over a local frame never runs its generated
+  * code in a test. Other suites keep the tools' session config, which
+  * the plan lockfile compares rely on: the rule folds the final
+  * projection of some queries into their local relation. */
+trait CompiledLocalFrames extends BeforeAndAfterAll { this: SparkSuite =>
+  private val excludedRules = "spark.sql.optimizer.excludedRules"
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set(excludedRules,
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+  }
+
+  override def afterAll(): Unit =
+    try spark.conf.unset(excludedRules) finally super.afterAll()
 }
 
 abstract class SparkSuite extends AnyFunSuite {

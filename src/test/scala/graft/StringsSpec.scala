@@ -6,7 +6,7 @@ import graft.strings._
 /** Unit tests for the trickier §2.10 string kernels — the ones composed
   * from several built-ins rather than mapped 1:1 (Python-semantics
   * reference values from the eager Arrow kernels the reference wraps). */
-class StringsSpec extends SparkSuite {
+class StringsSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private def one(c: org.apache.spark.sql.Column, s: String): String =

@@ -6,7 +6,7 @@ import graft.structure._
 /** Differential tests for §2.4 structure operators against hand-computed
   * awkward-array semantics (the reference's `tests/test_structure.py`
   * expectations on the points fixture). */
-class StructureSpec extends SparkSuite {
+class StructureSpec extends SparkSuite with CompiledLocalFrames {
   import spark.implicits._
 
   private def xs = transform(col("points"), p => p.getField("x"))

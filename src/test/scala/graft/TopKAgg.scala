@@ -1,4 +1,4 @@
-package graft.similarity
+package graft
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -7,15 +7,12 @@ import org.apache.spark.sql.functions.udaf
 
 /** Bounded top-k per group as a typed Aggregator: each partition keeps at
   * most k (score, id) pairs (insertion into a small sorted buffer), partial
-  * buffers merge at the final stage.
+  * buffers merge at the final stage. Order: score DESC, id ASC (ties),
+  * matching the SQL `ORDER BY cos DESC, nid` mirror exactly.
   *
-  * This replaces the row_number()-over-Window formulation for per-query
-  * top-k: the Window plan shuffles EVERY scored pair and sorts each group;
-  * the aggregator ships at most k rows per group per partition through the
-  * shuffle — at 100 TB with a billion candidates per query that is the
-  * difference between a sort of the candidate stream and a constant-size
-  * merge. Order: score DESC, id ASC (ties), matching the SQL
-  * `ORDER BY cos DESC, nid` mirror exactly.
+  * The witness for the native bounded-heap aggregate the similarity
+  * searches run ([[graft.operators.GroupTopK]] over struct(-score, id)):
+  * DedupSimilaritySpec checks that both rank identically.
   */
 class TopKScoredIds(k: Int)
     extends Aggregator[(Double, Long), List[(Double, Long)], Seq[(Double, Long)]] {
