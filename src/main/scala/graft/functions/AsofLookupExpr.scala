@@ -1,106 +1,128 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types._
 
-/** Scalar as-of lookup: the STREAM-STATIC face of the as-of join.
+/** As-of lookup against a dimension-sized right side: the one sorted-table
+  * search behind [[graft.operators.AsofJoin.asofJoinBroadcast]],
+  * [[asofLookup]] and [[graft.streaming.Streaming.streamingAsofEnrich]].
   *
-  * [[graft.operators.AsofJoin.asofJoinBroadcast]] resolves each left row
-  * with a binary search over a driver-collected right side — but its
-  * `left.rdd.mapPartitions` body cannot run inside Structured Streaming.
-  * This expression packages the identical sorted-table-and-binary-search
-  * into a codegen'd scalar function, so the same enrichment ("state as of
-  * event time") runs in a `withColumn` on ANY frame — batch or stream —
-  * with zero shuffle and zero streaming state: the table rides along as a
-  * task-broadcast reference object, the per-row cost is one binary search.
+  * [[table]] collects the right side once and sorts each key's rows by ts;
+  * the [[lookup]] kernel resolves one (key, ts) with a binary search. As a
+  * scalar expression it runs in a projection over ANY frame, batch or
+  * stream: the left side is never shuffled, no streaming state accrues,
+  * and the table rides to the tasks as a reference object.
   *
-  * Scale contract: right side must be dimension-sized (rates, reference
-  * prices, config history — the same bound as every broadcast join);
-  * the fact/stream side is never shuffled. Backward direction, inclusive
-  * (right.ts == left.ts matches) — identical to asofJoin's default.
-  *
-  * Keys are longs, timestamps are micros (timestamp columns are converted
-  * with unix_micros by the [[AsofLookup.asofLookup]] builder), payload is
-  * a double column — the common numeric-enrichment shape. Wider payloads:
-  * call the builder once per column; the table is shared per-call, k-row
-  * sized, so duplication is noise.
+  * Scale contract: the right side must be dimension-sized (rates,
+  * reference prices, config history), the bound of every broadcast join.
+  * Keys, ts and payloads keep their own types: a key matches by equality,
+  * a ts compares in its type's order, and a match returns every payload
+  * column. Same direction semantics as [[graft.operators.AsofJoin.asofJoin]]:
+  * inclusive bounds, `nearest` ties to the backward match.
   */
 object AsofLookup {
 
-  /** Immutable sorted lookup table — a reference object in generated
-    * code: the rows of key `keys(i)` are `offsets(i) until offsets(i + 1)`,
-    * sorted by ts. */
-  final class Table(val keys: Array[Long], val offsets: Array[Int],
-      val tss: Array[Long], val vals: Array[Double], val nulls: Array[Boolean])
-      extends Serializable
+  /** The right side sorted for one `direction` — a reference object in
+    * generated code. The rows of the key that `index` maps to `i` are
+    * `offsets(i) until offsets(i + 1)`, sorted by ts. Keys, `tss` and the
+    * payload `rows` are Catalyst values. */
+  final class Table private[functions] (val keyType: DataType,
+      val tsType: DataType, val payloadType: StructType, val direction: String,
+      val index: java.util.HashMap[Any, Integer], val offsets: Array[Int],
+      val tss: Array[Any], val rows: Array[InternalRow]) extends Serializable {
+    @transient lazy val tsOrd: Ordering[Any] = TypeUtils.getInterpretedOrdering(tsType)
+  }
 
-  /** The [[AsofLookupExpr]] kernel: null when the key is absent, every
-    * right ts is later than `t`, or the matched row's payload is null —
-    * the last case mirrors asofJoin/asofJoinBroadcast, which emit null
-    * for a matched row with a null payload (advisor finding: the pre-r7
-    * table mapped null payloads to NaN, which poisons downstream sums and
-    * counts as matched in count(asof_*), diverging from the join forms). */
-  def lookup(k: Long, t: Long, table: Table): java.lang.Double = {
+  /** The [[AsofLookupExpr]] kernel: the payload row `table` matches for
+    * key `k` at ts `t`, null when `k` or `t` is null, the key is absent
+    * or no row lies on the direction's side of `t`. A matched row whose
+    * payload columns are null returns them null, as the join forms do. */
+  def lookup(k: Any, t: Any, table: Table): InternalRow = {
     import table._
-    // binary search the key directory
-    var lo = 0; var hi = keys.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (keys(mid) < k) lo = mid + 1
-      else if (keys(mid) > k) hi = mid - 1
-      else { lo = mid; hi = -2 }
-    }
-    if (hi != -2) return null
-    val start = offsets(lo); val end = offsets(lo + 1)
-    // last right ts <= t within [start, end)
+    if (k == null || t == null) return null
+    val i = index.get(k)
+    if (i == null) return null
+    val start = offsets(i); val end = offsets(i + 1)
+    // a = the first row later than t
     var a = start; var b = end
     while (a < b) {
       val mid = (a + b) >>> 1
-      if (tss(mid) <= t) a = mid + 1 else b = mid
+      if (tsOrd.lteq(tss(mid), t)) a = mid + 1 else b = mid
     }
-    if (a == start || nulls(a - 1)) null
-    else java.lang.Double.valueOf(vals(a - 1))
+    val back = a - 1 // the last row at or before t, start - 1 if none
+    val fwd = if (back >= start && tsOrd.equiv(tss(back), t)) back else a
+    val pick = direction match {
+      case "backward" => back
+      case "forward" => fwd
+      case _ =>
+        if (back < start) fwd
+        else if (fwd == end || backCloser(t, tss(back), tss(fwd))) back
+        else fwd
+    }
+    if (pick < start || pick == end) null else rows(pick)
   }
 
-  /** Collect and sort the right side into a [[Table]]. Null keys/ts rows
-    * are dropped (they can never match); null PAYLOAD rows are kept — they
-    * are real matches that shadow earlier rows, exactly as in the join
-    * forms — and resolve to null. Rows should be unique per (key, ts) —
-    * on duplicates the later payload in sort order wins, matching
-    * asofJoinBroadcast's sorted-array behavior. */
-  def buildTable(right: DataFrame, keyCol: String, tsCol: String,
-      payloadCol: String): Table = {
-    val tsExpr = right.schema(tsCol).dataType match {
-      case TimestampType => unix_micros(col(tsCol))
-      case _ => col(tsCol).cast("long")
-    }
-    val rows = right
-      .select(col(keyCol).cast("long"), tsExpr, col(payloadCol).cast("double"))
-      .collect()
+  /** Whether `t` is at least as close to the earlier ts `b` as to the
+    * later `f`, ties going backward. Integral Catalyst values (also a
+    * timestamp's micros and a date's days) compare exactly: with
+    * b <= t <= f both distances lie in [0, 2^64), so the wrapped Long
+    * differences compare right UNSIGNED, where a signed `t - b <= f - t`
+    * wraps for extreme mixed-sign ts and picks the far match. Fractional
+    * ts compare as doubles. */
+  private def backCloser(t: Any, b: Any, f: Any): Boolean = t match {
+    case _: java.lang.Double | _: java.lang.Float | _: Decimal =>
+      def d(v: Any) = v match {
+        case x: Decimal => x.toDouble
+        case x: Number => x.doubleValue
+      }
+      d(t) - d(b) <= d(f) - d(t)
+    case _ =>
+      def l(v: Any) = v.asInstanceOf[Number].longValue
+      java.lang.Long.compareUnsigned(l(t) - l(b), l(f) - l(t)) <= 0
+  }
+
+  /** Collect and sort `right` into a [[Table]] for `direction`
+    * (`"backward"`, `"forward"` or `"nearest"`). Rows with a null key or
+    * ts are dropped (they can never match); rows with null payloads are
+    * kept — they are real matches that shadow other rows. Rows should be
+    * unique per (key, ts): which of two duplicates matches is unspecified. */
+  def table(right: DataFrame, keyCol: String, tsCol: String,
+      payloadCols: Seq[String], direction: String = "backward"): Table = {
+    require(Seq("backward", "forward", "nearest").contains(direction),
+      s"asof lookup: unknown direction '$direction'")
+    val rows = right.select(col(keyCol), col(tsCol), struct(payloadCols.map(col): _*))
+    val Seq(keyType, tsType, payloadType: StructType) = rows.schema.map(_.dataType)
+    require(direction != "nearest" || (tsType match {
+      case _: NumericType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }), s"asof lookup: nearest needs a numeric, date or timestamp ts, got $tsType")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rows.schema)
+    val tsOrd = TypeUtils.getInterpretedOrdering(tsType)
+    val byKey = rows.collect().toSeq
+      .map(toCatalyst(_).asInstanceOf[InternalRow])
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) 0.0 else r.getDouble(2), r.isNullAt(2)))
-      .sortBy(t => (t._1, t._2))
-    val keys = rows.map(_._1).distinct
-    val offsets = new Array[Int](keys.length + 1)
-    var ki = 0
-    rows.zipWithIndex.foreach { case ((k, _, _, _), i) =>
-      while (ki < keys.length && keys(ki) != k) { ki += 1; offsets(ki) = i }
-    }
-    offsets(keys.length) = rows.length
-    new Table(keys, offsets, rows.map(_._2), rows.map(_._3), rows.map(_._4))
+      .groupBy(_.get(0, keyType)).toArray
+      .map { case (k, rs) =>
+        k -> rs.sortWith((x, y) => tsOrd.lt(x.get(1, tsType), y.get(1, tsType)))
+      }
+    val index = new java.util.HashMap[Any, Integer]()
+    byKey.indices.foreach(i => index.put(byKey(i)._1, i))
+    val sorted = byKey.flatMap(_._2)
+    new Table(keyType, tsType, payloadType, direction, index,
+      byKey.scanLeft(0)(_ + _._2.size),
+      sorted.map(_.get(1, tsType)), sorted.map(_.getStruct(2, payloadType.length)))
   }
 
   case class AsofLookupExpr(left: Expression, right: Expression, table: Table)
       extends BinaryExpression {
-    override def dataType: DataType = DoubleType
+    override def dataType: DataType = table.payloadType
     override def nullable: Boolean = true
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(k: Any, t: Any): Any =
-      lookup(k.asInstanceOf[Long], t.asInstanceOf[Long], table)
+    override def nullSafeEval(k: Any, t: Any): Any = lookup(k, t, table)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       Kernels.call(ctx, ev, this, "graft.functions.AsofLookup.lookup", table)
     override protected def withNewChildrenInternal(
@@ -108,21 +130,21 @@ object AsofLookup {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Build the enrichment column: latest `payloadCol` from `right` with
-    * right ts <= the row's `tsC`, per `keyC`.
-    *
-    * `tsC` MUST already be integral in the same unit as the right side's
-    * ts (micros for timestamps — wrap timestamp columns in
-    * `unix_micros`). The unit check cannot live here: a caller-supplied
-    * Column may be unresolved (no reliable dataType before analysis), and
-    * a silent seconds-vs-micros mismatch matches nothing — so the typed
-    * entry points ([[graft.streaming.Streaming.streamingAsofEnrich]])
-    * resolve the left frame's schema and convert before calling. */
-  def asofLookup(right: DataFrame, keyCol: String, tsCol: String,
-      payloadCol: String)(keyC: Column, tsLongC: Column): Column = {
-    val table = buildTable(right, keyCol, tsCol, payloadCol)
+  /** The struct of payload columns `table` matches for each row's
+    * (`keyC`, `tsC`), each cast to the right side's key and ts type; null
+    * when no right row qualifies. */
+  def lookupColumn(table: Table, keyC: Column, tsC: Column): Column =
     GraftBridge.column(AsofLookupExpr(
-      GraftBridge.expression(keyC.cast("long")),
-      GraftBridge.expression(tsLongC.cast("long")), table))
-  }
+      GraftBridge.expression(keyC.cast(table.keyType)),
+      GraftBridge.expression(tsC.cast(table.tsType)), table))
+
+  /** The enrichment column: the latest `payloadCol` from `right` with
+    * right ts <= the row's `tsC`, per `keyC`, in the payload's own type.
+    * `keyC` and `tsC` are cast to the right side's key and ts types, so a
+    * timestamp ts is passed as the timestamp itself (a long casts to a
+    * timestamp as SECONDS). */
+  def asofLookup(right: DataFrame, keyCol: String, tsCol: String,
+      payloadCol: String)(keyC: Column, tsC: Column): Column =
+    lookupColumn(table(right, keyCol, tsCol, Seq(payloadCol)), keyC, tsC)
+      .getField(payloadCol)
 }

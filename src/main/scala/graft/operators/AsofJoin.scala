@@ -22,29 +22,34 @@ import org.apache.spark.sql.types._
   */
 object AsofJoin {
 
-  /** The ts column `c` of type `dt` as a long: micros for a timestamp (a
-    * cast to long truncates to seconds and would mis-break sub-second
-    * ties), the value itself otherwise. */
-  private def tsNum(c: Column, dt: DataType): Column = dt match {
+  private val MicrosPerDay = 86400000000L
+
+  /** A key or ts column `c` of type `dt` as a long: micros since the epoch
+    * for a timestamp or a date (a cast to long truncates a timestamp to
+    * seconds, which would mis-break sub-second ties, and refuses a date),
+    * the value itself otherwise. */
+  private[graft] def asLong(c: Column, dt: DataType): Column = dt match {
     case TimestampType => unix_micros(c)
-    case _ => c.cast("long")
+    case DateType => unix_date(c).cast(LongType) * lit(MicrosPerDay)
+    case _ => c.cast(LongType)
   }
+
+  /** |a - b| for two [[asLong]] values, in DECIMAL(21,0): a raw Long
+    * difference wraps once the span exceeds Long range (mixed-sign extreme
+    * ts) — unreachable for epoch timestamps, reachable for the arbitrary
+    * long ts the signatures accept. */
+  private def distance(a: Column, b: Column): Column =
+    abs(a.cast("decimal(21,0)") - b.cast("decimal(21,0)"))
 
   /** `nearest`'s pick between the backward match `b` and the forward
     * match `f` (payload structs carrying the right ts, of type `rdt`, as
-    * `__t`) for the left ts `lt`, a [[tsNum]]. Ties (equal distance) take
-    * the backward match; `<=` encodes that. Distances are compared in
-    * DECIMAL(21,0): with back <= t <= fwd, a raw Long `t - b` wraps
-    * negative once the span exceeds Long range (mixed-sign extreme ts),
-    * silently picking the FAR match — unreachable for epoch timestamps,
-    * reachable for the arbitrary long ts the signature accepts. */
-  private def nearest(lt: Column, b: Column, f: Column, rdt: DataType): Column = {
-    def d(c: Column) = c.cast("decimal(21,0)")
+    * `__t`) for the left ts `lt`, an [[asLong]]. Ties (equal distance)
+    * take the backward match; `<=` encodes that. */
+  private def nearest(lt: Column, b: Column, f: Column, rdt: DataType): Column =
     when(b.isNull, f).when(f.isNull, b)
-      .when(d(lt) - d(tsNum(b.getField("__t"), rdt))
-        <= d(tsNum(f.getField("__t"), rdt)) - d(lt), b)
+      .when(distance(lt, asLong(b.getField("__t"), rdt))
+        <= distance(asLong(f.getField("__t"), rdt), lt), b)
       .otherwise(f)
-  }
 
   /** `payloadCols` are taken from `right`; emitted on each left row as
     * `asof_<name>` (null when no right row qualifies). Right rows must be
@@ -102,7 +107,7 @@ object AsofJoin {
       case "nearest" =>
         val b = last(col("__p"), ignoreNulls = true).over(wBack)
         val f = last(col("__p"), ignoreNulls = true).over(wFwd)
-        union.withColumn("__m", nearest(tsNum(col(tsCol), left.schema(tsCol).dataType),
+        union.withColumn("__m", nearest(asLong(col(tsCol), left.schema(tsCol).dataType),
           b, f, right.schema(tsCol).dataType))
     }
 
@@ -118,13 +123,13 @@ object AsofJoin {
 
   /** [[asofJoin]] with a match tolerance (the pandas `merge_asof`
     * `tolerance=` knob): a qualifying right row further than
-    * `toleranceUs` microseconds (for timestamp ts; raw units for
+    * `toleranceUs` microseconds (for timestamp or date ts; raw units for
     * integral ts) from the left row is treated as NO match — its
     * payload comes back null. Same single-shuffle plan as [[asofJoin]];
-    * the tolerance is one post-window predicate, and the time distance
-    * is compared in DECIMAL(21,0) like `nearest`'s tie-break so
-    * arbitrary long ts cannot wrap. Works for all three directions
-    * (the absolute distance is direction-agnostic). */
+    * the tolerance is one post-window predicate on the same [[distance]]
+    * as `nearest`'s tie-break, so arbitrary long ts cannot wrap. Works
+    * for all three directions (the absolute distance is
+    * direction-agnostic). */
   def asofJoinTolerance(left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, payloadCols: Seq[String],
       toleranceUs: Long, direction: String = "backward"): DataFrame = {
@@ -135,10 +140,10 @@ object AsofJoin {
     val withTs =
       if (payloadCols.contains(tsCol)) payloadCols else payloadCols :+ tsCol
     val j = asofJoin(left, right, keyCol, tsCol, withTs, direction)
-    val lt = tsNum(col(tsCol), left.schema(tsCol).dataType).cast("decimal(21,0)")
-    val rt = tsNum(col(s"asof_$tsCol"), right.schema(tsCol).dataType).cast("decimal(21,0)")
+    val lt = asLong(col(tsCol), left.schema(tsCol).dataType)
+    val rt = asLong(col(s"asof_$tsCol"), right.schema(tsCol).dataType)
     val within = rt.isNotNull &&
-      abs(lt - rt) <= lit(toleranceUs).cast("decimal(21,0)")
+      distance(lt, rt) <= lit(toleranceUs).cast("decimal(21,0)")
     j.select(left.columns.toIndexedSeq.map(col) ++
       payloadCols.map(p =>
         when(within, col(s"asof_$p")).as(s"asof_$p")): _*)
@@ -189,8 +194,8 @@ object AsofJoin {
       case other => throw new IllegalArgumentException(
         s"asofJoinSalted: ts must be timestamp/integral for bucketing, got $other")
     }
-    val lt = tsNum(col(tsCol), left.schema(tsCol).dataType)
-    val rt = tsNum(col(tsCol), right.schema(tsCol).dataType)
+    val lt = asLong(col(tsCol), left.schema(tsCol).dataType)
+    val rt = asLong(col(tsCol), right.schema(tsCol).dataType)
 
     // one scan-only aggregate for the bucket range; width >= 1 always
     val Array(mn, mx) = left.select(lt.as("t")).unionByName(
@@ -313,124 +318,42 @@ object AsofJoin {
 
   /** Broadcast as-of join: when the right side is dimension-sized (rates,
     * reference prices, config states — thousands to low millions of rows),
-    * collect it once, sort per key, broadcast, and resolve every left row
-    * with a per-row binary search in mapPartitions. The 100 TB shape for
-    * the common case: the fact side is NEVER shuffled or sorted — the one
-    * thing the union+window encoding ([[asofJoin]]) and the native merge
-    * operator (both exchanges) cannot avoid. Same output contract and
-    * direction semantics as [[asofJoin]] (inclusive bounds, nearest ties
-    * to backward). Right rows with a null key or ts are dropped; left rows
-    * with a null key/ts emit null payloads.
+    * collect it once into an [[graft.functions.AsofLookup]] table and
+    * resolve every left row with its binary-search kernel, in one
+    * projection. The 100 TB shape for the common case: the fact side is
+    * NEVER shuffled or sorted — the one thing the union+window encoding
+    * ([[asofJoin]]) and the native merge operator (both exchanges) cannot
+    * avoid. Same output contract and direction semantics as [[asofJoin]]
+    * (inclusive bounds, nearest ties to backward). Right rows with a null
+    * key or ts are dropped; left rows with a null key/ts emit null
+    * payloads.
     *
-    * Key and ts compare via their natural ordering (numeric, timestamp,
-    * string all work); right rows should be unique per (key, ts).
+    * Keys match by equality and ts compare in their type's order, so any
+    * key type and any orderable ts work (`nearest` needs a numeric, date
+    * or timestamp ts); right rows should be unique per (key, ts).
     *
-    * Measured crossover: at sf0.1 (150k facts, 15k dims) the window form
-    * is ~3x FASTER (0.17s vs 0.60s) — the driver collect+broadcast is a
-    * fixed cost that only pays off once shuffling/sorting the fact side
-    * dominates, i.e. facts >> dims by orders of magnitude (the 100 TB
-    * fact / MB-scale dimension regime this operator exists for). */
+    * Crossover: the driver collect is a fixed cost that pays off once
+    * shuffling/sorting the fact side dominates, i.e. facts >> dims by
+    * orders of magnitude (the 100 TB fact / MB-scale dimension regime
+    * this operator exists for). At sf0.1 (150k facts, 15k dims; one
+    * Profile run each on 4 cores) ev_asof_bcast took 0.75 s against the
+    * window form's 0.93 s. */
   def asofJoinBroadcast(left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, payloadCols: Seq[String],
       direction: String = "backward"): DataFrame = {
-    require(Seq("backward", "forward", "nearest").contains(direction),
-      s"asofJoinBroadcast: unknown direction '$direction'")
-    // the driver-side map probes with Java equality — mixed key types
-    // (Integer vs Long) would silently match NOTHING, so fail fast instead
+    // the lookup casts the left key and ts to the right's types; across
+    // types (int vs long keys) a cast can change which rows are equal or
+    // ordered, so mismatched types fail fast instead
     require(left.schema(keyCol).dataType == right.schema(keyCol).dataType,
       s"asofJoinBroadcast: key type mismatch " +
         s"${left.schema(keyCol).dataType} vs ${right.schema(keyCol).dataType}")
     require(left.schema(tsCol).dataType == right.schema(tsCol).dataType,
       s"asofJoinBroadcast: ts type mismatch " +
         s"${left.schema(tsCol).dataType} vs ${right.schema(tsCol).dataType}")
-    val spark = left.sparkSession
-    // exact micros/integral value where possible so `nearest` tie-breaks
-    // identically to asofJoin's long arithmetic even past 2^53
-    def tsLong(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp =>
-        Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
-      case i: java.time.Instant =>
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000)
-      case l: java.lang.Long => Some(l)
-      case i: java.lang.Integer => Some(i.toLong)
-      case s: java.lang.Short => Some(s.toLong)
-      case b: java.lang.Byte => Some(b.toLong)
-      case _ => None
-    }
-    def tsNum(v: Any): Double = v match {
-      case n: Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"asofJoinBroadcast: nearest needs numeric/timestamp ts, got $other")
-    }
-    // true iff |ts - back| <= |fwd - ts| (backward wins ties). With
-    // b <= t <= f both true distances lie in [0, 2^64), so the wrapped
-    // Long difference equals the true distance mod 2^64 and an UNSIGNED
-    // compare is exact — a signed `t - b <= f - t` wraps negative for
-    // extreme mixed-sign ts and picks the far match.
-    def backCloser(ts: Any, back: Any, fwd: Any): Boolean =
-      (tsLong(ts), tsLong(back), tsLong(fwd)) match {
-        case (Some(t), Some(b), Some(f)) =>
-          java.lang.Long.compareUnsigned(t - b, f - t) <= 0
-        case _ => tsNum(ts) - tsNum(back) <= tsNum(fwd) - tsNum(ts)
-      }
-    @inline def cmp(a: Any, b: Any): Int =
-      a.asInstanceOf[Comparable[Any]].compareTo(b)
-    // (key -> (sorted ts array, payload rows in the same order))
-    val table: Map[Any, (Array[Any], Array[Array[Any]])] = right
-      .select(col(keyCol) +: col(tsCol) +: payloadCols.map(col): _*)
-      .collect()
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .groupBy(_.get(0))
-      .map { case (k, rows) =>
-        val sorted = rows.sortWith((a, b) => cmp(a.get(1), b.get(1)) < 0)
-        k -> ((sorted.map(_.get(1)).toArray,
-          sorted.map(r => (2 until r.length).map(r.get).toArray).toArray))
-      }
-    val bc = spark.sparkContext.broadcast(table)
-    val nPay = payloadCols.size
-    val outSchema = org.apache.spark.sql.types.StructType(
-      left.schema.fields ++ payloadCols.map(p =>
-        right.schema(p).copy(name = s"asof_$p", nullable = true)))
-    val dir = direction
-    val kIdx = left.schema.fieldIndex(keyCol)
-    val tIdx = left.schema.fieldIndex(tsCol)
-    val rdd = left.rdd.mapPartitions { it =>
-      val t = bc.value
-      it.map { row =>
-        val k = row.get(kIdx)
-        val ts = row.get(tIdx)
-        val payload: Array[Any] =
-          if (k == null || ts == null) Array.fill[Any](nPay)(null)
-          else t.get(k) match {
-            case None => Array.fill[Any](nPay)(null)
-            case Some((tss, pays)) =>
-              // lo = count of right ts <= left ts (binary search)
-              var lo = 0
-              var hi = tss.length
-              while (lo < hi) {
-                val mid = (lo + hi) >>> 1
-                if (cmp(tss(mid), ts) <= 0) lo = mid + 1 else hi = mid
-              }
-              val back = lo - 1 // last <= ts, -1 if none
-              val fwd = // first >= ts (inclusive: equal ts matches both)
-                if (back >= 0 && cmp(tss(back), ts) == 0) back
-                else if (lo < tss.length) lo
-                else -1
-              val pick = dir match {
-                case "backward" => back
-                case "forward" => fwd
-                case "nearest" =>
-                  if (back < 0) fwd
-                  else if (fwd < 0) back
-                  else if (backCloser(ts, tss(back), tss(fwd))) back
-                  else fwd
-              }
-              if (pick < 0) Array.fill[Any](nPay)(null) else pays(pick)
-          }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq ++ payload)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    val m = graft.functions.AsofLookup.lookupColumn(
+      graft.functions.AsofLookup.table(right, keyCol, tsCol, payloadCols, direction),
+      col(keyCol), col(tsCol))
+    left.select(col("*") +: payloadCols.map(p => m.getField(p).as(s"asof_$p")): _*)
   }
 
   /** The same operator as a native planner node
@@ -448,7 +371,6 @@ object AsofJoin {
   def asofJoinNative(left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, payloadCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.types._
     // The exec merges on 64-bit-backed key/ts reads (getLong). Narrower or
     // differently-backed types get an order-preserving long derivation here
     // in the wrapper — int/date keys need no user-side cast, and the user's
@@ -496,17 +418,12 @@ object AsofJoin {
         s"asofJoinNative: xxhash64 collision among ${row.getLong(0)} " +
           s"distinct string keys — use the window form (asofJoin) instead")
     }
-    val MicrosPerDay = 86400000000L
-    def asLong64(c: org.apache.spark.sql.Column, dt: DataType,
-        forTs: Boolean): Option[org.apache.spark.sql.Column] = dt match {
+    // `family` has admitted only the types matched here
+    def asLong64(c: Column, dt: DataType, forTs: Boolean): Option[Column] = dt match {
       case LongType => None
       case TimestampType if forTs => None // micros-backed: getLong reads it
-      case TimestampType => Some(unix_micros(c))
-      case IntegerType | ShortType | ByteType => Some(c.cast(LongType))
-      case DateType => Some(unix_date(c).cast(LongType) * lit(MicrosPerDay))
-      case StringType if !forTs => Some(xxhash64(c))
-      case other => throw new IllegalArgumentException(
-        s"asofJoinNative: unsupported ${if (forTs) "ts" else "key"} type $other")
+      case StringType => Some(xxhash64(c))
+      case _ => Some(asLong(c, dt))
     }
     val spark = left.sparkSession
     val (lkName, ltName) = ("__asof_lkey", "__asof_lts")

@@ -31,6 +31,13 @@ final class Graph private (val edges: DataFrame, val symmetric: Boolean,
     val kept = edges.filter(cond)
     new Graph(kept, symmetric = false, () => kept.count())
   }
+
+  /** The same edges weighted by `w`, an expression over the edge columns:
+    * a narrow projection over the pinned blocks, not pinned again. Every
+    * edge and its mirror are kept, so `nEdges` and `symmetric` carry over. */
+  def reweight(w: Column): Graph =
+    new Graph(edges.select(col("src"), col("dst"), w.cast("long").as("w")),
+      symmetric, () => nEdges)
 }
 
 object Graph {

@@ -2,8 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
-/** Point-in-interval (range) join.
+import graft.plans.RangeJoinRewrite.WidthMetaKey
+
+/** Point-in-interval and interval-overlap (range) joins.
   *
   * The reference has no relational joins at all (SURVEY §2.6,
   * `src/dask_awkward/__init__.py:1-108`); this is a Spark-native extension
@@ -14,14 +17,18 @@ import org.apache.spark.sql.functions._
   * plans a BroadcastNestedLoopJoin (small right) or a cartesian product —
   * O(|L|x|R|) predicate evaluations, fatal at 100 TB.
   *
-  * [[pointInInterval]] manufactures an equi key instead: pick a bucket width
-  * `w`, explode each interval to the buckets it overlaps
-  * (`sequence(floor(start/w), floor(end/w))`), map each point to its single
-  * bucket (`floor(pt/w)`), and equi-join on the bucket with the residual
-  * `BETWEEN` predicate attached. Every (point, interval) match shares exactly
-  * one bucket, so results are exact with no duplicates. The join is then a
-  * plain shuffled hash / sort-merge join: partial aggregation, AQE skew
-  * splitting, and broadcast promotion all apply as usual.
+  * [[pointInInterval]] and [[intervalOverlap]] issue exactly that bare
+  * inequality join, with the bucket width tagged on one join column
+  * ([[withBucketWidthHint]]). The optimizer rule
+  * [[graft.plans.RangeJoinRewrite]] — installed by
+  * [[graft.plans.GraftExtensions]], which every session from
+  * [[graft.core.SessionConfigs.local]] carries — turns it into an equi-join
+  * on time buckets with the original predicate as the residual: the join
+  * is then a plain shuffled hash / sort-merge join, and partial
+  * aggregation, AQE skew splitting and broadcast promotion all apply as
+  * usual. The bucket scheme lives only in that rule. In a session without
+  * the extensions the same call plans a nested loop: the results are the
+  * same, the cost is quadratic.
   *
   * Scale notes (100 TB design):
   *  - shuffle volume is O(|L| + |R| * avgSpan/w): choose `w` near the median
@@ -45,87 +52,53 @@ object RangeJoin {
     * one session. */
   def withBucketWidthHint(df: DataFrame, colName: String, width: Long): DataFrame = {
     require(width > 0, s"width must be positive, got $width")
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(df.schema(colName).metadata)
-      .putLong(graft.plans.RangeJoinRewrite.WidthMetaKey, width)
-      .build()
-    df.withColumn(colName, df(colName).as(colName, meta))
+    setWidth(df, colName, Some(width))
   }
 
-  /** Exact inner point-in-interval join via bucket equi-keys.
-    *
-    * `pt`, `start`, `end` must be numeric or timestamp columns in the same
-    * unit (timestamps are cast to epoch seconds). Column names must be
-    * distinct across `left` and `right`.
-    */
-  def pointInInterval(left: DataFrame, right: DataFrame,
-      pt: String, start: String, end: String,
-      bucketWidth: Long): DataFrame = {
+  /** `colName` with its width hint set to `width`, or removed for None;
+    * the column's other metadata is kept. */
+  private def setWidth(df: DataFrame, colName: String, width: Option[Long]): DataFrame = {
+    val meta = new MetadataBuilder().withMetadata(df.schema(colName).metadata)
+    width.fold(meta.remove(WidthMetaKey))(meta.putLong(WidthMetaKey, _))
+    df.withColumn(colName, df(colName).as(colName, meta.build()))
+  }
+
+  /** The inequality join `on`, rewritten with `bucketWidth` through a hint
+    * on `hinted` (a `left` column). The hint is stripped from the output,
+    * so it cannot rewrite a later join. */
+  private def bucketed(left: DataFrame, right: DataFrame, hinted: String,
+      bucketWidth: Long)(on: Column): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty, s"left/right column names must be distinct, both have: $overlap")
-    val b = "__rj_bucket"
-    require(!left.columns.contains(b) && !right.columns.contains(b),
-      s"input already has internal column $b")
-
-    def secs(c: Column) = c.cast("double")
-    val lb = left.withColumn(b, floor(secs(col(pt)) / bucketWidth).cast("long"))
-    // Clamp the sequence end to >= its start: a degenerate start>end interval
-    // otherwise explodes to a DESCENDING sequence (Spark default step -1) —
-    // one sentinel row like [epoch, -1] allocates tens of millions of
-    // elements. Clamped it yields a single bucket row, and the residual
-    // BETWEEN (unsatisfiable when start>end) vetoes it — same results.
-    val loB = floor(secs(col(start)) / bucketWidth).cast("long")
-    val hiB = floor(secs(col(end)) / bucketWidth).cast("long")
-    val rb = right.withColumn(b, explode(sequence(loB, greatest(loB, hiB))))
-    lb.join(rb,
-        lb(b) === rb(b) && col(pt) >= col(start) && col(pt) <= col(end),
-        "inner")
-      .drop(b)
+    setWidth(withBucketWidthHint(left, hinted, bucketWidth).join(right, on, "inner"),
+      hinted, None)
   }
 
-  /** Exact inner interval-overlap join (`[lstart,lend] ∩ [rstart,rend] ≠ ∅`)
-    * via the same bucket scheme, both sides exploded. An overlapping pair
-    * shares every bucket in `[max(⌊ls/w⌋,⌊rs/w⌋), min(⌊le/w⌋,⌊re/w⌋)]`, so
-    * the join keeps only the FIRST shared bucket (`b = max(⌊ls/w⌋,⌊rs/w⌋)`)
-    * — exactly one surviving copy per pair, no distinct pass over the
-    * output. Shuffle volume is O(|L|·spanL/w + |R|·spanR/w).
+  /** Exact inner point-in-interval join (`start <= pt <= end`), bucketed
+    * on `pt` with width `bucketWidth`.
+    *
+    * `pt`, `start`, `end` must be numeric, date or timestamp columns in the
+    * same unit; the width is in that unit (seconds for timestamps, days
+    * for dates). Column names must be distinct across `left` and `right`.
+    */
+  def pointInInterval(left: DataFrame, right: DataFrame,
+      pt: String, start: String, end: String,
+      bucketWidth: Long): DataFrame =
+    bucketed(left, right, pt, bucketWidth)(col(pt) >= col(start) && col(pt) <= col(end))
+
+  /** Exact inner interval-overlap join (`[lstart,lend] ∩ [rstart,rend] ≠ ∅`),
+    * both sides bucketed with width `bucketWidth`; every overlapping pair
+    * comes out exactly once, with no distinct pass over the output.
     *
     * Degenerate (start > end) intervals follow the raw predicate, exactly
     * like the SQL form `lstart <= rend AND rstart <= lend` — fuzz-verified
     * in DifferentialFuzzSpec. */
   def intervalOverlap(left: DataFrame, right: DataFrame,
       lstart: String, lend: String, rstart: String, rend: String,
-      bucketWidth: Long): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    require(overlap.isEmpty, s"left/right column names must be distinct, both have: $overlap")
-    val b = "__rj_bucket"
-    require(!left.columns.contains(b) && !right.columns.contains(b),
-      s"input already has internal column $b")
-
-    def secs(c: Column) = c.cast("double")
-    // Clamped like pointInInterval. Degenerate-interval matches survive the
-    // clamp: a pair matching the raw predicate joins on bucket
-    // b = max(⌊ls/w⌋,⌊rs/w⌋), and each side still generates it — if
-    // ⌊rs/w⌋ > ⌊ls/w⌋ then rs <= lend (from the predicate) gives
-    // ⌊rs/w⌋ <= ⌊lend/w⌋ <= the clamped end, symmetrically on the right.
-    def buckets(s: String, e: String) = {
-      val loB = floor(secs(col(s)) / bucketWidth).cast("long")
-      val hiB = floor(secs(col(e)) / bucketWidth).cast("long")
-      explode(sequence(loB, greatest(loB, hiB)))
-    }
-    val lb = left.withColumn(b, buckets(lstart, lend))
-    val rb = right.withColumn(b, buckets(rstart, rend))
-    lb.join(rb,
-        lb(b) === rb(b) &&
-          col(lstart) <= col(rend) && col(rstart) <= col(lend) &&
-          lb(b) === greatest(
-            floor(secs(col(lstart)) / bucketWidth).cast("long"),
-            floor(secs(col(rstart)) / bucketWidth).cast("long")),
-        "inner")
-      .drop(b)
-  }
+      bucketWidth: Long): DataFrame =
+    bucketed(left, right, lstart, bucketWidth)(
+      col(lstart) <= col(rend) && col(rstart) <= col(lend))
 
   /** Small-interval-table path: broadcast nested loop IS the right plan when
     * R fits in a broadcast — one pass over L, zero shuffle, no row

@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DataType, DateType, DoubleType, LongType, NumericType, TimestampType}
 
 /** Optimizer rule: rewrite a bare range join (`pt BETWEEN lo AND hi`, no
-  * equi key) into the bucketed equi-join of
-  * [[graft.operators.RangeJoin]] — automatically.
+  * equi key) into a bucketed equi-join. This is the one place that knows
+  * the bucket scheme: [[graft.operators.RangeJoin]]'s point-in-interval
+  * and interval-overlap joins issue the bare join with a width hint and
+  * leave the bucketing to this rule.
   *
   * Without an equality conjunct Catalyst can only plan a broadcast nested
   * loop or a cartesian product for such a join — O(|L|·|R|) predicate
@@ -20,6 +22,9 @@ import org.apache.spark.sql.types.{DataType, DateType, DoubleType, LongType, Num
   * bit-identical (each matching pair shares exactly one point-bucket; the
   * monotone bucket map means covering holds for strict or non-strict
   * bounds, and malformed `lo > hi` rows are vetoed by the residual).
+  * An interval-overlap join (`aLo <= bHi AND bLo <= aHi`) explodes both
+  * sides and keeps only the first shared bucket, so each overlapping pair
+  * is emitted once.
   *
   * Besides inner joins, LEFT/RIGHT outer and LEFT semi/anti range joins
   * rewrite too when the preserved side is the point side (its rows are

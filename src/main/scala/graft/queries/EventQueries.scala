@@ -341,8 +341,8 @@ object EventQueries {
     },
 
     // scalar as-of lookup: same semantics/oracle as ev_asof through the
-    // codegen'd AsofLookup expression — the batch face of the stream-static
-    // enrichment (streamingAsofEnrich); zero shuffle before the aggregate
+    // AsofLookup kernel — the batch face of the stream-static enrichment
+    // (streamingAsofEnrich); zero shuffle before the aggregate
     "ev_asof_lookup" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -356,10 +356,10 @@ object EventQueries {
           round(sum(col("asof_pval")), 2).as("sum_asof"))
     },
 
-    // broadcast as-of: same semantics/oracle as ev_asof but the dimension-
-    // sized purchase table broadcasts with per-row binary search — the
-    // fact side is never shuffled (plan asserted Exchange-free in
-    // OperatorsSpec)
+    // broadcast as-of: same semantics/oracle as ev_asof, through the same
+    // AsofLookup table and kernel as ev_asof_lookup — the fact side is
+    // never shuffled (plan asserted Exchange-free in OperatorsSpec, one
+    // projection with no RDD in PlanQualitySpec)
     "ev_asof_bcast" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -528,7 +528,8 @@ object EventQueries {
 
     // point-in-interval range join (graft.operators.RangeJoin): every event
     // within ±5 minutes of a high-value purchase. A bare BETWEEN join would
-    // plan as a nested loop; the bucketed equi-key keeps it a hash join.
+    // plan as a nested loop; RangeJoinRewrite's bucket equi-key keeps it a
+    // hash join.
     "ev_range" -> { (s, dir) =>
       val ev = Tables.events(s, dir)
       val intervals = ev
@@ -545,8 +546,8 @@ object EventQueries {
     },
 
     // interval-overlap join (RangeJoin.intervalOverlap): which high-value
-    // purchase windows overlap an error burst window — both sides exploded
-    // to buckets, first-shared-bucket filter keeps exactly one copy per
+    // purchase windows overlap an error burst window — RangeJoinRewrite
+    // explodes both sides to buckets and keeps exactly one copy per
     // overlapping pair (no distinct pass)
     "ev_overlap" -> { (s, dir) =>
       val ev = Tables.events(s, dir)

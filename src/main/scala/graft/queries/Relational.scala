@@ -542,8 +542,7 @@ object Relational {
     // hop): exact min-plus distances over paths of <= 3 edges from the
     // node%97==0 seed set; integer costs replay as a 3-round min-unroll
     "q_sssp" -> { (s, dir) =>
-      val g = Graph(partGraph(s, dir).edges
-        .select(col("src"), col("dst"), expr("1000000 DIV w").as("w")))
+      val g = partGraph(s, dir).reweight(expr("1000000 DIV w"))
       val seeds = g.edges.select(col("src").as("node"))
         .distinct().filter(col("node") % 97 === 0)
       graft.operators.Bfs.relaxDistances(g, seeds, rounds = 3)

@@ -669,27 +669,20 @@ object Streaming {
     * stream: each arriving row gains the latest `payloadCol` from the
     * STATIC `right` frame with right.ts <= row.ts on the same key
     * (backward-inclusive, the asofJoin default). The right side collects
-    * once into a sorted table inside a codegen'd scalar expression
-    * ([[graft.functions.AsofLookup]]), so the stream is never shuffled and
-    * no streaming state accrues — the same zero-shuffle contract as
-    * [[streamingContaminationFlag]]'s broadcast Bloom, and the streaming
-    * face of [[graft.operators.AsofJoin.asofJoinBroadcast]] (whose
-    * rdd-based body cannot run in Structured Streaming). Works identically
-    * on a batch frame (asserted in tests + the ev_asof_lookup oracle).
-    * Right side must be dimension-sized — the broadcast-join bound. */
+    * once into the sorted table of [[graft.functions.AsofLookup]], whose
+    * kernel resolves each row in a projection, so the stream is never
+    * shuffled and no streaming state accrues — the same zero-shuffle
+    * contract as [[streamingContaminationFlag]]'s broadcast Bloom, and the
+    * same table and kernel as
+    * [[graft.operators.AsofJoin.asofJoinBroadcast]]. Works identically on
+    * a batch frame (asserted in tests + the ev_asof_lookup oracle). The
+    * stream's key and ts are cast to the right side's types. Right side
+    * must be dimension-sized — the broadcast-join bound. */
   def streamingAsofEnrich(stream: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, payloadCol: String): DataFrame = {
-    // unit conversion resolved HERE, against the stream's actual schema —
-    // the lookup table stores micros for timestamps, and a silent
-    // seconds-vs-micros mismatch would match nothing
-    val tsLong = stream.schema(tsCol).dataType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(col(tsCol))
-      case _ => col(tsCol).cast("long")
-    }
+      keyCol: String, tsCol: String, payloadCol: String): DataFrame =
     stream.withColumn(s"asof_$payloadCol",
       graft.functions.AsofLookup.asofLookup(right, keyCol, tsCol, payloadCol)(
-        col(keyCol), tsLong))
-  }
+        col(keyCol), col(tsCol)))
 
   /** Back streaming state with RocksDB instead of the default in-JVM-heap
     * HDFS-backed store — the 100 TB knob: state size is bounded by local

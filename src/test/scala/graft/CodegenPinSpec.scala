@@ -47,6 +47,10 @@ class CodegenPinSpec extends SparkSuite with CompiledLocalFrames {
       .toDF("k", "t", "v")
     Seq(
       AsofLookup.asofLookup(asofRight, "k", "t", "v")($"id", lit(7L)),
+      // string keys, a nearest pick and the whole payload struct
+      AsofLookup.lookupColumn(AsofLookup.table(
+          asofRight.withColumn("k", $"k".cast("string")), "k", "t", Seq("v", "t"), "nearest"),
+        $"id".cast("string"), $"id" * 4),
       // a null shingle: xxhash64 hashes it to the seed in both modes
       HashExprs.minHashSignature(array(lit("a"), when($"id" > 1, lit("x")), lit("b")), 4),
       HashExprs.wordNgrams(toks, 2),

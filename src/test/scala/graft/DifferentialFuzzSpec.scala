@@ -515,6 +515,49 @@ class DifferentialFuzzSpec extends SparkSuite with CompiledLocalFrames {
     }
   }
 
+  test("asofJoinBroadcast matches the window form on string keys and typed payloads") {
+    // what no other case feeds the broadcast face: string keys, a string
+    // and a decimal payload, and null payloads that shadow other matches,
+    // in all three directions; the streaming face on the same rows
+    val rows: Gen[(List[(Option[String], Long)],
+        List[(String, Long, Option[String], Option[Long])])] = for {
+      l <- Gen.listOfN(20, Gen.zip(
+        Gen.frequency(9 -> Gen.oneOf("a", "b", "c", "d").map(Option(_)), 1 -> Gen.const(None)),
+        Gen.choose(0L, 50L)))
+      r <- Gen.listOfN(12, Gen.zip(Gen.oneOf("a", "b", "c"), Gen.choose(0L, 50L),
+        Gen.option(Gen.oneOf("x", "yy", "")), Gen.option(Gen.choose(-99999L, 99999L))))
+    } yield (l, r.distinctBy(x => (x._1, x._2)))
+    var s = org.scalacheck.rng.Seed(23L)
+    var done = 0
+    while (done < 6) {
+      rows.apply(Gen.Parameters.default, s).foreach { case (l, r) =>
+        val left = l.zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
+          .toDF("row_id", "k", "t")
+          .select($"row_id", $"k", timestamp_micros($"t").as("ts"))
+        val right = r.toDF("k", "t", "s", "d")
+          .select($"k", timestamp_micros($"t").as("ts"), $"s",
+            ($"d".cast("decimal(15,3)") / 1000).cast("decimal(12,3)").as("d"))
+        def got(df: org.apache.spark.sql.DataFrame) =
+          df.orderBy($"row_id").select($"row_id", $"asof_s", $"asof_d").collect().toSeq
+        for (dir <- Seq("backward", "forward", "nearest")) {
+          val window = graft.operators.AsofJoin
+            .asofJoin(left, right, "k", "ts", Seq("s", "d"), dir)
+          val bcast = graft.operators.AsofJoin
+            .asofJoinBroadcast(left, right, "k", "ts", Seq("s", "d"), dir)
+          assert(bcast.dtypes.toSeq == window.dtypes.toSeq, dir)
+          assert(got(bcast) == got(window), s"[$dir] l=$l r=$r")
+          if (dir == "backward") {
+            val enriched = Seq("s", "d").foldLeft(left)((df, p) =>
+              graft.streaming.Streaming.streamingAsofEnrich(df, right, "k", "ts", p))
+            assert(got(enriched) == got(window), s"[streaming] l=$l r=$r")
+          }
+        }
+        done += 1
+      }
+      s = s.next
+    }
+  }
+
   test("bloomAntiJoin matches left_anti on random key sets") {
     val sets: Gen[(List[Long], List[Long], Double)] = for {
       l <- Gen.listOfN(60, Gen.choose(0L, 40L))

@@ -521,6 +521,12 @@ class GraphSpec extends SparkSuite {
       val deg = g.edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       assert(jobs(KCore.kCore(g, 1)) ==
         jobs(Broadcasts.pinCounted(deg, col("deg") < 1)._1))
+      // a re-weighted graph is a projection over the same pinned blocks:
+      // zero relax rounds cost the seed pin alone, with either weight
+      def costs = g.reweight(expr("1000000 DIV w"))
+      assert(costs.symmetric && costs.nEdges == g.nEdges)
+      assert(jobs(Bfs.relaxDistances(costs, seeds, rounds = 0)) ==
+        jobs(Bfs.relaxDistances(g, seeds, rounds = 0)))
     } finally {
       meter.detach()
       spark.sharedState.cacheManager.clearCache()

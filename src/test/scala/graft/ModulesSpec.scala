@@ -461,7 +461,7 @@ class ModulesSpec extends SparkSuite with CompiledLocalFrames {
         purchases, "user_id", "ts", "pval"), "t_asof_enrich")
       .select($"event_id", $"asof_pval")
       .as[(Long, Option[Double])].collect().toMap
-    // batch reference: the rdd-based broadcast asof join
+    // batch reference: the broadcast asof join, the batch face of the same kernel
     val batch = graft.operators.AsofJoin.asofJoinBroadcast(
         ev.select($"event_id", $"user_id", $"ts"),
         purchases, "user_id", "ts", Seq("pval"))

@@ -225,13 +225,34 @@ class OperatorsSpec extends SparkSuite with CompiledLocalFrames {
       l, purchases, "user_id", "ts", Seq("pval"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(2000))
-    // mixed key types would probe the driver map with Java equality and
-    // silently match nothing — rejected up front
+    // mixed key types would be cast to the right's type and could match
+    // by a different equality — rejected up front
     intercept[IllegalArgumentException] {
       graft.operators.AsofJoin.asofJoinBroadcast(
         l.withColumn("user_id", $"user_id".cast("int")),
         purchases, "user_id", "ts", Seq("pval"))
     }
+  }
+
+  test("asof on a DATE ts: nearest and tolerance measure the distance in micros") {
+    // a date ts is days since the epoch in micros, as in asofJoinNative;
+    // row 3 sits 11 days from both neighbours, a tie that goes backward
+    val l = Seq((0L, "2024-01-05"), (1L, "2024-01-10"), (2L, "2024-01-20"),
+        (3L, "2024-01-19")).toDF("row_id", "d")
+      .select($"row_id", lit(1L).as("k"), to_date($"d").as("ts"))
+    val r = Seq(("2024-01-01", 1.0), ("2024-01-08", 2.0), ("2024-01-30", 3.0))
+      .toDF("d", "v").select(lit(1L).as("k"), to_date($"d").as("ts"), $"v")
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select($"row_id", $"asof_v").as[(Long, Option[Double])].collect().toMap
+    val near = Map(0L -> Some(2.0), 1L -> Some(2.0), 2L -> Some(3.0), 3L -> Some(2.0))
+    assert(got(graft.operators.AsofJoin.asofJoin(l, r, "k", "ts", Seq("v"), "nearest")) == near)
+    assert(got(graft.operators.AsofJoin.asofJoinBroadcast(l, r, "k", "ts", Seq("v"),
+      "nearest")) == near)
+    val threeDays = 3L * 86400L * 1000000L
+    assert(got(graft.operators.AsofJoin.asofJoinTolerance(l, r, "k", "ts", Seq("v"),
+      threeDays)) == Map(0L -> None, 1L -> Some(2.0), 2L -> None, 3L -> None))
+    assert(got(graft.operators.AsofJoin.asofJoinTolerance(l, r, "k", "ts", Seq("v"),
+      threeDays, "nearest")) == Map(0L -> Some(2.0), 1L -> Some(2.0), 2L -> None, 3L -> None))
   }
 
   test("native asof join: inclusive tie, strictly-later right row ignored") {

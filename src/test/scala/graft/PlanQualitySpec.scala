@@ -763,6 +763,37 @@ class PlanQualitySpec extends SparkSuite {
     assert(!opt2.contains("/ 7.0"), opt2.take(1200))
   }
 
+  test("ev_range and ev_overlap bucket through RangeJoinRewrite") {
+    // RangeJoin issues the bare inequality join with a width hint and the
+    // rule does the bucketing: its bucket attributes are in the plan
+    for (q <- Seq("ev_range", "ev_overlap")) {
+      val opt = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      assert(opt.flatMap(_.output).exists(_.name.startsWith("__graft_rj_")),
+        s"$q was not bucketed by RangeJoinRewrite:\n${opt.toString.take(2000)}")
+    }
+  }
+
+  test("ev_asof_bcast: one projection over the scan, no RDD, one exchange") {
+    // the broadcast as-of is the AsofLookup kernel in a projection: no
+    // round trip through an RDD, and the aggregate's exchange is the only
+    // one — nothing below it shuffles the fact side
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object H extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("ev_asof_bcast")(spark, dir)
+    df.collect() // AQE final plan
+    val plan = df.queryExecution.executedPlan
+    val text = plan.toString
+    assert(H.collect(plan) { case r: RDDScanExec => r }.isEmpty &&
+      !text.contains("ExistingRDD") && !text.contains("LogicalRDD"), text.take(3000))
+    val exchanges = H.collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, text.take(3000))
+    assert(H.collect(exchanges.head.child) { case a: HashAggregateExec => a }.nonEmpty,
+      s"the one exchange is not the aggregate's:\n${text.take(3000)}")
+  }
+
   test("RangeJoinRewrite: null points and null bounds match the naive join") {
     import spark.implicits._
     val pts = Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)))

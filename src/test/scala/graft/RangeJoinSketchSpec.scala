@@ -110,6 +110,19 @@ class RangeJoinSketchSpec extends SparkSuite {
       RangeJoin.pointInInterval(pts, ivs.withColumnRenamed("id", "iid"), "t", "lo", "hi", 0L))
   }
 
+  test("pointInInterval strips its width hint, so a later range join stays bare") {
+    val pts = spark.range(20).select($"id".as("pt"))
+    val ivs = spark.range(4).select(($"id" * 5).as("lo"), ($"id" * 5 + 4).as("hi"))
+    val j = RangeJoin.pointInInterval(pts, ivs, "pt", "lo", "hi", 5L)
+    assert(!j.schema("pt").metadata.contains(graft.plans.RangeJoinRewrite.WidthMetaKey))
+    val ivs2 = spark.range(3).select(($"id" * 7).as("lo2"), ($"id" * 7 + 6).as("hi2"))
+    val later = j.join(ivs2, $"pt" >= $"lo2" && $"pt" <= $"hi2")
+    val opt = later.queryExecution.optimizedPlan
+    assert(opt.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }
+      .size == 1, s"only the hinted join is bucketed:\n${opt.toString.take(2000)}")
+    assert(later.count() == 20L)
+  }
+
   test("hll estimate is within 2% of exact and per-group sketches union to the global") {
     val li = graft.core.Tables.lineitem(spark, dir)
     val exact = li.select(countDistinct($"l_partkey")).as[Long].head()
