@@ -66,10 +66,17 @@ object Broadcasts {
     * reads 0, not null. The Observation is unnamed, so repeated calls in
     * one session cannot collide on a name. */
   def pinCounted(df: DataFrame, where: Column = lit(true)): (DataFrame, Long) = {
+    val (pinned, Seq(n)) = pinCounts(df, Seq(where))
+    (pinned, n)
+  }
+
+  /** [[pinCounted]] with one count per condition in `wheres`, all
+    * observed on the one pinning job. */
+  private[graft] def pinCounts(df: DataFrame, wheres: Seq[Column]): (DataFrame, Seq[Long]) = {
     val obs = Observation()
-    val pinned = df.observe(obs, count(when(where, lit(1))).as("n"))
-      .localCheckpoint()
-    (pinned, obs.get("n").asInstanceOf[Long])
+    val counts = wheres.indices.map(i => count(when(wheres(i), lit(1))).as(s"n$i"))
+    val pinned = df.observe(obs, counts.head, counts.tail: _*).localCheckpoint()
+    (pinned, wheres.indices.map(i => obs.get(s"n$i").asInstanceOf[Long]))
   }
 
   /** How a frame of `rows` rows of `schema` enters a join as its build

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -43,8 +44,9 @@ object Kernels {
     *    Any other expression passes every child as an object, null for SQL
     *    null, and the kernel decides.
     *  - An Int, Long or Boolean constant is a Java literal; a DataType, an
-    *    Ordering, an array, an [[AsofLookup.Table]] or a Normalizer.Form is
-    *    a reference object.
+    *    Ordering, an array, an [[AsofLookup.Table]], a Normalizer.Form or a
+    *    Broadcast handle is a reference object (a broadcast value reaches
+    *    each task through its handle, not as a copy in the task).
     *  - A kernel returning a primitive is assigned without boxing; one
     *    returning an object returns null for SQL null.
     */
@@ -64,6 +66,7 @@ object Kernels {
       case o: Ordering[_] => ctx.addReferenceObj("kernelOrd", o, classOf[Ordering[_]].getName)
       case o @ (_: Array[_] | _: AsofLookup.Table | _: java.text.Normalizer.Form) =>
         ctx.addReferenceObj("kernelRef", o)
+      case b: Broadcast[_] => ctx.addReferenceObj("kernelBroadcast", b, classOf[Broadcast[_]].getName)
     }
     val t = CodeGenerator.javaType(e.dataType)
     val invoke = s"$method(${args.mkString(", ")})"

@@ -33,9 +33,10 @@ import graft.core.Broadcasts
   * survivor frame once peeling has bitten); the edge frame is read as
   * pinned blocks every round and never rewritten. The per-round driver
   * action is ONE job, the pin of the next degree frame; the dead-node
-  * count that sizes the probe and decides convergence is an observe()
-  * metric of that same job ([[graft.core.Broadcasts.pinCounted]]), not
-  * a separate count job. Rounds are bounded by the peel depth (the
+  * count that sizes the probe and decides convergence, and the row count
+  * that ends the peel once no node survives, are observe() metrics of
+  * that same job ([[graft.core.Broadcasts.pinCounts]]), not separate
+  * count jobs. Rounds are bounded by the peel depth (the
   * graph's degeneracy ordering length), O(log n) on real-world graphs;
   * `maxRounds` converts a pathological input (a path graph peels one
   * node per round) into an explicit error instead of an unbounded loop.
@@ -88,13 +89,17 @@ object KCore {
         .distinct()
         .localCheckpoint()
     // each pin of the degree frame also counts its dead nodes (degree
-    // below k) — the next round's probe size and the convergence test
-    def pinDeg(d: DataFrame): (DataFrame, Long) =
-      Broadcasts.pinCounted(d, col("deg") < k)
-    var (deg, nDead) =
+    // below k) — the next round's probe size and the convergence test —
+    // and its rows: when every row is dead no node survives, and the
+    // loop ends without peeling an empty survivor side
+    def pinDeg(d: DataFrame): (DataFrame, Long, Long) = {
+      val (pinned, Seq(dead, rows)) = Broadcasts.pinCounts(d, Seq(col("deg") < k, lit(true)))
+      (pinned, dead, rows)
+    }
+    var (deg, nDead, nRows) =
       pinDeg(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     var rounds = 1
-    while (nDead > 0L) {
+    while (nDead > 0L && nDead < nRows) {
       if (rounds >= maxRounds)
         throw new IllegalStateException(
           s"kCore(k=$k) did not converge in $maxRounds peel rounds — " +
@@ -114,12 +119,13 @@ object KCore {
         if (Broadcasts.fits(nDead, deadDst.schema)) broadcast(deadDst) else deadDst
       val dec = e.join(probe, "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      val (next, n) = pinDeg(deg.filter(col("deg") >= k)
+      val (next, dead, rows) = pinDeg(deg.filter(col("deg") >= k)
         .join(dec, Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("d"), lit(0L))).as("deg")))
-      deg = next; nDead = n
+      deg = next; nDead = dead; nRows = rows
     }
-    deg
+    // every remaining node is dead: the k-core is empty
+    if (nDead > 0L) deg.filter(col("deg") >= k) else deg
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Broadcasts
+import graft.functions.LinkRank
 
 /** Neighborhood-overlap link prediction over an undirected graph —
   * the classic common-neighbors family (Liben-Nowell & Kleinberg 2003;
@@ -23,8 +24,9 @@ import graft.core.Broadcasts
   * byte-identical subtrees, so the edge list shuffles on the wedge
   * center ONCE and ReuseExchange serves the probe side — the same
   * single-exchange discipline as ev_seqsim. [[LinkPredict.topForQueries]]
-  * instead broadcasts the query adjacency into the edge list (see its
-  * scaladoc), so its wedges are never shuffled.
+  * never shuffles its wedges: a graph under its table gate is ranked by a
+  * compiled kernel over a broadcast CSR table, and a larger one
+  * broadcasts the query adjacency into the edge list (see its scaladoc).
   *
   * Scale guard: a wedge center of degree d contributes d² candidate
   * rows — quadratic hub blowup, the same failure mode as
@@ -92,45 +94,79 @@ object LinkPredict {
     * cut (measured: the sf0.1 part co-occurrence graph has avg degree
     * ~120 and 298M wedges, so all-pairs at 10× is ~3B aggregate rows).
     * The query-set form bounds candidate generation by the QUERY
-    * adjacency instead: Σ_{u∈Q} Σ_{w∈N(u)} deg(w) rows — per-query
+    * adjacency instead: Σ_{u∈Q} Σ_{w∈N(u)} deg(w) wedges — per-query
     * degree-squared cost, independent of how many OTHER nodes exist,
     * the sim_topk discipline.
     *
-    * Plan (only k candidates per query cross the network — the
-    * REPOSE / incremental-top-k placement):
-    *  1. Pin the query adjacency (cw, u, cdeg) = edges ⋈ distinct
-    *     queries on src ⋈ center degree, with the hubCap filter on cdeg
-    *     (exact on one side: both wedge sides share the center). Its
-    *     row count is an observe() metric of the pinning job.
-    *  2. If the adjacency fits the byte gate ([[graft.core.Broadcasts]]),
-    *     hash-partition the edge list by src (= the far endpoint v) and
-    *     broadcast-join the adjacency on cw: every wedge of a pair (u, v)
-    *     lands in v's task, so the (u, v) aggregate runs with NO
-    *     exchange (HashPartitioning(v) satisfies the aggregate's
-    *     clustering on (u, v)) — the wedge stream is never shuffled.
-    *     Above the gate (unbounded hub queries with hubCap == 0 at
-    *     100 TB) the adjacency meets the center-keyed edge list in a
-    *     planner-chosen, spillable join and the pairs shuffle to their
-    *     aggregate.
-    *  3. The du/dv attaches broadcast under the degree gate, which keeps
-    *     the partitioning.
-    *  4. Rank with [[GroupTopK.smallestK]] grouped by u: map-side
-    *     bounded heaps, so at most k rows per (partition, u) reach the
-    *     shuffle, instead of every scored pair shuffling to a per-u
-    *     window sort.
+    * Three plans, picked in this order (only k candidates per query ever
+    * cross the network — the REPOSE / incremental-top-k placement):
+    *  1. TABLE: the edge list fits the broadcast byte budget at
+    *     [[graft.functions.LinkRank.bytesPerEdge]] per edge, decided from
+    *     `g.nEdges` before anything is collected. The edges are collected
+    *     once into a CSR table of primitive arrays and broadcast, and one
+    *     compiled kernel ([[graft.functions.LinkRank.rank]]) ranks each
+    *     distinct query node in place: wedges, pair counts, degrees and
+    *     the bounded heap never become rows, and the query set is the
+    *     only thing shuffled.
+    *  2. BROADCAST ADJACENCY: otherwise pin the query adjacency (cw, u,
+    *     cdeg) = edges ⋈ distinct queries on src ⋈ center degree, with
+    *     the hubCap filter on cdeg (exact on one side: both wedge sides
+    *     share the center); its row count is an observe() metric of the
+    *     pinning job. If it fits the byte gate
+    *     ([[graft.core.Broadcasts]]), hash-partition the edge list by src
+    *     (= the far endpoint v) and broadcast-join the adjacency on cw:
+    *     every wedge of a pair (u, v) lands in v's task, so the (u, v)
+    *     aggregate runs with NO exchange (HashPartitioning(v) satisfies
+    *     the aggregate's clustering on (u, v)).
+    *  3. WEDGE JOIN: above both gates (a graph that does not fit in
+    *     driver memory, with unbounded hub queries at hubCap == 0 — the
+    *     100 TB posture) the adjacency meets the center-keyed edge list
+    *     in a planner-chosen, spillable join and the pairs shuffle to
+    *     their aggregate.
+    * In plans 2 and 3 the du/dv attaches broadcast under the degree
+    * gate, which keeps the partitioning, and [[GroupTopK.smallestK]]
+    * ranks grouped by u: map-side bounded heaps, so at most k rows per
+    * (partition, u) reach the shuffle, instead of every scored pair
+    * shuffling to a per-u window sort.
+    *
+    * All three read an edge list that breaks the symmetric contract the
+    * same way: N(u) is u's out-edges, a center's candidates are the
+    * sources of its in-edges (duplicates counted each time), every
+    * degree is an out-degree, and a center with no out-edge contributes
+    * nothing.
     *
     * Returns (u, rank, v, inter, uni, jac_ppm, ra_1e9), rank 1-based
     * (Int) by (jac_ppm DESC, v). */
   def topForQueries(g: Graph, queries: DataFrame, kPerQuery: Int,
       hubCap: Int = 0): DataFrame =
-    rankForQueries(g, queries, kPerQuery, hubCap, Broadcasts.defaultBudgetBytes)
+    rankForQueries(g, queries, kPerQuery, hubCap, Broadcasts.defaultBudgetBytes,
+      Broadcasts.defaultBudgetBytes)
 
-  /** [[topForQueries]] with the adjacency gate's byte budget as a
-    * parameter: a budget of 0 sends any non-empty adjacency down the
-    * above-gate wedge path. */
+  /** [[topForQueries]] with the two gates' byte budgets as parameters: a
+    * table budget of 0 sends any non-empty graph to the relational plans,
+    * and an adjacency budget of 0 then sends any non-empty adjacency down
+    * the above-gate wedge path. */
   private[graft] def rankForQueries(g: Graph, queries: DataFrame,
-      kPerQuery: Int, hubCap: Int, adjBudgetBytes: Long): DataFrame = {
+      kPerQuery: Int, hubCap: Int, adjBudgetBytes: Long,
+      tableBudgetBytes: Long): DataFrame = {
     require(kPerQuery >= 1, s"kPerQuery must be >= 1, got $kPerQuery")
+    val top =
+      if (g.nEdges * LinkRank.bytesPerEdge <= tableBudgetBytes) {
+        val table = LinkRank.table(g.edges, g.symmetric)
+        queries.select(col("node").cast("long").as("u")).distinct()
+          .select(col("u"), LinkRank.rankColumn(table, col("u"), kPerQuery, hubCap).as("top"))
+      }
+      else relationalTop(g, queries, kPerQuery, hubCap, adjBudgetBytes)
+    top.select(col("u"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("u"), (col("pos") + 1).as("rank"), col("t.v").as("v"),
+        col("t.inter").as("inter"), col("t.uni").as("uni"),
+        col("t.jac_ppm").as("jac_ppm"), col("t.ra_1e9").as("ra_1e9"))
+  }
+
+  /** Plans 2 and 3 of [[topForQueries]]: (u, top), the ranked candidate
+    * structs of each query node u. */
+  private def relationalTop(g: Graph, queries: DataFrame, kPerQuery: Int,
+      hubCap: Int, adjBudgetBytes: Long): DataFrame = {
     val e = g.edges
     val (deg, attach) = degrees(e)
 
@@ -165,10 +201,6 @@ object LinkPredict {
       kPerQuery)
     scored(common, deg, attach)
       .groupBy(col("u")).agg(best.as("top"))
-      .select(col("u"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("u"), (col("pos") + 1).as("rank"), col("t.v").as("v"),
-        col("t.inter").as("inter"), col("t.uni").as("uni"),
-        col("t.jac_ppm").as("jac_ppm"), col("t.ra_1e9").as("ra_1e9"))
   }
 
   /** The pinned degree frame (node, deg) and how to attach a slice of

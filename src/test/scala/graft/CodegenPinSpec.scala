@@ -51,6 +51,11 @@ class CodegenPinSpec extends SparkSuite with CompiledLocalFrames {
       AsofLookup.lookupColumn(AsofLookup.table(
           asofRight.withColumn("k", $"k".cast("string")), "k", "t", Seq("v", "t"), "nearest"),
         $"id".cast("string"), $"id" * 4),
+      // link ranking over a broadcast table: ids 1 and 2 share the center
+      // 5 in a directed list with a duplicate edge; id 3 is absent
+      LinkRank.rankColumn(LinkRank.table(
+          Seq((1L, 5L), (2L, 5L), (2L, 5L), (5L, 1L), (5L, 2L), (1L, 2L)).toDF("src", "dst"),
+          symmetric = false), $"id", 2, 0),
       // a null shingle: xxhash64 hashes it to the seed in both modes
       HashExprs.minHashSignature(array(lit("a"), when($"id" > 1, lit("x")), lit("b")), 4),
       HashExprs.wordNgrams(toks, 2),

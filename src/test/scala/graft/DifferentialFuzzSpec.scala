@@ -954,6 +954,47 @@ class DifferentialFuzzSpec extends SparkSuite with CompiledLocalFrames {
     }
   }
 
+  test("linkPredict: the table kernel ranks as both relational plans on random graphs") {
+    import graft.core.Broadcasts.defaultBudgetBytes
+    import graft.operators.{Graph, LinkPredict}
+    val rnd = new scala.util.Random(31L)
+    val queries = Seq(Some(0L), Some(1L), Some(2L), Some(3L), Some(5L), Some(5L),
+      Some(8L), Some(11L), Some(999L), None).toDF("node")
+    // (graph, table budget, adjacency budget, hubCap, k): rows by value, or
+    // the error class when the run fails
+    def run(g: Graph, tableBudget: Long, adjBudget: Long, hubCap: Int, k: Int) =
+      scala.util.Try(LinkPredict.rankForQueries(g, queries, k, hubCap, adjBudget, tableBudget)
+        .as[(Long, Int, Long, Long, Long, Long, Long)].collect().toSet)
+        .toEither.left.map(_ => "error")
+    var ranked = 0
+    for (trial <- 1 to 4) {
+      val nodes = 6 + rnd.nextInt(10)
+      val pairs = Seq.fill(15 + rnd.nextInt(30))(
+        (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+      // odd trials: a symmetric distinct list (the Graph.symmetric claim);
+      // even trials: a directed list with duplicates and self-loops
+      val g =
+        if (trial % 2 == 1) Graph.coOccurrence(pairs.zipWithIndex
+          .flatMap { case ((a, b), i) => Seq((i.toLong, a), (i.toLong, b)) }
+          .toDF("g", "item"), "g", "item")
+        else Graph((pairs ++ pairs.take(6)).toDF("src", "dst"))
+      assert(g.symmetric == (trial % 2 == 1))
+      for (hubCap <- Seq(0, 2, 5)) {
+        val viaBroadcast = run(g, 0L, defaultBudgetBytes, hubCap, 10)
+        assert(viaBroadcast == run(g, 0L, 0L, hubCap, 10),
+          s"trial $trial hubCap $hubCap: the two relational plans differ")
+        for (k <- Seq(1, 3, 10); (mode, confs) <- codegenModes) {
+          // ranks are a total order, so the top k are the k-prefix of the top 10
+          val want = viaBroadcast.map(_.filter(_._2 <= k))
+          assert(withConfs(confs)(run(g, defaultBudgetBytes, defaultBudgetBytes, hubCap, k)) == want,
+            s"trial $trial hubCap $hubCap k $k $mode")
+        }
+        viaBroadcast.foreach(r => if (r.nonEmpty) ranked += 1)
+      }
+    }
+    assert(ranked >= 8, s"only $ranked of 12 cases ranked any candidate")
+  }
+
   test("kCore matches the brute-force peel on random graphs") {
     import graft.operators.{Graph, KCore}
     val rnd = new scala.util.Random(29L)

@@ -371,11 +371,15 @@ class GraphSpec extends SparkSuite {
       spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")
     val queries = edges.edges.select($"src".as("node")).distinct()
       .filter($"node" % 7 === 0)
-    // budget 0 sends the non-empty adjacency down the wedge join
-    def run(budget: Long) = LinkPredict.rankForQueries(edges, queries, 5,
-      hubCap = 0, adjBudgetBytes = budget)
-    val viaBroadcast = run(graft.core.Broadcasts.defaultBudgetBytes)
-    val viaWedgeJoin = run(0L)
+    // a table budget of 0 sends the graph to the relational plans, and an
+    // adjacency budget of 0 then sends the non-empty adjacency down the
+    // wedge join
+    val budget = graft.core.Broadcasts.defaultBudgetBytes
+    def run(adjBudget: Long, tableBudget: Long) = LinkPredict.rankForQueries(
+      edges, queries, 5, hubCap = 0, adjBudgetBytes = adjBudget, tableBudgetBytes = tableBudget)
+    val viaTable = run(budget, budget)
+    val viaBroadcast = run(budget, 0L)
+    val viaWedgeJoin = run(0L, 0L)
     // the two paths place the edge list differently: keyed by the far
     // endpoint under the gate, by the wedge center above it
     def repartitionKeys(df: org.apache.spark.sql.DataFrame) =
@@ -384,9 +388,39 @@ class GraphSpec extends SparkSuite {
         .map(_.group(1)).toSet
     assert(repartitionKeys(viaBroadcast) == Set("src"))
     assert(repartitionKeys(viaWedgeJoin) == Set("dst"))
+    // the kernel path repartitions nothing
+    assert(repartitionKeys(viaTable).isEmpty)
     val a = viaBroadcast.collect().map(_.toSeq).toSet
     assert(a.nonEmpty)
     assert(a == viaWedgeJoin.collect().map(_.toSeq).toSet)
+    assert(a == viaTable.collect().map(_.toSeq).toSet)
+  }
+
+  test("cost: linkPredict under the table gate shuffles only the query set and joins nothing") {
+    // a re-added edge pin, degree join or wedge join fails here: the
+    // kernel plan's one exchange is the distinct over the query nodes,
+    // and the run costs the table collect plus that exchange's jobs
+    import graft.operators.LinkPredict
+    import graft.tools.Profile
+    val edges = Graph.coOccurrence(
+      spark.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey", "l_partkey")
+    val queries = (0L until 200L by 7L).toDF("node")
+    val df = LinkPredict.topForQueries(edges, queries, kPerQuery = 5)
+    assert(df.count() > 0L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), s"the kernel path plans a join:\n${plan.take(3000)}")
+    val keys = """hashpartitioning\(([^)]*)\)""".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(keys.nonEmpty && keys.forall(_.matches("""u#\d+L?, \d+""")),
+      s"an exchange keyed on the edge list: $keys\n${plan.take(3000)}")
+    val meter = new Profile.Meter(spark)
+    meter.attach()
+    try {
+      def jobs(query: => org.apache.spark.sql.DataFrame): Int = {
+        meter.measureQuery(query) // warm
+        meter.measureQuery(query)._2.jobs
+      }
+      assert(jobs(LinkPredict.topForQueries(edges, queries, kPerQuery = 5)) == 3)
+    } finally meter.detach()
   }
 
   test("linkPredict: the wedge join's probe side is a reused exchange") {

@@ -631,12 +631,27 @@ class PlanQualitySpec extends SparkSuite {
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val df = SparkEntry.queries("q_linkpred_prec")(spark, dir)
-    df.collect() // the final adaptive plan
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
-      case p => p
+    import graft.operators.{Graph, LinkPredict}
+    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect() // the final adaptive plan
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
     }
+    // the graded graph fits the table gate: one kernel ranks each query,
+    // so no wedge column reaches the plan
+    val graded = finalPlan(SparkEntry.queries("q_linkpred_prec")(spark, dir)).toString
+    assert(graded.contains("link_rank") && !graded.contains("cw#"),
+      s"the graded query does not rank in the kernel:\n${graded.take(3000)}")
+    // the same train graph and query set with the table gate closed: the
+    // broadcast-adjacency plan
+    val all = Graph.coOccurrence(graft.core.Tables.lineitem(spark, dir), "l_orderkey", "l_partkey")
+    val hold = expr("pmod(least(src, dst) * 31 + greatest(src, dst), 13) = 0")
+    val queries = all.edges.filter(hold && col("src") < col("dst"))
+      .select(col("src").as("node")).distinct().filter(col("node") % 7 === 0)
+    val root = finalPlan(LinkPredict.rankForQueries(all.filter(!hold), queries, 10,
+      hubCap = 0, adjBudgetBytes = graft.core.Broadcasts.defaultBudgetBytes, tableBudgetBytes = 0L))
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case s: QueryStageExec => nodes(s.plan)
       case _ => p.children.flatMap(nodes)
