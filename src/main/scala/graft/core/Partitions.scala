@@ -90,74 +90,121 @@ object Partitions {
     df.sparkSession.createDataFrame(placed, schema).drop("__ri")
   }
 
-  /** Exact global row ordinal in `orderCol` order — the reference's
-    * `divisions` made explicit (known divisions let it resolve `a[5]` /
-    * `a[10:2000]` to a partition + local index, `core.py:1347-1489`).
-    * Spark has no ordered-partition metadata, so the ordinal is computed
-    * with the same two-level prefix scan as
-    * [[graft.text.packSequences]] (count 1 per row): bucket-local window
-    * in parallel, one tiny per-bucket offset pass — never a corpus-wide
-    * single-task Window. Adds `outCol` (0-based). Requires distinct
-    * NUMERIC `orderCol` values (the scan buckets by value range; ties
-    * would make the ordinal order-dependent). */
-  /** Exact 1-based GLOBAL rank by an arbitrary (key, id) sort — the
-    * generalization of [[withRowIndex]] to non-integral keys: range-
-    * partition by (key, id), rank locally per partition, add bounded
-    * per-partition offsets (one count row per partition; the only
-    * unpartitioned window runs over that bounded frame). No corpus-wide
-    * single-task sort; the rank is partitioning-independent — partition
-    * boundaries only move where offsets split, never any row's rank.
-    * `idCol` must be distinct (the tiebreak that makes the order total).
-    * Returns (idCol, k, outCol). */
-  def globalRankBy(df: DataFrame, key: org.apache.spark.sql.Column,
-      idCol: String, outCol: String = "rn"): DataFrame = {
+  /** Inclusive running sums in a total order, computed without a
+    * single-task window: the one two-level prefix scan behind the
+    * reference's cumulative divisions (`core.py:979-1066`,
+    * `core.py:1347-1489`) and every exact cumulative report. For each
+    * column `c` in `sums` it adds `cum_c`, the sum of `c` over the rows
+    * at or before this one in `order` within its `groups`, and `tot_c`,
+    * the group total. Nulls are skipped as a window sum skips them
+    * (`cum_c` is null while every value so far is null), and a null
+    * group key is a group like any other. Ties in `order` get
+    * `row_number` semantics: make the order total when the sums must
+    * not depend on how ties fall.
+    *
+    * Scale shape: range-partition on `groups ++ order`, sum locally per
+    * (partition, group) with a ROWS frame, and add offsets taken from
+    * the per-(partition, group) totals. That frame has at most one row
+    * per partition and group, so the windows that are not partitioned by
+    * the range partition run over a bounded frame. A hot group spans
+    * range partitions, and no sum depends on where the boundaries fall.
+    *
+    * Two choices carry the correctness and the speed:
+    *  - the range-tagged frame is pinned (`localCheckpoint`) before the
+    *    local sums and the offsets both read it. The offsets join back on
+    *    the partition id, which lines up only when both branches read the
+    *    SAME physical partitioning. Without the pin that rests on
+    *    ReuseExchange, and column pruning or AQE re-planning can give the
+    *    branches independently sampled bounds. The pin writes the bytes
+    *    the range exchange already wrote: one local copy, not a second
+    *    corpus pass;
+    *  - the range exchange takes the explicit `numShufflePartitions`
+    *    count. A bare `repartitionByRange` lets AQE coalesce by output
+    *    bytes, which serializes a narrow frame and everything downstream
+    *    of the pin (measured at sf0.1: `r_mad` ran 3-wide, and the
+    *    configured width cut the stage wall clock ~4x).
+    *
+    * Returns `df`'s columns plus `cum_c` and `tot_c` for each `c`. */
+  def runningSums(df: DataFrame, order: Seq[Column], sums: Seq[String],
+      groups: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // localCheckpoint freezes the sampled range bounds: withLrn and offs
-    // join on pid, which is only consistent when both branches read the
-    // SAME physical partitioning — without the materialization that
-    // rests on ReuseExchange (AQE replanning / pruning divergence could
-    // re-sample bounds per branch and misalign every offset). The
-    // checkpointed frame is the minimal (id, k) pair — the bytes the
-    // range exchange already writes — so this is one shuffle-equivalent
-    // local write, not a second corpus pass.
-    val tagged = df.select(col(idCol).as("id"), key.as("k"))
-      .repartitionByRange(col("k"), col("id"))
-      .withColumn("pid", spark_partition_id())
+    val pid = "__pid"
+    val added = sums.flatMap(c => Seq(s"cum_$c", s"tot_$c"))
+    require(sums.nonEmpty, "runningSums: no column to sum")
+    require(!(pid +: added).exists(df.columns.contains),
+      s"runningSums: input already has one of $pid, ${added.mkString(", ")}")
+    val keys = pid +: groups
+    val tagged = df.repartitionByRange(
+        df.sparkSession.sessionState.conf.numShufflePartitions,
+        groups.map(col) ++ order: _*)
+      .withColumn(pid, spark_partition_id())
       .localCheckpoint()
-    val withLrn = tagged.withColumn("lrn",
-      row_number().over(Window.partitionBy("pid").orderBy("k", "id")))
-    val offs = withLrn.groupBy(col("pid")).agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("pid"), col("off"))
-    withLrn.join(broadcast(offs), "pid")
-      .select(col("id").as(idCol), col("k"),
-        (col("off") + col("lrn")).as(outCol))
+    val local = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val loc = tagged.select(col("*") +:
+      sums.map(c => sum(col(c)).over(local).as(s"__loc_$c")): _*)
+    // the prefix and the total share one spec: they plan as one Window
+    val byPid = Window.partitionBy(groups.map(col): _*).orderBy(pid)
+    val before = byPid.rowsBetween(Window.unboundedPreceding, -1)
+    val all = byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val parts = sums.map(c => sum(col(c)).as(s"__n_$c"))
+    val offs = tagged.groupBy(keys.map(col): _*).agg(parts.head, parts.tail: _*)
+      .select(keys.map(k => col(k).as(s"__o$k")) ++ sums.flatMap(c => Seq(
+        sum(col(s"__n_$c")).over(before).as(s"__off_$c"),
+        sum(col(s"__n_$c")).over(all).as(s"tot_$c"))): _*)
+    // null-safe on the groups, so a null group keeps its rows
+    val on = groups.foldLeft(col(pid) === col(s"__o$pid"))(
+      (c, g) => c && (col(g) <=> col(s"__o$g")))
+    val joined =
+      if (groups.isEmpty) loc.join(broadcast(offs), on) else loc.join(offs, on)
+    joined.select(df.columns.map(col) ++ sums.flatMap { c =>
+      val (off, l) = (col(s"__off_$c"), col(s"__loc_$c"))
+      Seq(coalesce(off + l, off, l).as(s"cum_$c"), col(s"tot_$c"))
+    }: _*)
   }
 
+  /** Exact 1-based GLOBAL rank by an arbitrary (key, id) sort: the running
+    * count of [[runningSums]] in (key, id) order, so no corpus-wide
+    * single-task sort, and the rank does not depend on the input's
+    * partitioning. `idCol` must be distinct (the tiebreak that makes the
+    * order total). Returns (idCol, k, outCol). */
+  def globalRankBy(df: DataFrame, key: Column, idCol: String,
+      outCol: String = "rn"): DataFrame = {
+    import org.apache.spark.sql.functions._
+    runningSums(df.select(col(idCol).as("id"), key.as("k"), lit(1L).as("n")),
+        Seq(col("k"), col("id")), Seq("n"))
+      .select(col("id").as(idCol), col("k"), col("cum_n").as(outCol))
+  }
+
+  /** Exact global row ordinal in `orderCol` order: the reference's
+    * `divisions` made explicit (known divisions let it resolve `a[5]` /
+    * `a[10:2000]` to a partition + local index, `core.py:1347-1489`).
+    * Spark has no ordered-partition metadata, so the ordinal is
+    * [[globalRankBy]] over `orderCol` minus 1, joined back: the parallel
+    * two-level scan of [[runningSums]], never a corpus-wide single-task
+    * Window. Adds `outCol` (0-based). Requires distinct integral
+    * `orderCol` values (tied keys would multiply rows on the join back). */
   def withRowIndex(df: DataFrame, orderCol: String,
       outCol: String = "row_idx"): DataFrame = {
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    // the scan casts the key to long internally — a fractional type would
-    // truncate and the join back on the original values would silently
-    // DROP rows, so only integral keys are accepted
+    // the ordinal joins back on the key, which must match exactly: a
+    // fractional key's equalities (0.0 = -0.0, NaN = NaN) would tie
+    // distinct values and multiply rows, so only integral keys are accepted
     val dt = df.schema(orderCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
       s"withRowIndex: orderCol must be an integral type, got $dt")
     require(!df.columns.contains(outCol),
       s"withRowIndex: input already has a column named '$outCol'")
-    // reserved internal name for the count column: withColumn("one", ...)
-    // would OVERWRITE an orderCol literally named "one" (constant keys ->
-    // tied prefix sums -> wrong ordinals + row multiplication on the join)
+    // reserved internal name for the key inside the rank call, so an
+    // orderCol named like one of globalRankBy's output columns cannot
+    // collide with them
     require(orderCol != "__graft_one",
       "withRowIndex: orderCol '__graft_one' is reserved")
-    val ids = df.select(org.apache.spark.sql.functions.col(orderCol))
-      .withColumn("__graft_one", org.apache.spark.sql.functions.lit(1L))
-    val idx = graft.text.packSequences(ids, orderCol, "__graft_one", Long.MaxValue)
-      .select(org.apache.spark.sql.functions.col(orderCol),
-        org.apache.spark.sql.functions.col("start_tok").as(outCol))
+    val key = col("__graft_one")
+    val idx = globalRankBy(df.select(col(orderCol).as("__graft_one")), key, "__graft_one")
+      .select(key.as(orderCol), (col("rn") - 1).as(outCol))
     df.join(idx, orderCol)
   }
 

@@ -410,26 +410,6 @@ package object dedup {
       .filter(col("dist") =!= -1) // threshold form returns -1 past maxDist
   }
 
-  /** Sorted-neighborhood blocking (Hernández–Stolfo): rank every row by
-    * a sort key, pair rows whose GLOBAL ranks are within `w` — the
-    * record-linkage blocking used when no clean equality key (brand,
-    * language) exists but similar records sort near each other
-    * (names, normalized addresses). Returns (id1, id2, rn1, rn2)
-    * candidates; verify with the matcher of your choice (the
-    * str_linkage_sn query verifies with the Jaro–Winkler kernel).
-    *
-    * Exact global ranks WITHOUT a single-task sort: range-partition by
-    * (key, id), local row_number per partition, plus per-partition
-    * offsets from a bounded one-row-per-partition count frame (the
-    * two-level-scan pattern of Partitions.withRowIndex, generalized to
-    * a non-integral sort key). The rank — hence the output — is
-    * partitioning-independent: partition boundaries only move WHERE
-    * offsets split, never what any row's global rank is. Candidate
-    * pairs come from a bucket equi-join (rank DIV w, probing b and
-    * b+1); each qualifying pair matches exactly one probe, so no dedup
-    * pass. Output volume is ≤ w rows per row — linear in the corpus by
-    * construction, the property that makes this blocking usable at
-    * 100 TB where key-blocking quadratics blow up. */
   /** Equality-blocked candidate pairs for record linkage — the classic
     * blocking strategy (pairs only WITHIN a block, join stays equi-keyed,
     * never all-pairs across blocks), now with the `groupCap` discipline
@@ -521,11 +501,27 @@ package object dedup {
       .drop("__blk", "__salt")
   }
 
+  /** Sorted-neighborhood blocking (Hernández–Stolfo): rank every row by
+    * a sort key, pair rows whose GLOBAL ranks are within `w` — the
+    * record-linkage blocking used when no clean equality key (brand,
+    * language) exists but similar records sort near each other
+    * (names, normalized addresses). Returns (id1, id2, rn1, rn2)
+    * candidates; verify with the matcher of your choice (the
+    * str_linkage_sn query verifies with the Jaro–Winkler kernel).
+    *
+    * Exact global ranks WITHOUT a single-task sort: the (key, id) rank
+    * of [[graft.core.Partitions.globalRankBy]], a running count over a
+    * range partition. The rank — hence the output — is
+    * partitioning-independent: partition boundaries only move WHERE
+    * offsets split, never what any row's global rank is. Candidate
+    * pairs come from a bucket equi-join (rank DIV w, probing b and
+    * b+1); each qualifying pair matches exactly one probe, so no dedup
+    * pass. Output volume is ≤ w rows per row — linear in the corpus by
+    * construction, the property that makes this blocking usable at
+    * 100 TB where key-blocking quadratics blow up. */
   def sortedNeighborhoodPairs(df: DataFrame, key: Column, idCol: String,
       w: Int): DataFrame = {
     require(w > 0, s"window must be positive, got $w")
-    // exact global (key, id) ranks via the two-level range-partitioned
-    // scan — no single-task sort (graft.core.Partitions.globalRankBy)
     val ranked = graft.core.Partitions.globalRankBy(
         df.select(col(idCol).as("id"), key.as("k")), col("k"), "id")
       .withColumn("b", expr(s"rn DIV $w"))

@@ -645,7 +645,8 @@ object GraftIO {
     * reference's divisions-based `repartition(rows_per_partition=)`
     * (`core.py:979-1066`) with tokens as the unit instead of rows.
     *
-    * Built on [[graft.text.packSequences]]'s two-level prefix scan: the
+    * Built on [[graft.text.packSequences]], whose prefix sum is the
+    * two-level scan of [[graft.core.Partitions.runningSums]]: the
     * shard id is `start_tok / budget`, assigned in parallel at any corpus
     * size, then a single hash repartition on the shard id co-locates each
     * shard before `partitionBy` writes `shard=N/` directories. One doc
@@ -665,12 +666,12 @@ object GraftIO {
       "writeTokenSharded: input already has a column named 'shard' (reserved)")
     val nt = df.select(col(idCol).as("id"),
       graft.text.countTokensWs(col(textCol)).cast("long").as("nt"))
-    // duplicate ids would give tied RANGE-frame prefix sums in
-    // packSequences, and the join back on the id would then write n*n
-    // copies of every duplicated document into the OVERWRITTEN dest —
-    // fail fast with one small 2-column agg job instead (same distinct-key
-    // contract as withRowIndex, here enforced because a writer that
-    // silently multiplies rows destroys the previous output too)
+    // the join back on the id matches every shard row of a duplicated id,
+    // so n copies of an id would write n*n copies of that document into
+    // the OVERWRITTEN dest — fail fast with one small 2-column agg job
+    // instead (same distinct-key contract as withRowIndex, here enforced
+    // because a writer that silently multiplies rows destroys the
+    // previous output too)
     val chk = nt.agg(count(lit(1)).as("n"),
       count_distinct(col("id")).as("nd")).head()
     require(chk.getLong(0) == chk.getLong(1),

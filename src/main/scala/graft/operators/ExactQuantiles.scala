@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Broadcasts
+import graft.core.{Broadcasts, Partitions}
 import graft.functions.QuantileExprs
 
 /** EXACT distributed quantiles without a global sort — iterative
@@ -184,13 +184,12 @@ object ExactQuantiles {
     * aggregate buffers every group value in executor memory, and the
     * `row_number() OVER (PARTITION BY g ORDER BY v)` window puts an
     * entire group in ONE task, so a hot group (half the corpus sharing
-    * one key) serializes and spills. This ranks through the two-level
-    * scan instead: range-partition by (g, v) — a huge group SPANS
-    * partitions — rank locally per (partition, group), then add
-    * per-(partition, group) offsets whose cumulative runs partitioned
-    * BY GROUP over <= #partitions rows each. No driver action, no
-    * single-task group, ~2 corpus shuffles total; every requested prob
-    * reads off the same ranked frame.
+    * one key) serializes and spills. This ranks through the running
+    * count of [[graft.core.Partitions.runningSums]] grouped by g
+    * instead: a huge group SPANS range partitions, and its offsets run
+    * over <= #partitions rows. No driver action, no single-task group,
+    * ~2 corpus shuffles total; every requested prob reads off the same
+    * ranked frame.
     *
     * Returns (g, prob, value); groups ordered any way, values actual
     * elements (rank k = max(1, ceil(p*n)) — the quantile_disc
@@ -200,52 +199,15 @@ object ExactQuantiles {
       valueCol: String, probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty, "probs must be non-empty")
     require(probs.forall(p => p >= 0.0 && p <= 1.0), s"probs in [0,1]: $probs")
-    import org.apache.spark.sql.expressions.Window
     val base = df.select(col(groupCol).as("g"),
-        col(valueCol).cast("double").as("v"))
+        col(valueCol).cast("double").as("v"), lit(1L).as("n"))
       .filter(col("v").isNotNull && col("g").isNotNull)
-    // localCheckpoint freezes the sampled range bounds: loc and cnts
-    // join on pid, which is only consistent when both read the SAME
-    // physical partitioning — without the materialization that premise
-    // rests on ReuseExchange (column pruning or AQE replanning could
-    // give the two branches independently sampled bounds and silently
-    // misalign every offset). The checkpointed frame is the minimal
-    // (g, v) projection — the same bytes the range exchange already
-    // writes once — so the cost is one shuffle-equivalent local write
-    // at any corpus size, not a second corpus pass.
-    // EXPLICIT partition count: a bare repartitionByRange lets AQE
-    // coalesce the exchange by output BYTES, which serializes the
-    // local-rank windows and everything downstream of this checkpoint
-    // whenever (g, v) pairs are narrow (measured at sf0.1: the whole
-    // r_mad pipeline ran 3-wide; numShufflePartitions-wide cut the
-    // stage wall clock ~4x). The rank algebra is partition-count
-    // independent by construction (that is the point of the two-level
-    // offsets), and at scale the explicit count is exactly the
-    // configured shuffle width the bare form would have used anyway.
-    val parts = base.repartitionByRange(
-        base.sparkSession.sessionState.conf.numShufflePartitions,
-        col("g"), col("v"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val loc = parts.withColumn("lrn", row_number().over(
-      Window.partitionBy(col("pid"), col("g")).orderBy(col("v"))))
-    // (pid, g) grain: <= #partitions rows per group; both windows below
-    // are partitioned by g over that bounded frame
-    val cnts = parts.groupBy(col("pid"), col("g"))
-      .agg(count(lit(1)).as("n"))
-    val offs = cnts
-      .withColumn("off", coalesce(sum(col("n")).over(
-        Window.partitionBy(col("g")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("tot", sum(col("n")).over(Window.partitionBy(col("g"))))
-      .select(col("pid"), col("g"), col("off"), col("tot"))
+    val ranked = Partitions.runningSums(base, Seq(col("v")), Seq("n"), Seq("g"))
     val targets = explode(array(probs.map(p =>
       struct(lit(p).as("prob"),
-        greatest(lit(1L), ceil(lit(p) * col("tot")).cast("long")).as("k"))
+        greatest(lit(1L), ceil(lit(p) * col("tot_n")).cast("long")).as("k"))
     ): _*)).as("t")
-    loc.join(offs, Seq("pid", "g"))
-      .select(col("g"), col("v"), (col("off") + col("lrn")).as("rn"), col("tot"))
-      .select(col("g"), col("v"), col("rn"), targets)
+    ranked.select(col("g"), col("v"), col("cum_n").as("rn"), targets)
       .filter(col("rn") === col("t.k"))
       .select(col("g"), col("t.prob").as("prob"), col("v").as("value"))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Partitions
 
 /** Experiment (A/B) analysis over an event stream — the two-proportion
   * z-test every growth/quality team runs at corpus scale. The reference
@@ -129,8 +130,9 @@ object Experiment {
   /** Two-sample Kolmogorov–Smirnov distance between the integer-score
     * distributions of two groups — the drift test a data pipeline runs
     * between yesterday's corpus and today's (same shape as [[rocAuc]]:
-    * grouped by distinct score, two-level prefix scan over the range-
-    * partitioned score domain, no single-task corpus window).
+    * grouped by distinct score, then the two-level prefix scan of
+    * [[graft.core.Partitions.runningSums]] over the score domain, no
+    * single-task corpus window).
     *
     * D = max_s |cdfA(s) − cdfB(s)| is computed as the exact integer
     * numerator max_s |cumA(s)·nB − cumB(s)·nA| over the common
@@ -140,43 +142,16 @@ object Experiment {
     * ONE IEEE division (null when a group is empty). */
   def ksTwoSample(df: DataFrame, scoreCol: Column, inACol: Column)
       : DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val g = df
       .select(scoreCol.cast("long").as("s"),
         when(inACol, 1L).otherwise(0L).as("ina"))
       .filter(col("s").isNotNull)
       .groupBy(col("s"))
       .agg(sum(col("ina")).as("ca"), sum(lit(1L) - col("ina")).as("cb"))
-    // localCheckpoint freezes the sampled range bounds: the loc and offs
-    // branches below join on pid, which is only consistent if BOTH read
-    // the SAME physical partitioning — an optimizer-dependent premise
-    // (ReuseExchange) without the materialization, a physical fact with
-    // it. The frame is domain-sized (distinct scores), so the cost is
-    // bounded at any corpus size. Disk cost: the checkpoint writes the
-    // same bytes the range exchange itself already wrote — one extra
-    // local copy of the domain-sized frame, never a second corpus pass.
-    val tagged = g.repartitionByRange(col("s"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLoc = w.partitionBy(col("pid")).orderBy(col("s"))
-      .rowsBetween(w.unboundedPreceding, 0)
-    val loc = tagged
-      .withColumn("la", sum(col("ca")).over(wLoc))
-      .withColumn("lb", sum(col("cb")).over(wLoc))
-    val prevPids = w.orderBy("pid").rowsBetween(w.unboundedPreceding, -1)
-    val allPids = w.orderBy(lit(1))
-      .rowsBetween(w.unboundedPreceding, w.unboundedFollowing)
-    val offs = tagged.groupBy(col("pid"))
-      .agg(sum(col("ca")).as("pa"), sum(col("cb")).as("pb"))
-      .withColumn("offa", coalesce(sum(col("pa")).over(prevPids), lit(0L)))
-      .withColumn("offb", coalesce(sum(col("pb")).over(prevPids), lit(0L)))
-      .withColumn("na", sum(col("pa")).over(allPids))
-      .withColumn("nb", sum(col("pb")).over(allPids))
-      .select(col("pid"), col("offa"), col("offb"), col("na"), col("nb"))
-    loc.join(broadcast(offs), "pid")
-      .agg(max(col("na")).as("n_a"), max(col("nb")).as("n_b"),
-        max(abs((col("offa") + col("la")) * col("nb") -
-          (col("offb") + col("lb")) * col("na"))).as("d_num"))
+    Partitions.runningSums(g, Seq(col("s")), Seq("ca", "cb"))
+      .agg(max(col("tot_ca")).as("n_a"), max(col("tot_cb")).as("n_b"),
+        max(abs(col("cum_ca") * col("tot_cb") - col("cum_cb") * col("tot_ca")))
+          .as("d_num"))
       .select(col("n_a"), col("n_b"), col("d_num"),
         expr("CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE " +
           "CAST(d_num AS DOUBLE) / (CAST(n_a AS DOUBLE) * n_b) END").as("ks"))
@@ -188,10 +163,9 @@ object Experiment {
     * [[ksTwoSample]]'s drift distance.
     *
     * Same scale shape as [[rocAuc]]: group by distinct value (map-side
-    * combined), two-level prefix scan over the range-partitioned value
-    * domain, offsets branch aggregating BOTH count and mass so its
-    * subtree stays byte-identical for ReuseExchange. The discrete
-    * Lorenz-trapezoid closed form stays in exact int64, spelled to keep
+    * combined), then running count and mass from
+    * [[graft.core.Partitions.runningSums]] over the value domain. The
+    * discrete Lorenz-trapezoid closed form stays in exact int64, spelled to keep
     * every intermediate within N·W:
     *
     *   g_num = N·W − Σ_s cnt_s·mass_s − 2·Σ_s cnt_s·(cumMass_s − mass_s)
@@ -207,38 +181,17 @@ object Experiment {
     * non-negative measures); null values drop. Returns one row:
     * (n, total, g_num, gini — null on an empty or zero-mass corpus). */
   def gini(df: DataFrame, valueCol: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val g = df.select(valueCol.cast("long").as("s"))
       .filter(col("s").isNotNull)
       .groupBy(col("s")).agg(count(lit(1)).as("cnt"), sum(col("s")).as("m"))
-    // localCheckpoint: freeze the range bounds so the pid-offset join's
-    // premise is physical, not ReuseExchange-dependent (see ksTwoSample).
-    // Disk cost: the same domain-sized bytes the range exchange already
-    // writes — one extra local copy, never a second corpus pass.
-    val tagged = g.repartitionByRange(col("s"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLoc = w.partitionBy(col("pid")).orderBy(col("s"))
-      .rowsBetween(w.unboundedPreceding, 0)
-    val loc = tagged.withColumn("lm", sum(col("m")).over(wLoc))
-    val prevPids = w.orderBy("pid").rowsBetween(w.unboundedPreceding, -1)
-    val allPids = w.orderBy(lit(1))
-      .rowsBetween(w.unboundedPreceding, w.unboundedFollowing)
-    val offs = tagged.groupBy(col("pid"))
-      .agg(sum(col("m")).as("pm"), sum(col("cnt")).as("pn"))
-      .withColumn("offm", coalesce(sum(col("pm")).over(prevPids), lit(0L)))
-      .withColumn("totn", sum(col("pn")).over(allPids))
-      .withColumn("totw", sum(col("pm")).over(allPids))
-      .select(col("pid"), col("offm"), col("totn"), col("totw"))
-    val out = loc.join(broadcast(offs), "pid")
-      .withColumn("cumm", col("offm") + col("lm"))
+    val out = Partitions.runningSums(g, Seq(col("s")), Seq("m", "cnt"))
       // s1 = Σ cnt·m and b = Σ cnt·(cum − m): both term-wise >= 0 and
       // bounded by N·W, where the old single Σ cnt·(2·cum − m) put a
       // 2·cum (up to 2·W) inside every term — the factor-2 domain loss
-      .agg(min(col("s")).as("min_s"), max(col("totn")).as("n"),
-        max(col("totw")).as("total"),
+      .agg(min(col("s")).as("min_s"), max(col("tot_cnt")).as("n"),
+        max(col("tot_m")).as("total"),
         sum(col("cnt") * col("m")).as("s1"),
-        sum(col("cnt") * (col("cumm") - col("m"))).as("b"))
+        sum(col("cnt") * (col("cum_m") - col("m"))).as("b"))
     // the min_s guard is data-dependent, so it stays IN the plan: a
     // negative value nulls the report rather than emitting a wrong G
     out.select(col("n"), col("total"),
@@ -310,11 +263,9 @@ object Experiment {
     *   pairs2 = Σ_s pos_s · (2·cumNegBelow_s + neg_s)   (ties count once)
     *   AUC    = pairs2 / (2 · n_pos · n_neg)
     *
-    * The cumulative-negatives scan runs as the prCurve two-level shape,
-    * not one global window: range-partition the score domain, local
-    * exclusive prefix sums per partition, and a broadcast per-partition
-    * offset table (one row per range partition — the only unpartitioned
-    * window runs over THAT). An arbitrary integer score (a timestamp, a
+    * The cumulative negatives come from the two-level scan of
+    * [[graft.core.Partitions.runningSums]] over the score domain, not
+    * one global window. An arbitrary integer score (a timestamp, a
     * hash) can have corpus-many distinct values; a single
     * Window.orderBy(s) would funnel them through one task. All counting
     * is exact int64 (`pairs2 ≤ 2·n_pos·n_neg ≤ N²/2` — fine to
@@ -324,38 +275,15 @@ object Experiment {
     * Returns one row: (n_pos, n_neg, pairs2, auc — null when a class is
     * empty). */
   def rocAuc(df: DataFrame, scoreCol: Column, labelCol: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val g = df
       .select(scoreCol.cast("long").as("s"),
         when(labelCol, 1L).otherwise(0L).as("y"))
       .filter(col("s").isNotNull)
       .groupBy(col("s"))
       .agg(sum(col("y")).as("pos"), sum(lit(1L) - col("y")).as("neg"))
-    // localCheckpoint: freeze the range bounds so the pid-offset join's
-    // premise is physical, not ReuseExchange-dependent (see ksTwoSample).
-    // It also guarantees the one-corpus-scan property outright — both
-    // branches now read the materialized domain-sized frame. Disk cost:
-    // the same domain-sized bytes the range exchange already writes —
-    // one extra local copy, never a second corpus pass.
-    val tagged = g.repartitionByRange(col("s"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLoc = w.partitionBy(col("pid")).orderBy(col("s"))
-      .rowsBetween(w.unboundedPreceding, -1)
-    val loc = tagged
-      .withColumn("lneg", coalesce(sum(col("neg")).over(wLoc), lit(0L)))
-    val offs = tagged.groupBy(col("pid"))
-      .agg(sum(col("neg")).as("nn"), sum(col("pos")).as("np"))
-      .withColumn("offn", coalesce(sum(col("nn")).over(
-        w.orderBy("pid").rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("totp", sum(col("np")).over(w.orderBy(lit(1))
-        .rowsBetween(w.unboundedPreceding, w.unboundedFollowing)))
-      .withColumn("totn", sum(col("nn")).over(w.orderBy(lit(1))
-        .rowsBetween(w.unboundedPreceding, w.unboundedFollowing)))
-      .select(col("pid"), col("offn"), col("totp"), col("totn"))
-    loc.join(broadcast(offs), "pid")
-      .withColumn("cumneg", col("offn") + col("lneg"))
-      .agg(max(col("totp")).as("n_pos"), max(col("totn")).as("n_neg"),
+    Partitions.runningSums(g, Seq(col("s")), Seq("neg", "pos"))
+      .withColumn("cumneg", col("cum_neg") - col("neg"))
+      .agg(max(col("tot_pos")).as("n_pos"), max(col("tot_neg")).as("n_neg"),
         sum(col("pos") * (lit(2L) * col("cumneg") + col("neg"))).as("pairs2"))
       .select(col("n_pos"), col("n_neg"), col("pairs2"),
         expr("CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL ELSE " +

@@ -645,56 +645,23 @@ package object text {
     * GPT-style packing layout (reference has no analogue; this is the
     * training-data-pipeline step downstream of tokenization).
     *
-    * The global prefix sum is computed as a two-level scan, not one global
-    * window: a window partitioned by a coarse id-range bucket computes
-    * bucket-local cumulative sums in parallel, and a tiny per-bucket total
-    * table (one row per bucket — ~corpus_rows/bucketSize rows, thousands at
-    * 100 TB) takes the only serial window before broadcast-joining back.
-    * A single `Window.orderBy(id)` with no partition key would funnel the
-    * full corpus through ONE task; this shape keeps every corpus-sized pass
-    * parallel at any scale.
+    * The global prefix sum is the two-level scan of
+    * [[graft.core.Partitions.runningSums]], not one global window: a
+    * single `Window.orderBy(id)` with no partition key would funnel the
+    * full corpus through ONE task.
     *
     * Returns (idCol, n_tok, start_tok, seq_id): `start_tok` is the global
     * token offset where the document begins, `seq_id = start_tok / budget`.
     */
   def packSequences(df: DataFrame, idCol: String, nTokCol: String,
-      budget: Long, bucketSize: Long = 1L << 16): DataFrame = {
-    require(budget > 0 && bucketSize > 0, s"bad budget=$budget bucketSize=$bucketSize")
-    import org.apache.spark.sql.expressions.Window
+      budget: Long): DataFrame = {
+    require(budget > 0, s"bad budget=$budget")
     // null/negative token counts (e.g. size() of a null text) would silently
     // null the prefix sums downstream — clamp to 0 so every doc keeps a shard
-    val d0 = df.select(col(idCol).cast("long").as("id"),
+    val d = df.select(col(idCol).cast("long").as("id"),
       greatest(coalesce(col(nTokCol).cast("long"), lit(0L)), lit(0L)).as("n_tok"))
-    // Bucket width adapts to the OBSERVED id range (one tiny agg job):
-    // fixed floor(id/bucketSize) would give sparse/hashed ids ~one bucket
-    // per row, growing the "tiny" offsets table to corpus size — the exact
-    // single-task/broadcast blowup this scan exists to prevent. Capping
-    // buckets at ~2^16 keeps offsets small for ANY id distribution; the
-    // double-precision bucket math is monotone in id (bucket merging from
-    // rounding only affects parallelism, never ordinals — ordering within
-    // a bucket is exact on the id itself).
-    val (lo, hi) = {
-      val r = d0.agg(min(col("id")), max(col("id"))).head()
-      (Option(r.get(0)).fold(0L)(_.asInstanceOf[Long]),
-        Option(r.get(1)).fold(0L)(_.asInstanceOf[Long]))
-    }
-    val maxBuckets = 1L << 16
-    val width = math.max(bucketSize,
-      ((BigInt(hi) - BigInt(lo) + maxBuckets) / maxBuckets).toLong max 1L)
-    val d = d0.withColumn("bkt",
-      floor((col("id").cast("double") - lit(lo.toDouble)) / lit(width.toDouble))
-        .cast("long"))
-    val local = d.withColumn("cum_local",
-      sum(col("n_tok")).over(Window.partitionBy(col("bkt")).orderBy(col("id"))))
-    // one row per bucket: the serial window runs over a table thousands of
-    // rows long, never corpus-sized
-    val offsets = d.groupBy(col("bkt")).agg(sum(col("n_tok")).as("tot"))
-      .withColumn("off", coalesce(
-        sum(col("tot")).over(Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bkt"), col("off"))
-    local.join(broadcast(offsets), "bkt")
-      .withColumn("start_tok", col("off") + col("cum_local") - col("n_tok"))
+    graft.core.Partitions.runningSums(d, Seq(col("id")), Seq("n_tok"))
+      .withColumn("start_tok", col("cum_n_tok") - col("n_tok"))
       .select(col("id").as(idCol), col("n_tok"), col("start_tok"),
         floor(col("start_tok") / budget).cast("long").as("seq_id"))
   }
@@ -1288,50 +1255,19 @@ package object text {
     *
     * 100 TB posture: one corpus-sized map-side-combined aggregate
     * collapses the corpus to the distinct-score frame; the cumulative
-    * runs over THAT frame as a two-level scan (range-partition by score
-    * desc, partition-local window, bounded per-partition offsets joined
-    * back by broadcast — the packSequences/globalRankBy discipline, no
-    * single-task corpus window). Totals ride the same bounded offsets
-    * frame, not a second corpus pass. Returns
+    * and the totals run over THAT frame in score-descending order as
+    * the two-level scan of [[graft.core.Partitions.runningSums]] (no
+    * single-task window, no second corpus pass). Returns
     * (thr, tp, fp, prec_ppm, rec_ppm). */
   def prCurve(df: DataFrame, scoreCol: String, labelCol: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(scoreCol).cast("long").as("thr"))
       .agg(count(when(labelCol, 1)).as("pos"), count(lit(1)).as("n"))
-    // localCheckpoint freezes the sampled range bounds: the pid-offset
-    // join below is only consistent if both branches read the SAME
-    // physical partitioning — a fact after materializing, an optimizer
-    // premise (ReuseExchange) before. Domain-sized (distinct scores);
-    // disk cost: the same bytes the range exchange already writes —
-    // one extra local copy, never a second corpus pass.
-    val tagged = g.repartitionByRange(col("thr").desc)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val wLoc = Window.partitionBy(col("pid")).orderBy(col("thr").desc)
-    val loc = tagged
-      .withColumn("ltp", sum(col("pos")).over(wLoc))
-      .withColumn("lcn", sum(col("n")).over(wLoc))
-    // bounded: one row per range partition; the only unpartitioned
-    // window runs over this frame
-    val offs = tagged.groupBy(col("pid"))
-      .agg(sum(col("pos")).as("p"), sum(col("n")).as("c"))
-      .withColumn("offp", coalesce(sum(col("p")).over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("offc", coalesce(sum(col("c")).over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("totp", sum(col("p")).over(
-        Window.orderBy(lit(1)).rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("pid"), col("offp"), col("offc"), col("totp"))
-    loc.join(broadcast(offs), "pid")
-      .select(col("thr"),
-        (col("offp") + col("ltp")).as("tp"),
-        (col("offc") + col("lcn") - col("offp") - col("ltp")).as("fp"),
-        expr("(offp + ltp) * 1000000 DIV (offc + lcn)").as("prec_ppm"),
-        expr("CASE WHEN totp > 0 THEN (offp + ltp) * 1000000 DIV totp END")
+    graft.core.Partitions.runningSums(g, Seq(col("thr").desc), Seq("pos", "n"))
+      .select(col("thr"), col("cum_pos").as("tp"),
+        (col("cum_n") - col("cum_pos")).as("fp"),
+        expr("cum_pos * 1000000 DIV cum_n").as("prec_ppm"),
+        expr("CASE WHEN tot_pos > 0 THEN cum_pos * 1000000 DIV tot_pos END")
           .as("rec_ppm"))
   }
 

@@ -954,6 +954,75 @@ class DifferentialFuzzSpec extends SparkSuite with CompiledLocalFrames {
     }
   }
 
+  test("runningSums equals one unpartitioned global window, interpreted and compiled") {
+    import graft.core.Partitions
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(37L)
+    // (id, g, kl, kd, ks, a, b): id is distinct and breaks every tie, so
+    // each order is total; "hot" holds ~3/4 of the rows; order keys and
+    // sums carry nulls, kd also NaN and -0.0
+    def opt[T](p: Int, v: => T): Option[T] = if (rnd.nextInt(p) == 0) None else Some(v)
+    val doubles = Seq(-1.5, -0.0, 0.0, 0.5, 2.0, Double.NaN)
+    val rows = (0 until 240).map { i =>
+      (i.toLong,
+        if (rnd.nextInt(4) < 3) Some("hot") else opt(5, s"g${rnd.nextInt(3)}"),
+        opt(9, rnd.nextInt(20).toLong - 10),
+        opt(9, doubles(rnd.nextInt(doubles.size))),
+        opt(9, s"s${rnd.nextInt(15)}"),
+        opt(5, rnd.nextInt(100).toLong - 30),
+        opt(3, rnd.nextInt(7).toLong))
+    }
+    val base = rows.toDF("id", "g", "kl", "kd", "ks", "a", "b")
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val hotParts = base.repartitionByRange(parts, col("g"), col("kl"), col("id"))
+      .filter(col("g") === "hot").select(spark_partition_id()).distinct().count()
+    assert(hotParts > 1, s"the hot group sits in $hotParts range partition")
+    val orders: Seq[(String, Seq[Column])] = Seq(
+      "long" -> Seq(col("kl"), col("id")),
+      "double desc" -> Seq(col("kd").desc, col("id")),
+      "string" -> Seq(col("ks"), col("id").desc))
+    val sums = Seq("a", "b")
+    def witness(df: org.apache.spark.sql.DataFrame, order: Seq[Column],
+        groups: Seq[String]) = {
+      val w = Window.partitionBy(groups.map(col): _*)
+      val upTo = w.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      df.select(col("id") +: sums.flatMap(c =>
+        Seq(sum(col(c)).over(upTo), sum(col(c)).over(w))): _*)
+    }
+    def byId(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    for ((name, order) <- orders; groups <- Seq(Nil, Seq("g"));
+        n <- Seq(1, 5, 7); (mode, confs) <- codegenModes) {
+      val df = base.repartition(n)
+      val got = withConfs(confs)(byId(Partitions.runningSums(df, order, sums, groups)
+        .select(col("id") +: sums.flatMap(c => Seq(col(s"cum_$c"), col(s"tot_$c"))): _*)))
+      val want = byId(witness(df, order, groups))
+      assert(got.size == rows.size && got == want,
+        s"$name by ${groups.mkString(",")} over $n partitions, $mode")
+    }
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      base.schema)
+    for (groups <- Seq(Nil, Seq("g"))) {
+      val out = Partitions.runningSums(empty, Seq(col("kl"), col("id")), sums, groups)
+      assert(out.columns.toSeq == base.columns.toSeq ++
+        Seq("cum_a", "tot_a", "cum_b", "tot_b") && out.isEmpty)
+    }
+  }
+
+  test("ksTwoSample/gini/rocAuc/prCurve: an empty frame and an all-null score") {
+    import graft.operators.Experiment
+    val nullScores = Seq((None: Option[Long], true), (None, false), (None, true))
+      .toDF("s", "y").repartition(2)
+    for (df <- Seq(nullScores.limit(0), nullScores)) {
+      for (report <- Seq(Experiment.ksTwoSample(df, col("s"), col("y")),
+          Experiment.gini(df, col("s")), Experiment.rocAuc(df, col("s"), col("y"))))
+        assert(report.collect().toSeq.map(_.toSeq) == Seq(Seq(null, null, null, null)))
+      assert(graft.text.prCurve(df, "s", col("y")).isEmpty)
+    }
+  }
+
   test("linkPredict: the table kernel ranks as both relational plans on random graphs") {
     import graft.core.Broadcasts.defaultBudgetBytes
     import graft.operators.{Graph, LinkPredict}

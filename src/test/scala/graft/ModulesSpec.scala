@@ -1479,21 +1479,20 @@ class ModulesSpec extends SparkSuite with CompiledLocalFrames {
     val gotN = graft.text.packSequences(withNull, "doc_id", "nt", 16)
       .select($"doc_id", $"start_tok").as[(Long, Long)].collect().toMap
     assert(gotN == Map(1L -> 0L, 2L -> 10L, 3L -> 10L, 4L -> 10L))
-    // bucketed decomposition must equal one global window cumsum, with ids
-    // spread over many buckets and a partitioning the scan can't rely on
+    // the two-level decomposition must equal one global window cumsum, with
+    // ids spread wide and a partitioning the scan can't rely on
     val rnd = new scala.util.Random(7)
     val big = (0 until 500).map(i => (rnd.nextInt(100000).toLong * 7 + i, rnd.nextInt(300).toLong))
     val bigDf = big.toDF("doc_id", "nt").repartition(7)
-    val twoLevel = graft.text.packSequences(bigDf, "doc_id", "nt", 2048, bucketSize = 1024)
+    val twoLevel = graft.text.packSequences(bigDf, "doc_id", "nt", 2048)
       .select($"doc_id", $"start_tok").as[(Long, Long)].collect().toMap
     import org.apache.spark.sql.expressions.Window
     val global = bigDf.withColumn("cum",
         sum($"nt").over(Window.orderBy($"doc_id")) - $"nt")
       .select($"doc_id", $"cum").as[(Long, Long)].collect().toMap
     assert(twoLevel == global)
-    // hashed/sparse ids (full long range, negatives): the adaptive bucket
-    // width caps the offsets table, and ordinals still match the global
-    // window exactly
+    // hashed/sparse ids (full long range, negatives): ordinals still match
+    // the global window exactly
     val hashed = (0 until 300).map(_ => (rnd.nextLong(), rnd.nextInt(50).toLong))
       .distinctBy(_._1).toDF("doc_id", "nt").repartition(5)
     val twoH = graft.text.packSequences(hashed, "doc_id", "nt", 1024)
@@ -1516,18 +1515,21 @@ class ModulesSpec extends SparkSuite with CompiledLocalFrames {
     val got = graft.core.Partitions.withRowIndex(sparse, "id")
       .as[(Long, Long)].collect().sortBy(_._2).map(_._1).toSeq
     assert(got == Seq(-50L, 3L, 7L, 999L, 100000L))
-    // fractional keys would truncate in the internal long cast and silently
-    // drop rows — rejected up front
+    // fractional keys (whose equalities, 0.0 = -0.0 and NaN = NaN, tie
+    // distinct values on the join back) are rejected up front
     intercept[IllegalArgumentException] {
       graft.core.Partitions.withRowIndex(Seq(1.5, 2.5).toDF("id"), "id")
     }
-    // an orderCol literally named "one" must not collide with the internal
-    // count column (a collision made every key the constant 1: wrong
-    // ordinals plus row multiplication on the join back)
-    val named = graft.core.Partitions.withRowIndex(
-        Seq(9L, 2L, 5L).toDF("one"), "one")
-      .as[(Long, Long)].collect().sortBy(_._2).map(_._1).toSeq
-    assert(named == Seq(2L, 5L, 9L))
+    // an orderCol named like an internal column must not collide with it
+    // (a collision with the old count column "one" made every key the
+    // constant 1: wrong ordinals plus row multiplication on the join back);
+    // "id", "k", "n" and "rn" are the rank call's own column names
+    for (name <- Seq("one", "id", "k", "n", "rn", "cum_n")) {
+      val named = graft.core.Partitions.withRowIndex(
+          Seq(9L, 2L, 5L).toDF(name), name)
+        .as[(Long, Long)].collect().sortBy(_._2).map(_._1).toSeq
+      assert(named == Seq(2L, 5L, 9L), name)
+    }
     intercept[IllegalArgumentException] {
       graft.core.Partitions.withRowIndex(Seq(1L).toDF("__graft_one"), "__graft_one")
     }

@@ -573,21 +573,25 @@ class PlanQualitySpec extends SparkSuite {
       assert(scans == 1,
         s"$name reads the corpus $scans times:\n${plan.take(3000)}")
     }
-    // t_auc / t_ks / t_gini / t_prcurve materialize (localCheckpoint)
-    // the domain-sized tagged frame so the pid-offset join's
+    // every caller of Partitions.runningSums materializes
+    // (localCheckpoint) the range-tagged frame so the pid-offset join's
     // partitioning premise is physical, not ReuseExchange-dependent:
-    // the one corpus scan happens in the materialization job (a single
-    // linear scan->aggregate->exchange lineage with nothing to
-    // diverge), and the FINAL plan must read only the checkpointed RDD
-    // — any parquet scan left here means a subtree escaped the
-    // materialization and the corpus pays twice.
-    for (name <- Seq("t_auc", "t_ks", "t_gini", "t_prcurve")) {
+    // the corpus scan feeding the scan happens in the materialization
+    // job (a single linear scan->aggregate->exchange lineage with
+    // nothing to diverge), and the FINAL plan must read the
+    // checkpointed RDD — a parquet scan beyond the query's own (t_qnorm
+    // counts N on the corpus, str_categorical joins the codes back onto
+    // it) means a subtree escaped the materialization and the corpus
+    // pays twice.
+    for ((name, ownScans) <- Seq("t_auc" -> 0, "t_ks" -> 0, "t_gini" -> 0,
+        "t_prcurve" -> 0, "t_pack" -> 0, "t_qnorm" -> 1, "r_quantiles_grp" -> 0,
+        "str_categorical" -> 1)) {
       val df = SparkEntry.queries(name)(spark, dir)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       val scans = "Scan parquet".r.findAllIn(plan).size
-      assert(scans == 0,
+      assert(scans == ownScans,
         s"$name re-reads the corpus past the checkpoint ($scans scans):\n${plan.take(3000)}")
       assert(plan.contains("Scan ExistingRDD") || plan.contains("LogicalRDD"),
         s"$name: checkpointed frame missing from the plan:\n${plan.take(3000)}")
@@ -916,16 +920,17 @@ class PlanQualitySpec extends SparkSuite {
       .select(col("doc_id"), graft.text.countTokensWs(col("text")).cast("long").as("nt"))
     val plan = graft.text.packSequences(d, "doc_id", "nt", 2048)
       .queryExecution.executedPlan.toString
-    // the corpus-sized window must carry a partition key (the id-range
-    // bucket); a Window with an empty partition spec over the corpus side
-    // would funnel 100 TB through one task. The one global window runs on
-    // the one-row-per-bucket aggregate, below the broadcast exchange.
+    // the corpus-sized window must carry a partition key (the range
+    // partition id of Partitions.runningSums); a Window with an empty
+    // partition spec over the corpus side would funnel 100 TB through
+    // one task. The one global window runs on the one-row-per-partition
+    // aggregate, below the broadcast exchange.
     val windowSpecs = "Window \\[".r.findAllIn(plan).size
     assert(windowSpecs == 2, s"expected 2 Window nodes:\n${plan.take(3000)}")
-    assert(plan.contains("windowspecdefinition(bkt"),
-      s"corpus window lost its bucket partition key:\n${plan.take(3000)}")
+    assert(plan.contains("windowspecdefinition(__pid"),
+      s"corpus window lost its range partition key:\n${plan.take(3000)}")
     assert(plan.contains("BroadcastHashJoin"),
-      s"per-bucket offsets should broadcast:\n${plan.take(3000)}")
+      s"per-partition offsets should broadcast:\n${plan.take(3000)}")
   }
 
   test("dedupSpans: inverted-index joins only, no cartesian, sorted rebuild") {

@@ -80,10 +80,11 @@ class StringsSpec extends SparkSuite with CompiledLocalFrames {
       "codes must follow sorted value order")
     assert(coded.count() == 500)
     val plan = dict.queryExecution.executedPlan.toString
-    // the dictionary-sized rank is partitioned by pid; the only
-    // unpartitioned window runs over the bounded per-range-partition
-    // offsets frame (<= shuffle.partitions rows)
-    assert(plan.contains("windowspecdefinition(pid"),
+    // the dictionary-sized rank is partitioned by the range partition id
+    // (Partitions.runningSums' __pid); the only unpartitioned window runs
+    // over the bounded per-range-partition offsets frame
+    // (<= shuffle.partitions rows)
+    assert(plan.contains("windowspecdefinition(__pid"),
       s"dictionary rank is not pid-partitioned:\n${plan.take(2000)}")
     assert("Exchange SinglePartition".r.findAllIn(plan).size <= 1,
       s"dictionary funnels through a single task:\n${plan.take(2000)}")

@@ -34,6 +34,24 @@ class ToolsSpec extends SparkSuite {
       s"documented commands without a main: ${dangling.mkString(", ")}")
   }
 
+  test("the range-tag, pin and pid-offset join live only in Partitions.runningSums") {
+    // spark_partition_id in code (comments stripped): the prefix scan's
+    // partition tag, and g_divisions' placement report, which reads where
+    // repartitionDivisions put each row
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.toString.contains("/graft/tools/"))
+      .toSeq
+    val uses = files.filter { f =>
+      val code = Files.readString(f).replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\\n]*", "")
+      code.contains("spark_partition_id")
+    }.map(f => Paths.get("src/main/scala").relativize(f).toString).sorted
+    assert(uses == Seq("graft/core/Partitions.scala", "graft/queries/GetitemIoQueries.scala"),
+      uses.mkString(", "))
+    val partitions = Files.readString(Paths.get("src/main/scala/graft/core/Partitions.scala"))
+    assert("spark_partition_id".r.findAllIn(partitions).size == 1)
+  }
+
   test("Profile.union: covered milliseconds of overlapping, clipped spans") {
     // [2, 20] from two overlapping spans, [30, 35] clipped at the window end
     assert(Profile.union(Seq((30L, 40L), (0L, 10L), (5L, 20L), (6L, 8L)), 2L, 35L) == 23L)
